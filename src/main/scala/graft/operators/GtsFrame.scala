@@ -1598,8 +1598,8 @@ object GtsFrame {
     * the series' FULL label set). Control chars keep the key unambiguous
     * for any printable label content. */
   private[graft] def labelsKeyCol: Column =
-    concat_ws("", transform(array_sort(map_entries(col("labels"))),
-      e => concat_ws("", e.getField("key"), e.getField("value"))))
+    concat_ws("\u0001", transform(array_sort(map_entries(col("labels"))),
+      e => concat_ws("\u0002", e.getField("key"), e.getField("value"))))
 
   /** Rhumb-line distance in meters between two (lat,lon) columns — the
     * Column twin of WordsExt4.loxodromic (R = 6378137 sphere, same as
