@@ -381,23 +381,6 @@ final class KernelOps(df: DataFrame,
     perSeries((id, pts) => esd(pts, k, alpha).map(p => (id, p.ts, p.v)))
       .toDF("gtsid", "ts", "vdouble")
 
-  /** LOWESS/RLOWESS — the reference's own robust locally weighted
-    * regression per series (StlKernel.rlowess — GTSHelper.rlowess:
-    * 10795-11218), with the d-skipping walk and bisquare robustness
-    * iterations. `bucket` carries BUCKETIZE metadata; estimates then
-    * cover every bucket tick. */
-  def rlowessSmooth(q: Int, r: Int, d: Long, p: Int,
-                    bucket: Option[(Long, Long, Long)]): DataFrame =
-    perSeries { (id, pts) =>
-      if (pts.isEmpty) Iterator.empty
-      else {
-        val out = StlKernel.rlowess(
-          StlKernel.ofPoints(pts.map(_.ts).toArray, pts.map(_.v).toArray, bucket),
-          q, r, d, p)
-        (0 until out.values).map(i => (id, out.ticks(i), out.vals(i)))
-      }
-    }.toDF("gtsid", "ts", "vdouble")
-
   /** STL — the reference's full Seasonal-Trend decomposition based on
     * LOWESS per series (StlKernel.stl — GTSHelper.stl:11357-11765),
     * tagged rows ('seasonal' | 'trend'), one kernel pass. */
@@ -417,52 +400,68 @@ final class KernelOps(df: DataFrame,
       }
     }.toDF("gtsid", "which", "ts", "vdouble")
 
-  /** STL with class/labels carried THROUGH the kernel (r12): the word
-    * path's [seasonal, trend] pair needs the series metadata back, and
-    * a post-kernel metaOf join re-reads (or re-executes, under cache
-    * eviction — the r11 driver run payed 163 s for that) the whole
-    * FETCH→BUCKETIZE→FILL prefix. Grouping the canonical frame by
-    * gtsid already co-locates class/labels with the points, so emit
-    * them from the group head instead: one pass, zero joins, the
-    * prefix consumed exactly once. Output is PACKED — one
-    * (ticks[], vals[]) row per (series, component), 2 rows per series —
-    * so the word path materializes a few hundred array rows instead of
-    * count×2 points; callers posexplode.
-    */
-  def stlDecomposeTagged(bucket: (Long, Long, Long), bpp: Int, inner: Int,
-                         outer: Int, ns: Int, ds: Int, js: Int,
-                         nl: Int, dl: Int, jl: Int, nt: Int, dt: Int, jt: Int,
-                         np: Int, dp: Int, jp: Int): DataFrame = {
+  /** Series-tagged form of [[perSeries]]: each series is packed WITH
+    * its metadata, class/labels carried as grouping keys of the pack
+    * aggregate ([[graft.model.Gts.aggBySeries]]), so the kernel emits
+    * them from the group head. A post-kernel seriesMeta join would
+    * re-read (or re-execute, under cache eviction — the r11 driver run
+    * payed 163 s for that) the whole FETCH→BUCKETIZE→FILL prefix; this
+    * is one pass, zero joins, the prefix consumed exactly once. The Dataset
+    * encoder decodes one (class, labels-map, points) row per SERIES
+    * instead of per point — at w54's 5.4M-point prefix that is 7 500
+    * map decodes, not 5.4M. Points decode as two PRIMITIVE arrays, not
+    * Array[(Long, Double)] — the tuple encoder boxes every point (r13
+    * profile: the kernel stage burned 219 exec-seconds for 5.4M points,
+    * dominated by decode, not by the STL arithmetic). */
+  private def perSeriesTagged[T: org.apache.spark.sql.Encoder](
+      f: (Long, String, Map[String, String], Array[Long], Array[Double]) => IterableOnce[T])
+      : Dataset[T] = {
     val gf = gridFill // capture the value, never `this` (serialization)
-    // Pack each series FIRST with a codegen'd aggregate (sort_array on
-    // struct(ts, v) is the same (ts, v) total order perSeries uses):
-    // the Dataset encoder then decodes one (class, labels-map, points)
-    // row per SERIES instead of per point — at w54's 5.4M-point prefix
-    // that is 7 500 map decodes, not 5.4M.
-    df.groupBy(col("gtsid"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"),
-        packedPts.as("pts"))
-      // decode the packed points as two PRIMITIVE arrays, not
-      // Array[(Long, Double)] — the tuple encoder boxes every point
-      // (r13 profile: the kernel stage burned 219 exec-seconds for
-      // 5.4M points, dominated by decode, not by the STL arithmetic)
+    graft.model.Gts.aggBySeries(df)(packedPts.as("pts"))
       .select(col("gtsid"), col("class"), col("labels"),
         col("pts.ts").as("ticks"), col("pts.vdouble").as("vals"))
       .as[(Long, String, Map[String, String], Array[Long], Array[Double])]
       .flatMap { case (id, cls, lbl, ticks0, vals0) =>
         val (ticks, vals) = KernelOps.densify(ticks0, vals0, gf)
-        if (ticks.isEmpty) Iterator.empty
-        else {
-          val (s, t) = StlKernel.stl(
-            StlKernel.ofPoints(ticks, vals, Some(bucket)),
-            bpp, inner, outer, ns, ds, js, nl, dl, jl, nt, dt, jt, np, dp, jp)
-          Iterator((id, cls, lbl, "seasonal",
-              s.ticks.take(s.values), s.vals.take(s.values)),
-            (id, cls, lbl, "trend",
-              t.ticks.take(t.values), t.vals.take(t.values)))
-        }
-      }.toDF("gtsid", "class", "labels", "which", "ticks", "vals")
+        if (ticks.isEmpty) Iterator.empty else f(id, cls, lbl, ticks, vals)
+      }
   }
+
+  /** STL with class/labels carried THROUGH the kernel (r12): the word
+    * path's [seasonal, trend] pair needs the series metadata back.
+    * Output is PACKED — one (ticks[], vals[]) row per (series,
+    * component), 2 rows per series — so the word path materializes a
+    * few hundred array rows instead of count×2 points; callers
+    * posexplode.
+    */
+  def stlDecomposeTagged(bucket: (Long, Long, Long), bpp: Int, inner: Int,
+                         outer: Int, ns: Int, ds: Int, js: Int,
+                         nl: Int, dl: Int, jl: Int, nt: Int, dt: Int, jt: Int,
+                         np: Int, dp: Int, jp: Int): DataFrame =
+    perSeriesTagged { (id, cls, lbl, ticks, vals) =>
+      val (s, t) = StlKernel.stl(
+        StlKernel.ofPoints(ticks, vals, Some(bucket)),
+        bpp, inner, outer, ns, ds, js, nl, dl, jl, nt, dt, jt, np, dp, jp)
+      Iterator((id, cls, lbl, "seasonal",
+          s.ticks.take(s.values), s.vals.take(s.values)),
+        (id, cls, lbl, "trend",
+          t.ticks.take(t.values), t.vals.take(t.values)))
+    }.toDF("gtsid", "class", "labels", "which", "ticks", "vals")
+
+  /** LOWESS/RLOWESS — the reference's own robust locally weighted
+    * regression per series (StlKernel.rlowess — GTSHelper.rlowess:
+    * 10795-11218), with the d-skipping walk and bisquare robustness
+    * iterations. `bucket` carries BUCKETIZE metadata; estimates then
+    * cover every bucket tick. Class/labels are carried through the
+    * kernel group, as [[stlDecomposeTagged]] does: the smoothed points
+    * come back as (gtsid, ts, vdouble, class, labels) with no metadata
+    * join over the operand. */
+  def rlowessSmooth(q: Int, r: Int, d: Long, p: Int,
+                    bucket: Option[(Long, Long, Long)]): DataFrame =
+    perSeriesTagged { (id, cls, lbl, ticks, vals) =>
+      val out = StlKernel.rlowess(StlKernel.ofPoints(ticks, vals, bucket), q, r, d, p)
+      Iterator.tabulate(out.values)(i => (id, out.ticks(i), out.vals(i), cls, lbl))
+    }.toDF("gtsid", "ts", "vdouble", "class", "labels")
 
   /** HYBRIDTEST/HYBRIDTEST2 — the reference's piecewise seasonal-hybrid
     * ESD per series (StlKernel.hybridTest); returns the anomalous
@@ -531,11 +530,23 @@ object KernelOps {
     * shuffled instead of 5.4M grid rows, and the grid-explode + grid
     * left-join exchanges disappear entirely). Off-grid sparse ticks
     * are skipped — exactly what fillValue's grid-sided left join does.
-    * Static so kernel closures capture only the GridFill value. */
+    * Static so kernel closures capture only the GridFill value.
+    *
+    * Invariant: the sparse frame holds at most one point per (gtsid,
+    * ts) — a BUCKETIZE result has one row per (series, bucket), which
+    * is what its grouping keys guarantee. The merge takes one value per
+    * grid tick, so a repeated tick would silently drop points; it is
+    * asserted here (`ticks` arrive sorted, so adjacent ticks suffice). */
   private[kernels] def densify(ticks: Array[Long], vals: Array[Double],
       gf: Option[GridFill]): (Array[Long], Array[Double]) = gf match {
     case None => (ticks, vals)
     case Some(g) =>
+      var k = 1
+      while (k < ticks.length) {
+        assert(ticks(k) != ticks(k - 1),
+          s"FILLVALUE grid: tick ${ticks(k)} repeats within one series")
+        k += 1
+      }
       val n = g.count
       val first = g.lastbucket - (n - 1).toLong * g.span
       val dt = new Array[Long](n)

@@ -246,12 +246,8 @@ final case class GtsFrame(df: DataFrame) {
     // native codegen'd expression; exact long arithmetic (plans/BucketEnd)
     val bucketEnd = graft.plans.BucketEnd.bucketEnd(d.sparkSession,
       col("ts"), lastbucket, bucketspan)
-    val grouped = d.filter(inWindow)
-      .withColumn("__bucket", bucketEnd)
-      .groupBy(col("gtsid"), col("__bucket"))
-      .agg(
-        first(col("class")).as("class"),
-        first(col("labels")).as("labels"),
+    val grouped = Gts.aggBySeries(
+        d.filter(inWindow).withColumn("__bucket", bucketEnd), col("__bucket"))(
         agg.column(col("vdouble"), col("ts")).as("vdouble"),
         // loc/elev of the most recent tick in the bucket (reference
         // aggregator/Sum.java:64-69 propagation semantics)
@@ -1355,7 +1351,10 @@ object GtsFrame {
   val PageExtentCap = 1000000L
   def pageIds(ids: org.apache.spark.sql.DataFrame, gskip: Long,
               gcount: Long): org.apache.spark.sql.DataFrame = {
-    val hi = if (gcount >= Long.MaxValue - gskip) Long.MaxValue else gskip + gcount
+    // a negative count is an empty page (as the window-rank path gives),
+    // never a negative LIMIT
+    val hi = if (gcount >= Long.MaxValue - gskip) Long.MaxValue
+      else math.max(0L, gskip + math.max(0L, gcount))
     val distinctIds = ids.select(col("gtsid")).distinct()
     if (hi <= PageExtentCap) {
       val rk = org.apache.spark.sql.expressions.Window.orderBy(col("gtsid"))

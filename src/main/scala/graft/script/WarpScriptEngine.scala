@@ -115,12 +115,6 @@ final class WarpScriptEngine(
 
   // ---------------------------------------------------------------- core
 
-  /** (gtsid → class, labels) side table for kernel words that return
-    * compact per-series frames. */
-  private[script] def metaOf(f: GtsFrame): org.apache.spark.sql.DataFrame =
-    f.df.groupBy(col("gtsid"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
-
   /** LOWESS/RLOWESS dispatch: run the faithful rlowess kernel over a
     * plain or bucketized operand; a bucketized input estimates every
     * bucket tick and keeps its BUCKETIZE metadata (the reference
@@ -129,16 +123,11 @@ final class WarpScriptEngine(
                                  p: Int): Any = obj match {
     case b: BucketedFrame =>
       // FILLVALUE fusion (r14): pack the sparse twin, synthesize the
-      // grid in the kernel; meta comes from the sparse twin too (same
-      // series set, no grid plan behind it)
-      val (ops, metaSrc) = kernelOpsFor(b.frame)
-      val sm = ops.rlowessSmooth(
-        q, r, d, p, Some((b.lastbucket, b.span, b.count)))
-      b.copy(frame = GtsFrame(sm.join(metaOf(metaSrc), "gtsid")))
+      // grid in the kernel; class/labels ride through the kernel group
+      b.copy(frame = GtsFrame(kernelOpsFor(b.frame)
+        .rlowessSmooth(q, r, d, p, Some((b.lastbucket, b.span, b.count)))))
     case o =>
-      val f = toFrame(o)
-      GtsFrame(new graft.kernels.KernelOps(f.df)
-        .rlowessSmooth(q, r, d, p, None).join(metaOf(f), "gtsid"))
+      GtsFrame(new graft.kernels.KernelOps(toFrame(o).df).rlowessSmooth(q, r, d, p, None))
   }
 
   /** DTW/ZDTW/RAWDTW (fn/DTW.java:59-228, faithful r11): gts2 gts1
@@ -247,7 +236,7 @@ final class WarpScriptEngine(
     GtsFrame(new graft.kernels.KernelOps(f.df)
       .discords(windowLen, wordLen, alphabet, count, overlap, distRatio,
         standardizePAA)
-      .join(metaOf(f), "gtsid"))
+      .join(graft.model.Gts.seriesMeta(f.df), "gtsid"))
   }
 
   private def exec(tokens: Vector[WsToken], st: State): Unit = {
@@ -917,16 +906,14 @@ final class WarpScriptEngine(
     fillValueOrigin.put(filled, (sparse, lastbucket, span, count, value))
 
   /** KernelOps over a bucketized frame, honoring FILLVALUE provenance:
-    * returns the kernel wrapper plus the frame kernels should read
-    * series METADATA from (the sparse twin when fused — same series
-    * set, no grid plan behind it). */
-  private[script] def kernelOpsFor(f: GtsFrame)
-      : (graft.kernels.KernelOps, GtsFrame) = {
+    * when fused, the kernel packs the sparse twin and synthesizes the
+    * grid itself. */
+  private[script] def kernelOpsFor(f: GtsFrame): graft.kernels.KernelOps = {
     val o = fillValueOrigin.get(f)
     if (o != null && o._4 > 0 && o._4 <= Int.MaxValue.toLong)
-      (new graft.kernels.KernelOps(o._1.df, Some(
-        graft.kernels.KernelOps.GridFill(o._2, o._3, o._4.toInt, o._5))), o._1)
-    else (new graft.kernels.KernelOps(f.df), f)
+      new graft.kernels.KernelOps(o._1.df, Some(
+        graft.kernels.KernelOps.GridFill(o._2, o._3, o._4.toInt, o._5)))
+    else new graft.kernels.KernelOps(f.df)
   }
 
   private[script] def materialize(b: GtsBuilder): GtsFrame = {

@@ -45,7 +45,7 @@ private[script] object WordsAnalytics {
         // result, pack the SPARSE pre-fill frame and synthesize the
         // dense grid inside the kernel decode — the grid rows never
         // cross the pack exchange (guide §2.3; w54 5.4M → 99k rows)
-        val packed = en.kernelOpsFor(b.frame)._1
+        val packed = en.kernelOpsFor(b.frame)
           .stlDecomposeTagged(
             (b.lastbucket, b.span, b.count), p.bpp, p.inner, p.outer,
             p.ns, p.ds, p.js, p.nl, p.dl, p.jl, p.nt, p.dt, p.jt,
@@ -107,7 +107,7 @@ private[script] object WordsAnalytics {
         // still reads the materialized filled frame (it needs the
         // original dense values), but the kernel input no longer
         // re-executes that dense plan a second time
-        val tagged = en.kernelOpsFor(b.frame)._1.stlDecompose(
+        val tagged = en.kernelOpsFor(b.frame).stlDecompose(
           (b.lastbucket, b.span, b.count), pr.bpp, pr.inner, pr.outer,
           pr.ns, pr.ds, pr.js, pr.nl, pr.dl, pr.jl, pr.nt, pr.dt, pr.jt,
           pr.np, pr.dp, pr.jp)
@@ -125,7 +125,7 @@ private[script] object WordsAnalytics {
         val ns = counts.flatMap(c => math.max(c - k + 1, 3) to c).distinct.toSeq
         st.push(GtsFrame(
           StatOps.esdMadFlagAt(remFrame.df, k, StatOps.lambdasAt(alpha, ns))
-            .join(en.metaOf(remFrame), "gtsid")))
+            .join(graft.model.Gts.seriesMeta(remFrame.df), "gtsid")))
 
       // HYBRIDTEST / HYBRIDTEST2 (fn/HYBRIDTEST.java, HYBRIDTEST2.java →
       // GTSOutliersHelper.hybridTest:524-626 / entropyHybridTest:
@@ -168,7 +168,7 @@ private[script] object WordsAnalytics {
           }
         // kernel-side FILLVALUE fusion only (flag join keeps the
         // filled frame — output rows carry the dense values)
-        val flags = en.kernelOpsFor(b.frame)._1.hybridFlags(
+        val flags = en.kernelOpsFor(b.frame).hybridFlags(
           (b.lastbucket, b.span, b.count), bpp, ppp, k, alpha,
           entropy = w == "HYBRIDTEST2", stl16)
         st.push(GtsFrame(b.frame.df.join(flags, Seq("gtsid", "ts"))))

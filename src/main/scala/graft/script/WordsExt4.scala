@@ -124,7 +124,7 @@ private[script] object WordsExt4 {
             out.iterator
           }
         }.toDF("gtsid", "ts", "lat", "lon", "elev", "vdouble")
-        st.push(GtsFrame(kept.join(en.metaOf(f), "gtsid")))
+        st.push(GtsFrame(kept.join(Gts.seriesMeta(f.df), "gtsid")))
 
       // ---- PIVOTSTRICT (fn/PIVOT.java synchronous=true): label data
       // points with the values of labeling series at ticks where ALL
@@ -162,7 +162,7 @@ private[script] object WordsExt4 {
       // metadata frame; only the tiny distinct sets reach the driver.
       case "FINDSETS" =>
         val (cls, labels) = findArgs(st)
-        val meta = en.metaOf(en.fetchPub(cls, labels, Long.MinValue, Long.MaxValue))
+        val meta = Gts.seriesMeta(en.fetchPub(cls, labels, Long.MinValue, Long.MaxValue).df)
         val classes = meta.select(col("class")).distinct()
           .collect().map(_.getString(0)).sorted.toVector
         val lrows = meta
@@ -198,7 +198,7 @@ private[script] object WordsExt4 {
       case "METASET" =>
         val ttl = st.popLong()
         val (cls, labels) = findArgs(st)
-        val meta = en.metaOf(en.fetchPub(cls, labels, Long.MinValue, Long.MaxValue))
+        val meta = Gts.seriesMeta(en.fetchPub(cls, labels, Long.MinValue, Long.MaxValue).df)
         val rows = meta.limit(10001).collect()
         require(rows.nonEmpty,
           "METASET couldn't find any metadata matching the given class and label selectors.")

@@ -221,7 +221,8 @@ private[script] object WordsExt5 {
       // NAME/LABELS/SIZE on it cost zero Spark actions.
       case "FIND" =>
         val (cls, labels) = findArgs(st)
-        val meta = en.metaOf(en.fetchPub(cls, labels, Long.MinValue, Long.MaxValue))
+        val meta = graft.model.Gts.seriesMeta(
+          en.fetchPub(cls, labels, Long.MinValue, Long.MaxValue).df)
         val rows = meta.limit(10001).collect()
         require(rows.length <= 10000, "FIND: too many series")
         val series = rows.map { r =>
@@ -239,7 +240,8 @@ private[script] object WordsExt5 {
       // keys, one aggregation pass.
       case "FINDSTATS" =>
         val (cls, labels) = findArgs(st)
-        val meta = en.metaOf(en.fetchPub(cls, labels, Long.MinValue, Long.MaxValue))
+        val meta = graft.model.Gts.seriesMeta(
+          en.fetchPub(cls, labels, Long.MinValue, Long.MaxValue).df)
           .cache()
         try {
           // TWO jobs, not four (r14, guide §1.2): the per-class and

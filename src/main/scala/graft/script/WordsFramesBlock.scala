@@ -1128,7 +1128,7 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
         "The smoothing factor must be in 0 < alpha < 1.")
       val f = toFrame(st.pop())
       st.push(GtsFrame(new graft.kernels.KernelOps(f.df).expSmooth(alpha)
-        .join(metaOf(f), "gtsid")))
+        .join(graft.model.Gts.seriesMeta(f.df), "gtsid")))
     // DOUBLEEXPONENTIALSMOOTHING (fn/DOUBLEEXPONENTIALSMOOTHING.java →
     // GTSHelper.doubleExponentialSmoothing:9162-9223, faithful r11):
     // gts alpha beta → [ level-GTS best-estimate-GTS ] — the reference
@@ -1144,7 +1144,7 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
       // kernel pass
       val tagged = new graft.kernels.KernelOps(f.df).holtSmooth(alpha, beta)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val meta = metaOf(f)
+      val meta = graft.model.Gts.seriesMeta(f.df)
       st.push(Vector[Any](
         GtsFrame(tagged.filter(col("which") === "s").drop("which")
           .join(meta, "gtsid")),
@@ -1165,7 +1165,7 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
       val flagged =
         if (useMedian) graft.operators.StatOps.esdMadFlag(f, k, alpha)
         else graft.operators.StatOps.esdFlag(f, k, alpha)
-      st.push(GtsFrame(flagged.join(metaOf(f), "gtsid")))
+      st.push(GtsFrame(flagged.join(graft.model.Gts.seriesMeta(f.df), "gtsid")))
     // RESETS (fn/RESETS.java): gts decreasing:BOOLEAN RESETS — the flag
     // selects the counter direction (true = decreasing counter, a
     // reset is an upward jump; GTSHelper.compensateResets:5960-6020)

@@ -480,7 +480,7 @@ private[script] object WordsGts {
         val flagged =
           if (useMad) graft.operators.StatOps.esdMadFlag(f, 1, 0.05)
           else graft.operators.StatOps.esdFlag(f, 1, 0.05)
-        st.push(GtsFrame(flagged.join(en.metaOf(f), "gtsid")))
+        st.push(GtsFrame(flagged.join(graft.model.Gts.seriesMeta(f.df), "gtsid")))
 
       // MONOTONIC (fn/MONOTONIC.java): clamp values so the series is
       // monotonic in tick order — running max (ascending) / running
@@ -503,7 +503,7 @@ private[script] object WordsGts {
         val thr = st.popLong().toInt
         val f = en.toFrame(st.pop())
         val sel = new graft.kernels.KernelOps(f.df).lttbRef(thr, timebased = true)
-        st.push(GtsFrame(sel.join(en.metaOf(f), "gtsid")))
+        st.push(GtsFrame(sel.join(graft.model.Gts.seriesMeta(f.df), "gtsid")))
 
       // ---- series grouping (fn/PARTITION.java: [gts] [labels] →
       // map of label-values → merged sub-frame; fn/GROUPBY.java /
@@ -531,7 +531,7 @@ private[script] object WordsGts {
         // key every series in memory: metadata-only macros run through
         // ScalarEval with no further Spark actions; macros that touch
         // point data fall back to the engine loop (one action/series).
-        val metas = en.metaOf(f).collect()
+        val metas = graft.model.Gts.seriesMeta(f.df).collect()
         require(metas.length <= 10000, s"$w: too many series (${metas.length})")
         val scalarSafe = graft.script.ScalarEval.metadataSafe(m.tokens)
         val keyed: Seq[(Any, Long)] = metas.toSeq.map { row =>

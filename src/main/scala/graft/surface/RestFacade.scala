@@ -119,10 +119,6 @@ final class RestFacade(
       .drop("__prev", "__last")
   }
 
-  private def metaOf(points: DataFrame): DataFrame =
-    points.groupBy(col("gtsid"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
-
   /** Parse `class{k=v,…}` (and an optional trailing `{attrs}` block)
     * from a meta line — the unencoded convention of [[LineProtocol]]. */
   private def parseMetaLine(line: String): (String, Map[String, String], Map[String, String]) = {
@@ -145,6 +141,11 @@ final class RestFacade(
 
   /** Start on `port` (0 = ephemeral); returns the bound port. */
   def start(port: Int = 0): Int = {
+    // The JDK server leaves Nagle's algorithm on unless this property is
+    // set; with the client's delayed ACK every small response then
+    // waits ~40 ms. The JDK reads it once per JVM, when its first
+    // HttpServer is created, so it must be set before that.
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     // Without an executor the JDK HttpServer runs EVERY handler on its
     // single dispatcher thread — concurrent clients (h05's independent
@@ -331,7 +332,7 @@ final class RestFacade(
             throw new IllegalArgumentException("missing 'end'")).toLong)
       // report the touched series (StandaloneDeleteHandler:461-471),
       // then record the predicate the combined view applies
-      val touched = metaOf(combined().filter(sel.predicate)
+      val touched = Gts.seriesMeta(combined().filter(sel.predicate)
           .filter(col("ts").between(lo, hi)))
         .orderBy(col("class")).limit(maxRows).collect()
         .map(r => r.getString(1) +
@@ -372,7 +373,7 @@ final class RestFacade(
           if (cands.isEmpty) ""
           else {
             val candClasses = cands.map(_._1._1).distinct
-            val live = metaOf(combined().filter(sel.predicate)
+            val live = Gts.seriesMeta(combined().filter(sel.predicate)
                 .filter(col("class").isin(candClasses: _*)))
               .limit(maxRows).collect()
               .map(r => (r.getString(1), r.getAs[Map[String, String]](2)))
@@ -384,7 +385,7 @@ final class RestFacade(
               .mkString("\n")
           }
         } else {
-          metaOf(combined()).filter(sel.predicate)
+          Gts.seriesMeta(combined()).filter(sel.predicate)
             .orderBy(col("class")).limit(maxRows).collect()
             .map { r =>
               val cls = r.getString(1)

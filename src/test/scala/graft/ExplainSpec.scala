@@ -331,4 +331,72 @@ class ExplainSpec extends SparkSpec {
       !p2.contains("BroadcastNestedLoopJoin"))
   }
 
+  /** A Sort operator node (SortExec prints as `Sort [keys], global`). */
+  private def hasSortNode(p: String): Boolean =
+    p.linesIterator.exists(_.matches("""^[\s:+\-*()\d]*Sort \[.*"""))
+
+  private def seriesPoints = graft.operators.GtsFrame(gtsOf(
+    ("m.a", "u1", 10L, 1.0), ("m.a", "u1", 25L, 2.0), ("m.a", "u2", 12L, 3.0),
+    ("m.b", "u1", 31L, 4.0), ("m.b", "u3", 40L, 5.0)))
+
+  test("BUCKETIZE, series metadata and metaTable plan as hash aggregates: " +
+    "no SortAggregate, no Sort") {
+    import graft.operators.GtsFrame.Sum
+    val f = seriesPoints
+    val cases = Seq(
+      "bucketize" -> f.bucketize(Sum, 40L, 10L, 4L).df,
+      "bucketizeAuto" -> f.bucketizeAuto(Sum, 0L, 0L, 2L).df,
+      "seriesMeta" -> graft.model.Gts.seriesMeta(f.df),
+      "metaTable" -> graft.model.Gts.metaTable(f.df))
+    cases.foreach { case (name, df) =>
+      val p = plan(df)
+      assert(p.contains("HashAggregate"), s"$name\n$p")
+      assert(!p.contains("SortAggregate") && !hasSortNode(p), s"$name\n$p")
+    }
+    // metadata survives as maps, one row per series
+    val meta = graft.model.Gts.metaTable(f.df).collect()
+      .map(r => (r.getAs[String]("class"), r.getAs[Map[String, String]]("labels"),
+        r.getAs[Long]("npoints"))).toSet
+    assert(meta == Set(("m.a", Map("user" -> "u1"), 2L), ("m.a", Map("user" -> "u2"), 1L),
+      ("m.b", Map("user" -> "u1"), 1L), ("m.b", Map("user" -> "u3"), 1L)))
+  }
+
+  test("canonical's series-id Project is codegen'd, with no lambda") {
+    val noId = spark.range(20).select(
+      concat(lit("c."), (col("id") % 3).cast("string")).as("class"),
+      map(lit("k"), (col("id") % 5).cast("string"), lit("a"), lit("x")).as("labels"),
+      col("id").as("ts"),
+      lit(null).cast("double").as("lat"), lit(null).cast("double").as("lon"),
+      lit(null).cast("bigint").as("elev"),
+      lit(graft.model.GtsType.DOUBLE).cast("tinyint").as("vtype"),
+      lit(null).cast("bigint").as("vlong"), col("id").cast("double").as("vdouble"),
+      lit(null).cast("boolean").as("vbool"), lit(null).cast("string").as("vstring"),
+      lit(null).cast("binary").as("vbinary"))
+    val p = plan(graft.model.Gts.canonical(noId))
+    assert(!p.contains("lambdafunction"), p)
+    val idLine = p.linesIterator.find(_.contains("gts_id(")).getOrElse(fail(p))
+    // "*(n) Project" is executedPlan.toString's WholeStageCodegen marker
+    assert(idLine.matches(""".*\*\(\d+\) Project .*"""), p)
+  }
+
+  test("LOWESS over a FILLVALUE'd BUCKETIZE scans its source once and " +
+    "keeps its series metadata") {
+    import graft.script.WarpScriptEngine
+    val dir = java.nio.file.Files.createTempDirectory("lowess-scan").resolve("pts").toString
+    seriesPoints.df.write.parquet(dir)
+    val base = graft.operators.GtsFrame(spark.read.parquet(dir))
+    val eng = new WarpScriptEngine(
+      fetch = (cls, labels, s, e) => base.select(cls, labels).timeclip(s, e),
+      nowTs = 0L, session = Some(spark))
+    val out = eng.runToFrame(
+      "[ [ '' '~m.*' {} 40 100 ] FETCH bucketizer.sum 40 10 4 ] BUCKETIZE " +
+        "[ 0 0 0 0.0 ] FILLVALUE 3 LOWESS")
+    val p = fullPlan(out)
+    assert(p.split("FileScan").length - 1 == 1, p)
+    val series = out.select(col("class"), col("labels")).collect()
+      .map(r => (r.getString(0), r.getAs[Map[String, String]](1))).toSet
+    assert(series == Set(("m.a", Map("user" -> "u1")), ("m.a", Map("user" -> "u2")),
+      ("m.b", Map("user" -> "u1")), ("m.b", Map("user" -> "u3"))))
+    assert(out.count() == 4 * 4)
+  }
 }

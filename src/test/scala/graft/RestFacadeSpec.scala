@@ -123,6 +123,33 @@ class RestFacadeSpec extends SparkSpec {
     } finally facade.stop()
   }
 
+  test("start() turns Nagle's algorithm off for every response") {
+    val f = fixture
+    val facade = new RestFacade(f,
+      () => new WarpScriptEngine(
+        (cls, labels, a, b) => f.select(cls, labels).timeclip(a, b)))
+    facade.start()
+    try assert(System.getProperty("sun.net.httpserver.nodelay") == "true")
+    finally facade.stop()
+  }
+
+  test("fetch: a negative gcount is an empty page, not a 400") {
+    val f = fixture
+    val facade = new RestFacade(f,
+      () => new WarpScriptEngine(
+        (cls, labels, a, b) => f.select(cls, labels).timeclip(a, b)))
+    val port = facade.start()
+    val base = s"http://127.0.0.1:$port/api/v0/fetch?selector=~.*&start=0&stop=1000"
+    try {
+      val (c, body) = get(s"$base&gcount=-1")
+      assert(c == 200 && body.trim.isEmpty)
+      val (cSkip, skipped) = get(s"$base&gskip=1&gcount=-1")
+      assert(cSkip == 200 && skipped.trim.isEmpty)
+      val (cOne, one) = get(s"$base&gcount=1")
+      assert(cOne == 200 && one.trim.split("\n").length == 1)
+    } finally facade.stop()
+  }
+
   test("exec: WarpScript program over real HTTP returns stack JSON") {
     val f = fixture
     val facade = new RestFacade(f,
