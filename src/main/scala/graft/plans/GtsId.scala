@@ -60,7 +60,7 @@ case class GtsId(left: Expression, right: Expression) extends BinaryExpression {
 
 object GtsId {
 
-  val Seed = 42L
+  private val Seed = 42L
 
   private val byKeyThenValue = new java.util.Comparator[Array[UTF8String]] {
     // array_sort's struct order: key, then value with null first
