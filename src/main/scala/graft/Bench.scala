@@ -438,7 +438,8 @@ object Bench {
     // parses their full line and must not mistake a compact line for
     // a board).
     if (!sys.env.contains("SPARK_GRAFT_SHARD")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+      // an Int, so a value like `auto` or `8,16` cannot break the JSON
+      val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption).getOrElse(32)
       val compact = f"""{"phase":"${phase.getOrElse("final")}","metric":"total","value":$total%.3f${firstPassTotal.map(t => f""","total_single_pass":$t%.3f""").getOrElse("")},"unit":"sec","n":${results.size},"errors":$errs,"cpus":$cpus,"btime":$bootTime,"sf":"$sfDir"}"""
       println(compact)
     }

@@ -70,17 +70,28 @@ object StreamQueries {
   private val runToken: String =
     java.lang.ProcessHandle.current().pid().toString + "-" +
       java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
+  /** This run's input directory, deleted by one shutdown hook per JVM
+    * (a JVM already shutting down refuses the hook and keeps it). */
+  private lazy val runRoot: java.nio.file.Path = {
+    val r = java.nio.file.Paths.get(
+      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft-stream-in", s"run-$runToken")
+    try Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      try deleteTree(r) catch { case _: Throwable => }))
+    catch { case _: IllegalStateException => }
+    r
+  }
+  private def deleteTree(p: java.nio.file.Path): Unit =
+    if (Files.exists(p)) {
+      val paths = Files.walk(p)
+      try paths.sorted(java.util.Comparator.reverseOrder())
+        .forEach(q => Files.deleteIfExists(q))
+      finally paths.close()
+    }
   private def atRestInput(key: String, dir: String)
       (build: String => Unit): String = {
-    val root = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft-stream-in",
-      s"run-$runToken", s"$key-${dir.replaceAll("[^A-Za-z0-9.]", "_")}")
+    val root = runRoot.resolve(s"$key-${dir.replaceAll("[^A-Za-z0-9.]", "_")}")
     val done = root.resolve("_DONE")
     val data = root.resolve("data")
-    def deleteTree(p: java.nio.file.Path): Unit =
-      if (Files.exists(p))
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => Files.deleteIfExists(q))
     this.synchronized {
       if (!Files.exists(done)) {
         // wipe any partial build, then write fresh + mark complete
@@ -88,8 +99,6 @@ object StreamQueries {
         Files.createDirectories(root)
         build(data.toString)
         Files.createFile(done)
-        Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          try deleteTree(root.getParent) catch { case _: Throwable => }))
       }
     }
     data.toString

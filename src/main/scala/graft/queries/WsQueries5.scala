@@ -164,7 +164,8 @@ object WsQueries5 {
     // rounding boundary, within reach of cross-engine sum-order jitter
     // in SOME environment every round. The round-10 fix is a coarser
     // REPRESENTATION, not another threshold: emit the direction at
-    // 3-dp. On the 3-dp grid (W110Probe at sf0.001/0.01/0.1) the guard
+    // 3-dp. On the 3-dp grid (measured at sf0.001/0.01/0.1 by the
+    // W110Probe main, since removed; see git history) the guard
     // distance d(x) = |frac(x*1e3) - 0.5| of every row sits >= 2.5e-5
     // from the keep-only-d > 1e-4 decision (kept rows >= 4.2e-4, the
     // one dropped row at 7.46e-5) while cross-engine jitter in d is
@@ -197,8 +198,8 @@ object WsQueries5 {
     // covers no double formatting at all) and the guard distances
     // quantized to the 1/200 grid (gdc/gds in [0,100]). The K=200
     // quantization has its own verified gap: min |frac(d*200) - 0.5|
-    // = 1.1e-4 at sf0.001/0.01/0.1 (W110Probe; K=100 and K=1000 are
-    // 10x worse at sf0.1) vs ~2e-10 jitter. If a
+    // = 1.1e-4 at sf0.001/0.01/0.1 (W110Probe; K=100 and K=1000
+    // are 10x worse at sf0.1) vs ~2e-10 jitter. If a
     // driver run ever hash-fails w110 again, the twin's pass/fail plus
     // these columns identify whether the divergence is a guard-filter
     // membership flip (gdc/gds near 0) or a value flip (cosq/sinq),

@@ -44,8 +44,7 @@ final class WarpScriptEngine(
     fetch: (String, Map[String, String], Long, Long) => GtsFrame,
     nowTs: Long = 0L,
     session: Option[org.apache.spark.sql.SparkSession] = None,
-    meta: Option[() => DataFrame] = None)
-    extends WordsStringsBlock with WordsFramesBlock {
+    meta: Option[() => DataFrame] = None) {
 
   import WsToken._
   import WarpScriptEngine._
@@ -281,465 +280,43 @@ final class WarpScriptEngine(
 
   // ---------------------------------------------------------------- words
 
+  /** One name, resolved in the reference's order: a DEF'd macro, the
+    * word table, then the name families the table cannot list — the
+    * `$name`/`!$name` symbol derefs (MemoryWarpScriptStack.java:973)
+    * and the numbered registers. */
   private def evalWord(w: String, st: State): Unit = {
     st.ops += 1 // fn/OPS.java: operations performed so far
-    if (st.defs.contains(w)) { evalMacro(st.defs(w), st); return }
-    try evalWordDispatch(w, st)
-    catch {
-      case e: IllegalArgumentException
-          if e.getMessage != null && e.getMessage.startsWith("unknown function") =>
-        // IMPORT alias rewrite (fn/IMPORT.java: longest alias wins) —
-        // resolves namespaced macro names through the rules table
-        val rewritten = st.importRules.toSeq.sortBy(-_._1.length).collectFirst {
-          case (alias, ns) if w.startsWith(alias) => ns + w.stripPrefix(alias)
-        }
-        rewritten match {
-          case Some(w2) if st.defs.contains(w2) => evalMacro(st.defs(w2), st)
-          // WSAUDITMODE (fn/WSAUDITMODE.java): collect instead of throw
-          case _ if st.flags("audit") =>
-            st.parseErrors += Map("type" -> "UNKNOWN", "line" -> 0L,
-              "position" -> 0L, "position.end" -> 0L, "statement" -> w)
-          case _ => throw e
-        }
+    val m = st.defs.getOrElse(w, null)
+    if (m != null) { evalMacro(m, st); return }
+    val word = words.getOrElse(w, null)
+    if (word != null) word(w, st, this)
+    else if (w.startsWith("!$")) deref(w.substring(2), st)
+    else if (w.startsWith("$") && w.length > 1) deref(w.substring(1), st)
+    else w match {
+      case WordsControl.RegWord(op, num) => WordsControl.runRegister(op, num, st, this)
+      case _ => unknownWord(w, st)
     }
   }
 
-  /** The NumericalUnaryFunction family (WarpScriptLib.java:2996-3030),
-    * faithful r12: operator selection follows the reference — a LONG
-    * falls to the long op only when one is registered, so FLOOR/CEIL/
-    * SIGNUM return DOUBLEs even for LONG input, ROUND is long-identity
-    * / Math.round (not rint), and the EXACT family truncates a DOUBLE
-    * to its longValue. The words are ListRecursiveStackFunctions: they
-    * apply DIRECTLY to GTS operands (and lists mixing scalars and GTS)
-    * elementwise on the typed value slot — java.lang.Math itself runs
-    * on the executors (a udf per cold face; none of these sit on a
-    * plan-locked hot path). Non-numeric points pass through unchanged
-    * (the reference throws on non-numeric GTS; a frame carries the
-    * type per row, so the numeric rows are the op's domain). */
-  private def unaryMathWord(st: State,
-      spec: (Option[Long => Long], Option[Double => Double],
-        Option[Double => Long])): Unit = {
-    val (opL, opD, opDL) = spec
-    def applyDf(df: DataFrame): DataFrame = {
-      import org.apache.spark.sql.functions.{udf => sudf}
-      val isNum = col("vlong").isNotNull || col("vdouble").isNotNull
-      if (opL.isDefined) {
-        val uL = sudf(opL.get)
-        val base = df.withColumn("vlong",
-          when(col("vlong").isNotNull, uL(col("vlong")))
-            .otherwise(col("vlong")))
-        (opD, opDL) match {
-          case (Some(f), _) =>
-            val uD = sudf(f)
-            base.withColumn("vdouble",
-              when(col("vdouble").isNotNull, uD(col("vdouble")))
-                .otherwise(col("vdouble")))
-          case (_, Some(f)) =>
-            val uDL = sudf(f)
-            base
-              .withColumn("vlong",
-                when(col("vdouble").isNotNull, uDL(col("vdouble")))
-                  .otherwise(col("vlong")))
-              .withColumn("vtype",
-                when(col("vdouble").isNotNull,
-                  lit(graft.model.GtsType.LONG)).otherwise(col("vtype")))
-              .withColumn("vdouble", lit(null).cast("double"))
-          case _ => base
-        }
-      } else {
-        val v = coalesce(col("vdouble"), col("vlong").cast("double"))
-        if (opD.isDefined) {
-          val uD = sudf(opD.get)
-          df.withColumn("__v", when(isNum, uD(v)))
-            .withColumn("vtype",
-              when(isNum, lit(graft.model.GtsType.DOUBLE))
-                .otherwise(col("vtype")))
-            .withColumn("vlong",
-              when(isNum, lit(null).cast("long")).otherwise(col("vlong")))
-            .withColumn("vdouble", when(isNum, col("__v"))
-              .otherwise(col("vdouble")))
-            .drop("__v")
-        } else {
-          val uDL = sudf(opDL.get)
-          df.withColumn("__v", when(isNum, uDL(v)))
-            .withColumn("vtype",
-              when(isNum, lit(graft.model.GtsType.LONG))
-                .otherwise(col("vtype")))
-            .withColumn("vdouble",
-              when(isNum, lit(null).cast("double")).otherwise(col("vdouble")))
-            .withColumn("vlong", when(isNum, col("__v"))
-              .otherwise(col("vlong")))
-            .drop("__v")
-        }
-      }
-    }
-    def applyAny(x: Any): Any = x match {
-      case l: Long =>
-        if (opD.isDefined && opL.isEmpty) opD.get(l.toDouble)
-        else if (opDL.isDefined && opL.isEmpty) opDL.get(l.toDouble)
-        else opL.get(l)
-      case d: Double =>
-        if (opD.isDefined) opD.get(d)
-        else if (opDL.isDefined) opDL.get(d)
-        else opL.get(d.toLong)
-      // a BigDecimal operand forces the double face like a Double
-      // (NumericalUnaryFunction.java:80-82); long-only ops truncate
-      // via Number.longValue
-      case bd: java.math.BigDecimal =>
-        if (opD.isDefined) opD.get(bd.doubleValue)
-        else if (opDL.isDefined) opDL.get(bd.doubleValue)
-        else opL.get(bd.longValue)
-      case v: Vector[Any @unchecked] => v.map(applyAny)
-      case BucketedFrame(f, lb, sp, c) =>
-        BucketedFrame(GtsFrame(applyDf(f.df)), lb, sp, c)
-      case other => GtsFrame(applyDf(toFrame(other).df))
-    }
-    st.push(applyAny(st.pop()))
-  }
+  private def deref(name: String, st: State): Unit =
+    st.push(st.symbols.getOrElse(name,
+      throw new IllegalArgumentException(s"unknown symbol '$name'")))
 
-  /** The NumericalBinaryFunction family (WarpScriptLib.java:3032-3046),
-    * faithful r12 — every operand shape the reference accepts:
-    * scalar×scalar (long face only when both are LONGs and a long op
-    * exists — `2 3 **` is 8 LONG via the truncated (long) Math.pow),
-    * scalar-atop-list / list-atop-scalar (elementwise, the SCALAR is
-    * the op's left operand when it sits BELOW the list and the right
-    * operand when it sits on top — the reference's own asymmetry),
-    * scalar×GTS in either order (elementwise on the typed slot), and —
-    * for the applyOnSingleList words MIN/MAX/ADDEXACT/SUBTRACTEXACT/
-    * MULTIPLYEXACT — a SINGLE list or single-series GTS folds its
-    * values left-to-right to one scalar. */
-  private def binaryMathWord(st: State, spec: (Option[(Long, Long) => Long],
-      Option[(Double, Double) => Double], Boolean)): Unit = {
-    val (opL, opD, inList) = spec
-    // a Double OR BigDecimal operand forces the double face
-    // (NumericalBinaryFunction.java:122, `op0 instanceof BigDecimal`)
-    def isD(x: Any) = x.isInstanceOf[Double] ||
-      x.isInstanceOf[java.math.BigDecimal]
-    def toD(x: Any): Double = x match {
-      case l: Long => l.toDouble; case d: Double => d
-      case bd: java.math.BigDecimal => bd.doubleValue
-      case o => throw new IllegalArgumentException(s"not numeric: $o")
+  /** A name nothing resolves: the IMPORT alias rewrite (fn/IMPORT.java:
+    * longest alias wins) onto a DEF'd macro, else the WSAUDITMODE
+    * record (fn/WSAUDITMODE.java: collect instead of throw), else the
+    * unknown-function error. */
+  private def unknownWord(w: String, st: State): Unit = {
+    val rewritten = st.importRules.toSeq.sortBy(-_._1.length).collectFirst {
+      case (alias, ns) if w.startsWith(alias) => ns + w.stripPrefix(alias)
     }
-    def toL(x: Any): Long = x match {
-      case l: Long => l; case d: Double => d.toLong
-      case bd: java.math.BigDecimal => bd.longValue
-      case o => throw new IllegalArgumentException(s"not numeric: $o")
+    rewritten match {
+      case Some(w2) if st.defs.contains(w2) => evalMacro(st.defs(w2), st)
+      case _ if st.flags("audit") =>
+        st.parseErrors += Map("type" -> "UNKNOWN", "line" -> 0L,
+          "position" -> 0L, "position.end" -> 0L, "statement" -> w)
+      case _ => throw new IllegalArgumentException(s"unknown function '$w'")
     }
-    def scalarOp(a: Any, b: Any): Any =
-      if (opD.isDefined && (opL.isEmpty || isD(a) || isD(b)))
-        opD.get(toD(a), toD(b))
-      else opL.get(toL(a), toL(b))
-    def gtsOp(x: Any, c: Any, scalarLeft: Boolean): Any = {
-      def applyDf(df: DataFrame): DataFrame = {
-        import org.apache.spark.sql.functions.{udf => sudf}
-        val isNum = col("vlong").isNotNull || col("vdouble").isNotNull
-        val uD = opD.map { f =>
-          val cD = toD(c)
-          if (scalarLeft) sudf((v: Double) => f(cD, v))
-          else sudf((v: Double) => f(v, cD))
-        }
-        val uL = opL.map { f =>
-          val cL = toL(c)
-          if (scalarLeft) sudf((v: Long) => f(cL, v))
-          else sudf((v: Long) => f(v, cL))
-        }
-        // the double face wins per the reference's per-row rule unless
-        // a long op exists AND both the scalar and the row are LONGs
-        val vD = coalesce(col("vdouble"), col("vlong").cast("double"))
-        val rowLong = col("vlong").isNotNull && lit(opL.isDefined && !isD(c))
-        (uL, uD) match {
-          case (Some(fl), Some(fd)) =>
-            df.withColumn("__vl", when(rowLong, fl(col("vlong"))))
-              .withColumn("__vd", when(isNum && !rowLong, fd(vD)))
-              .withColumn("vtype",
-                when(isNum && !rowLong, lit(graft.model.GtsType.DOUBLE))
-                  .otherwise(col("vtype")))
-              .withColumn("vlong", when(rowLong, col("__vl")))
-              .withColumn("vdouble", when(isNum && !rowLong, col("__vd")))
-              .drop("__vl", "__vd")
-          case (Some(fl), None) =>
-            df.withColumn("__vl", when(isNum, fl(coalesce(col("vlong"),
-                col("vdouble").cast("long")))))
-              .withColumn("vtype",
-                when(isNum, lit(graft.model.GtsType.LONG))
-                  .otherwise(col("vtype")))
-              .withColumn("vdouble", lit(null).cast("double"))
-              .withColumn("vlong", when(isNum, col("__vl")))
-              .drop("__vl")
-          case (None, Some(fd)) =>
-            df.withColumn("__vd", when(isNum, fd(vD)))
-              .withColumn("vtype",
-                when(isNum, lit(graft.model.GtsType.DOUBLE))
-                  .otherwise(col("vtype")))
-              .withColumn("vlong", lit(null).cast("long"))
-              .withColumn("vdouble", when(isNum, col("__vd")))
-              .drop("__vd")
-          case _ => df
-        }
-      }
-      x match {
-        case BucketedFrame(f, lb, sp, cc) =>
-          BucketedFrame(GtsFrame(applyDf(f.df)), lb, sp, cc)
-        case other => GtsFrame(applyDf(toFrame(other).df))
-      }
-    }
-    val op0 = st.pop()
-    op0 match {
-      case _: Long | _: Double | _: java.math.BigDecimal =>
-        st.pop() match {
-          case n1 @ (_: Long | _: Double | _: java.math.BigDecimal) =>
-            st.push(scalarOp(n1, op0))
-          case l: Vector[Any @unchecked] => st.push(l.map(e => scalarOp(e, op0)))
-          case g @ (_: GtsFrame | _: BucketedFrame | _: GtsBuilder) =>
-            st.push(gtsOp(g, op0, scalarLeft = false))
-          case o => throw new IllegalArgumentException(
-            s"binary numeric word cannot operate on $o")
-        }
-      case l: Vector[Any @unchecked] if inList =>
-        st.push(l.reduceLeft(scalarOp))
-      case l: Vector[Any @unchecked] =>
-        st.pop() match {
-          case n1 @ (_: Long | _: Double | _: java.math.BigDecimal) =>
-            st.push(l.map(e => scalarOp(n1, e)))
-          case o => throw new IllegalArgumentException(
-            s"binary numeric word cannot operate on $o")
-        }
-      case g @ (_: GtsFrame | _: BucketedFrame | _: GtsBuilder) if inList =>
-        // fold the single series' values in tick order (the reference
-        // folds one GTS's value array)
-        val df = WordsGts.singleSeries(toFrame(g), "fold")
-        val rows = df.select(col("ts"), col("vlong"), col("vdouble"))
-          .collect().sortBy(_.getLong(0))
-          .map(r => if (!r.isNullAt(1)) (r.getLong(1): Any)
-                    else (r.getDouble(2): Any))
-        require(rows.nonEmpty, "cannot fold an empty GTS")
-        st.push(rows.reduceLeft(scalarOp))
-      case g @ (_: GtsFrame | _: BucketedFrame | _: GtsBuilder) =>
-        st.pop() match {
-          case n1 @ (_: Long | _: Double | _: java.math.BigDecimal) =>
-            st.push(gtsOp(g, n1, scalarLeft = true))
-          case o => throw new IllegalArgumentException(
-            s"binary numeric word cannot operate on $o")
-        }
-      case o => throw new IllegalArgumentException(
-        s"binary numeric word cannot operate on $o")
-    }
-  }
-
-  private def evalWordDispatch(w: String, st: State): Unit = w match {
-    case u if WarpScriptEngine.unaryOps.contains(u) =>
-      unaryMathWord(st, WarpScriptEngine.unaryOps(u))
-    case u if WarpScriptEngine.binaryOps.contains(u) =>
-      binaryMathWord(st, WarpScriptEngine.binaryOps(u))
-    // ---- structure: lists and maps (MemoryWarpScriptStack MARK/ENDLIST)
-    case "[" => st.push(ListMark)
-    case "]" =>
-      val items = mutable.ArrayBuffer.empty[Any]
-      var v = st.pop()
-      while (v != ListMark) { items.prepend(v); v = st.pop() }
-      st.push(items.toVector)
-    case "{" => st.push(MapMark)
-    case "}" =>
-      val pairs = mutable.ArrayBuffer.empty[(Any, Any)]
-      var v = st.pop()
-      while (v != MapMark) {
-        val k = st.pop()
-        if (k == MapMark) throw new IllegalStateException("odd map entries")
-        pairs.prepend((k, v)); v = st.pop()
-      }
-      st.push(pairs.toMap)
-
-    // ---- variables (fn/STORE.java, $deref MemoryWarpScriptStack.java:973)
-    // STORE accepts a name, a LONG register number, or a list of
-    // names/registers consuming one stack value per non-null entry,
-    // top value bound to the LAST name (fn/STORE.java:48-90)
-    case "STORE" => st.pop() match {
-      case name: String => st.symbols(name) = st.pop()
-      case r: Long => st.regs(r.toInt) = st.pop()
-      case names: Vector[Any @unchecked] =>
-        // bind FIRST→LAST reading by depth, so a duplicated name ends
-        // holding the value nearest the top — the reference's own
-        // documented order: `1 2 3 [ 'a' 'b' 'b' ] STORE $b` is 3
-        // (fn/STORE.java:60-76); nulls skip the binding but still
-        // consume their slot (the trailing dropn drops count values)
-        val count = names.size
-        require(st.stack.length >= count,
-          s"STORE expects $count elements on the stack")
-        names.zipWithIndex.foreach {
-          case (null, _) =>
-          case (s: String, i) => st.symbols(s) = st.stack(count - 1 - i)
-          case (r: Long, i) => st.regs(r.toInt) = st.stack(count - 1 - i)
-          case (o, _) => throw new IllegalArgumentException(s"STORE name: $o")
-        }
-        (0 until count).foreach(_ => st.pop())
-      case o => throw new IllegalArgumentException(s"STORE name: $o")
-    }
-    case "LOAD" => st.pop() match {
-      case r: Long => st.push(st.regs(r.toInt))
-      case name: String => st.push(st.symbols.getOrElse(name,
-        throw new IllegalArgumentException("unknown symbol")))
-      case o => throw new IllegalArgumentException(s"LOAD name: $o")
-    }
-    case v if v.startsWith("!$") => st.push(st.symbols.getOrElse(v.substring(2),
-      throw new IllegalArgumentException(s"unknown symbol '${v.substring(2)}'")))
-    case v if v.startsWith("$") && v.length > 1 => st.push(st.symbols.getOrElse(v.substring(1),
-      throw new IllegalArgumentException(s"unknown symbol '${v.substring(1)}'")))
-
-    // ---- stack words (fn/DUP.java, SWAP, DROP, CLEAR, DEPTH, PICK, ROT)
-    case "DUP" => val v = st.pop(); st.push(v); st.push(v)
-    case "SWAP" => val a = st.pop(); val b = st.pop(); st.push(a); st.push(b)
-    case "DROP" => st.pop()
-    case "CLEAR" => st.stack.clear()
-    case "DEPTH" => st.push(st.stack.length.toLong)
-    case "PICK" => val n = st.popLong().toInt; st.push(st.stack(n - 1))
-    // OVER: copy the second element to the top — not in the reference
-    // registry (use `2 PICK` there) but ScalarEval's macro interpreter
-    // supports it, and driver/executor word sets must agree
-    case "OVER" => st.push(st.stack(1))
-    case "ROT" =>
-      val a = st.pop(); val b = st.pop(); val c = st.pop()
-      st.push(b); st.push(a); st.push(c)
-    // DUPN (MemoryWarpScriptStack.dupn:341): duplicate the top n
-    // elements as a block, order preserved
-    case "DUPN" =>
-      val n = st.popLong().toInt
-      require(n >= 0 && n <= st.stack.length, s"DUPN out of bounds: $n")
-      st.stack.take(n).reverse.foreach(st.push)
-    // ROLL (stack.roll:443): move the n-th element (1 = top) to the top
-    case "ROLL" =>
-      val n = st.popLong().toInt
-      require(n >= 1 && n <= st.stack.length, s"ROLL out of bounds: $n")
-      st.push(st.stack.remove(n - 1))
-    // ROLLD (stack.rolld:1374): move the top element down to depth n
-    case "ROLLD" =>
-      val n = st.popLong().toInt
-      require(n >= 1 && n <= st.stack.length, s"ROLLD out of bounds: $n")
-      val v = st.pop()
-      st.stack.insert(n - 1, v)
-    // TYPEOF (fn/TYPEOF.java:118-160 type names)
-    case "TYPEOF" => st.push(WarpScriptEngine.typeNameOf(st.pop()))
-    // DEFINED (fn/DEFINED.java): symbol-table membership
-    case "DEFINED" => st.push(st.symbols.contains(st.popStr()))
-
-    // ---- the binary operator family (binary/ADD.java, SUB, MUL,
-    // DIV, MOD): every face — BigDecimal-exact numbers, ADD's
-    // list/set/macro appends, matrix/vector forms, GTS×GTS tick
-    // joins, GTS×scalar — lives in WordsBinaryOps
-    case "+" | "-" | "*" | "/" | "%" => WordsBinaryOps.arith(w, st, this)
-    case "PI" => st.push(math.Pi)
-    case "E" => st.push(math.E)
-    // java.lang.Math BINARY tail (the unary family dispatches through
-    // unaryMathWord above): ATAN2, HYPOT, IEEEREMAINDER, COPYSIGN,
-    // NEXTAFTER, FLOORDIV, FLOORMOD
-    // TOGEOHASH (fn/TOGEOHASH.java lat/lon form): lat lon → max-
-    // precision geohash text; GEOHASHTO decodes to the cell CENTER
-    // (lat then lon — the reference's HHCode form is toHHCode)
-    case "TOGEOHASH" =>
-      val lon = st.popNum(); val lat = st.popNum()
-      st.push(graft.functions.GeoHash.encodeScalar(lat, lon, 12))
-    case "GEOHASHTO" =>
-      val (la, lo) = graft.functions.GeoHash.decodeScalar(st.popStr())
-      st.push(la); st.push(lo)
-    // HAVERSINE (fn/HAVERSINE.java): lat1 lon1 lat2 lon2 → meters on
-    // the reference's MEAN Earth radius 6371000 (not the WGS84
-    // equatorial radius), Math.toRadians conversions
-    case "HAVERSINE" =>
-      val lon2 = st.popNum(); val lat2 = st.popNum()
-      val lon1 = st.popNum(); val lat1 = st.popNum()
-      val a = math.pow(math.sin((math.toRadians(lat2) - math.toRadians(lat1)) / 2), 2) +
-        math.cos(math.toRadians(lat1)) * math.cos(math.toRadians(lat2)) *
-          math.pow(math.sin((math.toRadians(lon2) - math.toRadians(lon1)) / 2), 2)
-      st.push(2.0 * 6371000.0 * math.asin(math.sqrt(a)))
-    case "TODOUBLE" => st.push(st.popNum())
-    case "TOLONG" => st.push(st.popNum().toLong)
-    case "TOSTRING" => st.push(String.valueOf(st.pop()))
-
-    // ---- control (fn/EVAL.java, IFT, IFTE, FOREACH)
-    case "EVAL" => st.pop() match {
-      case m: WsMacro => evalMacro(m, st)
-      case NativeFn(_, f) => f(st)
-      case i: WordsExt3.WsInterp => st.push(i.value(st.popNum()))
-      case p: WordsExt5.WsPoly => WordsExt5.applyPoly(p, st, this)
-      case s: String => exec(WarpScriptTokenizer.tokenize(s), st)
-      case o => throw new IllegalArgumentException(s"EVAL on $o")
-    }
-    case "IFT" =>
-      val m = st.pop().asInstanceOf[WsMacro]
-      if (bool(st.pop())) evalMacro(m, st)
-    case "IFTE" =>
-      val mf = st.pop().asInstanceOf[WsMacro]
-      val mt = st.pop().asInstanceOf[WsMacro]
-      if (bool(st.pop())) evalMacro(mt, st) else evalMacro(mf, st)
-    // FOREACH (fn/FOREACH.java): list pushes the element, map pushes
-    // key then value; BREAK/CONTINUE honored per-iteration
-    // FOREACH (fn/FOREACH.java, faithful r12): optional boolean on
-    // top pushes the element INDEX after the element(s); iterates a
-    // list, a map (key then value), a STRING (one character at a
-    // time), or a GTS — each point as [ tick lat lon elev value ]
-    // with NaN geo/elevation sentinels, in tick order
-    case "FOREACH" =>
-      var top = st.pop(); var pushIndex = false
-      top match {
-        case b: Boolean => pushIndex = b; top = st.pop()
-        case _ =>
-      }
-      val m = top.asInstanceOf[WsMacro]
-      var index = 0L
-      val items: Iterable[() => Unit] = st.pop() match {
-        case l: Vector[Any @unchecked] => l.map(v => () => st.push(v))
-        case mp: Map[Any @unchecked, Any @unchecked] =>
-          mp.map { case (k, v) => () => { st.push(k); st.push(v) } }
-        case s: String =>
-          s.toSeq.map(c => () => st.push(c.toString))
-        case g @ (_: GtsFrame | _: BucketedFrame | _: GtsBuilder) =>
-          val rows = toFrame(g).df.select(col("ts"), col("lat"),
-            col("lon"), col("elev"), col("vtype"), col("vlong"),
-            col("vdouble"), col("vbool"), col("vstring")).collect()
-            .sortBy(_.getLong(0)).toSeq
-          rows.map(r => () => {
-            val v: Any = r.getByte(4) match {
-              case graft.model.GtsType.LONG => r.getLong(5)
-              case graft.model.GtsType.DOUBLE => r.getDouble(6)
-              case graft.model.GtsType.BOOLEAN => r.getBoolean(7)
-              case _ => r.getString(8)
-            }
-            st.push(Vector[Any](r.getLong(0),
-              if (r.isNullAt(1)) Double.NaN else r.getDouble(1),
-              if (r.isNullAt(2)) Double.NaN else r.getDouble(2),
-              if (r.isNullAt(3)) Double.NaN else r.getLong(3),
-              v))
-          })
-        case o => throw new IllegalArgumentException(s"FOREACH on $o")
-      }
-      try items.foreach { pushArgs =>
-        pushArgs()
-        if (pushIndex) { st.push(index); index += 1 }
-        try evalMacro(m, st) catch { case _: WsContinueEx => }
-      } catch { case _: WsBreakEx => }
-
-    // extension registries (separate objects keep each dispatch method
-    // under the JVM method-size ceiling): control flow + stack tail,
-    // scalar math/conversions, collections, crypto, GTS tail
-    case other =>
-      if (!wordsStringsBlock(other, st) &&
-          !wordsFramesBlock(other, st) &&
-          !WordsControl.eval(other, st, this) &&
-          !WordsScalar.eval(other, st, this) &&
-          !WordsColl.eval(other, st, this) &&
-          !WordsCrypto.eval(other, st, this) &&
-          !WordsGts.eval(other, st, this) &&
-          !WordsExt2.eval(other, st, this) &&
-          !WordsGeo.eval(other, st, this) &&
-          !WordsAnalytics.eval(other, st, this) &&
-          !WordsExt3.eval(other, st, this) &&
-          !WordsDebug.eval(other, st, this) &&
-          !WordsGts2.eval(other, st, this) &&
-          !WordsExt4.eval(other, st, this) &&
-          !WordsExt5.eval(other, st, this) &&
-          !WordsExt6.eval(other, st, this) &&
-          !WordsPgp.eval(other, st, this) &&
-          !WordsProcessing.eval(other, st, this))
-        throw new IllegalArgumentException(s"unknown function '$other'")
   }
 
   // ---------------------------------------------------------------- helpers
@@ -968,75 +545,36 @@ final class WarpScriptEngine(
 
 object WarpScriptEngine {
 
-  /** NumericalUnaryFunction registrations (WarpScriptLib.java:
-    * 2996-3030): (longOp, doubleOp, doubleToLongOp) — exactly the
-    * reference's operator triples, incl. ROUND's long-identity and the
-    * EXACT family's long-only faces. */
-  private[script] val unaryOps: Map[String,
-      (Option[Long => Long], Option[Double => Double],
-        Option[Double => Long])] = {
-    def d(f: Double => Double) = (None, Some(f), None)
-    Map(
-      "ABS" -> ((Some((l: Long) => math.abs(l)),
-        Some((x: Double) => math.abs(x)), None)),
-      "COS" -> d(math.cos), "COSH" -> d(math.cosh), "ACOS" -> d(math.acos),
-      "SIN" -> d(math.sin), "SINH" -> d(math.sinh), "ASIN" -> d(math.asin),
-      "TAN" -> d(math.tan), "TANH" -> d(math.tanh), "ATAN" -> d(math.atan),
-      "SIGNUM" -> d(math.signum),
-      "FLOOR" -> d(math.floor), "CEIL" -> d(math.ceil),
-      "ROUND" -> ((Some((l: Long) => l), None,
-        Some((x: Double) => math.round(x)))),
-      "RINT" -> d(math.rint), "ULP" -> d(Math.ulp),
-      "NEXTUP" -> d(Math.nextUp), "NEXTDOWN" -> d(Math.nextDown),
-      "SQRT" -> d(math.sqrt), "CBRT" -> d(math.cbrt),
-      "EXP" -> d(math.exp), "EXPM1" -> d(math.expm1),
-      "LN" -> d(math.log), "LOG" -> d(math.log), "LOG10" -> d(math.log10),
-      "LOG1P" -> d(math.log1p),
-      "TORADIANS" -> d(math.toRadians), "TODEGREES" -> d(math.toDegrees),
-      "INCREMENTEXACT" -> ((Some((l: Long) => Math.incrementExact(l)),
-        None, None)),
-      "DECREMENTEXACT" -> ((Some((l: Long) => Math.decrementExact(l)),
-        None, None)),
-      "NEGATEEXACT" -> ((Some((l: Long) => Math.negateExact(l)),
-        None, None)),
-      "TOINTEXACT" -> ((Some((l: Long) => Math.toIntExact(l).toLong),
-        None, None)))
+  /** A builtin word. `w` is the name it was called by, so one body can
+    * serve several names. */
+  private[script] type Word = (String, State, WarpScriptEngine) => Unit
+
+  /** The word table: every builtin name → its body, the reference's
+    * single WarpScriptLib registry (FUNCTIONS lists its keys). Built
+    * once per JVM, not per engine: RestFacade and Mobius build an
+    * engine per request. */
+  private[script] lazy val words: Map[String, Word] = {
+    val t = new WordTable
+    Seq[WordTable => Unit](WordsCore.register, WordsStringsBlock.register,
+      WordsFramesBlock.register, WordsControl.register, WordsScalar.register,
+      WordsColl.register, WordsCrypto.register, WordsGts.register,
+      WordsExt2.register, WordsGeo.register, WordsAnalytics.register,
+      WordsExt3.register, WordsDebug.register, WordsGts2.register,
+      WordsExt4.register, WordsExt5.register, WordsExt6.register,
+      WordsPgp.register, WordsProcessing.register).foreach(_(t))
+    t.result
   }
 
-  /** NumericalBinaryFunction registrations (WarpScriptLib.java:
-    * 3032-3046): (longOp, doubleOp, applyOnSingleList). `**` on two
-    * LONGs is the reference's truncated (long) Math.pow; MIN/MAX and
-    * the EXACT arithmetic also FOLD a single list or a GTS's values
-    * (applyOnSingleList). */
-  private[script] val binaryOps: Map[String,
-      (Option[(Long, Long) => Long], Option[(Double, Double) => Double],
-        Boolean)] = Map(
-    "**" -> ((Some((a: Long, b: Long) => math.pow(a.toDouble, b.toDouble).toLong),
-      Some((a: Double, b: Double) => math.pow(a, b)), false)),
-    "MAX" -> ((Some((a: Long, b: Long) => math.max(a, b)),
-      Some((a: Double, b: Double) => math.max(a, b)), true)),
-    "MIN" -> ((Some((a: Long, b: Long) => math.min(a, b)),
-      Some((a: Double, b: Double) => math.min(a, b)), true)),
-    "COPYSIGN" -> ((None,
-      Some((a: Double, b: Double) => math.copySign(a, b)), false)),
-    "HYPOT" -> ((None,
-      Some((a: Double, b: Double) => math.hypot(a, b)), false)),
-    "IEEEREMAINDER" -> ((None,
-      Some((a: Double, b: Double) => math.IEEEremainder(a, b)), false)),
-    "NEXTAFTER" -> ((None,
-      Some((a: Double, b: Double) => math.nextAfter(a, b)), false)),
-    "ATAN2" -> ((None,
-      Some((a: Double, b: Double) => math.atan2(a, b)), false)),
-    "FLOORDIV" -> ((Some((a: Long, b: Long) => Math.floorDiv(a, b)),
-      None, false)),
-    "FLOORMOD" -> ((Some((a: Long, b: Long) => Math.floorMod(a, b)),
-      None, false)),
-    "ADDEXACT" -> ((Some((a: Long, b: Long) => Math.addExact(a, b)),
-      None, true)),
-    "SUBTRACTEXACT" -> ((Some((a: Long, b: Long) => Math.subtractExact(a, b)),
-      None, true)),
-    "MULTIPLYEXACT" -> ((Some((a: Long, b: Long) => Math.multiplyExact(a, b)),
-      None, true)))
+  /** The word table under construction. A name registered twice is an
+    * error: no body may silently shadow another. */
+  private[script] final class WordTable {
+    private val m = mutable.HashMap.empty[String, Word]
+    def apply(names: String*)(body: Word): Unit = names.foreach { n =>
+      if (m.contains(n)) throw new IllegalStateException(s"word '$n' registered twice")
+      m(n) = body
+    }
+    def result: Map[String, Word] = m.toMap
+  }
 
   /** CALL subprogram pool, JVM-wide like the reference's static
     * subprograms map (fn/CALL.java:208): one long-lived process per
@@ -1237,121 +775,4 @@ object WarpScriptEngine {
     * [robustness] [accuracy] filler.(r)lowess`). */
   final case class LowessFillerVal(name: String, bandwidth: Long,
       robustness: Int, accuracy: Double)
-
-  private val aggByName: Map[String, ValueAgg] = Map(
-    "sum" -> Sum, "mean" -> Mean, "min" -> Min, "max" -> Max,
-    "count" -> CountAgg, "sd" -> Sd, "sd.pop" -> SdPop, "var" -> Var,
-    "mad" -> Mad,
-    // Welford-accumulation variants (aggregator/Variance.Builder with
-    // useWelford=true, WarpScriptLib.java:3240,3270,3318-3325): same
-    // value as sd/var — Welford is an accumulation ORDER, not a
-    // different statistic; Spark's stddev/var aggregates are themselves
-    // numerically-stable merge formulas of the same family
-    "sd.welford" -> Sd, "var.welford" -> Var,
-    "var.pop" -> VarPop, "median" -> Median, "rms" -> Rms,
-    "first" -> First, "last" -> Last, "delta" -> Delta, "rate" -> Rate,
-    // boolean / product / entropy families (aggregator/And.java, Or,
-    // MapperProduct, ShannonEntropy)
-    "and" -> BoolAnd, "or" -> BoolOr, "product" -> ProductAgg,
-    "shannonentropy.0" -> Entropy(false), "shannonentropy.1" -> Entropy(true),
-    // geo window aggregators (aggregator/HDist.java family)
-    "hdist" -> Hdist, "vdist" -> Vdist, "hspeed" -> Hspeed,
-    "vspeed" -> Vspeed, "truecourse" -> TrueCourse)
-
-  /** Aggregator null-variant suffixes (WarpScriptLib.java:3295-3339
-    * registrations): `.forbid-nulls`/`.nonnull` null out the result
-    * when an aligned member is absent; `.exclude-nulls` skips them
-    * (Spark's default); `.include-nulls` (count only) counts every
-    * aligned slot. Plain reducer.and/or/count default to the strict
-    * side, matching their reference constructors. */
-  private def parseVariant(n0: String): (String, Boolean, Boolean) = {
-    val (base, variant) =
-      Seq(".exclude-nulls", ".include-nulls", ".forbid-nulls", ".nonnull")
-        .find(n0.endsWith) match {
-        case Some(v) => (n0.stripSuffix(v), v)
-        case None => (n0, "")
-      }
-    val forbid = variant == ".forbid-nulls" || variant == ".nonnull" ||
-      (variant.isEmpty && (base == "and" || base == "or"))
-    val includeNulls = base == "count" &&
-      (variant == ".include-nulls" || variant.isEmpty)
-    (base, forbid, includeNulls)
-  }
-
-  object BucketizerName {
-    def unapply(w: String): Option[AggVal] =
-      if (w.startsWith("bucketizer.")) aggByName.get(w.stripPrefix("bucketizer."))
-        .map(AggVal(w, _))
-      else None
-  }
-  object ReducerName {
-    def unapply(w: String): Option[AggVal] =
-      if (!w.startsWith("reducer.")) None
-      else {
-        val (base, forbid, includeNulls) = parseVariant(w.stripPrefix("reducer."))
-        aggByName.get(base).map(AggVal(w, _, forbid, includeNulls))
-      }
-  }
-  object MapperName {
-    private val pointwise: Map[String, Column => Column] = Map(
-      "abs" -> abs, "ceil" -> (v => ceil(v)), "floor" -> (v => floor(v)),
-      "round" -> (v => round(v)), "sqrt" -> sqrt, "exp" -> exp, "ln" -> log,
-      "tanh" -> tanh,
-      "sigmoid" -> (v => lit(1.0) / (lit(1.0) + exp(-v))),
-      "tolong" -> (_.cast(org.apache.spark.sql.types.LongType)),
-      "todouble" -> (_.cast(org.apache.spark.sql.types.DoubleType)))
-    def unapply(w: String): Option[Any] =
-      if (!w.startsWith("mapper.")) None
-      else {
-        val n = w.stripPrefix("mapper.")
-        aggByName.get(n).map(AggVal(w, _))
-          .orElse(pointwise.get(n).map(MapperCol(w, _)))
-      }
-  }
-  /** mapper.<cmp>.<coord> names (MapperTickEQ/GE/... families):
-    * cmp ∈ eq/ne/gt/ge/lt/le, coord ∈ tick/lat/lon/elev/hhcode. The
-    * hhcode coordinate compares the 64-bit interleaved cell id computed
-    * from lat/lon (MapperHhcodeGE-style families over
-    * GeoXPLib.toGeoXPPoint). */
-  object CoordMapperName {
-    private val Pat = "^mapper\\.(eq|ne|gt|ge|lt|le)\\.(tick|lat|lon|elev|hhcode)$".r
-    def unapply(w: String): Option[(String, String)] = w match {
-      case Pat(cmp, coord) =>
-        Some((if (coord == "tick") "ts" else coord, cmp))
-      case _ => None
-    }
-  }
-
-  object OpName {
-    private val dbl = org.apache.spark.sql.types.DoubleType
-    // boolean ops over the double-typed frame: truthiness = value != 0,
-    // result 1.0/0.0. Strict forms (op.and/op.or, OpBoolean forbidNulls
-    // = true) null out when an operand is absent — the explicit isNull
-    // guard matters because SQL's 3-valued `false AND null` is false.
-    private def strictAnd(a: Column, b: Column): Column =
-      when(a.isNull || b.isNull, lit(null).cast(dbl))
-        .otherwise(((a =!= 0.0) && (b =!= 0.0)).cast(dbl))
-    private def strictOr(a: Column, b: Column): Column =
-      when(a.isNull || b.isNull, lit(null).cast(dbl))
-        .otherwise(((a =!= 0.0) || (b =!= 0.0)).cast(dbl))
-    private val ops: Map[String, (Column, Column) => Column] = Map(
-      "add" -> (_ + _), "sub" -> (_ - _), "mul" -> (_ * _),
-      // Java semantics, not ANSI: ±Infinity / NaN on zero divisors
-      "div" -> (graft.operators.GtsFrame.ieeeDiv(_, _)),
-      "eq" -> (_ === _), "ne" -> (_ =!= _), "gt" -> (_ > _), "ge" -> (_ >= _),
-      "lt" -> (_ < _), "le" -> (_ <= _),
-      "mask" -> ((v, _) => v), "negmask" -> ((v, _) => v),
-      // `.ignore-nulls` variants (OpAdd/OpMul/OpBoolean with the
-      // ignore flag): absent operands contribute the op's identity
-      "add.ignore-nulls" -> ((a, b) => coalesce(a, lit(0.0)) + coalesce(b, lit(0.0))),
-      "mul.ignore-nulls" -> ((a, b) => coalesce(a, lit(1.0)) * coalesce(b, lit(1.0))),
-      "and" -> (strictAnd(_, _)), "or" -> (strictOr(_, _)),
-      "and.ignore-nulls" -> ((a, b) =>
-        ((coalesce(a, lit(1.0)) =!= 0.0) && (coalesce(b, lit(1.0)) =!= 0.0)).cast(dbl)),
-      "or.ignore-nulls" -> ((a, b) =>
-        ((coalesce(a, lit(0.0)) =!= 0.0) || (coalesce(b, lit(0.0)) =!= 0.0)).cast(dbl)))
-    def unapply(w: String): Option[OpVal] =
-      if (w.startsWith("op.")) ops.get(w.stripPrefix("op.")).map(OpVal(w, _))
-      else None
-  }
 }

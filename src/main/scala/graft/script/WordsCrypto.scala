@@ -440,183 +440,194 @@ private[script] object WordsCrypto {
     st.pop().asInstanceOf[Map[Any, Any]]
       .map { case (k, v) => k.toString -> String.valueOf(v) }
 
-  def eval(w: String, st: State, en: WarpScriptEngine): Boolean = {
-    w match {
-      // ---- digest tail (WarpScriptLib DIGEST registrations; the JDK
-      // provider covers MD2 and the SHA-2/SHA-3 families)
-      case "MD2" | "SHA224" | "SHA384" |
-           "SHA3.224" | "SHA3.256" | "SHA3.384" | "SHA3.512" =>
-        val algo = w match {
-          case "MD2" => "MD2"
-          case "SHA224" => "SHA-224"
-          case "SHA384" => "SHA-384"
-          case s => "SHA3-" + s.stripPrefix("SHA3.")
-        }
-        st.push(java.security.MessageDigest.getInstance(algo)
-          .digest(en.popBytes(st)))
-
-      // KECCAK family (original 0x01 padding, as the reference's
-      // BouncyCastle KeccakDigest — distinct from the JDK's SHA-3)
-      case "KECCAK.128" | "KECCAK.224" | "KECCAK.256" | "KECCAK.288" |
-           "KECCAK.384" | "KECCAK.512" =>
-        val bits = w.stripPrefix("KECCAK.").toInt
-        st.push(keccak(en.popBytes(st), bits))
-
-      case "MD4" => st.push(md4(en.popBytes(st)))
-      case "WHIRLPOOL" => st.push(Whirlpool.digest(en.popBytes(st)))
-      case "TIGER" => st.push(Tiger.digest(en.popBytes(st)))
-      case "GOST" => st.push(Gost3411.digest(en.popBytes(st)))
-
-      // ARGON2 (fn ARGON2, script/functions/ARGON2.java): parameter
-      // map {type/iterations/memory/parallelism/salt/secret/additional/
-      // size/password} → tag bytes; same capability-gated limits as the
-      // reference (argon2.maxiter/maxmem/maxpar/maxsize, defaults
-      // 3/32KB/1/32)
-      case "ARGON2" =>
-        val m = st.pop() match {
-          case mm: Map[Any @unchecked, Any @unchecked] => mm
-          case o => throw new IllegalArgumentException(s"ARGON2 expects a map: $o")
-        }
-        def bytesOf(k: String): Array[Byte] = m.get(k) match {
-          case Some(b: Array[Byte]) => b
-          case Some(s: String) => s.getBytes("UTF-8")
-          case _ => Array.emptyByteArray
-        }
-        def intOf(k: String, dflt: Int): Int = m.get(k) match {
-          case Some(l: Long) => l.toInt
-          case _ => dflt
-        }
-        def capGate(value: Int, dflt: Int, cap: String): Unit =
-          if (value > dflt) {
-            val limit = st.caps.getOrElse(cap, throw new IllegalArgumentException(
-              s"ARGON2 missing capability '$cap'."))
-            require(value <= limit.toLong,
-              s"ARGON2 parameter exceeds capability '$cap' value.")
-          }
-        val tpe = String.valueOf(m.getOrElse("type", "id")) match {
-          case "i" | "I" => Argon2.TypeI
-          case "d" | "D" => Argon2.TypeD
-          case _ => Argon2.TypeId
-        }
-        val iters = intOf("iterations", 3)
-        val memKb = intOf("memory", 32)
-        val par = intOf("parallelism", 1)
-        val size = intOf("size", 32)
-        capGate(iters, 3, "argon2.maxiter")
-        capGate(memKb, 32, "argon2.maxmem")
-        capGate(par, 1, "argon2.maxpar")
-        capGate(size, 32, "argon2.maxsize")
-        st.push(Argon2.hash(tpe, bytesOf("password"), bytesOf("salt"),
-          bytesOf("secret"), bytesOf("additional"), iters, memKb, par, size))
-      case "RIPEMD160" => st.push(ripemd160(en.popBytes(st)))
-      case "RIPEMD128" => st.push(ripemd128(en.popBytes(st)))
-      case "RIPEMD256" => st.push(ripemd256(en.popBytes(st)))
-      case "RIPEMD320" => st.push(ripemd320(en.popBytes(st)))
-
-      // RLP arrows (public Ethereum recursive-length-prefix spec)
-      case "->RLP" => st.push(rlpEncode(st.pop()))
-      case "RLP->" =>
-        st.push(rlpDecode(st.pop().asInstanceOf[Array[Byte]])._1)
-
-      // keyed HMAC words (fn/SHA1HMAC.java, SHA256HMAC: data key →
-      // mac bytes)
-      case "SHA1HMAC" | "SHA256HMAC" =>
-        val key = en.popBytes(st)
-        val data = en.popBytes(st)
-        val algo = if (w == "SHA1HMAC") "HmacSHA1" else "HmacSHA256"
-        st.push(graft.sources.Compress.hmacBytes(key, data, algo))
-
-      // HASH (fn/HASH.java): SipHash-2-4 of bytes/string under an
-      // optional (k0, k1) LONG pair — default key (0, 0) stands in for
-      // the platform's configured class-hash key
-      case "HASH" =>
-        var top = st.pop()
-        var k0 = 0L; var k1 = 0L
-        top match {
-          case l: Long =>
-            k1 = l; k0 = st.popLong(); top = st.pop()
-          case _ =>
-        }
-        val data = top match {
-          case b: Array[Byte] => b
-          case s: String => s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          case o => throw new IllegalArgumentException(s"HASH on $o")
-        }
-        st.push(sipHash24(k0, k1, data))
-
-      // ---- compression stack forms (fn/GZIP.java family over the
-      // columnar Compress twins)
-      case "GZIP" => st.push(graft.sources.Compress.gzipBytes(en.popBytes(st)))
-      case "UNGZIP" =>
-        st.push(graft.sources.Compress.gunzipBytes(st.pop().asInstanceOf[Array[Byte]]))
-      case "DEFLATE" => st.push(graft.sources.Compress.deflateBytes(en.popBytes(st)))
-      case "INFLATE" =>
-        st.push(graft.sources.Compress.inflateBytes(st.pop().asInstanceOf[Array[Byte]]))
-
-      // ---- EC suite (fn/ECGEN.java, ECPRIVATE, ECPUBLIC, ECSIGN,
-      // ECVERIFY, ECDH): JDK named curves; key maps carry
-      // { 'curve', 'd' } (private scalar) / { 'curve', 'q' } (public
-      // point, uncompressed hex), mirroring the reference's parameter
-      // maps (Constants.KEY_CURVE / KEY_D / KEY_Q)
-      case "ECGEN" =>
-        val curve = st.popStr()
-        val kpg = java.security.KeyPairGenerator.getInstance("EC")
-        kpg.initialize(new java.security.spec.ECGenParameterSpec(curve))
-        val kp = kpg.generateKeyPair()
-        val priv = kp.getPrivate.asInstanceOf[java.security.interfaces.ECPrivateKey]
-        val pub = kp.getPublic.asInstanceOf[java.security.interfaces.ECPublicKey]
-        val fieldBytes = (priv.getParams.getCurve.getField.getFieldSize + 7) / 8
-        def fix(bi: java.math.BigInteger): String = {
-          val raw = bi.toByteArray.dropWhile(_ == 0)
-          ("00" * (fieldBytes - raw.length)) + raw.map("%02x".format(_)).mkString
-        }
-        val q = "04" + fix(pub.getW.getAffineX) + fix(pub.getW.getAffineY)
-        st.push(Map[Any, Any]("curve" -> curve, "d" -> priv.getS.toString))
-        st.push(Map[Any, Any]("curve" -> curve, "q" -> q))
-      case "ECPRIVATE" =>
-        val params = keyMap(st)
-        val spec = new java.security.spec.ECPrivateKeySpec(
-          new java.math.BigInteger(params("d")), ecParams(params("curve")))
-        st.push(java.security.KeyFactory.getInstance("EC").generatePrivate(spec))
-      case "ECPUBLIC" =>
-        val params = keyMap(st)
-        val qHex = params("q")
-        require(qHex.startsWith("04"), "ECPUBLIC expects an uncompressed point")
-        val body = qHex.substring(2)
-        val half = body.length / 2
-        val x = new java.math.BigInteger(body.substring(0, half), 16)
-        val y = new java.math.BigInteger(body.substring(half), 16)
-        val spec = new java.security.spec.ECPublicKeySpec(
-          new java.security.spec.ECPoint(x, y), ecParams(params("curve")))
-        st.push(java.security.KeyFactory.getInstance("EC").generatePublic(spec))
-      // data alg key ECSIGN → DER signature bytes (e.g.
-      // 'SHA256WITHECDSA', as the reference's BouncyCastle alg names)
-      case "ECSIGN" =>
-        val key = st.pop().asInstanceOf[java.security.PrivateKey]
-        val alg = st.popStr().toUpperCase.replace("WITHECDSA", "withECDSA")
-        val data = en.popBytes(st)
-        val sig = java.security.Signature.getInstance(alg)
-        sig.initSign(key); sig.update(data)
-        st.push(sig.sign())
-      case "ECVERIFY" =>
-        val key = st.pop().asInstanceOf[java.security.PublicKey]
-        val alg = st.popStr().toUpperCase.replace("WITHECDSA", "withECDSA")
-        val signature = st.pop().asInstanceOf[Array[Byte]]
-        val data = en.popBytes(st)
-        val sig = java.security.Signature.getInstance(alg)
-        sig.initVerify(key); sig.update(data)
-        st.push(sig.verify(signature))
-      // private public ECDH → shared secret as unpadded hex of the
-      // agreed X coordinate (fn/ECDH.java: secret.toString(16))
-      case "ECDH" =>
-        val pub = st.pop().asInstanceOf[java.security.PublicKey]
-        val priv = st.pop().asInstanceOf[java.security.PrivateKey]
-        val ka = javax.crypto.KeyAgreement.getInstance("ECDH")
-        ka.init(priv); ka.doPhase(pub, true)
-        st.push(new java.math.BigInteger(1, ka.generateSecret()).toString(16))
-
-      case _ => return false
+  def register(words: WordTable): Unit = {
+    // ---- digest tail (WarpScriptLib DIGEST registrations; the JDK
+    // provider covers MD2 and the SHA-2/SHA-3 families)
+    words("MD2", "SHA224", "SHA384", "SHA3.224", "SHA3.256", "SHA3.384",
+      "SHA3.512") { (w, st, en) =>
+      val algo = w match {
+        case "MD2" => "MD2"
+        case "SHA224" => "SHA-224"
+        case "SHA384" => "SHA-384"
+        case s => "SHA3-" + s.stripPrefix("SHA3.")
+      }
+      st.push(java.security.MessageDigest.getInstance(algo)
+        .digest(en.popBytes(st)))
     }
-    true
+
+    // KECCAK family (original 0x01 padding, as the reference's
+    // BouncyCastle KeccakDigest — distinct from the JDK's SHA-3)
+    words("KECCAK.128", "KECCAK.224", "KECCAK.256", "KECCAK.288", "KECCAK.384",
+      "KECCAK.512") { (w, st, en) =>
+      val bits = w.stripPrefix("KECCAK.").toInt
+      st.push(keccak(en.popBytes(st), bits))
+    }
+
+    words("MD4") { (w, st, en) => st.push(md4(en.popBytes(st))) }
+    words("WHIRLPOOL") { (w, st, en) => st.push(Whirlpool.digest(en.popBytes(st))) }
+    words("TIGER") { (w, st, en) => st.push(Tiger.digest(en.popBytes(st))) }
+    words("GOST") { (w, st, en) => st.push(Gost3411.digest(en.popBytes(st))) }
+
+    // ARGON2 (fn ARGON2, script/functions/ARGON2.java): parameter
+    // map {type/iterations/memory/parallelism/salt/secret/additional/
+    // size/password} → tag bytes; same capability-gated limits as the
+    // reference (argon2.maxiter/maxmem/maxpar/maxsize, defaults
+    // 3/32KB/1/32)
+    words("ARGON2") { (w, st, en) =>
+      val m = st.pop() match {
+        case mm: Map[Any @unchecked, Any @unchecked] => mm
+        case o => throw new IllegalArgumentException(s"ARGON2 expects a map: $o")
+      }
+      def bytesOf(k: String): Array[Byte] = m.get(k) match {
+        case Some(b: Array[Byte]) => b
+        case Some(s: String) => s.getBytes("UTF-8")
+        case _ => Array.emptyByteArray
+      }
+      def intOf(k: String, dflt: Int): Int = m.get(k) match {
+        case Some(l: Long) => l.toInt
+        case _ => dflt
+      }
+      def capGate(value: Int, dflt: Int, cap: String): Unit =
+        if (value > dflt) {
+          val limit = st.caps.getOrElse(cap, throw new IllegalArgumentException(
+            s"ARGON2 missing capability '$cap'."))
+          require(value <= limit.toLong,
+            s"ARGON2 parameter exceeds capability '$cap' value.")
+        }
+      val tpe = String.valueOf(m.getOrElse("type", "id")) match {
+        case "i" | "I" => Argon2.TypeI
+        case "d" | "D" => Argon2.TypeD
+        case _ => Argon2.TypeId
+      }
+      val iters = intOf("iterations", 3)
+      val memKb = intOf("memory", 32)
+      val par = intOf("parallelism", 1)
+      val size = intOf("size", 32)
+      capGate(iters, 3, "argon2.maxiter")
+      capGate(memKb, 32, "argon2.maxmem")
+      capGate(par, 1, "argon2.maxpar")
+      capGate(size, 32, "argon2.maxsize")
+      st.push(Argon2.hash(tpe, bytesOf("password"), bytesOf("salt"),
+        bytesOf("secret"), bytesOf("additional"), iters, memKb, par, size))
+    }
+    words("RIPEMD160") { (w, st, en) => st.push(ripemd160(en.popBytes(st))) }
+    words("RIPEMD128") { (w, st, en) => st.push(ripemd128(en.popBytes(st))) }
+    words("RIPEMD256") { (w, st, en) => st.push(ripemd256(en.popBytes(st))) }
+    words("RIPEMD320") { (w, st, en) => st.push(ripemd320(en.popBytes(st))) }
+
+    // RLP arrows (public Ethereum recursive-length-prefix spec)
+    words("->RLP") { (w, st, en) => st.push(rlpEncode(st.pop())) }
+    words("RLP->") { (w, st, en) =>
+      st.push(rlpDecode(st.pop().asInstanceOf[Array[Byte]])._1)
+    }
+
+    // keyed HMAC words (fn/SHA1HMAC.java, SHA256HMAC: data key →
+    // mac bytes)
+    words("SHA1HMAC", "SHA256HMAC") { (w, st, en) =>
+      val key = en.popBytes(st)
+      val data = en.popBytes(st)
+      val algo = if (w == "SHA1HMAC") "HmacSHA1" else "HmacSHA256"
+      st.push(graft.sources.Compress.hmacBytes(key, data, algo))
+    }
+
+    // HASH (fn/HASH.java): SipHash-2-4 of bytes/string under an
+    // optional (k0, k1) LONG pair — default key (0, 0) stands in for
+    // the platform's configured class-hash key
+    words("HASH") { (w, st, en) =>
+      var top = st.pop()
+      var k0 = 0L; var k1 = 0L
+      top match {
+        case l: Long =>
+          k1 = l; k0 = st.popLong(); top = st.pop()
+        case _ =>
+      }
+      val data = top match {
+        case b: Array[Byte] => b
+        case s: String => s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        case o => throw new IllegalArgumentException(s"HASH on $o")
+      }
+      st.push(sipHash24(k0, k1, data))
+    }
+
+    // ---- compression stack forms (fn/GZIP.java family over the
+    // columnar Compress twins)
+    words("GZIP") { (w, st, en) => st.push(graft.sources.Compress.gzipBytes(en.popBytes(st))) }
+    words("UNGZIP") { (w, st, en) =>
+      st.push(graft.sources.Compress.gunzipBytes(st.pop().asInstanceOf[Array[Byte]]))
+    }
+    words("DEFLATE") { (w, st, en) =>
+      st.push(graft.sources.Compress.deflateBytes(en.popBytes(st)))
+    }
+    words("INFLATE") { (w, st, en) =>
+      st.push(graft.sources.Compress.inflateBytes(st.pop().asInstanceOf[Array[Byte]]))
+    }
+
+    // ---- EC suite (fn/ECGEN.java, ECPRIVATE, ECPUBLIC, ECSIGN,
+    // ECVERIFY, ECDH): JDK named curves; key maps carry
+    // { 'curve', 'd' } (private scalar) / { 'curve', 'q' } (public
+    // point, uncompressed hex), mirroring the reference's parameter
+    // maps (Constants.KEY_CURVE / KEY_D / KEY_Q)
+    words("ECGEN") { (w, st, en) =>
+      val curve = st.popStr()
+      val kpg = java.security.KeyPairGenerator.getInstance("EC")
+      kpg.initialize(new java.security.spec.ECGenParameterSpec(curve))
+      val kp = kpg.generateKeyPair()
+      val priv = kp.getPrivate.asInstanceOf[java.security.interfaces.ECPrivateKey]
+      val pub = kp.getPublic.asInstanceOf[java.security.interfaces.ECPublicKey]
+      val fieldBytes = (priv.getParams.getCurve.getField.getFieldSize + 7) / 8
+      def fix(bi: java.math.BigInteger): String = {
+        val raw = bi.toByteArray.dropWhile(_ == 0)
+        ("00" * (fieldBytes - raw.length)) + raw.map("%02x".format(_)).mkString
+      }
+      val q = "04" + fix(pub.getW.getAffineX) + fix(pub.getW.getAffineY)
+      st.push(Map[Any, Any]("curve" -> curve, "d" -> priv.getS.toString))
+      st.push(Map[Any, Any]("curve" -> curve, "q" -> q))
+    }
+    words("ECPRIVATE") { (w, st, en) =>
+      val params = keyMap(st)
+      val spec = new java.security.spec.ECPrivateKeySpec(
+        new java.math.BigInteger(params("d")), ecParams(params("curve")))
+      st.push(java.security.KeyFactory.getInstance("EC").generatePrivate(spec))
+    }
+    words("ECPUBLIC") { (w, st, en) =>
+      val params = keyMap(st)
+      val qHex = params("q")
+      require(qHex.startsWith("04"), "ECPUBLIC expects an uncompressed point")
+      val body = qHex.substring(2)
+      val half = body.length / 2
+      val x = new java.math.BigInteger(body.substring(0, half), 16)
+      val y = new java.math.BigInteger(body.substring(half), 16)
+      val spec = new java.security.spec.ECPublicKeySpec(
+        new java.security.spec.ECPoint(x, y), ecParams(params("curve")))
+      st.push(java.security.KeyFactory.getInstance("EC").generatePublic(spec))
+    }
+    // data alg key ECSIGN → DER signature bytes (e.g.
+    // 'SHA256WITHECDSA', as the reference's BouncyCastle alg names)
+    words("ECSIGN") { (w, st, en) =>
+      val key = st.pop().asInstanceOf[java.security.PrivateKey]
+      val alg = st.popStr().toUpperCase.replace("WITHECDSA", "withECDSA")
+      val data = en.popBytes(st)
+      val sig = java.security.Signature.getInstance(alg)
+      sig.initSign(key); sig.update(data)
+      st.push(sig.sign())
+    }
+    words("ECVERIFY") { (w, st, en) =>
+      val key = st.pop().asInstanceOf[java.security.PublicKey]
+      val alg = st.popStr().toUpperCase.replace("WITHECDSA", "withECDSA")
+      val signature = st.pop().asInstanceOf[Array[Byte]]
+      val data = en.popBytes(st)
+      val sig = java.security.Signature.getInstance(alg)
+      sig.initVerify(key); sig.update(data)
+      st.push(sig.verify(signature))
+    }
+    // private public ECDH → shared secret as unpadded hex of the
+    // agreed X coordinate (fn/ECDH.java: secret.toString(16))
+    words("ECDH") { (w, st, en) =>
+      val pub = st.pop().asInstanceOf[java.security.PublicKey]
+      val priv = st.pop().asInstanceOf[java.security.PrivateKey]
+      val ka = javax.crypto.KeyAgreement.getInstance("ECDH")
+      ka.init(priv); ka.doPhase(pub, true)
+      st.push(new java.math.BigInteger(1, ka.generateSecret()).toString(16))
+    }
   }
 }

@@ -132,155 +132,192 @@ private[script] object WordsExt2 {
       case WsToken.WsWord(w) => w
     }.mkString("<% ", " ", " %>")
 
-  def eval(w: String, st: State, en: WarpScriptEngine): Boolean = {
-    w match {
-      // ---- BigDecimal arithmetic tail (fn/BDMOD.java, BDREM, BDPOW,
-      // BDDIVINT, BDDIVIDEANDREMAINDER, BDCEIL, BDFLOOR, BDULP, BDCOMP)
-      case "BDMOD" =>
-        val m = toBi(st.pop(), en); st.push(bd(toBi(st.pop(), en).mod(m)))
-      case "BDREM" =>
-        val m = toBi(st.pop(), en); st.push(bd(toBi(st.pop(), en).remainder(m)))
-      case "BDPOW" =>
-        val exp = st.pop() match {
-          case l: Long => Math.toIntExact(l)
-          case b: JBigDecimal => b.intValueExact()
-          case o => throw new IllegalArgumentException(s"BDPOW exponent: $o")
-        }
-        st.push(en.toBd(st.pop()).pow(exp, MathContext.UNLIMITED))
-      case "BDDIVINT" =>
-        val b = en.toBd(st.pop()); st.push(en.toBd(st.pop()).divideToIntegralValue(b))
-      case "BDDIVIDEANDREMAINDER" =>
-        val b = en.toBd(st.pop())
-        val Array(q, r) = en.toBd(st.pop()).divideAndRemainder(b)
-        st.push(q); st.push(r)
-      case "BDCEIL" => st.push(en.toBd(st.pop()).setScale(0, RoundingMode.CEILING))
-      case "BDFLOOR" => st.push(en.toBd(st.pop()).setScale(0, RoundingMode.FLOOR))
-      case "BDULP" => st.push(en.toBd(st.pop()).ulp())
-      case "BDCOMP" =>
-        val b = en.toBd(st.pop()); st.push(en.toBd(st.pop()).compareTo(b).toLong)
-      // BDCLEAR (fn/BDCLEAR.java): drop the fraction (toBigInteger)
-      case "BDCLEAR" => st.push(bd(en.toBd(st.pop()).toBigInteger))
+  def register(words: WordTable): Unit = {
+    // ---- BigDecimal arithmetic tail (fn/BDMOD.java, BDREM, BDPOW,
+    // BDDIVINT, BDDIVIDEANDREMAINDER, BDCEIL, BDFLOOR, BDULP, BDCOMP)
+    words("BDMOD") { (w, st, en) =>
+      val m = toBi(st.pop(), en); st.push(bd(toBi(st.pop(), en).mod(m)))
+    }
+    words("BDREM") { (w, st, en) =>
+      val m = toBi(st.pop(), en); st.push(bd(toBi(st.pop(), en).remainder(m)))
+    }
+    words("BDPOW") { (w, st, en) =>
+      val exp = st.pop() match {
+        case l: Long => Math.toIntExact(l)
+        case b: JBigDecimal => b.intValueExact()
+        case o => throw new IllegalArgumentException(s"BDPOW exponent: $o")
+      }
+      st.push(en.toBd(st.pop()).pow(exp, MathContext.UNLIMITED))
+    }
+    words("BDDIVINT") { (w, st, en) =>
+      val b = en.toBd(st.pop()); st.push(en.toBd(st.pop()).divideToIntegralValue(b))
+    }
+    words("BDDIVIDEANDREMAINDER") { (w, st, en) =>
+      val b = en.toBd(st.pop())
+      val Array(q, r) = en.toBd(st.pop()).divideAndRemainder(b)
+      st.push(q); st.push(r)
+    }
+    words("BDCEIL") { (w, st, en) => st.push(en.toBd(st.pop()).setScale(0, RoundingMode.CEILING)) }
+    words("BDFLOOR") { (w, st, en) => st.push(en.toBd(st.pop()).setScale(0, RoundingMode.FLOOR)) }
+    words("BDULP") { (w, st, en) => st.push(en.toBd(st.pop()).ulp()) }
+    words("BDCOMP") { (w, st, en) =>
+      val b = en.toBd(st.pop()); st.push(en.toBd(st.pop()).compareTo(b).toLong)
+    }
+    // BDCLEAR (fn/BDCLEAR.java): drop the fraction (toBigInteger)
+    words("BDCLEAR") { (w, st, en) => st.push(bd(en.toBd(st.pop()).toBigInteger)) }
 
-      // ---- BigInteger-view words (TOBD.toBigInteger: exact integer
-      // required) — number theory and bit algebra
-      case "BDGCD" =>
-        val b = toBi(st.pop(), en); st.push(bd(toBi(st.pop(), en).gcd(b)))
-      case "BDMODPOW" =>
-        val m = toBi(st.pop(), en); val e = toBi(st.pop(), en)
-        st.push(bd(toBi(st.pop(), en).modPow(e, m)))
-      case "BDMODINVERSE" =>
-        val m = toBi(st.pop(), en); st.push(bd(toBi(st.pop(), en).modInverse(m)))
-      case "BDISPROBABLEPRIME" =>
-        val certainty = st.popLong().toInt
-        st.push(toBi(st.pop(), en).isProbablePrime(certainty))
-      case "BDNEXTPROBABLEPRIME" =>
-        st.push(bd(toBi(st.pop(), en).nextProbablePrime()))
-      case "BDAND" =>
-        val b = toBi(st.pop(), en); st.push(bd(toBi(st.pop(), en).and(b)))
-      case "BDOR" =>
-        val b = toBi(st.pop(), en); st.push(bd(toBi(st.pop(), en).or(b)))
-      case "BDXOR" =>
-        val b = toBi(st.pop(), en); st.push(bd(toBi(st.pop(), en).xor(b)))
-      case "BDANDNOT" =>
-        val b = toBi(st.pop(), en); st.push(bd(toBi(st.pop(), en).andNot(b)))
-      case "BDNOT" => st.push(bd(toBi(st.pop(), en).not()))
-      case "BDSHIFTLEFT" =>
-        val n = st.popLong().toInt; st.push(bd(toBi(st.pop(), en).shiftLeft(n)))
-      case "BDSHIFTRIGHT" =>
-        val n = st.popLong().toInt; st.push(bd(toBi(st.pop(), en).shiftRight(n)))
-      case "BDSETBIT" =>
-        val n = st.popLong().toInt; st.push(bd(toBi(st.pop(), en).setBit(n)))
-      case "BDCLEARBIT" =>
-        val n = st.popLong().toInt; st.push(bd(toBi(st.pop(), en).clearBit(n)))
-      case "BDFLIPBIT" =>
-        val n = st.popLong().toInt; st.push(bd(toBi(st.pop(), en).flipBit(n)))
-      case "BDTESTBIT" =>
-        val n = st.popLong().toInt; st.push(toBi(st.pop(), en).testBit(n))
-      case "BDBITCOUNT" => st.push(toBi(st.pop(), en).bitCount().toLong)
-      case "BDBITLENGTH" => st.push(toBi(st.pop(), en).bitLength().toLong)
-      case "BDLOWESTSETBIT" => st.push(toBi(st.pop(), en).getLowestSetBit.toLong)
-      // BDRAND/BDPROBABLEPRIME draw from the engine's deterministic
-      // PRNG (the reference's unseeded forms are non-replayable; the
-      // SBD* seeded twins behave identically here)
-      case "BDRAND" | "SBDRAND" =>
-        val bits = st.popLong().toInt
-        require(bits >= 1 && bits <= 4096, s"$w bits out of range: $bits")
-        st.push(bd(new BigInteger(bits, en.prng)))
-      case "BDPROBABLEPRIME" | "SBDPROBABLEPRIME" =>
-        val bits = st.popLong().toInt
-        require(bits >= 2 && bits <= 4096, s"$w bits out of range: $bits")
-        st.push(bd(BigInteger.probablePrime(bits, en.prng)))
-      // ->BD / BD-> (fn/BDTO.java: plain string, or exact-integer
-      // bytes when the boolean flag says so)
-      case "->BD" => st.pop() match {
+    // ---- BigInteger-view words (TOBD.toBigInteger: exact integer
+    // required) — number theory and bit algebra
+    words("BDGCD") { (w, st, en) =>
+      val b = toBi(st.pop(), en); st.push(bd(toBi(st.pop(), en).gcd(b)))
+    }
+    words("BDMODPOW") { (w, st, en) =>
+      val m = toBi(st.pop(), en); val e = toBi(st.pop(), en)
+      st.push(bd(toBi(st.pop(), en).modPow(e, m)))
+    }
+    words("BDMODINVERSE") { (w, st, en) =>
+      val m = toBi(st.pop(), en); st.push(bd(toBi(st.pop(), en).modInverse(m)))
+    }
+    words("BDISPROBABLEPRIME") { (w, st, en) =>
+      val certainty = st.popLong().toInt
+      st.push(toBi(st.pop(), en).isProbablePrime(certainty))
+    }
+    words("BDNEXTPROBABLEPRIME") { (w, st, en) =>
+      st.push(bd(toBi(st.pop(), en).nextProbablePrime()))
+    }
+    words("BDAND") { (w, st, en) =>
+      val b = toBi(st.pop(), en); st.push(bd(toBi(st.pop(), en).and(b)))
+    }
+    words("BDOR") { (w, st, en) =>
+      val b = toBi(st.pop(), en); st.push(bd(toBi(st.pop(), en).or(b)))
+    }
+    words("BDXOR") { (w, st, en) =>
+      val b = toBi(st.pop(), en); st.push(bd(toBi(st.pop(), en).xor(b)))
+    }
+    words("BDANDNOT") { (w, st, en) =>
+      val b = toBi(st.pop(), en); st.push(bd(toBi(st.pop(), en).andNot(b)))
+    }
+    words("BDNOT") { (w, st, en) => st.push(bd(toBi(st.pop(), en).not())) }
+    words("BDSHIFTLEFT") { (w, st, en) =>
+      val n = st.popLong().toInt; st.push(bd(toBi(st.pop(), en).shiftLeft(n)))
+    }
+    words("BDSHIFTRIGHT") { (w, st, en) =>
+      val n = st.popLong().toInt; st.push(bd(toBi(st.pop(), en).shiftRight(n)))
+    }
+    words("BDSETBIT") { (w, st, en) =>
+      val n = st.popLong().toInt; st.push(bd(toBi(st.pop(), en).setBit(n)))
+    }
+    words("BDCLEARBIT") { (w, st, en) =>
+      val n = st.popLong().toInt; st.push(bd(toBi(st.pop(), en).clearBit(n)))
+    }
+    words("BDFLIPBIT") { (w, st, en) =>
+      val n = st.popLong().toInt; st.push(bd(toBi(st.pop(), en).flipBit(n)))
+    }
+    words("BDTESTBIT") { (w, st, en) =>
+      val n = st.popLong().toInt; st.push(toBi(st.pop(), en).testBit(n))
+    }
+    words("BDBITCOUNT") { (w, st, en) => st.push(toBi(st.pop(), en).bitCount().toLong) }
+    words("BDBITLENGTH") { (w, st, en) => st.push(toBi(st.pop(), en).bitLength().toLong) }
+    words("BDLOWESTSETBIT") { (w, st, en) => st.push(toBi(st.pop(), en).getLowestSetBit.toLong) }
+    // BDRAND/BDPROBABLEPRIME draw from the engine's deterministic
+    // PRNG (the reference's unseeded forms are non-replayable; the
+    // SBD* seeded twins behave identically here)
+    words("BDRAND", "SBDRAND") { (w, st, en) =>
+      val bits = st.popLong().toInt
+      require(bits >= 1 && bits <= 4096, s"$w bits out of range: $bits")
+      st.push(bd(new BigInteger(bits, en.prng)))
+    }
+    words("BDPROBABLEPRIME", "SBDPROBABLEPRIME") { (w, st, en) =>
+      val bits = st.popLong().toInt
+      require(bits >= 2 && bits <= 4096, s"$w bits out of range: $bits")
+      st.push(bd(BigInteger.probablePrime(bits, en.prng)))
+    }
+    // ->BD / BD-> (fn/BDTO.java: plain string, or exact-integer
+    // bytes when the boolean flag says so)
+    words("->BD") { (w, st, en) =>
+      st.pop() match {
         case b: Array[Byte] => st.push(bd(new BigInteger(b)))
         case o => st.push(en.toBd(o))
       }
-      case "BD->" => st.pop() match {
+    }
+    words("BD->") { (w, st, en) =>
+      st.pop() match {
         case java.lang.Boolean.TRUE =>
           st.push(en.toBd(st.pop()).toBigIntegerExact.toByteArray)
         case java.lang.Boolean.FALSE => st.push(en.toBd(st.pop()).toPlainString)
         case o => st.push(en.toBd(o).toPlainString)
       }
+    }
 
-      // ---- JSON (fn/TOJSON.java / JSONTO.java over Jackson;
-      // JSONPRETTY renders indented; JSONSTRICT/JSONLOOSE toggle NaN
-      // tolerance on parse)
-      case "->JSON" | "TOJSON" | "JSONCOMPACT" =>
-        val sb = new StringBuilder
-        toJson(st.pop(), sb, pretty = false, 0, en)
-        st.push(sb.toString)
-      case "JSONPRETTY" =>
-        val sb = new StringBuilder
-        toJson(st.pop(), sb, pretty = true, 0, en)
-        st.push(sb.toString)
-      case "JSON->" | "JSONTO" =>
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        if (en.jsonLoose) mapper.configure(
-          com.fasterxml.jackson.core.JsonParser.Feature.ALLOW_NON_NUMERIC_NUMBERS, true)
-        st.push(fromJackson(mapper.readTree(st.popStr())))
-      case "JSONSTRICT" => en.jsonLoose = false
-      case "JSONLOOSE" => en.jsonLoose = true
+    // ---- JSON (fn/TOJSON.java / JSONTO.java over Jackson;
+    // JSONPRETTY renders indented; JSONSTRICT/JSONLOOSE toggle NaN
+    // tolerance on parse)
+    words("->JSON", "TOJSON", "JSONCOMPACT") { (w, st, en) =>
+      val sb = new StringBuilder
+      toJson(st.pop(), sb, pretty = false, 0, en)
+      st.push(sb.toString)
+    }
+    words("JSONPRETTY") { (w, st, en) =>
+      val sb = new StringBuilder
+      toJson(st.pop(), sb, pretty = true, 0, en)
+      st.push(sb.toString)
+    }
+    words("JSON->", "JSONTO") { (w, st, en) =>
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      if (en.jsonLoose) mapper.configure(
+        com.fasterxml.jackson.core.JsonParser.Feature.ALLOW_NON_NUMERIC_NUMBERS, true)
+      st.push(fromJackson(mapper.readTree(st.popStr())))
+    }
+    words("JSONSTRICT") { (w, st, en) => en.jsonLoose = false }
+    words("JSONLOOSE") { (w, st, en) => en.jsonLoose = true }
 
-      // ---- SNAPSHOT variants (fn/SNAPSHOT.java family): COPY peeks,
-      // N takes the top n, ALL the whole stack, TOMARK down to a MARK;
-      // rendering is bottom-to-top so EVAL rebuilds the same stack
-      case "SNAPSHOTCOPY" =>
-        st.push(graft.sources.Snapshot.render(st.stack.head).trim)
-      case "SNAPSHOTN" | "SNAPSHOTCOPYN" =>
-        val n = st.popLong().toInt
-        require(n >= 0 && n <= st.stack.length, s"$w out of bounds: $n")
-        val items = st.stack.take(n).toVector.reverse // bottom-first
-        if (w == "SNAPSHOTN") (1 to n).foreach(_ => st.pop())
-        st.push(items.map(snapshotOne).mkString(" "))
-      case "SNAPSHOTALL" | "SNAPSHOTCOPYALL" =>
-        val items = st.stack.toVector.reverse
-        if (w == "SNAPSHOTALL") st.stack.clear()
-        st.push(items.map(snapshotOne).mkString(" "))
-      // ALLTOMARK: like TOMARK but the MARK itself stays on the stack
-      case "SNAPSHOTALLTOMARK" | "SNAPSHOTCOPYALLTOMARK" =>
-        val n0 = st.stack.indexOf(ListMark)
-        require(n0 >= 0, s"$w: no MARK on stack")
-        val items0 = st.stack.take(n0).toVector.reverse
-        if (w == "SNAPSHOTALLTOMARK") (1 to n0).foreach(_ => st.pop())
-        st.push(items0.map(snapshotOne).mkString(" "))
-      case "SNAPSHOTREADABLE" =>
-        st.push(graft.sources.Snapshot.render(st.pop()))
-      case "SNAPSHOTTOMARK" | "SNAPSHOTCOPYTOMARK" =>
-        val n = st.stack.indexOf(ListMark)
-        require(n >= 0, s"$w: no MARK on stack")
-        val items = st.stack.take(n).toVector.reverse
-        if (w == "SNAPSHOTTOMARK") (0 to n).foreach(_ => st.pop()) // incl. mark
-        st.push(items.map(snapshotOne).mkString(" "))
+    // ---- SNAPSHOT variants (fn/SNAPSHOT.java family): COPY peeks,
+    // N takes the top n, ALL the whole stack, TOMARK down to a MARK;
+    // rendering is bottom-to-top so EVAL rebuilds the same stack
+    words("SNAPSHOTCOPY") { (w, st, en) =>
+      st.push(graft.sources.Snapshot.render(st.stack.head).trim)
+    }
+    words("SNAPSHOTN", "SNAPSHOTCOPYN") { (w, st, en) =>
+      val n = st.popLong().toInt
+      require(n >= 0 && n <= st.stack.length, s"$w out of bounds: $n")
+      val items = st.stack.take(n).toVector.reverse // bottom-first
+      if (w == "SNAPSHOTN") (1 to n).foreach(_ => st.pop())
+      st.push(items.map(snapshotOne).mkString(" "))
+    }
+    words("SNAPSHOTALL", "SNAPSHOTCOPYALL") { (w, st, en) =>
+      val items = st.stack.toVector.reverse
+      if (w == "SNAPSHOTALL") st.stack.clear()
+      st.push(items.map(snapshotOne).mkString(" "))
+    }
+    // ALLTOMARK: like TOMARK but the MARK itself stays on the stack
+    words("SNAPSHOTALLTOMARK", "SNAPSHOTCOPYALLTOMARK") { (w, st, en) =>
+      val n0 = st.stack.indexOf(ListMark)
+      require(n0 >= 0, s"$w: no MARK on stack")
+      val items0 = st.stack.take(n0).toVector.reverse
+      if (w == "SNAPSHOTALLTOMARK") (1 to n0).foreach(_ => st.pop())
+      st.push(items0.map(snapshotOne).mkString(" "))
+    }
+    words("SNAPSHOTREADABLE") { (w, st, en) =>
+      st.push(graft.sources.Snapshot.render(st.pop()))
+    }
+    words("SNAPSHOTTOMARK", "SNAPSHOTCOPYTOMARK") { (w, st, en) =>
+      val n = st.stack.indexOf(ListMark)
+      require(n >= 0, s"$w: no MARK on stack")
+      val items = st.stack.take(n).toVector.reverse
+      if (w == "SNAPSHOTTOMARK") (0 to n).foreach(_ => st.pop()) // incl. mark
+      st.push(items.map(snapshotOne).mkString(" "))
+    }
 
-      // ---- macro words (fn/CHECKMACRO.java is a validation no-op
-      // here — the tokenizer already rejected malformed bodies;
-      // fn/MACROTO.java / TOMACRO.java re-render / compile)
-      case "CHECKMACRO" => st.push(st.pop().asInstanceOf[WsMacro])
-      case "DEFINEDMACRO" =>
-        st.push(st.symbols.get(st.popStr()).exists(_.isInstanceOf[WsMacro]))
-      case "MACRO->" => st.push(macroToString(st.pop().asInstanceOf[WsMacro]))
-      case "->MACRO" => st.pop() match {
+    // ---- macro words (fn/CHECKMACRO.java is a validation no-op
+    // here — the tokenizer already rejected malformed bodies;
+    // fn/MACROTO.java / TOMACRO.java re-render / compile)
+    words("CHECKMACRO") { (w, st, en) => st.push(st.pop().asInstanceOf[WsMacro]) }
+    words("DEFINEDMACRO") { (w, st, en) =>
+      st.push(st.symbols.get(st.popStr()).exists(_.isInstanceOf[WsMacro]))
+    }
+    words("MACRO->") { (w, st, en) => st.push(macroToString(st.pop().asInstanceOf[WsMacro])) }
+    words("->MACRO") { (w, st, en) =>
+      st.pop() match {
         case m: WsMacro => st.push(m)
         case s: String =>
           val toks = WarpScriptTokenizer.tokenize(s)
@@ -293,60 +330,66 @@ private[script] object WordsExt2 {
           })
         case o => throw new IllegalArgumentException(s"->MACRO on $o")
       }
-      case "RUN" =>
-        val name = st.popStr()
-        st.symbols.get(name) match {
-          case Some(m: WsMacro) => en.evalMacro(m, st)
-          case other => throw new IllegalArgumentException(
-            s"RUN: no macro under '$name' ($other)")
-        }
-      case "XEVAL" => st.pop() match {
+    }
+    words("RUN") { (w, st, en) =>
+      val name = st.popStr()
+      st.symbols.get(name) match {
+        case Some(m: WsMacro) => en.evalMacro(m, st)
+        case other => throw new IllegalArgumentException(
+          s"RUN: no macro under '$name' ($other)")
+      }
+    }
+    words("XEVAL") { (w, st, en) =>
+      st.pop() match {
         case m: WsMacro => en.evalMacro(m, st)
         case NativeFn(_, f) => f(st)
         case s: String => en.execProgram(s, st)
         case o => throw new IllegalArgumentException(s"XEVAL on $o")
       }
+    }
 
-      // ---- string/parse tail (fn/TEMPLATE.java: the {{var}}
-      // interpolation subset of its Mustache engine; fn/PARSEVALUE.java
-      // reuses the line-protocol value grammar; TOBOOLEAN coercion)
-      case "TEMPLATE" =>
-        val scope = st.pop().asInstanceOf[Map[Any, Any]]
-        val text = st.popStr()
-        val out = "\\{\\{\\s*([^}\\s]+)\\s*\\}\\}".r.replaceAllIn(text, m =>
-          java.util.regex.Matcher.quoteReplacement(
-            scope.get(m.group(1)).map(String.valueOf).getOrElse("")))
-        st.push(out)
-      case "TOBOOLEAN" => st.pop() match {
+    // ---- string/parse tail (fn/TEMPLATE.java: the {{var}}
+    // interpolation subset of its Mustache engine; fn/PARSEVALUE.java
+    // reuses the line-protocol value grammar; TOBOOLEAN coercion)
+    words("TEMPLATE") { (w, st, en) =>
+      val scope = st.pop().asInstanceOf[Map[Any, Any]]
+      val text = st.popStr()
+      val out = "\\{\\{\\s*([^}\\s]+)\\s*\\}\\}".r.replaceAllIn(text, m =>
+        java.util.regex.Matcher.quoteReplacement(
+          scope.get(m.group(1)).map(String.valueOf).getOrElse("")))
+      st.push(out)
+    }
+    words("TOBOOLEAN") { (w, st, en) =>
+      st.pop() match {
         case b: Boolean => st.push(b)
         case s: String => st.push(s.equalsIgnoreCase("true") || s == "T")
         case l: Long => st.push(l != 0L)
         case d: Double => st.push(d != 0.0)
         case o => throw new IllegalArgumentException(s"TOBOOLEAN on $o")
       }
-      case "PARSEVALUE" =>
-        val (_, value) = graft.sources.LineProtocol.parseValue(st.popStr())
-        st.push(value)
-
-      // ---- Base58 / Base58Check (fn/TOB58.java, B58TO)
-      case "->B58" => st.push(b58Encode(en.popBytes(st)))
-      case "B58->" => st.push(b58Decode(st.popStr()))
-      case "->B58C" =>
-        val prefix = st.pop().asInstanceOf[Array[Byte]]
-        val payload = en.popBytes(st)
-        val hash = sha256(sha256(prefix ++ payload))
-        st.push(b58Encode(prefix ++ payload ++ hash.take(4)))
-      case "B58C->" =>
-        val data = b58Decode(st.popStr())
-        require(data.length >= 4, "B58C-> payload too short")
-        val (body, check) = data.splitAt(data.length - 4)
-        require(sha256(sha256(body)).take(4).sameElements(check),
-          "B58C-> checksum mismatch")
-        st.push(body)
-
-      case _ => return false
     }
-    true
+    words("PARSEVALUE") { (w, st, en) =>
+      val (_, value) = graft.sources.LineProtocol.parseValue(st.popStr())
+      st.push(value)
+    }
+
+    // ---- Base58 / Base58Check (fn/TOB58.java, B58TO)
+    words("->B58") { (w, st, en) => st.push(b58Encode(en.popBytes(st))) }
+    words("B58->") { (w, st, en) => st.push(b58Decode(st.popStr())) }
+    words("->B58C") { (w, st, en) =>
+      val prefix = st.pop().asInstanceOf[Array[Byte]]
+      val payload = en.popBytes(st)
+      val hash = sha256(sha256(prefix ++ payload))
+      st.push(b58Encode(prefix ++ payload ++ hash.take(4)))
+    }
+    words("B58C->") { (w, st, en) =>
+      val data = b58Decode(st.popStr())
+      require(data.length >= 4, "B58C-> payload too short")
+      val (body, check) = data.splitAt(data.length - 4)
+      require(sha256(sha256(body)).take(4).sameElements(check),
+        "B58C-> checksum mismatch")
+      st.push(body)
+    }
   }
 
   private def snapshotOne(v: Any): String = v match {

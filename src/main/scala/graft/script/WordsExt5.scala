@@ -137,350 +137,370 @@ private[script] object WordsExt5 {
       case _ => None
     }
 
-  // scalastyle:off cyclomatic.complexity method.length
-  def eval(w: String, st: State, en: WarpScriptEngine): Boolean = {
-    w match {
-      // ---- bitwise + shifts (binary/BitwiseOperation.java incl.
-      // SHIFTLEFT/SHIFTRIGHT — LONGs, BIGDECIMAL combos, LONG GTS
-      // faces); `~` is unary/COMPLEMENT.java, LONG only
-      case "&" | "|" | "^" | "<<" | ">>" | ">>>" =>
-        WordsBinaryOps.bitwise(w, st, en)
-      case "~" => st.push(~st.popLong())
+  def register(words: WordTable): Unit = {
+    // ---- bitwise + shifts (binary/BitwiseOperation.java incl.
+    // SHIFTLEFT/SHIFTRIGHT — LONGs, BIGDECIMAL combos, LONG GTS
+    // faces); `~` is unary/COMPLEMENT.java, LONG only
+    words("&", "|", "^", "<<", ">>", ">>>") { (w, st, en) =>
+      WordsBinaryOps.bitwise(w, st, en)
+    }
+    words("~") { (w, st, en) => st.push(~st.popLong()) }
 
-      // ---- ALMOSTEQ (fn/ALMOSTEQ.java): a b lambda ~= -> |a-b| <= |lambda|;
-      // NaN ~= NaN is true
-      case "~=" =>
-        val lambda = math.abs(st.popNum())
-        val b = st.popNum(); val a = st.popNum()
-        st.push(if (a.isNaN || b.isNaN) a.isNaN && b.isNaN
-          else lambda >= math.abs(a - b))
+    // ---- ALMOSTEQ (fn/ALMOSTEQ.java): a b lambda ~= -> |a-b| <= |lambda|;
+    // NaN ~= NaN is true
+    words("~=") { (w, st, en) =>
+      val lambda = math.abs(st.popNum())
+      val b = st.popNum(); val a = st.popNum()
+      st.push(if (a.isNaN || b.isNaN) a.isNaN && b.isNaN
+        else lambda >= math.abs(a - b))
+    }
 
-      // ---- Morton Z-order codec (fn/TOZ.java, fn/ZTO.java)
-      case "->Z" =>
-        val bitwidth = st.popLong().toInt
-        val longs = st.pop().asInstanceOf[Vector[Any]].map(en.asLong)
-        st.push(mortonEncode(longs, bitwidth))
-      case "Z->" =>
-        val bitwidth = st.popLong().toInt
-        val nlongs = st.popLong().toInt
-        val encoded = en.popBytes(st)
-        st.push(mortonDecode(encoded, nlongs, bitwidth).map(identity[Any]))
+    // ---- Morton Z-order codec (fn/TOZ.java, fn/ZTO.java)
+    words("->Z") { (w, st, en) =>
+      val bitwidth = st.popLong().toInt
+      val longs = st.pop().asInstanceOf[Vector[Any]].map(en.asLong)
+      st.push(mortonEncode(longs, bitwidth))
+    }
+    words("Z->") { (w, st, en) =>
+      val bitwidth = st.popLong().toInt
+      val nlongs = st.popLong().toInt
+      val encoded = en.popBytes(st)
+      st.push(mortonDecode(encoded, nlongs, bitwidth).map(identity[Any]))
+    }
 
-      // ---- MAPID (fn/MAPID.java): UUID from the two fixed-key labelsId
-      // hashes of a string map — byte-exact with the reference
-      case "MAPID" =>
-        val m = st.pop().asInstanceOf[Map[Any, Any]]
-          .map { case (k, v) => k.toString -> String.valueOf(v) }
-        val msb = labelsId(MAPID_KEY1._1, MAPID_KEY1._2, m)
-        val lsb = labelsId(MAPID_KEY2._1, MAPID_KEY2._2, m)
-        st.push(new java.util.UUID(msb, lsb).toString)
+    // ---- MAPID (fn/MAPID.java): UUID from the two fixed-key labelsId
+    // hashes of a string map — byte-exact with the reference
+    words("MAPID") { (w, st, en) =>
+      val m = st.pop().asInstanceOf[Map[Any, Any]]
+        .map { case (k, v) => k.toString -> String.valueOf(v) }
+      val msb = labelsId(MAPID_KEY1._1, MAPID_KEY1._2, m)
+      val lsb = labelsId(MAPID_KEY2._1, MAPID_KEY2._2, m)
+      st.push(new java.util.UUID(msb, lsb).toString)
+    }
 
-      // ---- UNSET (fn/UNSET.java): spread a SET onto the stack behind
-      // a list mark (the reference pushes a Mark then the elements)
-      case "UNSET" =>
-        val s = st.pop() match {
-          case set: Set[Any @unchecked] => set
-          case o => throw new IllegalArgumentException(s"UNSET expects a SET, got $o")
-        }
-        st.push(ListMark)
-        // deterministic spread order (reference order is Set-impl-defined)
-        s.toVector.sortBy(String.valueOf(_)).foreach(st.push)
+    // ---- UNSET (fn/UNSET.java): spread a SET onto the stack behind
+    // a list mark (the reference pushes a Mark then the elements)
+    words("UNSET") { (w, st, en) =>
+      val s = st.pop() match {
+        case set: Set[Any @unchecked] => set
+        case o => throw new IllegalArgumentException(s"UNSET expects a SET, got $o")
+      }
+      st.push(ListMark)
+      // deterministic spread order (reference order is Set-impl-defined)
+      s.toVector.sortBy(String.valueOf(_)).foreach(st.push)
+    }
 
-      // ---- MDETACH (fn/MDETACH.java): split the trailing signature off
-      // a signed macro; push macro-without-signature then the signature
-      case "MDETACH" =>
-        val m = st.pop().asInstanceOf[WsMacro]
-        splitSignature(m) match {
-          case Some((body, sig)) =>
-            st.push(m.copy(tokens = body)); st.push(WsMacro(sig))
-          case None =>
-            throw new IllegalArgumentException("MDETACH operates on a signed macro.")
-        }
+    // ---- MDETACH (fn/MDETACH.java): split the trailing signature off
+    // a signed macro; push macro-without-signature then the signature
+    words("MDETACH") { (w, st, en) =>
+      val m = st.pop().asInstanceOf[WsMacro]
+      splitSignature(m) match {
+        case Some((body, sig)) =>
+          st.push(m.copy(tokens = body)); st.push(WsMacro(sig))
+        case None =>
+          throw new IllegalArgumentException("MDETACH operates on a signed macro.")
+      }
+    }
 
-      // ---- MSEC / MRSEC (fn/MSEC.java): flag a macro secure — its
-      // body is hidden from SNAPSHOT/TOSTRING (WarpScriptStack.Macro
-      // .snapshot(hideSecure), :501-507); MRSEC additionally marks
-      // nested macros secure on render
-      case "MSEC" => st.push(st.pop().asInstanceOf[WsMacro].copy(secure = true))
-      case "MRSEC" =>
-        st.push(st.pop().asInstanceOf[WsMacro]
-          .copy(secure = true, secureRecursive = true))
+    // ---- MSEC / MRSEC (fn/MSEC.java): flag a macro secure — its
+    // body is hidden from SNAPSHOT/TOSTRING (WarpScriptStack.Macro
+    // .snapshot(hideSecure), :501-507); MRSEC additionally marks
+    // nested macros secure on render
+    words("MSEC") { (w, st, en) => st.push(st.pop().asInstanceOf[WsMacro].copy(secure = true)) }
+    words("MRSEC") { (w, st, en) =>
+      st.push(st.pop().asInstanceOf[WsMacro]
+        .copy(secure = true, secureRecursive = true))
+    }
 
-      // ---- POLYFUNC (fn/POLYFUNC.java Builder): ascending-degree
-      // coefficients -> polynomial-in-the-tick function value (EVAL on
-      // numbers/lists/frames, mapper face under MAP)
-      case "POLYFUNC" =>
-        val coeffs = st.pop().asInstanceOf[Vector[Any]].map(en.asNum).toArray
-        require(coeffs.nonEmpty, "POLYFUNC expects a non-empty coefficient list")
-        st.push(WsPoly(coeffs))
+    // ---- POLYFUNC (fn/POLYFUNC.java Builder): ascending-degree
+    // coefficients -> polynomial-in-the-tick function value (EVAL on
+    // numbers/lists/frames, mapper face under MAP)
+    words("POLYFUNC") { (w, st, en) =>
+      val coeffs = st.pop().asInstanceOf[Vector[Any]].map(en.asNum).toArray
+      require(coeffs.nonEmpty, "POLYFUNC expects a non-empty coefficient list")
+      st.push(WsPoly(coeffs))
+    }
 
-      // ---- FIND (fn/FIND.java): selector -> the matching series as
-      // metadata-only GTS (no datapoints, like the reference's
-      // directory Metadata). ONE distributed metadata pass + one
-      // bounded collect; each result is a driver-side GtsBuilder so
-      // NAME/LABELS/SIZE on it cost zero Spark actions.
-      case "FIND" =>
-        val (cls, labels) = findArgs(st)
-        val meta = graft.model.Gts.seriesMeta(
-          en.fetchPub(cls, labels, Long.MinValue, Long.MaxValue).df)
-        val rows = meta.limit(10001).collect()
-        require(rows.length <= 10000, "FIND: too many series")
-        val series = rows.map { r =>
-          (r.getString(1), r.getMap[String, String](2).toMap)
-        }.sortBy(_.toString()).map { case (c, l) =>
-          GtsBuilder(c, l, Vector.empty): Any
-        }.toVector
-        st.push(series)
+    // ---- FIND (fn/FIND.java): selector -> the matching series as
+    // metadata-only GTS (no datapoints, like the reference's
+    // directory Metadata). ONE distributed metadata pass + one
+    // bounded collect; each result is a driver-side GtsBuilder so
+    // NAME/LABELS/SIZE on it cost zero Spark actions.
+    words("FIND") { (w, st, en) =>
+      val (cls, labels) = findArgs(st)
+      val meta = graft.model.Gts.seriesMeta(
+        en.fetchPub(cls, labels, Long.MinValue, Long.MaxValue).df)
+      val rows = meta.limit(10001).collect()
+      require(rows.length <= 10000, "FIND: too many series")
+      val series = rows.map { r =>
+        (r.getString(1), r.getMap[String, String](2).toMap)
+      }.sortBy(_.toString()).map { case (c, l) =>
+        GtsBuilder(c, l, Vector.empty): Any
+      }.toVector
+      st.push(series)
+    }
 
-      // ---- FINDSTATS (fn/FINDSTATS.java): cardinality stats of the
-      // matching series. The reference returns HyperLogLogPlus
-      // ESTIMATES (egress/ThriftDirectoryClient.java:576-606,
-      // error.rate 1.04/sqrt(2^p)); a distributed countDistinct is
-      // exact at any scale, so error.rate is honestly 0.0 here. Same
-      // keys, one aggregation pass.
-      case "FINDSTATS" =>
-        val (cls, labels) = findArgs(st)
-        val meta = graft.model.Gts.seriesMeta(
-          en.fetchPub(cls, labels, Long.MinValue, Long.MaxValue).df)
-          .cache()
-        try {
-          // TWO jobs, not four (r14, guide §1.2): the per-class and
-          // per-label collects are directory-cardinality, and the
-          // global stats are exact derivations of them — gts = Σ
-          // per-class counts, classes = #classes, labelnames =
-          // #label keys, labelvalues = countDistinct(k, v) = Σ over k
-          // of per-key distinct values. The dropped global-agg jobs
-          // each carried their own codegen + scheduling cost.
-          val perClass = meta.groupBy(col("class")).count().collect()
-            .map(r => (r.getString(0): Any) -> (r.getLong(1): Any)).toMap
-          val lab = meta.select(explode(col("labels")).as(Seq("__k", "__v")))
-          val perLabel = lab.groupBy(col("__k"))
-            .agg(countDistinct(col("__v")).as("n")).collect()
-            .map(r => (r.getString(0): Any) -> (r.getLong(1): Any)).toMap
-          st.push(Map[Any, Any](
-            "gts.estimate" -> perClass.values.map(_.asInstanceOf[Long]).sum,
-            "classes.estimate" -> perClass.size.toLong,
-            "labelnames.estimate" -> perLabel.size.toLong,
-            "labelvalues.estimate" -> perLabel.values.map(_.asInstanceOf[Long]).sum,
-            "per.class.estimate" -> perClass,
-            "per.label.value.estimate" -> perLabel,
-            "error.rate" -> 0.0))
-        } finally { meta.unpersist() }
-
-      // ---- ATTRSKIP (fn/ATTRSKIP.java): BOOLEAN sets the skip flag
-      // (FINDSETS omits the attribute sets while set), NULL reads it
-      case "ATTRSKIP" =>
-        st.pop() match {
-          case b: Boolean => st.attrSkip = b
-          case null => st.push(st.attrSkip)
-          case o => throw new IllegalArgumentException(
-            s"ATTRSKIP invalid parameter, expected a BOOLEAN or NULL, got $o")
-        }
-
-      // ---- ACCEL.* (fn/ACCELCACHE.java family): the reference toggles
-      // its in-memory accelerator for subsequent FETCH/UPDATE; the
-      // Spark-native reading is the executor block-manager storage
-      // level of subsequently FETCHed frames — CACHE -> memory,
-      // PERSIST -> disk-backed, both off -> no caching. REPORT uses the
-      // reference's keys (fn/ACCELREPORT.java:16-25).
-      case "ACCEL.CACHE"     => st.accelCache = true
-      case "ACCEL.NOCACHE"   => st.accelCache = false
-      case "ACCEL.PERSIST"   => st.accelPersist = true
-      case "ACCEL.NOPERSIST" => st.accelPersist = false
-      case "ACCEL.REPORT" =>
+    // ---- FINDSTATS (fn/FINDSTATS.java): cardinality stats of the
+    // matching series. The reference returns HyperLogLogPlus
+    // ESTIMATES (egress/ThriftDirectoryClient.java:576-606,
+    // error.rate 1.04/sqrt(2^p)); a distributed countDistinct is
+    // exact at any scale, so error.rate is honestly 0.0 here. Same
+    // keys, one aggregation pass.
+    words("FINDSTATS") { (w, st, en) =>
+      val (cls, labels) = findArgs(st)
+      val meta = graft.model.Gts.seriesMeta(
+        en.fetchPub(cls, labels, Long.MinValue, Long.MaxValue).df)
+        .cache()
+      try {
+        // TWO jobs, not four (r14, guide §1.2): the per-class and
+        // per-label collects are directory-cardinality, and the
+        // global stats are exact derivations of them — gts = Σ
+        // per-class counts, classes = #classes, labelnames =
+        // #label keys, labelvalues = countDistinct(k, v) = Σ over k
+        // of per-key distinct values. The dropped global-agg jobs
+        // each carried their own codegen + scheduling cost.
+        val perClass = meta.groupBy(col("class")).count().collect()
+          .map(r => (r.getString(0): Any) -> (r.getLong(1): Any)).toMap
+        val lab = meta.select(explode(col("labels")).as(Seq("__k", "__v")))
+        val perLabel = lab.groupBy(col("__k"))
+          .agg(countDistinct(col("__v")).as("n")).collect()
+          .map(r => (r.getString(0): Any) -> (r.getLong(1): Any)).toMap
         st.push(Map[Any, Any](
-          "status" -> true, // Spark's block manager is always present
-          "cache" -> st.accelCache,
-          "persist" -> st.accelPersist,
-          "accelerated" -> (st.accelCache || st.accelPersist),
-          "chunkcount" -> 0L,
-          "chunkspan" -> 0L,
-          "defaults.read" -> Vector[Any](
-            if (st.accelCache) "cache" else "nocache",
-            if (st.accelPersist) "persist" else "nopersist"),
-          "defaults.write" -> Vector[Any]("cache", "persist"),
-          "defaults.delete" -> Vector[Any]("cache", "persist")))
+          "gts.estimate" -> perClass.values.map(_.asInstanceOf[Long]).sum,
+          "classes.estimate" -> perClass.size.toLong,
+          "labelnames.estimate" -> perLabel.size.toLong,
+          "labelvalues.estimate" -> perLabel.values.map(_.asInstanceOf[Long]).sum,
+          "per.class.estimate" -> perClass,
+          "per.label.value.estimate" -> perLabel,
+          "error.rate" -> 0.0))
+      } finally { meta.unpersist() }
+    }
 
-      // ---- empty-collection literals and set/vector delimiters
-      // (WarpScriptLib EMPTY_LIST "[]" :990, EMPTY_MAP "{}" :986,
-      // EMPTY_SET "()" :994, SET_START "(" :995, EMPTY_VECTOR "[[]]"
-      // :998). The reference's VECTOR is an optimized list; both map
-      // to the engine's Vector here (TYPEOF LIST), documented delta.
-      case "[]"   => st.push(Vector.empty[Any])
-      case "{}"   => st.push(Map.empty[Any, Any])
-      case "()"   => st.push(Set.empty[Any])
-      case "[[]]" => st.push(Vector.empty[Any])
-      case "("    => st.push(SetMark)
-      case ")" =>
-        var acc = Set.empty[Any]
-        var top = st.pop()
-        while (!top.equals(SetMark)) { acc += top; top = st.pop() }
-        st.push(acc)
-      case "[[" => st.push(VecMark)
-      case "]]" =>
-        var acc = List.empty[Any]
-        var top = st.pop()
-        while (!top.equals(VecMark)) { acc = top :: acc; top = st.pop() }
-        st.push(acc.toVector)
+    // ---- ATTRSKIP (fn/ATTRSKIP.java): BOOLEAN sets the skip flag
+    // (FINDSETS omits the attribute sets while set), NULL reads it
+    words("ATTRSKIP") { (w, st, en) =>
+      st.pop() match {
+        case b: Boolean => st.attrSkip = b
+        case null => st.push(st.attrSkip)
+        case o => throw new IllegalArgumentException(
+          s"ATTRSKIP invalid parameter, expected a BOOLEAN or NULL, got $o")
+      }
+    }
 
-      // ---- MFILTER (fn/MFILTER.java): keep map entries the macro
-      // accepts; optional BOOLEAN suppresses the index argument
-      case "MFILTER" =>
-        var top = st.pop(); var pushIndex = true
-        top match {
-          case b: Boolean => pushIndex = b; top = st.pop()
-          case _ =>
-        }
-        val m = top.asInstanceOf[WsMacro]
-        val mp = st.pop().asInstanceOf[Map[Any, Any]]
-        var i = 0L
-        st.push(mp.filter { case (k, v) =>
-          st.push(k); st.push(v); if (pushIndex) { st.push(i); i += 1 }
-          en.evalMacro(m, st)
-          st.pop() match {
-            case b: Boolean => b
-            case o => throw new IllegalArgumentException(
-              s"MFILTER macro must leave a BOOLEAN, got $o")
-          }
-        })
+    // ---- ACCEL.* (fn/ACCELCACHE.java family): the reference toggles
+    // its in-memory accelerator for subsequent FETCH/UPDATE; the
+    // Spark-native reading is the executor block-manager storage
+    // level of subsequently FETCHed frames — CACHE -> memory,
+    // PERSIST -> disk-backed, both off -> no caching. REPORT uses the
+    // reference's keys (fn/ACCELREPORT.java:16-25).
+    words("ACCEL.CACHE") { (w, st, en) => st.accelCache = true }
+    words("ACCEL.NOCACHE") { (w, st, en) => st.accelCache = false }
+    words("ACCEL.PERSIST") { (w, st, en) => st.accelPersist = true }
+    words("ACCEL.NOPERSIST") { (w, st, en) => st.accelPersist = false }
+    words("ACCEL.REPORT") { (w, st, en) =>
+      st.push(Map[Any, Any](
+        "status" -> true, // Spark's block manager is always present
+        "cache" -> st.accelCache,
+        "persist" -> st.accelPersist,
+        "accelerated" -> (st.accelCache || st.accelPersist),
+        "chunkcount" -> 0L,
+        "chunkspan" -> 0L,
+        "defaults.read" -> Vector[Any](
+          if (st.accelCache) "cache" else "nocache",
+          if (st.accelPersist) "persist" else "nopersist"),
+        "defaults.write" -> Vector[Any]("cache", "persist"),
+        "defaults.delete" -> Vector[Any]("cache", "persist")))
+    }
 
-      // ---- MINREV/MAXREV (fn/CHECKREV.java): dotted-revision gate
-      // against the engine's platform revision; throws when the
-      // requirement is not met
-      case "MINREV" | "MAXREV" =>
-        val wanted = revSplit(st.popStr())
-        val have = revSplit(PlatformRev)
-        val cmp = have.zipAll(wanted, 0, 0)
-          .collectFirst { case (a, b) if a != b => a.compareTo(b) }.getOrElse(0)
-        if (w == "MINREV" && cmp < 0) throw new IllegalStateException(
-          s"$w: revision $PlatformRev is below required minimum")
-        if (w == "MAXREV" && cmp > 0) throw new IllegalStateException(
-          s"$w: revision $PlatformRev is above required maximum")
+    // ---- empty-collection literals and set/vector delimiters
+    // (WarpScriptLib EMPTY_LIST "[]" :990, EMPTY_MAP "{}" :986,
+    // EMPTY_SET "()" :994, SET_START "(" :995, EMPTY_VECTOR "[[]]"
+    // :998). The reference's VECTOR is an optimized list; both map
+    // to the engine's Vector here (TYPEOF LIST), documented delta.
+    words("[]") { (w, st, en) => st.push(Vector.empty[Any]) }
+    words("{}") { (w, st, en) => st.push(Map.empty[Any, Any]) }
+    words("()") { (w, st, en) => st.push(Set.empty[Any]) }
+    words("[[]]") { (w, st, en) => st.push(Vector.empty[Any]) }
+    words("(") { (w, st, en) => st.push(SetMark) }
+    words(")") { (w, st, en) =>
+      var acc = Set.empty[Any]
+      var top = st.pop()
+      while (!top.equals(SetMark)) { acc += top; top = st.pop() }
+      st.push(acc)
+    }
+    words("[[") { (w, st, en) => st.push(VecMark) }
+    words("]]") { (w, st, en) =>
+      var acc = List.empty[Any]
+      var top = st.pop()
+      while (!top.equals(VecMark)) { acc = top :: acc; top = st.pop() }
+      st.push(acc.toVector)
+    }
 
-      // ---- REF (fn/REF.java): pushes the function reference itself
-      case "REF" => st.push(refFn)
-
-      // ---- UPDATE (fn/UPDATE.java): write series into the session
-      // point store; subsequent FETCHes merge it with the fetch hook
-      // (the standalone reference writes through its embedded store —
-      // the durable distributed path is LineProtocol.ingest)
-      case "UPDATE" =>
-        def toBuilders(v: Any): Seq[GtsBuilder] = v match {
-          case b: GtsBuilder => Seq(b)
-          case l: Vector[Any @unchecked] => l.flatMap(toBuilders)
-          case o => throw new IllegalArgumentException(s"UPDATE on $o")
-        }
+    // ---- MFILTER (fn/MFILTER.java): keep map entries the macro
+    // accepts; optional BOOLEAN suppresses the index argument
+    words("MFILTER") { (w, st, en) =>
+      var top = st.pop(); var pushIndex = true
+      top match {
+        case b: Boolean => pushIndex = b; top = st.pop()
+        case _ =>
+      }
+      val m = top.asInstanceOf[WsMacro]
+      val mp = st.pop().asInstanceOf[Map[Any, Any]]
+      var i = 0L
+      st.push(mp.filter { case (k, v) =>
+        st.push(k); st.push(v); if (pushIndex) { st.push(i); i += 1 }
+        en.evalMacro(m, st)
         st.pop() match {
-          case s: String => st.updates ++= toBuilders(st.pop()) // token form
-          case other => st.updates ++= toBuilders(other)
+          case b: Boolean => b
+          case o => throw new IllegalArgumentException(
+            s"MFILTER macro must leave a BOOLEAN, got $o")
         }
+      })
+    }
 
-      // ---- DELETE (fn/DELETE.java): token selector start end DELETE
-      // -> removes matching points from the session store, pushes the
-      // number of series touched
-      case "DELETE" =>
-        val endO = st.pop(); val startO = st.pop()
-        val sel = graft.sources.Selector.parse(st.popStr())
-        st.pop() // token, ignored like FETCH
-        val (lo, hi) = (startO, endO) match {
-          case (null, null) => (Long.MinValue, Long.MaxValue)
-          case (a: Long, b: Long) => (a, b)
-          case _ => throw new IllegalArgumentException(
-            "DELETE expects both start and end to be LONG or both NULL")
+    // ---- MINREV/MAXREV (fn/CHECKREV.java): dotted-revision gate
+    // against the engine's platform revision; throws when the
+    // requirement is not met
+    words("MINREV", "MAXREV") { (w, st, en) =>
+      val wanted = revSplit(st.popStr())
+      val have = revSplit(PlatformRev)
+      val cmp = have.zipAll(wanted, 0, 0)
+        .collectFirst { case (a, b) if a != b => a.compareTo(b) }.getOrElse(0)
+      if (w == "MINREV" && cmp < 0) throw new IllegalStateException(
+        s"$w: revision $PlatformRev is below required minimum")
+      if (w == "MAXREV" && cmp > 0) throw new IllegalStateException(
+        s"$w: revision $PlatformRev is above required maximum")
+    }
+
+    // ---- REF (fn/REF.java): pushes the function reference itself
+    words("REF") { (w, st, en) => st.push(refFn) }
+
+    // ---- UPDATE (fn/UPDATE.java): write series into the session
+    // point store; subsequent FETCHes merge it with the fetch hook
+    // (the standalone reference writes through its embedded store —
+    // the durable distributed path is LineProtocol.ingest)
+    words("UPDATE") { (w, st, en) =>
+      def toBuilders(v: Any): Seq[GtsBuilder] = v match {
+        case b: GtsBuilder => Seq(b)
+        case l: Vector[Any @unchecked] => l.flatMap(toBuilders)
+        case o => throw new IllegalArgumentException(s"UPDATE on $o")
+      }
+      st.pop() match {
+        case s: String => st.updates ++= toBuilders(st.pop()) // token form
+        case other => st.updates ++= toBuilders(other)
+      }
+    }
+
+    // ---- DELETE (fn/DELETE.java): token selector start end DELETE
+    // -> removes matching points from the session store, pushes the
+    // number of series touched
+    words("DELETE") { (w, st, en) =>
+      val endO = st.pop(); val startO = st.pop()
+      val sel = graft.sources.Selector.parse(st.popStr())
+      st.pop() // token, ignored like FETCH
+      val (lo, hi) = (startO, endO) match {
+        case (null, null) => (Long.MinValue, Long.MaxValue)
+        case (a: Long, b: Long) => (a, b)
+        case _ => throw new IllegalArgumentException(
+          "DELETE expects both start and end to be LONG or both NULL")
+      }
+      var touched = 0L
+      val kept = st.updates.map { b =>
+        if (!matchesBuilder(sel, b)) b
+        else {
+          val remaining = b.points.filterNot(p => p._1 >= lo && p._1 <= hi)
+          if (remaining.size != b.points.size) touched += 1
+          b.copy(points = remaining)
         }
-        var touched = 0L
-        val kept = st.updates.map { b =>
-          if (!matchesBuilder(sel, b)) b
-          else {
-            val remaining = b.points.filterNot(p => p._1 >= lo && p._1 <= hi)
-            if (remaining.size != b.points.size) touched += 1
-            b.copy(points = remaining)
-          }
-        }.filter(_.points.nonEmpty)
-        st.updates.clear(); st.updates ++= kept
-        st.push(touched)
+      }.filter(_.points.nonEmpty)
+      st.updates.clear(); st.updates ++= kept
+      st.push(touched)
+    }
 
-      // ---- MACROCONFIG family (fn/MACROCONFIG.java,
-      // SETMACROCONFIG, MACROCONFIGDEFAULT): the reference resolves
-      // `macroconfig.<key>` warp10 properties; session-scope config
-      // map with explicit defaults here, same lookup contract (missing
-      // key without default throws)
-      case "SETMACROCONFIG" =>
-        val v = st.pop(); val k = st.popStr(); st.macroConfig(k) = v
-      case "MACROCONFIGDEFAULT" =>
-        val v = st.pop(); val k = st.popStr(); st.macroConfigDefaults(k) = v
-      case "MACROCONFIG" =>
-        val k = st.popStr()
-        st.push(st.macroConfig.getOrElse(k,
-          st.macroConfigDefaults.getOrElse(k,
-            throw new IllegalArgumentException(s"MACROCONFIG: no value for '$k'"))))
+    // ---- MACROCONFIG family (fn/MACROCONFIG.java,
+    // SETMACROCONFIG, MACROCONFIGDEFAULT): the reference resolves
+    // `macroconfig.<key>` warp10 properties; session-scope config
+    // map with explicit defaults here, same lookup contract (missing
+    // key without default throws)
+    words("SETMACROCONFIG") { (w, st, en) =>
+      val v = st.pop(); val k = st.popStr(); st.macroConfig(k) = v
+    }
+    words("MACROCONFIGDEFAULT") { (w, st, en) =>
+      val v = st.pop(); val k = st.popStr(); st.macroConfigDefaults(k) = v
+    }
+    words("MACROCONFIG") { (w, st, en) =>
+      val k = st.popStr()
+      st.push(st.macroConfig.getOrElse(k,
+        st.macroConfigDefaults.getOrElse(k,
+          throw new IllegalArgumentException(s"MACROCONFIG: no value for '$k'"))))
+    }
 
-      // ---- Python pickle codec (fn ->PICKLE / PICKLE->: the reference
-      // wraps the razorvine pickle library, TOPICKLE.java:64-67 /
-      // PICKLETO.java:46-49; a GTS pickles as the map shape of
-      // continuum/gts/GTSPickler.java:52-105). PickleCodec emits the
-      // protocol opcodes directly — scalars/lists/maps/bytes round-trip;
-      // a frame on top pickles to a list of per-series GTS maps.
-      case "->PICKLE" => st.pop() match {
+    // ---- Python pickle codec (fn ->PICKLE / PICKLE->: the reference
+    // wraps the razorvine pickle library, TOPICKLE.java:64-67 /
+    // PICKLETO.java:46-49; a GTS pickles as the map shape of
+    // continuum/gts/GTSPickler.java:52-105). PickleCodec emits the
+    // protocol opcodes directly — scalars/lists/maps/bytes round-trip;
+    // a frame on top pickles to a list of per-series GTS maps.
+    words("->PICKLE") { (w, st, en) =>
+      st.pop() match {
         case f: graft.operators.GtsFrame =>
           st.push(PickleCodec.pickle(frameToPickleMaps(f)))
         case b: BucketedFrame =>
           st.push(PickleCodec.pickle(frameToPickleMaps(b.frame)))
         case o => st.push(PickleCodec.pickle(o))
       }
-      case "PICKLE->" => st.push(PickleCodec.unpickle(st.pop() match {
+    }
+    words("PICKLE->") { (w, st, en) =>
+      st.push(PickleCodec.unpickle(st.pop() match {
         case b: Array[Byte] => b
         case o => throw new IllegalArgumentException(
           s"PICKLE-> expects a byte array, got ${String.valueOf(o)}")
       }))
-
-      // ---- CALL (fn/CALL.java): invoke an external subprogram from
-      // the configured call directory over the reference's line
-      // protocol — on start the program prints its capacity; per call
-      // the URL-encoded argument line goes in, one line comes back,
-      // a leading space marking an error whose URL-encoded message
-      // follows. Directory from -Dgraft.call.directory or
-      // 'call.directory' SETMACROCONFIG (the reference reads
-      // warpscript.call.directory from WarpConfig).
-      case "CALL" =>
-        val name = st.popStr()
-        val args = st.popStr()
-        val dir = sys.props.get("graft.call.directory")
-          .orElse(st.macroConfig.get("call.directory").map(_.toString))
-          .getOrElse(throw new IllegalStateException(
-            "CALL: no call directory configured " +
-            "(-Dgraft.call.directory or 'call.directory' SETMACROCONFIG)"))
-        val exe = new java.io.File(dir, name)
-        require(exe.canExecute, s"CALL: no executable subprogram '$name' in $dir")
-        def spawn(): (Process, java.io.BufferedReader) = {
-          val p = new ProcessBuilder(exe.getAbsolutePath).start()
-          sys.addShutdownHook(p.destroy())
-          val r = new java.io.BufferedReader(
-            new java.io.InputStreamReader(p.getInputStream, "UTF-8"))
-          require(r.readLine() != null,
-            s"CALL: subprogram '$name' did not report its capacity")
-          (p, r)
-        }
-        var (proc, br) = WarpScriptEngine.callProcs.getOrElseUpdate(exe.getAbsolutePath, spawn())
-        if (!proc.isAlive) { // one respawn, like the reference's retry
-          WarpScriptEngine.callProcs.remove(exe.getAbsolutePath)
-          val pr = spawn(); WarpScriptEngine.callProcs(exe.getAbsolutePath) = pr
-          proc = pr._1; br = pr._2
-        }
-        proc.getOutputStream.write(
-          (java.net.URLEncoder.encode(args, "UTF-8") + "\n").getBytes("UTF-8"))
-        proc.getOutputStream.flush()
-        val ret = br.readLine()
-        require(ret != null, s"CALL: subprogram '$name' died unexpectedly")
-        if (ret.startsWith(" ")) throw new RuntimeException(
-          java.net.URLDecoder.decode(ret.substring(1), "UTF-8"))
-        st.push(java.net.URLDecoder.decode(ret, "UTF-8"))
-
-      case _ => return false
     }
-    true
+
+    // ---- CALL (fn/CALL.java): invoke an external subprogram from
+    // the configured call directory over the reference's line
+    // protocol — on start the program prints its capacity; per call
+    // the URL-encoded argument line goes in, one line comes back,
+    // a leading space marking an error whose URL-encoded message
+    // follows. Directory from -Dgraft.call.directory or
+    // 'call.directory' SETMACROCONFIG (the reference reads
+    // warpscript.call.directory from WarpConfig).
+    words("CALL") { (w, st, en) =>
+      val name = st.popStr()
+      val args = st.popStr()
+      val dir = sys.props.get("graft.call.directory")
+        .orElse(st.macroConfig.get("call.directory").map(_.toString))
+        .getOrElse(throw new IllegalStateException(
+          "CALL: no call directory configured " +
+          "(-Dgraft.call.directory or 'call.directory' SETMACROCONFIG)"))
+      val exe = new java.io.File(dir, name)
+      require(exe.canExecute, s"CALL: no executable subprogram '$name' in $dir")
+      def spawn(): (Process, java.io.BufferedReader) = {
+        val p = new ProcessBuilder(exe.getAbsolutePath).start()
+        sys.addShutdownHook(p.destroy())
+        val r = new java.io.BufferedReader(
+          new java.io.InputStreamReader(p.getInputStream, "UTF-8"))
+        require(r.readLine() != null,
+          s"CALL: subprogram '$name' did not report its capacity")
+        (p, r)
+      }
+      var (proc, br) = WarpScriptEngine.callProcs.getOrElseUpdate(exe.getAbsolutePath, spawn())
+      if (!proc.isAlive) { // one respawn, like the reference's retry
+        WarpScriptEngine.callProcs.remove(exe.getAbsolutePath)
+        val pr = spawn(); WarpScriptEngine.callProcs(exe.getAbsolutePath) = pr
+        proc = pr._1; br = pr._2
+      }
+      proc.getOutputStream.write(
+        (java.net.URLEncoder.encode(args, "UTF-8") + "\n").getBytes("UTF-8"))
+      proc.getOutputStream.flush()
+      val ret = br.readLine()
+      require(ret != null, s"CALL: subprogram '$name' died unexpectedly")
+      if (ret.startsWith(" ")) throw new RuntimeException(
+        java.net.URLDecoder.decode(ret.substring(1), "UTF-8"))
+      st.push(java.net.URLDecoder.decode(ret, "UTF-8"))
+    }
   }
-  // scalastyle:on cyclomatic.complexity method.length
 
   /** Marker objects for the `( )` set and `[[ ]]` vector literals. */
   private[script] object SetMark

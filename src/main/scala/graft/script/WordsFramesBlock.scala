@@ -8,15 +8,14 @@ import org.apache.spark.sql.functions._
 import graft.operators.GtsFrame
 import graft.operators.GtsFrame._
 
-/** Word block split out of [[WarpScriptEngine.evalWordDispatch]] (see
-  * [[WordsStringsBlock]]): the GTS frame words (FETCH/BUCKETIZE/MAP/
-  * REDUCE/APPLY family and accessors) and the function-value words
-  * (bucketizer.*, mapper.*, reducer.*, op.*, filter.*). Pure
-  * relocation — semantics and reference citations unchanged.
+/** The GTS frame words (FETCH/BUCKETIZE/MAP/REDUCE/APPLY family and
+  * accessors) and the function-value words (bucketizer.*, mapper.*,
+  * reducer.*, op.*, filter.*).
   */
-private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
+private[script] object WordsFramesBlock {
   import WsToken._
   import WarpScriptEngine._
+  import graft.sources.WrapperCodec
 
   /** gtsid-membership predicate from the engine-side attribute store
     * (SETATTRIBUTES — the authoritative attribute surface, see
@@ -49,23 +48,92 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
   /** Reference-wrapper decode → stack value: a bucketized wrapper
     * becomes a BucketedFrame (the fill words read the bucket fields),
     * a plain one stays a lightweight GtsBuilder. */
-  private def unwrapRefBlob(decoded: (graft.sources.WrapperCodec.Wrapper,
-      Vector[graft.sources.WrapperCodec.WPoint])): Any = {
-    val b = WordsFramesBlock.wrapperBuilder(decoded)
+  private def unwrapRefBlob(decoded: (WrapperCodec.Wrapper,
+      Vector[WrapperCodec.WPoint]), en: WarpScriptEngine): Any = {
+    val b = wrapperBuilder(decoded)
     val w = decoded._1
     if (w.bucketspan != 0 && w.bucketcount != 0)
-      BucketedFrame(materialize(b), w.lastbucket, w.bucketspan, w.bucketcount)
+      BucketedFrame(en.materialize(b), w.lastbucket, w.bucketspan, w.bucketcount)
     else b
   }
 
-  // scalastyle:off cyclomatic.complexity method.length
-  private[script] def wordsFramesBlock(w: String, st: State): Boolean = {
-    w match {
+  /** The named aggregators behind the bucketizer./mapper./reducer.
+    * faces — the three families share implementations, as in the
+    * reference (script/aggregator classes). */
+  private val aggByName: Map[String, ValueAgg] = Map(
+    "sum" -> Sum, "mean" -> Mean, "min" -> Min, "max" -> Max,
+    "count" -> CountAgg, "sd" -> Sd, "sd.pop" -> SdPop, "var" -> Var,
+    "mad" -> Mad,
+    // Welford-accumulation variants (aggregator/Variance.Builder with
+    // useWelford=true, WarpScriptLib.java:3240,3270,3318-3325): same
+    // value as sd/var — Welford is an accumulation ORDER, not a
+    // different statistic; Spark's stddev/var aggregates are themselves
+    // numerically-stable merge formulas of the same family
+    "sd.welford" -> Sd, "var.welford" -> Var,
+    "var.pop" -> VarPop, "median" -> Median, "rms" -> Rms,
+    "first" -> First, "last" -> Last, "delta" -> Delta, "rate" -> Rate,
+    // boolean / product / entropy families (aggregator/And.java, Or,
+    // MapperProduct, ShannonEntropy)
+    "and" -> BoolAnd, "or" -> BoolOr, "product" -> ProductAgg,
+    "shannonentropy.0" -> Entropy(false), "shannonentropy.1" -> Entropy(true),
+    // geo window aggregators (aggregator/HDist.java family)
+    "hdist" -> Hdist, "vdist" -> Vdist, "hspeed" -> Hspeed,
+    "vspeed" -> Vspeed, "truecourse" -> TrueCourse)
+
+  /** Reducer null-variant suffixes (WarpScriptLib.java:3295-3339
+    * registrations): `.forbid-nulls`/`.nonnull` null out the result
+    * when an aligned member is absent; `.exclude-nulls` skips them
+    * (Spark's default); `.include-nulls` (count only) counts every
+    * aligned slot. Plain reducer.and/or/count default to the strict
+    * side, matching their reference constructors. */
+  private val NullVariants =
+    Seq(".exclude-nulls", ".include-nulls", ".forbid-nulls", ".nonnull")
+
+  private val PointwiseMappers: Map[String, Column => Column] = Map(
+    "abs" -> abs, "ceil" -> (v => ceil(v)), "floor" -> (v => floor(v)),
+    "round" -> (v => round(v)), "sqrt" -> sqrt, "exp" -> exp, "ln" -> log,
+    "tanh" -> tanh,
+    "sigmoid" -> (v => lit(1.0) / (lit(1.0) + exp(-v))),
+    "tolong" -> (_.cast(org.apache.spark.sql.types.LongType)),
+    "todouble" -> (_.cast(org.apache.spark.sql.types.DoubleType)))
+
+  /** Tick-aligned binary ops for APPLY (script/op/Op*.java). */
+  private val Ops: Map[String, (Column, Column) => Column] = {
+    val dbl = org.apache.spark.sql.types.DoubleType
+    // boolean ops over the double-typed frame: truthiness = value != 0,
+    // result 1.0/0.0. Strict forms (op.and/op.or, OpBoolean forbidNulls
+    // = true) null out when an operand is absent — the explicit isNull
+    // guard matters because SQL's 3-valued `false AND null` is false.
+    def strictAnd(a: Column, b: Column): Column =
+      when(a.isNull || b.isNull, lit(null).cast(dbl))
+        .otherwise(((a =!= 0.0) && (b =!= 0.0)).cast(dbl))
+    def strictOr(a: Column, b: Column): Column =
+      when(a.isNull || b.isNull, lit(null).cast(dbl))
+        .otherwise(((a =!= 0.0) || (b =!= 0.0)).cast(dbl))
+    Map(
+      "add" -> (_ + _), "sub" -> (_ - _), "mul" -> (_ * _),
+      // Java semantics, not ANSI: ±Infinity / NaN on zero divisors
+      "div" -> (graft.operators.GtsFrame.ieeeDiv(_, _)),
+      "eq" -> (_ === _), "ne" -> (_ =!= _), "gt" -> (_ > _), "ge" -> (_ >= _),
+      "lt" -> (_ < _), "le" -> (_ <= _),
+      "mask" -> ((v, _) => v), "negmask" -> ((v, _) => v),
+      // `.ignore-nulls` variants (OpAdd/OpMul/OpBoolean with the
+      // ignore flag): absent operands contribute the op's identity
+      "add.ignore-nulls" -> ((a, b) => coalesce(a, lit(0.0)) + coalesce(b, lit(0.0))),
+      "mul.ignore-nulls" -> ((a, b) => coalesce(a, lit(1.0)) * coalesce(b, lit(1.0))),
+      "and" -> (strictAnd(_, _)), "or" -> (strictOr(_, _)),
+      "and.ignore-nulls" -> ((a, b) =>
+        ((coalesce(a, lit(1.0)) =!= 0.0) && (coalesce(b, lit(1.0)) =!= 0.0)).cast(dbl)),
+      "or.ignore-nulls" -> ((a, b) =>
+        ((coalesce(a, lit(0.0)) =!= 0.0) || (coalesce(b, lit(0.0)) =!= 0.0)).cast(dbl)))
+  }
+
+  def register(words: WordTable): Unit = {
     // ---- GTS frame words ------------------------------------------------
     // FETCH (fn/FETCH.java list form [ token class labels start stop ];
     // the auth token is accepted and ignored — storage ACLs are the
     // host's concern, not the algebra's)
-    case "FETCH" =>
+    words("FETCH") { (w, st, en) =>
       // reference parameterization (fn/FETCH.java:195-218, 1290-1299,
       // 1372): list form [ token class labels end timespan ] with LONG
       // end/timespan → interval [end−timespan+1, end], NEGATIVE
@@ -77,7 +145,7 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
       // 'now', a Long string, or ISO-8601
       def tickOf(v: Any): Long = v match {
         case l: Long => l
-        case "now" => nowTick
+        case "now" => en.nowTick
         case s: String if s.matches("-?\\d+") => s.toLong
         case s: String => isoTick(s)
         case o => throw new IllegalArgumentException(s"FETCH timestamp: $o")
@@ -397,7 +465,7 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
       // through dirMeta below.
       lazy val allTimeStore: DataFrame =
         selPairs.map { case (c, l) =>
-          fetchPub(c, l, Long.MinValue, Long.MaxValue).df }
+          en.fetchPub(c, l, Long.MinValue, Long.MaxValue).df }
           .reduceLeft(_ unionByName _)
       // directory view of one selector pair: (gtsid, labels) of the
       // matching series. With a maintained metadata table (engine
@@ -408,11 +476,11 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
       // directory-semantics consumers: a series with no in-range
       // points still occupies its page slot / companion labels).
       def dirMeta(c: String, l: Map[String, String]): DataFrame =
-        metaPub match {
+        en.metaPub match {
           case Some(m) => m()
             .filter(GtsFrame.selectorPredicate(c, l))
             .select(col("gtsid"), col("labels"))
-          case None => fetchPub(c, l, Long.MinValue, Long.MaxValue).df
+          case None => en.fetchPub(c, l, Long.MinValue, Long.MaxValue).df
             .select(col("gtsid"), col("labels"))
         }
       // activity gate: the series page and the delivered points are
@@ -431,8 +499,8 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
         if (pActive.isEmpty && pQuiet.isEmpty) None
         else {
           val overlayTicks = overlayByPair.flatten
-            .map(b => materialize(b).df.select(col("gtsid"), col("ts")))
-          val baseTicks = metaPub match {
+            .map(b => en.materialize(b).df.select(col("gtsid"), col("ts")))
+          val baseTicks = en.metaPub match {
             case Some(m) => m().select(
               col("gtsid"), col("lastactivity").as("ts"))
             case None => allTimeStore.select(col("gtsid"), col("ts"))
@@ -469,7 +537,7 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
             .map { case (c, l) => dirMeta(c, l).select(col("gtsid")) }
             .reduceLeft(_ unionByName _)
           val directory = overlayByPair.flatten
-            .map(b => materialize(b).df.select(col("gtsid")))
+            .map(b => en.materialize(b).df.select(col("gtsid")))
             .foldLeft(storeIds)(_ unionByName _)
           val dir2 = activityIds
             .map(ids => directory.join(broadcast(ids), Seq("gtsid"),
@@ -505,7 +573,7 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
             .map(b => b.copy(points = b.points.filter(
               p => p._1 >= start && p._1 <= stop)))
             .filter(_.points.nonEmpty)
-          GtsFrame((mine.map(b => materialize(b).df) ++ extraRanged.toSeq)
+          GtsFrame((mine.map(b => en.materialize(b).df) ++ extraRanged.toSeq)
             .foldLeft(ranged.df)(_ unionByName _))
         }
         val paged = bound(merged)
@@ -550,9 +618,9 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
             if (bPre > 0) Long.MinValue else start,
             if (bPost > 0) Long.MaxValue else stop)
           val dirAll = selPairs.zipWithIndex.map { case ((c, l), i) =>
-            (metaPub match {
+            (en.metaPub match {
               case Some(m) => m().filter(GtsFrame.selectorPredicate(c, l))
-              case None => fetchPub(c, l, oStart, oStop).df
+              case None => en.fetchPub(c, l, oStart, oStop).df
             }).select(col("gtsid")).withColumn("sidx", lit(i))
           }.reduceLeft(_ unionByName _)
           val first = dirAll.groupBy(col("gtsid"))
@@ -563,9 +631,9 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
       val selectorFrames = selPairs.zip(overlayByPair).zipWithIndex.map {
         case (((c, l), o), i) =>
           val scan: (Long, Long) => GtsFrame = ownedIds match {
-            case Some(own) => (a, b) => GtsFrame(fetchPub(c, l, a, b).df
+            case Some(own) => (a, b) => GtsFrame(en.fetchPub(c, l, a, b).df
               .join(broadcast(own(i)), Seq("gtsid"), "left_semi"))
-            case None => (a, b) => fetchPub(c, l, a, b)
+            case None => (a, b) => en.fetchPub(c, l, a, b)
           }
           perScan(scan, o, selectorBound).df
       }
@@ -582,7 +650,7 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
             .map { case (c, l) => dirMeta(c, l) }
             .reduceLeft(_ unionByName _)
           val matchedMeta = overlayByPair.flatten
-            .map(b => materialize(b).df.select(col("gtsid"), col("labels")))
+            .map(b => en.materialize(b).df.select(col("gtsid"), col("labels")))
             .foldLeft(storeMeta)(_ unionByName _)
           // MAP columns cannot pass distinct(): groupBy(gtsid) instead
           val matched = selectorBound(GtsFrame(matchedMeta))
@@ -601,7 +669,7 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
           def exactCls(cls: String) =
             if (cls.startsWith("~") || cls.startsWith("=")) "=" + cls else cls
           def companionScan(a: Long, b: Long): GtsFrame = {
-            val base = pExtra.map(c => fetchPub(exactCls(c), Map.empty, a, b).df)
+            val base = pExtra.map(c => en.fetchPub(exactCls(c), Map.empty, a, b).df)
               .reduceLeft(_ unionByName _)
             GtsFrame(base.join(broadcast(companionIds), Seq("gtsid"),
               "left_semi"))
@@ -613,7 +681,7 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
           val overlayDf: Option[DataFrame] = {
             val mine = st.updates.toSeq
               .filter(b => pExtra.contains(b.cls))
-              .map(b => materialize(b).df)
+              .map(b => en.materialize(b).df)
             if (mine.isEmpty) None
             else Some(mine.reduceLeft(_ unionByName _)
               .filter(col("ts") >= start && col("ts") <= stop)
@@ -641,32 +709,34 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
         fetched.df.persist(level)
       }
       st.push(fetched)
+    }
 
     // BUCKETIZE (fn/BUCKETIZE.java): [ gts bucketizer lastbucket span count ]
-    case "BUCKETIZE" =>
+    words("BUCKETIZE") { (w, st, en) =>
       val args = st.pop().asInstanceOf[Vector[Any]]
       val n = args.length
-      val (count, span, lb) = (asLong(args(n - 1)), asLong(args(n - 2)), asLong(args(n - 3)))
-      val agg = args(n - 4) match {
-        case av: AggVal => av.agg
+      val (count, span, lb) =
+        (en.asLong(args(n - 1)), en.asLong(args(n - 2)), en.asLong(args(n - 3)))
+      args(n - 4) match {
+        case av: AggVal =>
+          val bucketed = en.framesOf(args.take(n - 4)).bucketizeAuto(av.agg, lb, span, count)
+          // explicit params → carry them for downstream fill words; auto
+          // params → plain frame (metadata was data-derived inside)
+          st.push(if (span > 0 && lb != 0) BucketedFrame(bucketed, lb, span, count)
+            else bucketed)
         case MacroAgg(_, tokens) =>
           st.push(GtsFrame(MacroKernel.macroBucketize(
-            framesOf(args.take(n - 4)).df, tokens, lb, span)))
-          return true
+            en.framesOf(args.take(n - 4)).df, tokens, lb, span)))
         case o => throw new IllegalArgumentException(s"not a bucketizer: $o")
       }
-      val bucketed = framesOf(args.take(n - 4)).bucketizeAuto(agg, lb, span, count)
-      // explicit params → carry them for downstream fill words; auto
-      // params → plain frame (metadata was data-derived inside)
-      st.push(if (span > 0 && lb != 0) BucketedFrame(bucketed, lb, span, count)
-        else bucketed)
+    }
 
     // MAP (fn/MAP.java): list form [ gts... mapper pre post occurrences
     // [step] ] — negative pre/post = time span, positive = tick count
     // (GTSHelper.java:6440); occurrences may be a LIST of output ticks
     // (the ticks override, MAP.java:96); or the 2015 dictionary form
     // { 'mapper' 'pre' 'post' 'occurrences' 'step' } over a GTS list
-    case "MAP" =>
+    words("MAP") { (w, st, en) =>
       def isMapper(v: Any): Boolean = v match {
         case _: AggVal | _: MapperCol | _: MapperDf | _: MacroAgg |
              _: WordsExt3.WsInterp | _: WordsExt5.WsPoly => true
@@ -683,11 +753,11 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
             require(post == 0,
               "MAP ticks override supports pre windows only (post must be 0)")
             st.push(GtsFrame(fr.mapWindowAtTicks(av.agg, pre,
-              ticks.map(asLong), dedup = true)))
+              ticks.map(en.asLong), dedup = true)))
           case (_, _: Vector[_]) => throw new IllegalArgumentException(
             "MAP ticks override needs a named aggregator mapper")
           case (av: AggVal, occ) =>
-            val mapped = fr.mapWindow(av.agg, pre, post, step, asLong(occ))
+            val mapped = fr.mapWindow(av.agg, pre, post, step, en.asLong(occ))
             // a window mapper producing null drops the tick — only the
             // dotproduct family can (|window| != |ω|,
             // MapperDotProduct.java:70); named aggs never return null
@@ -715,40 +785,41 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
                   p.columnExpr(col("ts").cast("double")))))
               case MacroAgg(_, tokens) =>
                 st.push(GtsFrame(MacroKernel.macroMap(fr.df, tokens, pre,
-                  post, asLong(occ))))
+                  post, en.asLong(occ))))
               case o => throw new IllegalArgumentException(s"not a mapper: $o")
             }
         }
       }
       st.pop() match {
         case params: Map[Any, Any] @unchecked =>
-          val fr = framesOf(Seq(st.pop()))
+          val fr = en.framesOf(Seq(st.pop()))
           val mapper = params.getOrElse("mapper",
             throw new IllegalArgumentException("MAP Missing 'mapper' parameter."))
           evalMap(fr, mapper,
-            asLong(params.getOrElse("pre", 0L)),
-            asLong(params.getOrElse("post", 0L)),
+            en.asLong(params.getOrElse("pre", 0L)),
+            en.asLong(params.getOrElse("post", 0L)),
             params.getOrElse("occurrences", 0L),
-            asLong(params.getOrElse("step", 1L)).toInt)
+            en.asLong(params.getOrElse("step", 1L)).toInt)
         case args0: Vector[Any @unchecked] =>
           val mi = args0.indexWhere(isMapper)
           require(mi > 0, "MAP expects Geo Time Series then a mapper function.")
           val tail = args0.drop(mi + 1)
           require(tail.size >= 2 && tail.size <= 4,
             "MAP expects [ gts... mapper pre post occurrences [step] ]")
-          evalMap(framesOf(args0.take(mi)), args0(mi),
-            asLong(tail(0)), asLong(tail(1)),
+          evalMap(en.framesOf(args0.take(mi)), args0(mi),
+            en.asLong(tail(0)), en.asLong(tail(1)),
             if (tail.size >= 3) tail(2) else 0L,
-            if (tail.size >= 4) asLong(tail(3)).toInt else 1)
+            if (tail.size >= 4) en.asLong(tail(3)).toInt else 1)
         case o => throw new IllegalArgumentException(
           s"MAP expects a list as input or a map of parameters, got $o")
       }
+    }
 
     // REDUCE (fn/REDUCE.java): [ gts... [labels] reducer ] — NULL
     // labels partitions by the series' FULL label sets
     // (GTSHelper.partition: eqcls.putAll(labels)); the EMPTY list is
     // the one-global-class form
-    case "REDUCE" =>
+    words("REDUCE") { (w, st, en) =>
       val args = st.pop().asInstanceOf[Vector[Any]]
       val (labels, byAll) = args(args.length - 2) match {
         case null => (Vector.empty[String], true)
@@ -759,25 +830,26 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
       args.last match {
         case av: AggVal =>
           // REDUCE emits the flattened shape (labels..., ts, vdouble);
-          // null-variant flags come from the reducer name (ReducerName)
-          st.push(GtsFrame(framesOf(args.take(args.length - 2))
+          // null-variant flags come from the reducer name
+          st.push(GtsFrame(en.framesOf(args.take(args.length - 2))
             .reduce(av.agg, labels.toSeq, av.forbidNulls, av.includeNulls,
               byAllLabels = byAll)))
         case ArgMinMaxVal(_, lbl, count, isArgmin) =>
-          st.push(GtsFrame(framesOf(args.take(args.length - 2))
+          st.push(GtsFrame(en.framesOf(args.take(args.length - 2))
             .reduceArg(lbl, count, isArgmin, labels.toSeq, byAllLabels = byAll)))
         case MacroAgg(_, tokens) =>
           st.push(GtsFrame(MacroKernel.macroReduce(
-            framesOf(args.take(args.length - 2)).df, tokens, labels.toSeq)))
+            en.framesOf(args.take(args.length - 2)).df, tokens, labels.toSeq)))
         case o => throw new IllegalArgumentException(s"not a reducer: $o")
       }
+    }
 
     // FILTER (fn/FILTER.java): [ gts... [labels] filter ]
-    case "FILTER" =>
+    words("FILTER") { (w, st, en) =>
       val args = st.pop().asInstanceOf[Vector[Any]]
       args.last match {
         case fv: FilterVal =>
-          st.push(framesOf(args.take(args.length - 2))
+          st.push(en.framesOf(args.take(args.length - 2))
             .filterSeries(fv.pred, fv.anyPred, fv.negate))
         // filter.latencies (LatencyFilter.java:202): the FIRST operand
         // list is the uplink (exactly one series), the remaining
@@ -786,27 +858,28 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
           val operands = args.take(args.length - 2)
           require(operands.length >= 2,
             "filter.latencies expects [ [uplink] [downlink]... ]")
-          val up = toFrame(operands.head)
+          val up = en.toFrame(operands.head)
           // LatencyFilter.java:209: the first operand list must hold
           // exactly one series
           require(up.df.select(col("gtsid")).distinct().limit(2).count() == 1,
             "filter.latencies expects exactly one uplink series")
           val downs = operands.tail.flatMap {
-            case v: Vector[Any @unchecked] => v.map(toFrame)
-            case o => Seq(toFrame(o))
+            case v: Vector[Any @unchecked] => v.map(en.toFrame)
+            case o => Seq(en.toFrame(o))
           }
           st.push(GtsFrame(up.latencyFilterSeries(
             downs.toSeq, minLat, maxLat, options)))
         case MacroAgg(_, tokens) =>
           st.push(GtsFrame(MacroKernel.filterSeries(
-            framesOf(args.take(args.length - 2)).df, tokens)))
+            en.framesOf(args.take(args.length - 2)).df, tokens)))
         case o => throw new IllegalArgumentException(s"not a filter: $o")
       }
+    }
 
     // APPLY (fn/APPLY.java): [ [gts-a] [gts-b] ... [labels] op ] — two
     // or more operand sets; N-ary evaluation for the ops whose
     // reference implementations accept the whole aligned value array
-    case "APPLY" =>
+    words("APPLY") { (w, st, en) =>
       val args = st.pop().asInstanceOf[Vector[Any]]
       val opv = args.last match {
         case o: OpVal => o
@@ -818,7 +891,7 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
         case o => throw new IllegalArgumentException(
           s"APPLY expects a list of label names or null, got $o")
       }
-      val operands = args.take(args.length - 2).map(toFrame)
+      val operands = args.take(args.length - 2).map(en.toFrame)
       require(operands.length >= 2, "APPLY needs at least two GTS operands")
       // intra-side aggregate per N-ary op (the reference's value array
       // has a slot per member; its N-ary ops are commutative folds)
@@ -852,31 +925,36 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
       }
       // APPLY emits the flattened shape (labels..., ts, vdouble)
       st.push(GtsFrame(out))
+    }
 
     // structural frame words — direct GtsFrame methods
     // fill words (fn/FILLPREVIOUS.java etc.): operate on a BUCKETIZE
     // result, bucket params read from the carried metadata
     // fills preserve bucketization metadata, as the reference keeps
     // lastbucket/span/count on the filled GTS (GTSHelper.fill)
-    case "FILLPREVIOUS" =>
-      val b = toBucketed(st.pop())
+    words("FILLPREVIOUS") { (w, st, en) =>
+      val b = en.toBucketed(st.pop())
       st.push(b.copy(frame = GtsFrame(b.frame.fillPrevious(b.lastbucket, b.span, b.count))))
-    case "FILLNEXT" =>
-      val b = toBucketed(st.pop())
+    }
+    words("FILLNEXT") { (w, st, en) =>
+      val b = en.toBucketed(st.pop())
       st.push(b.copy(frame = GtsFrame(b.frame.fillNext(b.lastbucket, b.span, b.count))))
-    case "FILLVALUE" => // [ lat lon elev value ] list form; value used
+    }
+    words("FILLVALUE") { (w, st, en) => // [ lat lon elev value ] list form; value used
       val v = st.pop() match {
-        case l: Vector[_] => asNum(l.last)
-        case n => asNum(n)
+        case l: Vector[_] => en.asNum(l.last)
+        case n => en.asNum(n)
       }
-      val b = toBucketed(st.pop())
+      val b = en.toBucketed(st.pop())
       val filled = GtsFrame(b.frame.fillValue(b.lastbucket, b.span, b.count, v))
       // kernel words can fuse the constant grid into their pack (r14)
-      recordFillValue(filled, b.frame, b.lastbucket, b.span, b.count, v)
+      en.recordFillValue(filled, b.frame, b.lastbucket, b.span, b.count, v)
       st.push(b.copy(frame = filled))
-    case "INTERPOLATE" =>
-      val b = toBucketed(st.pop())
+    }
+    words("INTERPOLATE") { (w, st, en) =>
+      val b = en.toBucketed(st.pop())
       st.push(b.copy(frame = GtsFrame(b.frame.fillLinear(b.lastbucket, b.span, b.count))))
+    }
     // DEDUP (fn/DEDUP.java → GTSHelper.dedup:7193-7216): keep ONE point
     // per tick — the reference keeps "the last value found for a given
     // timestamp" in backing-array (append) order. A stack-built series
@@ -885,30 +963,36 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
     // order otherwise. Storage-backed frames have no append order (the
     // long table is ts-keyed, where the two rules coincide) and use
     // GtsFrame.dedup's canonical-max determinization — see COVERAGE.md.
-    case "DEDUP" => st.pop() match {
-      case b: WarpScriptEngine.GtsBuilder =>
-        val lastIdx = b.points.zipWithIndex
-          .groupBy(_._1._1).map { case (ts, ps) => (ts, ps.last._2) }
-        st.push(b.copy(points = b.points.zipWithIndex
-          .filter { case (p, i) => lastIdx(p._1) == i }.map(_._1)))
-      case other => st.push(keepBuckets(other)(_.dedup()))
+    words("DEDUP") { (w, st, en) =>
+      st.pop() match {
+        case b: WarpScriptEngine.GtsBuilder =>
+          val lastIdx = b.points.zipWithIndex
+            .groupBy(_._1._1).map { case (ts, ps) => (ts, ps.last._2) }
+          st.push(b.copy(points = b.points.zipWithIndex
+            .filter { case (p, i) => lastIdx(p._1) == i }.map(_._1)))
+        case other => st.push(en.keepBuckets(other)(_.dedup()))
+      }
     }
     // COMPACT (fn/COMPACT.java → GTSHelper.compact preserveRanges
     // false): run starts + the series' last point
-    case "COMPACT" => st.push(keepBuckets(st.pop())(_.compact(preserveRanges = false)))
-    case "ISONORMALIZE" => st.push(keepBuckets(st.pop())(_.isonormalize()))
+    words("COMPACT") { (w, st, en) =>
+      st.push(en.keepBuckets(st.pop())(_.compact(preserveRanges = false)))
+    }
+    words("ISONORMALIZE") { (w, st, en) => st.push(en.keepBuckets(st.pop())(_.isonormalize())) }
     // RENAME / RELABEL (fn/RENAME.java, fn/RELABEL.java) — also valid
     // on a NEWGTS builder before materialization
-    case "RENAME" => val n = st.popStr(); st.pop() match {
-      case b: GtsBuilder =>
-        st.push(b.copy(cls = if (n.startsWith("+")) b.cls + n.substring(1) else n))
-      // metadata-only op: bucketization survives (the reference
-      // mutates the GTS's Metadata, bucket fields untouched)
-      case bf @ BucketedFrame(f, _, _, _) =>
-        st.push(bf.copy(frame = f.rename(n)))
-      case f => st.push(toFrame(f).rename(n))
+    words("RENAME") { (w, st, en) =>
+      val n = st.popStr(); st.pop() match {
+        case b: GtsBuilder =>
+          st.push(b.copy(cls = if (n.startsWith("+")) b.cls + n.substring(1) else n))
+        // metadata-only op: bucketization survives (the reference
+        // mutates the GTS's Metadata, bucket fields untouched)
+        case bf @ BucketedFrame(f, _, _, _) =>
+          st.push(bf.copy(frame = f.rename(n)))
+        case f => st.push(en.toFrame(f).rename(n))
+      }
     }
-    case "RELABEL" =>
+    words("RELABEL") { (w, st, en) =>
       // a NULL KEY means "drop the existing labels first"; a null or
       // empty value removes that label (GTSHelper.relabel:6713-6734)
       val raw = st.pop().asInstanceOf[Map[Any, Any]]
@@ -923,20 +1007,23 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
         // metadata-only op: bucketization survives
         case bf @ BucketedFrame(f, _, _, _) =>
           st.push(bf.copy(frame = f.relabel(m, reset)))
-        case f => st.push(toFrame(f).relabel(m, reset))
+        case f => st.push(en.toFrame(f).relabel(m, reset))
       }
+    }
     // NEWGTS / ADDVALUE (fn/NEWGTS.java, fn/ADDVALUE.java): build a GTS
     // from literals on the stack; materializes into a one-series frame
     // when a frame word consumes it. `gts ts lat lon elev value ADDVALUE`
     // — NaN lat/lon and NULL elev mean absent, as in the reference.
-    case "NEWGTS" | "NEWENCODER" => st.push(GtsBuilder("", Map.empty, Vector.empty))
-    case "ADDVALUE" =>
+    words("NEWGTS", "NEWENCODER") { (w, st, en) =>
+      st.push(GtsBuilder("", Map.empty, Vector.empty))
+    }
+    words("ADDVALUE") { (w, st, en) =>
       // reference arities (ADDVALUE.java:14-56): five scalars
       // `ts lat lon elev value`, or ONE [ts lat lon elev value] tuple
       // (the mapper-result shape)
       val (ts, lat, lon, elevRaw, rawV) = st.pop() match {
         case tup: Vector[Any @unchecked] if tup.size == 5 =>
-          (asLong(tup(0)), asNum(tup(1)), asNum(tup(2)), tup(3), tup(4))
+          (en.asLong(tup(0)), en.asNum(tup(1)), en.asNum(tup(2)), tup(3), tup(4))
         case value =>
           val elev = st.pop(); val lon = st.popNum(); val lat = st.popNum()
           (st.popLong(), lat, lon, elev, value)
@@ -961,6 +1048,7 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
           st.push(b.copy(points = b.points :+ (ts, loc, elev, v)))
         case o => throw new IllegalArgumentException(s"ADDVALUE on $o")
       }
+    }
     // accessor words (fn/FIRSTTICK.java, LASTTICK, TICKS, VALUES, NAME,
     // LABELS, SIZE-for-GTS handled under SIZE): driver-side scalars over
     // the frame — tiny aggs, same contract as GtsFrame auto-params
@@ -969,65 +1057,77 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
     // a BUCKETIZED operand answers from its bucket fields
     // (GTSHelper.firsttick:6882-6885, lasttick:6913-6915); an empty
     // unbucketized one returns the reference's MAX/MIN sentinels
-    case "FIRSTTICK" => st.pop() match {
-      case b: GtsBuilder =>
-        st.push(if (b.points.isEmpty) Long.MaxValue else b.points.map(_._1).min)
-      case bf: BucketedFrame =>
-        val c = toBucketed(bf)
-        st.push(c.lastbucket - (c.count - 1) * c.span)
-      case o =>
-        val r = toFrame(o).df.agg(min(col("ts"))).head()
-        st.push(if (r.isNullAt(0)) Long.MaxValue else r.getLong(0))
+    words("FIRSTTICK") { (w, st, en) =>
+      st.pop() match {
+        case b: GtsBuilder =>
+          st.push(if (b.points.isEmpty) Long.MaxValue else b.points.map(_._1).min)
+        case bf: BucketedFrame =>
+          val c = en.toBucketed(bf)
+          st.push(c.lastbucket - (c.count - 1) * c.span)
+        case o =>
+          val r = en.toFrame(o).df.agg(min(col("ts"))).head()
+          st.push(if (r.isNullAt(0)) Long.MaxValue else r.getLong(0))
+      }
     }
-    case "LASTTICK" => st.pop() match {
-      case b: GtsBuilder =>
-        st.push(if (b.points.isEmpty) Long.MinValue else b.points.map(_._1).max)
-      case BucketedFrame(_, lb, _, _) => st.push(lb)
-      case o =>
-        val r = toFrame(o).df.agg(max(col("ts"))).head()
-        st.push(if (r.isNullAt(0)) Long.MinValue else r.getLong(0))
+    words("LASTTICK") { (w, st, en) =>
+      st.pop() match {
+        case b: GtsBuilder =>
+          st.push(if (b.points.isEmpty) Long.MinValue else b.points.map(_._1).max)
+        case BucketedFrame(_, lb, _, _) => st.push(lb)
+        case o =>
+          val r = en.toFrame(o).df.agg(max(col("ts"))).head()
+          st.push(if (r.isNullAt(0)) Long.MinValue else r.getLong(0))
+      }
     }
-    case "NAME" => st.pop() match {
-      case b: GtsBuilder => st.push(Vector(b.cls: Any))
-      case o => st.push(toFrame(o).df.select(col("class")).distinct()
-        .collect().map(_.getString(0)).sorted.toVector)
+    words("NAME") { (w, st, en) =>
+      st.pop() match {
+        case b: GtsBuilder => st.push(Vector(b.cls: Any))
+        case o => st.push(en.toFrame(o).df.select(col("class")).distinct()
+          .collect().map(_.getString(0)).sorted.toVector)
+      }
     }
     // LABELS (fn/LABELS.java — the labels map of a single GTS; a frame
     // holding several distinct label sets has no single answer)
-    case "LABELS" => st.pop() match {
-      case b: GtsBuilder => st.push(b.labels.asInstanceOf[Map[Any, Any]])
-      case o =>
-        val maps = toFrame(o).df
-          .select(col("gtsid"), col("labels")).groupBy(col("gtsid"))
-          .agg(first(col("labels")).as("labels"))
-          .collect().map(_.getMap[String, String](1).toMap).distinct
-        maps match {
-          case Array(one) => st.push(one.asInstanceOf[Map[Any, Any]])
-          case _ => throw new IllegalArgumentException(
-            s"LABELS needs a single-series frame, found ${maps.length} label sets")
-        }
+    words("LABELS") { (w, st, en) =>
+      st.pop() match {
+        case b: GtsBuilder => st.push(b.labels.asInstanceOf[Map[Any, Any]])
+        case o =>
+          val maps = en.toFrame(o).df
+            .select(col("gtsid"), col("labels")).groupBy(col("gtsid"))
+            .agg(first(col("labels")).as("labels"))
+            .collect().map(_.getMap[String, String](1).toMap).distinct
+          maps match {
+            case Array(one) => st.push(one.asInstanceOf[Map[Any, Any]])
+            case _ => throw new IllegalArgumentException(
+              s"LABELS needs a single-series frame, found ${maps.length} label sets")
+          }
+      }
     }
     // CLONEEMPTY (fn/CLONEEMPTY.java): same shape, zero points
     // cloneEmpty COPIES the bucket fields (GeoTimeSerie.java:369-375)
-    case "CLONEEMPTY" => st.push(keepBuckets(st.pop())(f =>
-      GtsFrame(f.df.limit(0))))
+    words("CLONEEMPTY") { (w, st, en) =>
+      st.push(en.keepBuckets(st.pop())(f =>
+        GtsFrame(f.df.limit(0))))
+    }
     // TICKLIST (GTSHelper.tickList:1310-1318): one entry PER POINT in
     // the CURRENT order — no dedup, no sort (TICKS is the set+sort
     // word). Builder: append order; frame: canonical tick order with
     // duplicates kept (the old distinct() dropped duplicate ticks)
-    case "TICKLIST" => st.pop() match {
-      case b: WarpScriptEngine.GtsBuilder =>
-        st.push(b.points.map(_._1).toVector)
-      case o => st.push(toFrame(o).df.select(col("ts"))
-        .collect().map(_.getLong(0)).sorted.toVector)
+    words("TICKLIST") { (w, st, en) =>
+      st.pop() match {
+        case b: WarpScriptEngine.GtsBuilder =>
+          st.push(b.points.map(_._1).toVector)
+        case o => st.push(en.toFrame(o).df.select(col("ts"))
+          .collect().map(_.getLong(0)).sorted.toVector)
+      }
     }
     // CORRELATE (continuum/gts/CORRELATE.java, faithful r11): base-gts
     // [gts...] [offsets] CORRELATE → per input series a lag cross-
     // correlation GTS (ticks = offsets); operands must share the
     // bucketspan and offsets must be multiples of it — validated when
     // both operands carry BUCKETIZE metadata
-    case "CORRELATE" =>
-      val offsets = st.pop().asInstanceOf[Vector[Any]].map(asLong)
+    words("CORRELATE") { (w, st, en) =>
+      val offsets = st.pop().asInstanceOf[Vector[Any]].map(en.asLong)
       val othersObj = st.pop(); val baseObj = st.pop()
       (baseObj, othersObj) match {
         case (b1: BucketedFrame, b2: BucketedFrame) =>
@@ -1039,47 +1139,52 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
         case _ => ()
       }
       st.push(GtsFrame(graft.operators.StatOps.crossCorrelate(
-        toFrame(baseObj), toFrame(othersObj), offsets)))
+        en.toFrame(baseObj), en.toFrame(othersObj), offsets)))
+    }
     // LTTB (fn/LTTB.java, GTSHelper.lttb:12319-12485): gts threshold
     // LTTB — the reference's own bucket/average/anchor arithmetic
     // (SeriesKernels.lttbReference), quirks included
-    case "LTTB" =>
+    words("LTTB") { (w, st, en) =>
       val thr = st.popLong().toInt
-      val f = toFrame(st.pop())
+      val f = en.toFrame(st.pop())
       val sel = new graft.kernels.KernelOps(f.df).lttbRef(thr, timebased = false)
       val meta = f.df.groupBy(col("gtsid"))
         .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
       st.push(GtsFrame(sel.join(meta, "gtsid")))
+    }
     // FFT surface (continuum/gts/FFT.java): gts bins span lastbucket FFT
     // → per-series spectrum rows (k, re, im, mag); see StatOps.dft
-    case "FFT" =>
+    words("FFT") { (w, st, en) =>
       val lb = st.popLong(); val span = st.popLong(); val bins = st.popLong().toInt
-      st.push(GtsFrame(graft.operators.StatOps.dft(toFrame(st.pop()), bins, span, lb)))
+      st.push(GtsFrame(graft.operators.StatOps.dft(en.toFrame(st.pop()), bins, span, lb)))
+    }
     // LOWESS (fn/LOWESS.java, faithful r11): gts q LOWESS ≡
     // GTSHelper.rlowess(gts, q, 0, 0, 1) — the reference's own
     // pointwise locally weighted regression kernel
-    case "LOWESS" =>
+    words("LOWESS") { (w, st, en) =>
       val q = st.popLong().toInt
-      st.push(runRlowess(st.pop(), q, 0, 0L, 1))
+      st.push(en.runRlowess(st.pop(), q, 0, 0L, 1))
+    }
     // RLOWESS (fn/RLOWESS.java, faithful r11): gts q r d p RLOWESS —
     // robustness iterations r, skip distance d, polynomial degree p
-    case "RLOWESS" =>
+    words("RLOWESS") { (w, st, en) =>
       val p = st.popLong().toInt
       val d = st.popLong()
       val r = st.popLong().toInt
       val q = st.popLong().toInt
-      st.push(runRlowess(st.pop(), q, r, d, p))
+      st.push(en.runRlowess(st.pop(), q, r, d, p))
+    }
     // DTW (fn/DTW.java, faithful r11): gts2 gts1 [window] threshold
     // [distance] [characteristic] DTW → scalar pseudo-distance with
     // 0-1 min-max normalization (the frame-pair composition lives on
     // as StatOps.dtwPairs, the g82 extension)
-    case "DTW" => runDtw(st, normalize = true, znormalize = false)
+    words("DTW") { (w, st, en) => en.runDtw(st, normalize = true, znormalize = false) }
     // OPTDTW (fn/OPTDTW.java): sequence query [window] count OPTDTW →
     // top-`count` [start-index, distance] pairs from sliding the
     // z-normalized query over every |query|-length subsequence with
     // Sakoe-Chiba banded DTW (Manhattan cost, bessel-corrected sd, as
     // the reference's DoubleUtils.musigma(values, true))
-    case "OPTDTW" =>
+    words("OPTDTW") { (w, st, en) =>
       val count = st.popLong().toInt
       var top = st.pop()
       var window = Int.MaxValue
@@ -1089,8 +1194,8 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
           top = st.pop()
         case _ =>
       }
-      val query = top.asInstanceOf[Vector[Any]].map(asNum).toIndexedSeq
-      val series = st.pop().asInstanceOf[Vector[Any]].map(asNum).toIndexedSeq
+      val query = top.asInstanceOf[Vector[Any]].map(en.asNum).toIndexedSeq
+      val series = st.pop().asInstanceOf[Vector[Any]].map(en.asNum).toIndexedSeq
       require(series.length >= query.length,
         "OPTDTW expects the query to be shorter than the sequence")
       def znorm(v: IndexedSeq[Double]): IndexedSeq[Double] = {
@@ -1107,39 +1212,42 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
       }.sortBy(r => (r._2, r._1))
       val kept = if (count > 0) hits.take(count) else hits
       st.push(kept.map { case (i, d) => Vector[Any](i, d) }.toVector)
+    }
 
     // PATTERNS (fn/PATTERNS.java → GTSHelper.bSAX): gts windowLen
     // wordLen alphabetSize PATTERNS → STRING GTS of the reference's
     // OPB64-encoded bSAX word at every window-start tick
-    case "PATTERNS" =>
+    words("PATTERNS") { (w, st, en) =>
       val alphabet = st.popLong().toInt
       val wordLen = st.popLong().toInt
       val windowLen = st.popLong().toInt
-      st.push(GtsFrame(graft.operators.StatOps.bsax(toFrame(st.pop()),
+      st.push(GtsFrame(graft.operators.StatOps.bsax(en.toFrame(st.pop()),
         alphabet, wordLen, windowLen, standardizePAA = true)))
+    }
     // SINGLEEXPONENTIALSMOOTHING (fn/SINGLEEXPONENTIALSMOOTHING.java →
     // GTSHelper.singleExponentialSmoothing:9112-9160): gts alpha →
     // smoothed gts; 0 < α < 1 enforced like the reference (sub-2-point
     // series are skipped by the kernel — documented divergence from
     // the reference's per-GTS rejection)
-    case "SINGLEEXPONENTIALSMOOTHING" =>
+    words("SINGLEEXPONENTIALSMOOTHING") { (w, st, en) =>
       val alpha = st.popNum()
       require(alpha > 0.0 && alpha < 1.0,
         "The smoothing factor must be in 0 < alpha < 1.")
-      val f = toFrame(st.pop())
+      val f = en.toFrame(st.pop())
       st.push(GtsFrame(new graft.kernels.KernelOps(f.df).expSmooth(alpha)
         .join(graft.model.Gts.seriesMeta(f.df), "gtsid")))
+    }
     // DOUBLEEXPONENTIALSMOOTHING (fn/DOUBLEEXPONENTIALSMOOTHING.java →
     // GTSHelper.doubleExponentialSmoothing:9162-9223, faithful r11):
     // gts alpha beta → [ level-GTS best-estimate-GTS ] — the reference
     // returns the PAIR, both starting at tick[1]
-    case "DOUBLEEXPONENTIALSMOOTHING" =>
+    words("DOUBLEEXPONENTIALSMOOTHING") { (w, st, en) =>
       val beta = st.popNum(); val alpha = st.popNum()
       require(alpha > 0.0 && alpha < 1.0,
         "The data smoothing factor must be in 0 < alpha < 1.")
       require(beta > 0.0 && beta < 1.0,
         "The trend smoothing factor must be in 0 < beta < 1.")
-      val f = toFrame(st.pop())
+      val f = en.toFrame(st.pop())
       // persist: both faces of the [level, best-estimate] pair read one
       // kernel pass
       val tagged = new graft.kernels.KernelOps(f.df).holtSmooth(alpha, beta)
@@ -1150,109 +1258,123 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
           .join(meta, "gtsid")),
         GtsFrame(tagged.filter(col("which") === "b").drop("which")
           .join(meta, "gtsid"))))
+    }
     // ZSCORETEST (fn/ZSCORETEST.java): gts useMedian threshold → flagged
     // points; useMedian selects median/MAD (modified z), else mean with
     // Bessel sd (GTSOutliersHelper.zScoreTest:227-246)
-    case "ZSCORETEST" =>
+    words("ZSCORETEST") { (w, st, en) =>
       val thr = st.popNum(); val useMedian = st.popBool()
-      st.push(GtsFrame(graft.operators.StatOps.zscoreFlag(toFrame(st.pop()), thr, useMedian)))
+      st.push(GtsFrame(graft.operators.StatOps.zscoreFlag(en.toFrame(st.pop()), thr, useMedian)))
+    }
     // ESDTEST (fn/ESDTEST.java): gts k useMedian alpha → flagged outlier
     // rounds (mean/sd or median/MAD per the flag)
-    case "ESDTEST" =>
+    words("ESDTEST") { (w, st, en) =>
       val alpha = st.popNum(); val useMedian = st.popBool()
       val k = st.popLong().toInt
-      val f = toFrame(st.pop())
+      val f = en.toFrame(st.pop())
       val flagged =
         if (useMedian) graft.operators.StatOps.esdMadFlag(f, k, alpha)
         else graft.operators.StatOps.esdFlag(f, k, alpha)
       st.push(GtsFrame(flagged.join(graft.model.Gts.seriesMeta(f.df), "gtsid")))
+    }
     // RESETS (fn/RESETS.java): gts decreasing:BOOLEAN RESETS — the flag
     // selects the counter direction (true = decreasing counter, a
     // reset is an upward jump; GTSHelper.compensateResets:5960-6020)
-    case "RESETS" =>
+    words("RESETS") { (w, st, en) =>
       val resethigher = st.pop() match {
         case b: Boolean => b
         case o => throw new IllegalArgumentException(
           s"RESETS expects a boolean as parameter, got $o")
       }
-      st.push(toFrame(st.pop()).compensateResets(resethigher))
+      st.push(en.toFrame(st.pop()).compensateResets(resethigher))
+    }
     // RANGECOMPACT (fn/RANGECOMPACT.java → GTSHelper.compact
     // preserveRanges true, faithful r11): NO parameter — each constant
     // value/location/elevation run collapses to its first + last point
-    case "RANGECOMPACT" =>
-      st.push(keepBuckets(st.pop())(_.compact(preserveRanges = true)))
+    words("RANGECOMPACT") { (w, st, en) =>
+      st.push(en.keepBuckets(st.pop())(_.compact(preserveRanges = true)))
+    }
     // LR (fn/LR.java): gts span lastbucket LR → per-series regression
-    case "LR" =>
+    words("LR") { (w, st, en) =>
       val lb = st.popLong(); val span = st.popLong()
-      st.push(GtsFrame(graft.operators.StatOps.linReg(toFrame(st.pop()), span, lb)))
+      st.push(GtsFrame(graft.operators.StatOps.linReg(en.toFrame(st.pop()), span, lb)))
+    }
     // SKEWNESS/KURTOSIS/NSUMSUMSQ surface (fn/SKEWNESS.java family):
     // one word pushes the whole per-series moment table
-    case "MOMENTS" | "SKEWNESS" | "KURTOSIS" =>
-      st.push(GtsFrame(graft.operators.StatOps.momentStats(toFrame(st.pop()))))
+    words("MOMENTS", "SKEWNESS", "KURTOSIS") { (w, st, en) =>
+      st.push(GtsFrame(graft.operators.StatOps.momentStats(en.toFrame(st.pop()))))
+    }
     // FDWT Haar (fn/FDWT.java): gts levels span lastbucket FDWT
-    case "FDWT" =>
+    words("FDWT") { (w, st, en) =>
       val lb = st.popLong(); val span = st.popLong(); val lv = st.popLong().toInt
       // bound: levels <= 0 would make the approx cascade empty and large
       // levels allocate 1<<levels columns — a request-triggered OOM via
       // POST /api/v0/exec without this check
       require(lv >= 1 && lv <= 20, s"FDWT levels must be in [1, 20]: $lv")
-      st.push(GtsFrame(graft.operators.StatOps.haarDwt(toFrame(st.pop()), lv, span, lb)))
+      st.push(GtsFrame(graft.operators.StatOps.haarDwt(en.toFrame(st.pop()), lv, span, lb)))
+    }
     // IDWT (fn/IDWT.java): dwt-frame levels IDWT → reconstructed buckets
-    case "IDWT" =>
+    words("IDWT") { (w, st, en) =>
       val lv = st.popLong().toInt
       require(lv >= 1 && lv <= 20, s"IDWT levels must be in [1, 20]: $lv")
-      st.push(GtsFrame(graft.operators.StatOps.haarIdwt(toFrame(st.pop()).df, lv)))
+      st.push(GtsFrame(graft.operators.StatOps.haarIdwt(en.toFrame(st.pop()).df, lv)))
+    }
     // DISCORDS (continuum/gts/DISCORDS.java): gts windowLen wordLen
     // alphabetSize count overlap distratio DISCORDS → the HOTSAX-style
     // discord windows' points (faithful sequential kernel per series)
-    case "DISCORDS" =>
-      st.push(popDiscords(st, standardizePAA = true))
+    words("DISCORDS") { (w, st, en) =>
+      st.push(en.popDiscords(st, standardizePAA = true))
+    }
     // POLYFIT degree 2 (fn/POLYFIT.java): gts span lastbucket buckets
-    case "POLYFIT" =>
+    words("POLYFIT") { (w, st, en) =>
       val nb = st.popLong().toInt; val lb = st.popLong(); val span = st.popLong()
-      st.push(GtsFrame(graft.operators.StatOps.polyFit2(toFrame(st.pop()),
+      st.push(GtsFrame(graft.operators.StatOps.polyFit2(en.toFrame(st.pop()),
         span, lb, nb)))
+    }
     // WRAP/UNWRAP (fn/WRAP.java, fn/UNWRAP.java): the REFERENCE stack
     // contract — one OPB64 wire-format wrapper string per series
     // (sources/WrapperCodec.scala, byte-compatible), lists wrap
     // element-wise. The whole series lands on the stack, so this is a
     // bounded driver collect (accessor-cap contract); the distributed
     // at-rest path stays graft.sources.GtsCodec.wrap over frames.
-    case "WRAP" =>
+    words("WRAP") { (w, st, en) =>
       st.push(WordsFramesBlock.wrapOf(st.pop(), raw = false, mv = false,
-        compress = true, toFrame))
-    case "UNWRAP" => st.pop() match {
-      case f: GtsFrame => st.push(GtsFrame(graft.sources.GtsCodec.unwrap(f.df)))
-      case df: org.apache.spark.sql.DataFrame @unchecked
-          if df.columns.contains("blob") =>
-        st.push(GtsFrame(graft.sources.GtsCodec.unwrap(df)))
-      // reference wire format (fn/UNWRAP.java:59 — a string, byte
-      // array, or list thereof): real Warp 10 WRAP exports load
-      // byte-compatibly (sources/WrapperCodec.scala); a bucketized
-      // wrapper restores its lastbucket/bucketspan/bucketcount so the
-      // fill words see a BUCKETIZE result
-      case s: String =>
-        st.push(unwrapRefBlob(graft.sources.WrapperCodec.unwrapString(s)))
-      case b: Array[Byte] =>
-        st.push(unwrapRefBlob(graft.sources.WrapperCodec.unwrapBytes(b)))
-      case l: Vector[Any @unchecked]
-          if l.forall(x => x.isInstanceOf[String] || x.isInstanceOf[Array[Byte]]) =>
-        st.push(l.map {
-          case s: String =>
-            unwrapRefBlob(graft.sources.WrapperCodec.unwrapString(s))
-          case b: Array[Byte] =>
-            unwrapRefBlob(graft.sources.WrapperCodec.unwrapBytes(b))
-        })
-      case o => throw new IllegalArgumentException(s"UNWRAP on $o")
+        compress = true, en.toFrame))
+    }
+    words("UNWRAP") { (w, st, en) =>
+      st.pop() match {
+        case f: GtsFrame => st.push(GtsFrame(graft.sources.GtsCodec.unwrap(f.df)))
+        case df: org.apache.spark.sql.DataFrame @unchecked
+            if df.columns.contains("blob") =>
+          st.push(GtsFrame(graft.sources.GtsCodec.unwrap(df)))
+        // reference wire format (fn/UNWRAP.java:59 — a string, byte
+        // array, or list thereof): real Warp 10 WRAP exports load
+        // byte-compatibly (sources/WrapperCodec.scala); a bucketized
+        // wrapper restores its lastbucket/bucketspan/bucketcount so the
+        // fill words see a BUCKETIZE result
+        case s: String =>
+          st.push(unwrapRefBlob(graft.sources.WrapperCodec.unwrapString(s), en))
+        case b: Array[Byte] =>
+          st.push(unwrapRefBlob(graft.sources.WrapperCodec.unwrapBytes(b), en))
+        case l: Vector[Any @unchecked]
+            if l.forall(x => x.isInstanceOf[String] || x.isInstanceOf[Array[Byte]]) =>
+          st.push(l.map {
+            case s: String =>
+              unwrapRefBlob(graft.sources.WrapperCodec.unwrapString(s), en)
+            case b: Array[Byte] =>
+              unwrapRefBlob(graft.sources.WrapperCodec.unwrapBytes(b), en)
+          })
+        case o => throw new IllegalArgumentException(s"UNWRAP on $o")
+      }
     }
     // SNAPSHOT (fn/SNAPSHOT.java): render the top of the stack as a
     // re-evaluable WarpScript literal (driver-side scalar)
-    case "SNAPSHOT" => st.push(graft.sources.Snapshot.render(st.pop()))
+    words("SNAPSHOT") { (w, st, en) => st.push(graft.sources.Snapshot.render(st.pop())) }
     // QUANTIZE (fn/QUANTIZE.java): gts bounds targets QUANTIZE — the
     // reference form (corrected r11; the old word took a scalar step,
     // a form the reference never had): strictly increasing finite
     // bounds, targets empty (emit the bucket index) or bounds+1 long
-    case "QUANTIZE" =>
+    words("QUANTIZE") { (w, st, en) =>
       val targets = st.pop() match {
         case v: Vector[Any @unchecked] => v
         case o => throw new IllegalArgumentException(
@@ -1274,14 +1396,15 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
         "QUANTIZE identified unordered or duplicate bounds.")
       require(targets.isEmpty || targets.size == bounds.size + 1,
         s"QUANTIZE expected ${bounds.size + 1} values but got ${targets.size}")
-      st.push(toFrame(st.pop()).quantizeRef(bounds,
+      st.push(en.toFrame(st.pop()).quantizeRef(bounds,
         if (targets.isEmpty) None else Some(targets)))
+    }
     // TIMECLIP (fn/TIMECLIP.java, corrected r11): the TOP is a Long
     // DURATION → [now − duration + 1, now], or an ISO-8601 string →
     // the absolute origin; under it 'now' (Long tick or ISO-8601).
     // The old word read a plain [start, end] pair — a form the
     // reference never had.
-    case "TIMECLIP" =>
+    words("TIMECLIP") { (w, st, en) =>
       val (isoStart, topVal) = st.pop() match {
         case s: String => (true, graft.sources.Formats.isoTick(s))
         case l: Long => (false, l)
@@ -1296,41 +1419,48 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
       }
       // Long-wrapping arithmetic like the reference's raw Java math
       val start = if (isoStart) topVal else end - topVal + 1
-      st.push(toFrame(st.pop()).timeclip(start, end))
-    case "TIMESHIFT" => val d = st.popLong()
-      // GTSHelper.timeshift clones (bucket fields kept) and shifts
-      // lastbucket along with the ticks
-      st.push(st.pop() match {
-        case BucketedFrame(fr, lb, sp, cc) =>
-          BucketedFrame(fr.timeshift(d), lb + d, sp, cc)
-        case other => toFrame(other).timeshift(d)
-      })
-    case "TIMESCALE" => val k = st.popNum()
-      st.pop() match {
-        // GTSHelper.timescale:10247 rejects bucketized operands
-        case _: BucketedFrame => throw new IllegalArgumentException(
-          "Cannot apply timescale on a bucketized GTS. Unbucketize it first.")
-        case other => st.push(toFrame(other).timescale(k))
-      }
-    case "TIMEMODULO" =>
+      st.push(en.toFrame(st.pop()).timeclip(start, end))
+    }
+    words("TIMESHIFT") { (w, st, en) =>
+      val d = st.popLong()
+        // GTSHelper.timeshift clones (bucket fields kept) and shifts
+        // lastbucket along with the ticks
+        st.push(st.pop() match {
+          case BucketedFrame(fr, lb, sp, cc) =>
+            BucketedFrame(fr.timeshift(d), lb + d, sp, cc)
+          case other => en.toFrame(other).timeshift(d)
+        })
+    }
+    words("TIMESCALE") { (w, st, en) =>
+      val k = st.popNum()
+        st.pop() match {
+          // GTSHelper.timescale:10247 rejects bucketized operands
+          case _: BucketedFrame => throw new IllegalArgumentException(
+            "Cannot apply timescale on a bucketized GTS. Unbucketize it first.")
+          case other => st.push(en.toFrame(other).timescale(k))
+        }
+    }
+    words("TIMEMODULO") { (w, st, en) =>
       val lbl = st.popStr(); val mod = st.popLong()
-      st.push(toFrame(st.pop()).timemodulo(mod, lbl))
+      st.push(en.toFrame(st.pop()).timemodulo(mod, lbl))
+    }
     // TIMESPLIT (fn/TIMESPLIT.java): gts quietperiod minvalues label
     // TIMESPLIT — the 3-parameter reference form (corrected r11; the
     // split id becomes a label, sub-series under minvalues drop, a
     // series already carrying the label passes through unchanged)
-    case "TIMESPLIT" =>
+    words("TIMESPLIT") { (w, st, en) =>
       val label = st.popStr()
       val minvalues = st.popLong()
       val quiet = st.popLong()
-      st.push(toFrame(st.pop()).timesplitRef(quiet, minvalues, label))
+      st.push(en.toFrame(st.pop()).timesplitRef(quiet, minvalues, label))
+    }
     // CHUNK (fn/CHUNK.java): gts lastchunk chunkwidth chunkcount
     // chunklabel keepempty CHUNK — the 5-parameter reference form
     // (corrected round 11; the chunk id becomes a label = new series
     // per chunk, GtsFrame.chunkRef). keepempty=true would require
     // empty-series rows a points-frame cannot carry — rejected loudly
     // like FETCH's keepempty (see COVERAGE.md).
-    case "CHUNK" =>
+    words("CHUNK") { (w, st, en) =>
       val keepempty = st.popBool()
       val chunklabel = st.popStr()
       val count = st.popLong()
@@ -1338,14 +1468,15 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
       val lastchunk = st.popLong()
       require(!keepempty, "CHUNK 'keepempty' true is not supported by " +
         "this engine (a points-frame has no empty-series rows; see COVERAGE.md).")
-      st.push(toFrame(st.pop()).chunkRef(lastchunk, width, count, chunklabel))
-    case "NORMALIZE" => st.push(keepBuckets(st.pop())(_.normalize()))
-    case "STANDARDIZE" => st.push(keepBuckets(st.pop())(_.standardize()))
+      st.push(en.toFrame(st.pop()).chunkRef(lastchunk, width, count, chunklabel))
+    }
+    words("NORMALIZE") { (w, st, en) => st.push(en.keepBuckets(st.pop())(_.normalize())) }
+    words("STANDARDIZE") { (w, st, en) => st.push(en.keepBuckets(st.pop())(_.standardize())) }
     // COMMONTICKS (fn/COMMONTICKS.java): keep only ticks present in
     // EVERY series of the frame/list — fully lazy: per-tick distinct
     // series count equi-joined against the broadcast 1-row total
-    case "COMMONTICKS" =>
-      val f = toFrame(st.pop())
+    words("COMMONTICKS") { (w, st, en) =>
+      val f = en.toFrame(st.pop())
       val total = f.df.agg(countDistinct(col("gtsid")).as("__total"))
       val ticks = f.df.groupBy(col("ts"))
         .agg(countDistinct(col("gtsid")).as("__n"))
@@ -1353,6 +1484,7 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
         .filter(col("__n") === col("__total"))
         .select(col("ts"))
       st.push(GtsFrame(f.df.join(ticks, "ts")))
+    }
     // SORT/RSORT (fn/SORT.java, RSORT): the reference orders the
     // materialized point list; the frame algebra is set-semantic and
     // every order-sensitive operator sorts internally, so these accept
@@ -1363,43 +1495,49 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
     // among equal keys — the reference's quicksort leaves ties
     // arbitrary; stability is the determinization); a frame stays the
     // canonical point set (order-sensitive consumers sort internally)
-    case "SORT" | "RSORT" | "FULLSORT" => st.pop() match {
-      case b: WarpScriptEngine.GtsBuilder =>
-        val sorted = w match {
-          case "RSORT" => b.points.sortBy(_._1)(Ordering[Long].reverse)
-          case "SORT" => b.points.sortBy(_._1)
-          case _ => b.points.sortBy(p => (p._1,
-            WordsGts.valueSortKey(p._4),
-            p._2.map(_._1).getOrElse(Double.NaN),
-            p._2.map(_._2).getOrElse(Double.NaN),
-            p._3.getOrElse(Long.MinValue)))
-        }
-        st.push(b.copy(points = sorted))
-      case o => st.push(toFrame(o))
+    words("SORT", "RSORT", "FULLSORT") { (w, st, en) =>
+      st.pop() match {
+        case b: WarpScriptEngine.GtsBuilder =>
+          val sorted = w match {
+            case "RSORT" => b.points.sortBy(_._1)(Ordering[Long].reverse)
+            case "SORT" => b.points.sortBy(_._1)
+            case _ => b.points.sortBy(p => (p._1,
+              WordsGts.valueSortKey(p._4),
+              p._2.map(_._1).getOrElse(Double.NaN),
+              p._2.map(_._2).getOrElse(Double.NaN),
+              p._3.getOrElse(Long.MinValue)))
+          }
+          st.push(b.copy(points = sorted))
+        case o => st.push(en.toFrame(o))
+      }
     }
     // INTEGRATE (fn/INTEGRATE.java): gts initialValue INTEGRATE —
     // values are rates/second, left-rectangle time integral (r11: the
     // word now pops the reference's numeric initial value)
-    case "INTEGRATE" =>
+    words("INTEGRATE") { (w, st, en) =>
       val initial = st.popNum()
-      st.push(toFrame(st.pop()).integrate(initial))
+      st.push(en.toFrame(st.pop()).integrate(initial))
+    }
     // PIVOT (frame word over the native groupBy().pivot() path — the
     // wide-table view the reference builds via per-class FETCH+APPLY):
     // gts [ classes ] labelkey lastbucket span PIVOT → one row per
     // (label value, bucket end), one sum column per class.
-    case "PIVOT" =>
+    words("PIVOT") { (w, st, en) =>
       val span = st.popLong(); val lb = st.popLong()
       val lbl = st.popStr()
       val classes = st.pop().asInstanceOf[Vector[Any]].map(_.toString)
-      val f = toFrame(st.pop())
+      val f = en.toFrame(st.pop())
       st.push(GtsFrame(f.withBucketCol(lb, span)
         .groupBy(col("labels").getItem(lbl).as(lbl), col("__bucket").as("ts"))
         .pivot("class", classes)
         .agg(sum(col("vdouble")))))
-    case "MERGE" => st.pop() match {
-      case v: Vector[_] => st.push(framesOf(v))
-      case f: GtsFrame => val g = toFrame(st.pop()); st.push(g.merge(f))
-      case o => throw new IllegalArgumentException(s"MERGE on $o")
+    }
+    words("MERGE") { (w, st, en) =>
+      st.pop() match {
+        case v: Vector[_] => st.push(en.framesOf(v))
+        case f: GtsFrame => val g = en.toFrame(st.pop()); st.push(g.merge(f))
+        case o => throw new IllegalArgumentException(s"MERGE on $o")
+      }
     }
 
     // ---- function-value words -------------------------------------------
@@ -1407,74 +1545,101 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
     // reference's builder words (script/aggregator/Percentile.Builder,
     // aggregator/Join.Builder): `90.0 bucketizer.percentile`,
     // `'|' reducer.join`
-    case "bucketizer.percentile" | "reducer.percentile" | "mapper.percentile" =>
+    words("bucketizer.percentile", "reducer.percentile", "mapper.percentile") { (w, st, en) =>
       st.push(AggVal(w, Percentile(st.popNum())))
-    case "bucketizer.percentile.cont" | "reducer.percentile.cont" =>
+    }
+    words("bucketizer.percentile.cont", "reducer.percentile.cont") { (w, st, en) =>
       st.push(AggVal(w, PercentileCont(st.popNum())))
+    }
     // bucketizer.join reads chronologically (Join.java appends in
     // argument order = tick order for a bucket); the reducer face
     // canonicalizes its member order by value sort (no reference-
     // defined cross-series order)
-    case "bucketizer.join" =>
+    words("bucketizer.join") { (w, st, en) =>
       st.push(AggVal(w, JoinTickOrdered(st.popStr())))
-    case "reducer.join" =>
+    }
+    words("reducer.join") { (w, st, en) =>
       st.push(AggVal(w, JoinAgg(st.popStr())))
+    }
     // parameterized pointwise mappers (script/mapper/MapperAdd.java,
     // MapperMul, MapperMod, MapperPow; comparison mappers keep the
     // value when the predicate holds and DROP the tick otherwise)
-    case "mapper.add" => val k = st.popNum(); st.push(MapperCol(w, _ + lit(k)))
-    case "mapper.mul" => val k = st.popNum(); st.push(MapperCol(w, _ * lit(k)))
-    case "mapper.mod" => val k = st.popNum(); st.push(MapperCol(w, _ % lit(k)))
-    case "mapper.pow" => val k = st.popNum(); st.push(MapperCol(w, c => pow(c, lit(k))))
+    words("mapper.add") { (w, st, en) => val k = st.popNum(); st.push(MapperCol(w, _ + lit(k))) }
+    words("mapper.mul") { (w, st, en) => val k = st.popNum(); st.push(MapperCol(w, _ * lit(k))) }
+    words("mapper.mod") { (w, st, en) => val k = st.popNum(); st.push(MapperCol(w, _ % lit(k))) }
+    words("mapper.pow") { (w, st, en) =>
+      val k = st.popNum(); st.push(MapperCol(w, c => pow(c, lit(k))))
+    }
     // frame-column mappers: value := tick / calendar field of the tick
     // (script/mapper/MapperTick.java, MapperYear/Month/Day/Hour/Minute/
     // Second/DayOfWeek — UTC; ticks < 2^53 µs stay exact in double)
-    case "mapper.tick" =>
+    words("mapper.tick") { (w, st, en) =>
       st.push(MapperDf(w, df => df.withColumn("vdouble",
         col("ts").cast(org.apache.spark.sql.types.DoubleType))))
-    case "mapper.year" => st.push(calMapper(w, year))
-    case "mapper.month" => st.push(calMapper(w, month))
-    case "mapper.day" => st.push(calMapper(w, dayofmonth))
-    case "mapper.hour" => st.push(calMapper(w, hour))
-    case "mapper.minute" => st.push(calMapper(w, minute))
-    case "mapper.second" => st.push(calMapper(w, second))
+    }
+    words("mapper.year") { (w, st, en) => st.push(en.calMapper(w, year)) }
+    words("mapper.month") { (w, st, en) => st.push(en.calMapper(w, month)) }
+    words("mapper.day") { (w, st, en) => st.push(en.calMapper(w, dayofmonth)) }
+    words("mapper.hour") { (w, st, en) => st.push(en.calMapper(w, hour)) }
+    words("mapper.minute") { (w, st, en) => st.push(en.calMapper(w, minute)) }
+    words("mapper.second") { (w, st, en) => st.push(en.calMapper(w, second)) }
     // ISO weekday 1=Monday..7=Sunday (Joda getDayOfWeek)
-    case "mapper.weekday" =>
-      st.push(calMapper(w, t => (dayofweek(t) + lit(5)) % 7 + lit(1)))
-    case "mapper.eq" => val k = st.popNum(); st.push(MapperCol(w, c => when(c === k, c)))
-    case "mapper.ne" => val k = st.popNum(); st.push(MapperCol(w, c => when(c =!= k, c)))
-    case "mapper.gt" => val k = st.popNum(); st.push(MapperCol(w, c => when(c > k, c)))
-    case "mapper.ge" => val k = st.popNum(); st.push(MapperCol(w, c => when(c >= k, c)))
-    case "mapper.lt" => val k = st.popNum(); st.push(MapperCol(w, c => when(c < k, c)))
-    case "mapper.le" => val k = st.popNum(); st.push(MapperCol(w, c => when(c <= k, c)))
+    words("mapper.weekday") { (w, st, en) =>
+      st.push(en.calMapper(w, t => (dayofweek(t) + lit(5)) % 7 + lit(1)))
+    }
+    words("mapper.eq") { (w, st, en) =>
+      val k = st.popNum(); st.push(MapperCol(w, c => when(c === k, c)))
+    }
+    words("mapper.ne") { (w, st, en) =>
+      val k = st.popNum(); st.push(MapperCol(w, c => when(c =!= k, c)))
+    }
+    words("mapper.gt") { (w, st, en) =>
+      val k = st.popNum(); st.push(MapperCol(w, c => when(c > k, c)))
+    }
+    words("mapper.ge") { (w, st, en) =>
+      val k = st.popNum(); st.push(MapperCol(w, c => when(c >= k, c)))
+    }
+    words("mapper.lt") { (w, st, en) =>
+      val k = st.popNum(); st.push(MapperCol(w, c => when(c < k, c)))
+    }
+    words("mapper.le") { (w, st, en) =>
+      val k = st.popNum(); st.push(MapperCol(w, c => when(c <= k, c)))
+    }
     // coordinate-comparison mappers (script/mapper/MapperTickGE-style
-    // families over tick/lat/lon/elev): keep the point when the
-    // coordinate passes; null coordinates drop (SQL three-valued logic)
-    case CoordMapperName(colName, cmp) =>
-      // pop the threshold type-faithfully: hhcode/tick/elev thresholds
-      // are 64-bit longs whose low bits a double round-trip would lose
-      val k: Column = st.pop() match {
-        case l: Long => lit(l)
-        case d: Double => lit(d)
-        case o => throw new IllegalArgumentException(s"$w threshold: $o")
+    // families over tick/lat/lon/elev/hhcode): keep the point when the
+    // coordinate passes; null coordinates drop (SQL three-valued
+    // logic). hhcode compares the 64-bit interleaved cell id computed
+    // from lat/lon (GeoXPLib.toGeoXPPoint)
+    for (cmp <- Seq("eq", "ne", "gt", "ge", "lt", "le");
+         coord <- Seq("tick", "lat", "lon", "elev", "hhcode")) {
+      val colName = if (coord == "tick") "ts" else coord
+      words(s"mapper.$cmp.$coord") { (w, st, en) =>
+        // pop the threshold type-faithfully: hhcode/tick/elev thresholds
+        // are 64-bit longs whose low bits a double round-trip would lose
+        val k: Column = st.pop() match {
+          case l: Long => lit(l)
+          case d: Double => lit(d)
+          case o => throw new IllegalArgumentException(s"$w threshold: $o")
+        }
+        val coord: Column =
+          if (colName == "hhcode")
+            graft.functions.GeoFunctions.hhcodeCol(col("lat"), col("lon"))
+          else col(colName)
+        val cond: Column = cmp match {
+          case "eq" => coord === k
+          case "ne" => coord =!= k
+          case "gt" => coord > k
+          case "ge" => coord >= k
+          case "lt" => coord < k
+          case _ => coord <= k
+        }
+        st.push(MapperDf(w, df => df.filter(cond)))
       }
-      val coord: Column =
-        if (colName == "hhcode")
-          graft.functions.GeoFunctions.hhcodeCol(col("lat"), col("lon"))
-        else col(colName)
-      val cond: Column = cmp match {
-        case "eq" => coord === k
-        case "ne" => coord =!= k
-        case "gt" => coord > k
-        case "ge" => coord >= k
-        case "lt" => coord < k
-        case _ => coord <= k
-      }
-      st.push(MapperDf(w, df => df.filter(cond)))
+    }
     // geo mappers (script/mapper/MapperGeoWithin.java, MapperGeoOutside,
     // MapperGeoClearPosition, MapperGeoApproximate — the g47/g98 plans
     // as MAP-word mappers)
-    case "mapper.geo.within" | "mapper.geo.outside" =>
+    words("mapper.geo.within", "mapper.geo.outside") { (w, st, en) =>
       val g = st.pop() match {
         case geo: WordsGeo.WsGeo => geo
         case o => throw new IllegalArgumentException(s"$w expects a GEOSHAPE: $o")
@@ -1486,12 +1651,14 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
       val pred = if (w endsWith "within") inside
         else !org.apache.spark.sql.functions.coalesce(inside, lit(false))
       st.push(MapperDf(w, df => df.filter(pred)))
-    case "mapper.geo.clear" =>
+    }
+    words("mapper.geo.clear") { (w, st, en) =>
       st.push(MapperDf(w, df => df
         .withColumn("lat", lit(null).cast("double"))
         .withColumn("lon", lit(null).cast("double"))
         .withColumn("elev", lit(null).cast("long"))))
-    case "mapper.geo.approximate" =>
+    }
+    words("mapper.geo.approximate") { (w, st, en) =>
       val res = st.popLong().toInt
       require(res >= 1 && res <= 28, s"$w resolution out of range: $res")
       st.push(MapperDf(w, df => {
@@ -1503,32 +1670,38 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
         df.withColumn("lat", when(col("lat").isNotNull, aLat))
           .withColumn("lon", when(col("lon").isNotNull, aLon))
       }))
+    }
     // coordinate-extraction mappers (script/mapper/MapperLatitude.java,
     // MapperLongitude, MapperElevation): value := the coordinate;
     // points without it are dropped (the reference emits null)
-    case "mapper.lat" | "mapper.lon" =>
+    words("mapper.lat", "mapper.lon") { (w, st, en) =>
       val c = if (w endsWith "lat") "lat" else "lon"
       st.push(MapperDf(w, df => df.filter(col(c).isNotNull)
         .withColumn("vdouble", col(c))))
-    case "mapper.elev" =>
+    }
+    words("mapper.elev") { (w, st, en) =>
       st.push(MapperDf(w, df => df.filter(col("elev").isNotNull)
         .withColumn("vdouble", col("elev").cast(org.apache.spark.sql.types.DoubleType))))
+    }
     // mapper.finite (script/mapper/MapperFinite.java): keep only finite
     // values — NaN/±Inf produce null and the tick is dropped
-    case "mapper.finite" =>
+    words("mapper.finite") { (w, st, en) =>
       st.push(MapperCol(w, c => when(!isnan(c) &&
         abs(c) =!= lit(Double.PositiveInfinity), c)))
+    }
     // type-cast mappers (MapperToBoolean/MapperToString): the frame is
     // double-typed, so toboolean emits 1.0/0.0 truthiness and tostring
     // writes the rendered value into vstring
-    case "mapper.toboolean" =>
+    words("mapper.toboolean") { (w, st, en) =>
       st.push(MapperCol(w, c => (c =!= 0.0).cast(
         org.apache.spark.sql.types.DoubleType)))
-    case "mapper.tostring" =>
+    }
+    words("mapper.tostring") { (w, st, en) =>
       st.push(MapperDf(w, df => df
         .withColumn("vstring", col("vdouble").cast(org.apache.spark.sql.types.StringType))
         .withColumn("vdouble", lit(null).cast(org.apache.spark.sql.types.DoubleType))
         .withColumn("vtype", lit(graft.model.GtsType.STRING))))
+    }
     // kernel-smoother builders (script/mapper/MapperKernel.java): pop
     // window width in ticks (MUST be odd) and step, push a
     // Nadaraya-Watson smoother over the per-series tick order. The
@@ -1536,23 +1709,23 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
     // (u = i/(len-1) over 1+width/2 entries); row offsets stand in for
     // the reference's |Δt|/step index, identical on step-regular series
     // (BUCKETIZE first, as the reference docs advise).
-    case w0 if w0.startsWith("mapper.kernel.") =>
-      val kname = w0.stripPrefix("mapper.kernel.")
-      require(graft.kernels.KernelRegistry.Names.contains(kname),
-        s"unknown kernel '$kname'")
-      val width = st.popLong().toInt
-      require(width % 2 == 1, s"$w0 window width MUST be odd")
-      st.popLong() // step: subsumed by the row-offset contract above
-      val half = width / 2
-      st.push(MapperDf(w0, df => {
-        val win = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("gtsid")).orderBy(col("ts"), col("vdouble"))
-        df.withColumn("vdouble",
-          graft.kernels.KernelRegistry.smoothCol(kname, half, col("vdouble"), win))
-      }))
+    graft.kernels.KernelRegistry.Names.foreach { kname =>
+      words("mapper.kernel." + kname) { (w, st, en) =>
+        val width = st.popLong().toInt
+        require(width % 2 == 1, s"$w window width MUST be odd")
+        st.popLong() // step: subsumed by the row-offset contract above
+        val half = width / 2
+        st.push(MapperDf(w, df => {
+          val win = org.apache.spark.sql.expressions.Window
+            .partitionBy(col("gtsid")).orderBy(col("ts"), col("vdouble"))
+          df.withColumn("vdouble",
+            graft.kernels.KernelRegistry.smoothCol(kname, half, col("vdouble"), win))
+        }))
+      }
+    }
     // selection mappers (script/mapper/MapperHighest.java, Lowest):
     // the k extreme values per series — the g25/r03 rank pattern
-    case "mapper.highest" | "mapper.lowest" =>
+    words("mapper.highest", "mapper.lowest") { (w, st, en) =>
       val k = st.popLong()
       require(k >= 1, s"$w expects k >= 1")
       st.push(MapperDf(w, df => {
@@ -1564,46 +1737,55 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
         df.withColumn("__rn", row_number().over(win))
           .filter(col("__rn") <= k).drop("__rn")
       }))
+    }
     // STRICT* wrappers (fn/STRICTMAPPER.java: type-checking decorators;
     // the frame algebra is already typed)
-    case "STRICTMAPPER" | "STRICTREDUCER" | "STRICTPARTITION" =>
+    words("STRICTMAPPER", "STRICTREDUCER", "STRICTPARTITION") { (w, st, en) =>
       st.push(st.pop())
+    }
     // join/percentile null variants (WarpScriptLib.java:3313-3336
     // registrations; Join.Builder ignoreNulls=false → null result when
     // an aligned member is absent ≡ AggVal.forbidNulls)
-    case "reducer.percentile.forbid-nulls" =>
+    words("reducer.percentile.forbid-nulls") { (w, st, en) =>
       st.push(AggVal(w, Percentile(st.popNum()), forbidNulls = true))
+    }
     // the mapper face joins its WINDOW chronologically, like the
     // bucketizer face (tick order is the reference's argument order)
-    case "mapper.join" => st.push(AggVal(w, JoinTickOrdered(st.popStr())))
-    case "reducer.join.forbid-nulls" | "reducer.join.nonnull" =>
+    words("mapper.join") { (w, st, en) => st.push(AggVal(w, JoinTickOrdered(st.popStr()))) }
+    words("reducer.join.forbid-nulls", "reducer.join.nonnull") { (w, st, en) =>
       st.push(AggVal(w, JoinAgg(st.popStr()), forbidNulls = true))
-    case "reducer.join.urlencoded" =>
+    }
+    words("reducer.join.urlencoded") { (w, st, en) =>
       st.push(AggVal(w, JoinAgg(st.popStr(), urlencode = true),
         forbidNulls = true))
+    }
     // circular mean (aggregator/CircularMean.java; Builder pops the
     // period — `24.0 bucketizer.mean.circular`). Registered with
     // forbidNulls=true except the .exclude-nulls reducer
     // (WarpScriptLib.java:3237,3285,3337-3338)
-    case "bucketizer.mean.circular" | "mapper.mean.circular" |
-         "reducer.mean.circular" =>
+    words("bucketizer.mean.circular", "mapper.mean.circular",
+      "reducer.mean.circular") { (w, st, en) =>
       st.push(AggVal(w, CircularMeanAgg(st.popNum()), forbidNulls = true))
-    case "reducer.mean.circular.exclude-nulls" =>
+    }
+    words("reducer.mean.circular.exclude-nulls") { (w, st, en) =>
       st.push(AggVal(w, CircularMeanAgg(st.popNum())))
+    }
     // reducer.argmax/argmin (aggregator/Argminmax.java Builder:
     // `'label' count reducer.argmax`; count 0 = report all ties)
-    case "reducer.argmax" | "reducer.argmin" =>
+    words("reducer.argmax", "reducer.argmin") { (w, st, en) =>
       val count = st.popLong().toInt
       val label = st.popStr()
       st.push(ArgMinMaxVal(w, label, count, isArgmin = w.endsWith("argmin")))
+    }
     // mapper.log (mapper/MapperLog.java): log in the constant base
     // popped at build time — ln(v)/ln(base)
-    case "mapper.log" =>
+    words("mapper.log") { (w, st, en) =>
       val base = st.popNum()
       st.push(MapperCol(w, c => log(c) / lit(math.log(base))))
+    }
     // mapper.npdf (mapper/MapperNPDF.java:100-105): gaussian pdf with
     // mu/sigma popped at build time (`mu sigma mapper.npdf`)
-    case "mapper.npdf" =>
+    words("mapper.npdf") { (w, st, en) =>
       val sigma = st.popNum()
       require(sigma > 0, s"$w expects a positive standard deviation")
       val mu = st.popNum()
@@ -1611,16 +1793,19 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
         lit(1.0 / (sigma * math.sqrt(2.0 * math.Pi))) *
           exp(lit(-1.0) * (c - lit(mu)) * (c - lit(mu)) /
             lit(2.0 * sigma * sigma))))
+    }
     // mapper.min.x / mapper.max.x (mapper/MapperMinX.java, MapperMaxX):
     // clamp against the constant popped at build time
-    case "mapper.min.x" =>
+    words("mapper.min.x") { (w, st, en) =>
       val k = st.popNum(); st.push(MapperCol(w, c => least(c, lit(k))))
-    case "mapper.max.x" =>
+    }
+    words("mapper.max.x") { (w, st, en) =>
       val k = st.popNum(); st.push(MapperCol(w, c => greatest(c, lit(k))))
+    }
     // mapper.parsedouble (mapper/MapperParseDouble.java): parse STRING
     // values as doubles under the popped IETF language tag's decimal/
     // grouping separators (NumberFormat.getInstance(Locale))
-    case "mapper.parsedouble" =>
+    words("mapper.parsedouble") { (w, st, en) =>
       val tag = st.popStr()
       val sym = java.text.DecimalFormatSymbols.getInstance(
         java.util.Locale.forLanguageTag(tag))
@@ -1640,9 +1825,10 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
           .withColumn("vtype", lit(graft.model.GtsType.DOUBLE))
           .filter(col("vdouble").isNotNull)
       }))
+    }
     // mapper.replace (mapper/MapperReplace.java): every present tick's
     // value := the constant popped at build time (NOT string-replace)
-    case "mapper.replace" =>
+    words("mapper.replace") { (w, st, en) =>
       def clearVals(df: DataFrame): DataFrame = df
         .withColumn("vlong", lit(null).cast(org.apache.spark.sql.types.LongType))
         .withColumn("vdouble", lit(null).cast(org.apache.spark.sql.types.DoubleType))
@@ -1665,27 +1851,30 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
           .withColumn("vtype", lit(graft.model.GtsType.DOUBLE))))
         case o => throw new IllegalArgumentException(s"$w value: $o")
       }
+    }
     // mapper.regexp.match (mapper/MapperRegExpMatch.java): keep the
     // STRING value when it FULLY matches (Matcher.matches), else the
     // tick drops (null value)
-    case "mapper.regexp.match" =>
+    words("mapper.regexp.match") { (w, st, en) =>
       val re = st.popStr()
       st.push(MapperDf(w, df =>
         df.filter(col("vstring").rlike("^(?:" + re + ")$"))))
+    }
     // mapper.regexp.replace (mapper/MapperRegExpReplace.java:
     // `'regexp' 'replacement' mapper.regexp.replace`,
     // Matcher.replaceAll)
-    case "mapper.regexp.replace" =>
+    words("mapper.regexp.replace") { (w, st, en) =>
       val replacement = st.popStr()
       val re = st.popStr()
       st.push(MapperDf(w, df => df.withColumn("vstring",
         regexp_replace(col("vstring"), re, replacement))))
+    }
     // mapper.dotproduct[.sigmoid|.tanh|.positive] (mapper/
     // MapperDotProduct*.java: `[ w1 w2 ... ] mapper.dotproduct`)
-    case "mapper.dotproduct" | "mapper.dotproduct.sigmoid" |
-         "mapper.dotproduct.tanh" | "mapper.dotproduct.positive" =>
+    words("mapper.dotproduct", "mapper.dotproduct.sigmoid",
+      "mapper.dotproduct.tanh", "mapper.dotproduct.positive") { (w, st, en) =>
       val omega = st.pop() match {
-        case v: Vector[Any @unchecked] => v.map(asNum)
+        case v: Vector[Any @unchecked] => v.map(en.asNum)
         case o => throw new IllegalArgumentException(s"$w expects a list: $o")
       }
       val act: Column => Column = w.stripPrefix("mapper.dotproduct") match {
@@ -1695,9 +1884,10 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
         case _ => identity
       }
       st.push(AggVal(w, DotProductAgg(omega, act)))
+    }
     // mapper.geo.fence (mapper/MapperGeoFence.java): value := BOOLEAN
     // point-in-shape; points without a location yield null (dropped)
-    case "mapper.geo.fence" =>
+    words("mapper.geo.fence") { (w, st, en) =>
       val g = st.pop() match {
         case geo: WordsGeo.WsGeo => geo
         case o => throw new IllegalArgumentException(s"$w expects a GEOSHAPE: $o")
@@ -1710,21 +1900,35 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
         .withColumn("vbool", inside)
         .withColumn("vdouble", inside.cast(org.apache.spark.sql.types.DoubleType))
         .withColumn("vtype", lit(graft.model.GtsType.BOOLEAN))))
-    case BucketizerName(a) => st.push(a)
-    case MapperName(m) => st.push(m)
-    case ReducerName(a) => st.push(a)
-    case OpName(o) => st.push(o)
+    }
+    // the named aggregators' bucketizer./mapper./reducer. faces (the
+    // reducer with every null variant), the pointwise mappers and
+    // APPLY's op.* values
+    for ((n, agg) <- aggByName) {
+      words("bucketizer." + n, "mapper." + n) { (w, st, en) => st.push(AggVal(w, agg)) }
+      for (v <- "" +: NullVariants) {
+        val forbid = v == ".forbid-nulls" || v == ".nonnull" ||
+          (v.isEmpty && (n == "and" || n == "or"))
+        val includeNulls = n == "count" && (v == ".include-nulls" || v.isEmpty)
+        words("reducer." + n + v) { (w, st, en) =>
+          st.push(AggVal(w, agg, forbid, includeNulls))
+        }
+      }
+    }
+    for ((n, f) <- PointwiseMappers)
+      words("mapper." + n) { (w, st, en) => st.push(MapperCol(w, f)) }
+    for ((n, f) <- Ops) words("op." + n) { (w, st, en) => st.push(OpVal(w, f)) }
     // parametric filters pop their threshold NOW (value words compose:
     // `90.0 filter.last.gt` — script/filter/FilterLastGT-style)
-    case "filter.last.gt" => st.push(FilterVal(w, col("last_v") > st.popNum()))
-    case "filter.last.ge" => st.push(FilterVal(w, col("last_v") >= st.popNum()))
-    case "filter.last.lt" => st.push(FilterVal(w, col("last_v") < st.popNum()))
-    case "filter.last.le" => st.push(FilterVal(w, col("last_v") <= st.popNum()))
-    case "filter.last.eq" => st.push(FilterVal(w, col("last_v") === st.popNum()))
-    case "filter.bysize.gt" => st.push(FilterVal(w, col("size_v") > st.popLong()))
+    words("filter.last.gt") { (w, st, en) => st.push(FilterVal(w, col("last_v") > st.popNum())) }
+    words("filter.last.ge") { (w, st, en) => st.push(FilterVal(w, col("last_v") >= st.popNum())) }
+    words("filter.last.lt") { (w, st, en) => st.push(FilterVal(w, col("last_v") < st.popNum())) }
+    words("filter.last.le") { (w, st, en) => st.push(FilterVal(w, col("last_v") <= st.popNum())) }
+    words("filter.last.eq") { (w, st, en) => st.push(FilterVal(w, col("last_v") === st.popNum())) }
+    words("filter.bysize.gt") { (w, st, en) => st.push(FilterVal(w, col("size_v") > st.popLong())) }
     // metadata filters (script/filter/FilterByClass.java, FilterByLabels):
     // regex on the series class; exact-or-~regex per-label selectors
-    case "filter.byclass" =>
+    words("filter.byclass") { (w, st, en) =>
       val sel = st.popStr()
       // selector form: '~regex' (full match, like the reference's
       // Pattern.matches) or '=exact' / bare exact
@@ -1732,7 +1936,8 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
         if (sel.startsWith("~")) col("class_v").rlike("^(?:" + sel.substring(1) + ")$")
         else col("class_v") === sel.stripPrefix("=")
       st.push(FilterVal(w, pred))
-    case "filter.bylabels" =>
+    }
+    words("filter.bylabels") { (w, st, en) =>
       val sel = st.pop().asInstanceOf[Map[Any, Any]]
       val pred = sel.map { case (k, v) =>
         val s = String.valueOf(v)
@@ -1741,19 +1946,19 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
         else col("labels_v").getItem(k.toString) === s.stripPrefix("=")
       }.reduceOption(_ && _).getOrElse(lit(true))
       st.push(FilterVal(w, pred))
-    case "filter.any.gt" => st.push(FilterVal(w, col("max_v") > st.popNum()))
-    case "filter.all.gt" => st.push(FilterVal(w, col("min_v") > st.popNum()))
-    case "filter.last.ne" => st.push(FilterVal(w, col("last_v") =!= st.popNum()))
+    }
+    words("filter.any.gt") { (w, st, en) => st.push(FilterVal(w, col("max_v") > st.popNum())) }
+    words("filter.all.gt") { (w, st, en) => st.push(FilterVal(w, col("min_v") > st.popNum())) }
+    words("filter.last.ne") { (w, st, en) => st.push(FilterVal(w, col("last_v") =!= st.popNum())) }
     // filter.any.* / filter.all.* (script/filter/FilterAny.java:98-160):
     // retain the series when ANY point compares true against the popped
     // threshold; the all.* family is the complement of the inverse
     // comparator (registrations WarpScriptLib.java:2789-2801). STRING
     // thresholds compare against STRING-valued points (vstring); the
     // remaining comparators run on the numeric value.
-    case "filter.any.eq" | "filter.any.ne" | "filter.any.ge" |
-         "filter.any.le" | "filter.any.lt" |
-         "filter.all.eq" | "filter.all.ne" | "filter.all.ge" |
-         "filter.all.le" | "filter.all.lt" =>
+    words("filter.any.eq", "filter.any.ne", "filter.any.ge", "filter.any.le",
+      "filter.any.lt", "filter.all.eq", "filter.all.ne", "filter.all.ge",
+      "filter.all.le", "filter.all.lt") { (w, st, en) =>
       // threshold-typed comparison columns (FilterAny.java:119-140):
       // LONG thresholds compare value.longValue() (doubles truncate,
       // 64-bit exactness kept), DOUBLE thresholds value.doubleValue(),
@@ -1788,12 +1993,14 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
         case _ => vc > t
       }
       st.push(FilterVal(w, lit(true), anyPred = Some(p), negate = isAll))
+    }
     // filter.bysize (script/filter/FilterBySize.java: `min max
     // filter.bysize` retains size in [min, max])
-    case "filter.bysize" =>
+    words("filter.bysize") { (w, st, en) =>
       val max = st.popLong(); val min = st.popLong()
       st.push(FilterVal(w,
         col("size_v") >= lit(min) && col("size_v") <= lit(max)))
+    }
     // filter.byselector (script/filter/FilterBySelector.java →
     // MetadataSelectorMatcher, faithful r13 — mined from the
     // reference's own MetadataSelectorMatcherTest): the STANDARD
@@ -1803,7 +2010,7 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
     // strictly (:183-215); `k=` components assert ABSENCE. Attribute
     // components consult the engine-side store (SETATTRIBUTES) by
     // gtsid
-    case "filter.byselector" =>
+    words("filter.byselector") { (w, st, en) =>
       val s = graft.sources.Selector.parse(st.popStr())
       val classPred = (s.classExact, s.classRegex) match {
         case (Some(c), _) => col("class_v") === c
@@ -1842,12 +2049,13 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
           }
         }
       st.push(FilterVal(w, pred))
+    }
     // filter.byattr / filter.bylabelsattr (script/filter/
     // FilterByLabels.java Builder checkLabels/checkAttributes flags,
     // registrations :2776-2777): selector map per key; a key matches on
     // the label (bylabelsattr) or the attribute; ''/'=' selectors
     // assert ABSENCE (Constants.ABSENT_LABEL_SUPPORT)
-    case "filter.byattr" | "filter.bylabelsattr" =>
+    words("filter.byattr", "filter.bylabelsattr") { (w, st, en) =>
       val sel = st.pop().asInstanceOf[Map[Any, Any]]
         .map { case (k, v) => k.toString -> String.valueOf(v) }
       val checkLabels = w == "filter.bylabelsattr"
@@ -1870,12 +2078,13 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
         }
       }.reduceOption(_ && _).getOrElse(lit(true))
       st.push(FilterVal(w, pred))
+    }
     // filter.bymetadata (script/filter/FilterByMetadata.java): pops a
     // list of GTS; retains the series whose (class, labels) equal one
     // of theirs — Metadata equality keyed on the canonical sorted
     // label rendering (attributes excluded: list elements come from
     // NEWGTS+RELABEL and carry none)
-    case "filter.bymetadata" =>
+    words("filter.bymetadata") { (w, st, en) =>
       val metas: Seq[(String, String)] = st.pop() match {
         case v: Vector[Any @unchecked] => v.map {
           case b: GtsBuilder =>
@@ -1902,24 +2111,18 @@ private[script] trait WordsFramesBlock { this: WarpScriptEngine =>
         col("class_v") === c && lkey === lk
       }.reduceOption(_ || _).getOrElse(lit(false))
       st.push(FilterVal(w, pred))
+    }
     // filter.latencies (script/filter/LatencyFilter.java Builder:
     // `minLat maxLat [ options ] filter.latencies`)
-    case "filter.latencies" =>
+    words("filter.latencies") { (w, st, en) =>
       val options = st.pop() match {
         case v: Vector[Any @unchecked] => v.map(_.toString)
         case o => throw new IllegalArgumentException(s"$w options: $o")
       }
       val maxLat = st.popLong(); val minLat = st.popLong()
       st.push(LatencyFilterVal(w, minLat, maxLat, options))
-      case _ => return false
     }
-    true
   }
-  // scalastyle:on cyclomatic.complexity method.length
-}
-
-private[script] object WordsFramesBlock {
-  import graft.sources.WrapperCodec
 
   /** Reference-wrapper decode → GtsBuilder: delete tombstones are
     * skipped (a frame carries no deletions), GeoXPPoint locations

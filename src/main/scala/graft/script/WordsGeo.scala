@@ -35,367 +35,398 @@ private[script] object WordsGeo {
     ((la + 0.5) / n * 180.0 - 90.0, (lo + 0.5) / n * 360.0 - 180.0)
   }
 
-  def eval(w: String, st: State, en: WarpScriptEngine): Boolean = {
-    w match {
-      // ---- shape construction (fn/GeoWKT.java, GeoJSON.java: the
-      // reference's pct-error knob maps to the grid resolution here)
-      case "GEO.WKT" | "GEO.WKT.UNIFORM" =>
-        val res = st.popLong().toInt
-        require(res >= 1 && res <= 28, s"$w resolution out of range: $res")
-        val shape = GeoShape.parseWkt(st.popStr())
-        st.push(WsGeo(Some(shape), GeoCells.cover(shape, res), res))
-      case "GEO.JSON" | "GEO.JSON.UNIFORM" =>
-        val res = st.popLong().toInt
-        require(res >= 1 && res <= 28, s"$w resolution out of range: $res")
-        val shape = GeoShape.parseGeoJson(st.popStr())
-        st.push(WsGeo(Some(shape), GeoCells.cover(shape, res), res))
-
-      // ---- cell-set algebra (fn/GeoUnion.java family; set ops drop
-      // the exact polygon — the result is the cover)
-      case "GEO.UNION" =>
-        val b = popGeo(st); val a = popGeo(st)
-        require(a.res == b.res, "GEO.UNION: resolution mismatch")
-        st.push(WsGeo(None, GeoCells.union(a.cells, b.cells), a.res))
-      case "GEO.INTERSECTION" =>
-        val b = popGeo(st); val a = popGeo(st)
-        require(a.res == b.res, "GEO.INTERSECTION: resolution mismatch")
-        st.push(WsGeo(None, GeoCells.intersection(a.cells, b.cells), a.res))
-      case "GEO.DIFFERENCE" =>
-        val b = popGeo(st); val a = popGeo(st)
-        require(a.res == b.res, "GEO.DIFFERENCE: resolution mismatch")
-        st.push(WsGeo(None, GeoCells.subtraction(a.cells, b.cells), a.res))
-      case "GEO.BUFFER" | "GEOBUFFER" =>
-        val rings = st.popLong().toInt
-        require(rings >= 0 && rings <= 16, s"$w rings out of range: $rings")
-        val g = popGeo(st)
-        st.push(WsGeo(None, GeoCells.dilate(g.cells, g.res, rings), g.res))
-      case "GEOSPLIT" =>
-        val g = popGeo(st)
-        st.push(GeoCells.split(g.cells, g.res)
-          .map(c => WsGeo(None, c, g.res): Any).toVector)
-      // GEO.COVER: re-cover the exact shape at a new resolution
-      case "GEO.COVER" | "GEO.COVER.RL" =>
-        val res = st.popLong().toInt
-        require(res >= 1 && res <= 28, s"$w resolution out of range: $res")
-        val g = popGeo(st)
-        val shape = g.shape.getOrElse(throw new IllegalArgumentException(
-          s"$w needs a shape built from WKT/GeoJSON (set-algebra results are cover-only)"))
-        st.push(WsGeo(g.shape, GeoCells.cover(shape, res), res))
-      // canonicalization no-ops: cell sets are already normalized here
-      case "GEO.NORMALIZE" | "GEO.OPTIMIZE" => st.push(popGeo(st))
-
-      // shape renderers (inverse of GEO.WKT / GEO.JSON — require the
-      // exact polygon; set-algebra results are cover-only)
-      case "->WKT" | "->GEOJSON" =>
-        val g = popGeo(st)
-        val shape = g.shape.getOrElse(throw new IllegalArgumentException(
-          s"$w needs a shape built from WKT/GeoJSON"))
-        def closed(r: Seq[(Double, Double)]) =
-          if (r.head == r.last) r else r :+ r.head
-        if (w == "->WKT")
-          st.push(shape.rings.map(r => closed(r)
-            .map { case (x, y) => s"$x $y" }.mkString("(", ", ", ")"))
-            .mkString("POLYGON (", ", ", ")"))
-        else
-          st.push(shape.rings.map(r => closed(r)
-            .map { case (x, y) => s"[$x,$y]" }.mkString("[", ",", "]"))
-            .mkString("""{"type":"Polygon","coordinates":[""", ",", "]}"))
-      case "MAXGEOCELLS" => st.popLong() // capacity hint — no-op here
-
-      // ---- predicates
-      // GEO.WITHIN: gts shape → points inside (exact ray-cast when
-      // the polygon is known, cover membership otherwise)
-      case "GEO.WITHIN" | "GEO.OUTSIDE" =>
-        val g = popGeo(st)
-        val f = en.toFrame(st.pop())
-        val inside = g.shape match {
-          case Some(shape) => shape.containsCol(col("lat"), col("lon"))
-          case None => GeoCells.inCover(col("lat"), col("lon"), g.cells, g.res)
-        }
-        st.push(GtsFrame(f.df.filter(
-          if (w == "GEO.WITHIN") inside else !coalesce(inside, lit(false)))))
-      // GEO.INTERSECTS: two shapes → do the covers overlap?
-      case "GEO.INTERSECTS" =>
-        val b = popGeo(st); val a = popGeo(st)
-        require(a.res == b.res, "GEO.INTERSECTS: resolution mismatch")
-        st.push(a.cells.exists(b.cells.contains))
-
-      // ---- serialization (fn/GEOPACK.java, GEOUNPACK): res byte +
-      // delta-varint of the sorted cells, b64 text
-      case "GEOPACK" =>
-        val g = popGeo(st)
-        val out = new java.io.ByteArrayOutputStream
-        out.write(g.res)
-        var prev = 0L
-        g.cells.toSeq.sorted.foreach { c =>
-          var v = c - prev; prev = c
-          while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-          out.write(v.toInt)
-        }
-        st.push(java.util.Base64.getEncoder.encodeToString(out.toByteArray))
-      case "GEOUNPACK" =>
-        val data = java.util.Base64.getDecoder.decode(st.popStr())
-        require(data.nonEmpty, "GEOUNPACK: empty payload")
-        val res = data(0).toInt
-        val cells = Set.newBuilder[Long]
-        var i = 1; var prev = 0L
-        while (i < data.length) {
-          var v = 0L; var shift = 0; var more = true
-          while (more) {
-            val b = data(i); i += 1
-            v |= (b & 0x7fL) << shift; shift += 7
-            more = (b & 0x80) != 0
-          }
-          prev += v; cells += prev
-        }
-        st.push(WsGeo(None, cells.result(), res))
-
-      // ---- cell/point codecs (->GEOCELL: lat lon res → grid cell id;
-      // GEOCELL-> → [lat lon] center)
-      case "->GEOCELL" =>
-        val res = st.popLong().toInt
-        val lon = st.popNum(); val lat = st.popNum()
-        val n = 1L << res
-        val la = math.min(n - 1, math.max(0L, math.floor((lat + 90.0) / 180.0 * n).toLong))
-        val lo = math.min(n - 1, math.max(0L, math.floor((lon + 180.0) / 360.0 * n).toLong))
-        st.push(la * n + lo)
-      case "GEOCELL->" =>
-        val res = st.popLong().toInt
-        val (la, lo) = cellCenter(st.popLong(), res)
-        st.push(la); st.push(lo)
-
-      // ---- HHCode words (fn/TOHHCODE.java, HHCODETO, the
-      // HHCODE.<dir> neighborhood: hhcode res → neighbor hhcode)
-      case "->HHCODE" | "->HHCODELONG" =>
-        val lon = st.popNum(); val lat = st.popNum()
-        st.push(GeoFunctions.toHHCode(lat, lon))
-      case "HHCODE->" | "HHCODELONG->" =>
-        val (la, lo) = GeoFunctions.fromHHCode(st.popLong())
-        st.push(la); st.push(lo)
-      case "HHCODE.CENTER" =>
-        val res = st.popLong().toInt
-        val (la, lo) = hhCellCenter(st.popLong(), res)
-        st.push(Vector[Any](la, lo))
-      case "HHCODE.BBOX" =>
-        val res = st.popLong().toInt
-        val hh = st.popLong()
-        val half = (90.0 / (1L << res), 180.0 / (1L << res))
-        val (la, lo) = hhCellCenter(hh, res)
-        st.push(Vector[Any](la - half._1, lo - half._2, la + half._1, lo + half._2))
-      case "HHCODE.NORTH" | "HHCODE.SOUTH" | "HHCODE.EAST" | "HHCODE.WEST" |
-           "HHCODE.NORTH.EAST" | "HHCODE.NORTH.WEST" |
-           "HHCODE.SOUTH.EAST" | "HHCODE.SOUTH.WEST" =>
-        val res = st.popLong().toInt
-        val hh = st.popLong()
-        val dLat = (if (w.contains("NORTH")) 1 else 0) - (if (w.contains("SOUTH")) 1 else 0)
-        val dLon = (if (w.contains("EAST")) 1 else 0) - (if (w.contains("WEST")) 1 else 0)
-        val (la, lo) = hhCellCenter(hh, res)
-        val stepLat = 180.0 / (1L << res); val stepLon = 360.0 / (1L << res)
-        val nlat = math.min(90.0 - stepLat / 2, math.max(-90.0 + stepLat / 2, la + dLat * stepLat))
-        var nlon = lo + dLon * stepLon
-        if (nlon > 180.0) nlon -= 360.0
-        if (nlon < -180.0) nlon += 360.0
-        st.push(GeoFunctions.toHHCode(nlat, nlon))
-
-      // ---- geohash arrows (fn/TOGEOHASH.java): lat lon chars →
-      // base-32 text; GEOHASH-> decodes to the cell center
-      case "->GEOHASH" =>
-        val chars = st.popLong().toInt
-        require(chars >= 1 && chars <= 12, s"->GEOHASH chars out of range: $chars")
-        val lon = st.popNum(); val lat = st.popNum()
-        st.push(GeoHash.encodeScalar(lat, lon, chars))
-      case "GEOHASH->" =>
-        val (la, lo) = GeoHash.decodeScalar(st.popStr())
-        st.push(la); st.push(lo)
-
-      // ---- geocell-list arrows (fn/GEOSHAPETO.java, TOGEOSHAPE.java):
-      // shape ↔ list of res-encoded cell longs — this grid's analog of
-      // the reference's 4-bit-res + 60-bit-HHCode geocell (res in the
-      // top byte). String form = 16-hex of the encoded long.
-      case "GEOSHAPE->" =>
-        var top = st.pop()
-        val asString = top match {
-          case b: Boolean => top = st.pop(); b
-          case _ => false
-        }
-        val g = top match {
-          case g: WsGeo => g
-          case o => throw new IllegalArgumentException(s"expected GEOSHAPE, got $o")
-        }
-        val enc = g.cells.toVector.sorted.map(c => (g.res.toLong << 56) | c)
-        st.push(if (asString) enc.map(l => f"$l%016x") else enc)
-      case "->GEOSHAPE" =>
-        val list = st.pop().asInstanceOf[Vector[Any]]
-        val decoded = list.map {
-          case l: Long => ((l >>> 56).toInt, l & 0x00ffffffffffffffL)
-          case s: String =>
-            val l = java.lang.Long.parseUnsignedLong(s, 16)
-            ((l >>> 56).toInt, l & 0x00ffffffffffffffL)
-          case o => throw new IllegalArgumentException(s"->GEOSHAPE: bad cell $o")
-        }
-        require(decoded.nonEmpty, "->GEOSHAPE: empty cell list")
-        decoded.foreach { case (r, _) =>
-          require(r >= 1 && r <= 28, s"->GEOSHAPE: resolution out of range: $r") }
-        // mixed resolutions: expand coarser cells into the finest grid
-        // (4^dr children per cell; bounded like TOGEOSHAPE's validity check)
-        val maxRes = decoded.map(_._1).max
-        val cells = Set.newBuilder[Long]
-        var expanded = 0L
-        decoded.foreach { case (r, c) =>
-          val f = 1L << (maxRes - r)
-          expanded += f * f
-          require(expanded <= (1L << 22), "->GEOSHAPE: resolution spread too large")
-          val n = 1L << r; val la = c / n; val lo = c % n
-          var i = 0L
-          while (i < f) {
-            var j = 0L
-            while (j < f) {
-              cells += (la * f + i) * (1L << maxRes) + (lo * f + j); j += 1
-            }
-            i += 1
-          }
-        }
-        st.push(WsGeo(None, cells.result(), maxRes))
-
-      // ---- WKB (fn/TOWKB.java, GeoWKB.java — re-derived OGC
-      // well-known-binary codec, big-endian writer, both endians read,
-      // Polygon/MultiPolygon)
-      case "->WKB" =>
-        val shape = st.pop() match {
-          case g: WsGeo => g.shape.getOrElse(throw new IllegalArgumentException(
-            "->WKB needs a shape built from WKT/GeoJSON"))
-          case s: String => GeoShape.parseWkt(s)
-          case o => throw new IllegalArgumentException(s"->WKB on $o")
-        }
-        st.push(wkbEncode(shape))
-      case "GEO.WKB" | "GEO.WKB.UNIFORM" =>
-        val res = st.popLong().toInt
-        require(res >= 1 && res <= 28, s"$w resolution out of range: $res")
-        val shape = wkbDecode(st.pop() match {
-          case b: Array[Byte] => b
-          case o => throw new IllegalArgumentException(s"$w expects BYTES, got $o")
-        })
-        st.push(WsGeo(Some(shape), GeoCells.cover(shape, res), res))
-
-      // ---- KML / GML (fn/TOKML.java, TOGML.java, GeoKML.java,
-      // GeoGML.java — minimal Polygon grammar, KML coordinates are
-      // "lon,lat[,alt]", GML posList is "lat lon")
-      case "->KML" =>
-        val shape = popShape(st, w)
-        st.push(kmlRender(shape))
-      case "->GML" =>
-        val shape = popShape(st, w)
-        st.push(gmlRender(shape))
-      case "GEO.KML" | "GEO.KML.UNIFORM" =>
-        val res = st.popLong().toInt
-        require(res >= 1 && res <= 28, s"$w resolution out of range: $res")
-        val shape = kmlParse(st.popStr())
-        st.push(WsGeo(Some(shape), GeoCells.cover(shape, res), res))
-      case "GEO.GML" | "GEO.GML.UNIFORM" =>
-        val res = st.popLong().toInt
-        require(res >= 1 && res <= 28, s"$w resolution out of range: $res")
-        val shape = gmlParse(st.popStr())
-        st.push(WsGeo(Some(shape), GeoCells.cover(shape, res), res))
-
-      // ---- GEOSHIFT (fn/GEOSHIFT.java): translate a shape's cover by
-      // (deltalat, deltalon). The popped resolution is validated as the
-      // reference does (even, 0-30); the shift itself re-snaps each
-      // cell center on this grid at the shape's own resolution.
-      case "GEOSHIFT" =>
-        val res = st.popLong().toInt
-        require(res >= 0 && res <= 30 && res % 2 == 0,
-          s"GEOSHIFT expects an even resolution in [0, 30]: $res")
-        val deltalon = st.popNum()
-        require(deltalon >= -360.0 && deltalon <= 360.0,
-          s"GEOSHIFT longitude delta out of range: $deltalon")
-        val deltalat = st.popNum()
-        require(deltalat >= -180.0 && deltalat <= 180.0,
-          s"GEOSHIFT latitude delta out of range: $deltalat")
-        val g = popGeo(st)
-        val n = 1L << g.res
-        val cells = g.cells.map { c =>
-          val la = c / n; val lo = c % n
-          val lat = math.max(-90.0, math.min(90.0,
-            (la + 0.5) / n * 180.0 - 90.0 + deltalat))
-          val lon0 = (lo + 0.5) / n * 360.0 - 180.0 + deltalon
-          val lon = lon0 - math.floor((lon0 + 180.0) / 360.0) * 360.0
-          val li = math.min(n - 1, math.max(0L, math.floor((lat + 90.0) / 180.0 * n).toLong))
-          val gi = math.min(n - 1, math.max(0L, math.floor((lon + 180.0) / 360.0 * n).toLong))
-          li * n + gi
-        }
-        st.push(WsGeo(None, cells, g.res))
-
-      // ---- GEO.REGEXP (fn/GEOREGEXP.java: shape → regexp matching
-      // the cell id text forms, for selector pushdown)
-      case "GEO.REGEXP" =>
-        val g = popGeo(st)
-        val alts = g.cells.toVector.sorted.map(c => f"${(g.res.toLong << 56) | c}%016x")
-        st.push(alts.mkString("^(?:", "|", ")"))
-
-      // ---- GTS-convention HHCode arrows (fn/TOHHCODE.java with
-      // useGtsConvention: NaN/NaN ↔ NO_LOCATION
-      // = GeoTimeSerie.java:78's 0x0145014501450145)
-      case "->GTSHHCODE" | "->GTSHHCODELONG" =>
-        val lon = st.popNum(); val lat = st.popNum()
-        require(lat.isNaN == lon.isNaN,
-          s"$w expects latitude and longitude to both be NaN or both not")
-        val hh = if (lat.isNaN) NoLocation else GeoFunctions.toHHCode(lat, lon)
-        st.push(if (w == "->GTSHHCODE") f"$hh%016x" else hh)
-      case "GTSHHCODE->" =>
-        val hh = st.pop() match {
-          case s: String => java.lang.Long.parseUnsignedLong(s, 16)
-          case l: Long => l
-          case o => throw new IllegalArgumentException(s"GTSHHCODE-> on $o")
-        }
-        if (hh == NoLocation) { st.push(Double.NaN); st.push(Double.NaN) }
-        else {
-          val (la, lo) = GeoFunctions.fromHHCode(hh)
-          st.push(la); st.push(lo)
-        }
-
-      // ---- COPYGEO (fn/COPYGEO.java): copy the locations of a
-      // single-series source onto the target frame, matched by tick
-      case "COPYGEO" =>
-        val src = en.toFrame(st.pop())
-        val target = en.toFrame(st.pop())
-        val locs = src.df.select(col("ts").as("__ts"), col("lat").as("__lat"),
-          col("lon").as("__lon"), col("elev").as("__elev")).distinct()
-        val joined = target.df.drop("lat", "lon", "elev")
-          .join(locs, col("ts") === col("__ts"), "left")
-          .withColumn("lat", col("__lat")).withColumn("lon", col("__lon"))
-          .withColumn("elev", col("__elev"))
-          .drop("__ts", "__lat", "__lon", "__elev")
-        st.push(GtsFrame(joined.select(target.df.columns.map(col).toSeq: _*)))
-
-      // ---- MOTIONSPLIT (fn/MOTIONSPLIT.java time/distance-threshold
-      // core: a split when the tick gap OR the haversine distance
-      // between consecutive points exceeds its threshold; the
-      // proximity-zone dwell machinery is not reproduced). One lag
-      // window + running sum — fully distributed, the timesplit shape.
-      case "MOTIONSPLIT" =>
-        val label = st.popStr()
-        val distThreshold = st.popNum()
-        val timeThreshold = st.popLong()
-        val f = en.toFrame(st.pop())
-        val win = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("gtsid")).orderBy(col("ts"))
-        val prevTs = lag(col("ts"), 1).over(win)
-        val prevLat = lag(col("lat"), 1).over(win)
-        val prevLon = lag(col("lon"), 1).over(win)
-        val gap = prevTs.isNotNull && (
-          (col("ts") - prevTs > timeThreshold) ||
-          (prevLat.isNotNull && col("lat").isNotNull &&
-            GeoFunctions.haversine(prevLat, prevLon, col("lat"), col("lon")) > distThreshold))
-        val splitId = sum(when(gap, 1L).otherwise(0L))
-          .over(win.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0))
-        st.push(GtsFrame(f.df
-          .withColumn("labels", map_concat(col("labels"),
-            map(lit(label), splitId.cast("string"))))
-          .withColumn("gtsid", graft.model.Gts.gtsIdCol(col("class"), col("labels")))))
-
-      case _ => return false
+  def register(words: WordTable): Unit = {
+    // ---- shape construction (fn/GeoWKT.java, GeoJSON.java: the
+    // reference's pct-error knob maps to the grid resolution here)
+    words("GEO.WKT", "GEO.WKT.UNIFORM") { (w, st, en) =>
+      val res = st.popLong().toInt
+      require(res >= 1 && res <= 28, s"$w resolution out of range: $res")
+      val shape = GeoShape.parseWkt(st.popStr())
+      st.push(WsGeo(Some(shape), GeoCells.cover(shape, res), res))
     }
-    true
+    words("GEO.JSON", "GEO.JSON.UNIFORM") { (w, st, en) =>
+      val res = st.popLong().toInt
+      require(res >= 1 && res <= 28, s"$w resolution out of range: $res")
+      val shape = GeoShape.parseGeoJson(st.popStr())
+      st.push(WsGeo(Some(shape), GeoCells.cover(shape, res), res))
+    }
+
+    // ---- cell-set algebra (fn/GeoUnion.java family; set ops drop
+    // the exact polygon — the result is the cover)
+    words("GEO.UNION") { (w, st, en) =>
+      val b = popGeo(st); val a = popGeo(st)
+      require(a.res == b.res, "GEO.UNION: resolution mismatch")
+      st.push(WsGeo(None, GeoCells.union(a.cells, b.cells), a.res))
+    }
+    words("GEO.INTERSECTION") { (w, st, en) =>
+      val b = popGeo(st); val a = popGeo(st)
+      require(a.res == b.res, "GEO.INTERSECTION: resolution mismatch")
+      st.push(WsGeo(None, GeoCells.intersection(a.cells, b.cells), a.res))
+    }
+    words("GEO.DIFFERENCE") { (w, st, en) =>
+      val b = popGeo(st); val a = popGeo(st)
+      require(a.res == b.res, "GEO.DIFFERENCE: resolution mismatch")
+      st.push(WsGeo(None, GeoCells.subtraction(a.cells, b.cells), a.res))
+    }
+    words("GEO.BUFFER", "GEOBUFFER") { (w, st, en) =>
+      val rings = st.popLong().toInt
+      require(rings >= 0 && rings <= 16, s"$w rings out of range: $rings")
+      val g = popGeo(st)
+      st.push(WsGeo(None, GeoCells.dilate(g.cells, g.res, rings), g.res))
+    }
+    words("GEOSPLIT") { (w, st, en) =>
+      val g = popGeo(st)
+      st.push(GeoCells.split(g.cells, g.res)
+        .map(c => WsGeo(None, c, g.res): Any).toVector)
+    }
+    // GEO.COVER: re-cover the exact shape at a new resolution
+    words("GEO.COVER", "GEO.COVER.RL") { (w, st, en) =>
+      val res = st.popLong().toInt
+      require(res >= 1 && res <= 28, s"$w resolution out of range: $res")
+      val g = popGeo(st)
+      val shape = g.shape.getOrElse(throw new IllegalArgumentException(
+        s"$w needs a shape built from WKT/GeoJSON (set-algebra results are cover-only)"))
+      st.push(WsGeo(g.shape, GeoCells.cover(shape, res), res))
+    }
+    // canonicalization no-ops: cell sets are already normalized here
+    words("GEO.NORMALIZE", "GEO.OPTIMIZE") { (w, st, en) => st.push(popGeo(st)) }
+
+    // shape renderers (inverse of GEO.WKT / GEO.JSON — require the
+    // exact polygon; set-algebra results are cover-only)
+    words("->WKT", "->GEOJSON") { (w, st, en) =>
+      val g = popGeo(st)
+      val shape = g.shape.getOrElse(throw new IllegalArgumentException(
+        s"$w needs a shape built from WKT/GeoJSON"))
+      def closed(r: Seq[(Double, Double)]) =
+        if (r.head == r.last) r else r :+ r.head
+      if (w == "->WKT")
+        st.push(shape.rings.map(r => closed(r)
+          .map { case (x, y) => s"$x $y" }.mkString("(", ", ", ")"))
+          .mkString("POLYGON (", ", ", ")"))
+      else
+        st.push(shape.rings.map(r => closed(r)
+          .map { case (x, y) => s"[$x,$y]" }.mkString("[", ",", "]"))
+          .mkString("""{"type":"Polygon","coordinates":[""", ",", "]}"))
+    }
+    words("MAXGEOCELLS") { (w, st, en) => st.popLong() } // capacity hint — no-op here
+
+    // ---- predicates
+    // GEO.WITHIN: gts shape → points inside (exact ray-cast when
+    // the polygon is known, cover membership otherwise)
+    words("GEO.WITHIN", "GEO.OUTSIDE") { (w, st, en) =>
+      val g = popGeo(st)
+      val f = en.toFrame(st.pop())
+      val inside = g.shape match {
+        case Some(shape) => shape.containsCol(col("lat"), col("lon"))
+        case None => GeoCells.inCover(col("lat"), col("lon"), g.cells, g.res)
+      }
+      st.push(GtsFrame(f.df.filter(
+        if (w == "GEO.WITHIN") inside else !coalesce(inside, lit(false)))))
+    }
+    // GEO.INTERSECTS: two shapes → do the covers overlap?
+    words("GEO.INTERSECTS") { (w, st, en) =>
+      val b = popGeo(st); val a = popGeo(st)
+      require(a.res == b.res, "GEO.INTERSECTS: resolution mismatch")
+      st.push(a.cells.exists(b.cells.contains))
+    }
+
+    // ---- serialization (fn/GEOPACK.java, GEOUNPACK): res byte +
+    // delta-varint of the sorted cells, b64 text
+    words("GEOPACK") { (w, st, en) =>
+      val g = popGeo(st)
+      val out = new java.io.ByteArrayOutputStream
+      out.write(g.res)
+      var prev = 0L
+      g.cells.toSeq.sorted.foreach { c =>
+        var v = c - prev; prev = c
+        while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
+        out.write(v.toInt)
+      }
+      st.push(java.util.Base64.getEncoder.encodeToString(out.toByteArray))
+    }
+    words("GEOUNPACK") { (w, st, en) =>
+      val data = java.util.Base64.getDecoder.decode(st.popStr())
+      require(data.nonEmpty, "GEOUNPACK: empty payload")
+      val res = data(0).toInt
+      val cells = Set.newBuilder[Long]
+      var i = 1; var prev = 0L
+      while (i < data.length) {
+        var v = 0L; var shift = 0; var more = true
+        while (more) {
+          val b = data(i); i += 1
+          v |= (b & 0x7fL) << shift; shift += 7
+          more = (b & 0x80) != 0
+        }
+        prev += v; cells += prev
+      }
+      st.push(WsGeo(None, cells.result(), res))
+    }
+
+    // ---- cell/point codecs (->GEOCELL: lat lon res → grid cell id;
+    // GEOCELL-> → [lat lon] center)
+    words("->GEOCELL") { (w, st, en) =>
+      val res = st.popLong().toInt
+      val lon = st.popNum(); val lat = st.popNum()
+      val n = 1L << res
+      val la = math.min(n - 1, math.max(0L, math.floor((lat + 90.0) / 180.0 * n).toLong))
+      val lo = math.min(n - 1, math.max(0L, math.floor((lon + 180.0) / 360.0 * n).toLong))
+      st.push(la * n + lo)
+    }
+    words("GEOCELL->") { (w, st, en) =>
+      val res = st.popLong().toInt
+      val (la, lo) = cellCenter(st.popLong(), res)
+      st.push(la); st.push(lo)
+    }
+
+    // ---- HHCode words (fn/TOHHCODE.java, HHCODETO, the
+    // HHCODE.<dir> neighborhood: hhcode res → neighbor hhcode)
+    words("->HHCODE", "->HHCODELONG") { (w, st, en) =>
+      val lon = st.popNum(); val lat = st.popNum()
+      st.push(GeoFunctions.toHHCode(lat, lon))
+    }
+    words("HHCODE->", "HHCODELONG->") { (w, st, en) =>
+      val (la, lo) = GeoFunctions.fromHHCode(st.popLong())
+      st.push(la); st.push(lo)
+    }
+    words("HHCODE.CENTER") { (w, st, en) =>
+      val res = st.popLong().toInt
+      val (la, lo) = hhCellCenter(st.popLong(), res)
+      st.push(Vector[Any](la, lo))
+    }
+    words("HHCODE.BBOX") { (w, st, en) =>
+      val res = st.popLong().toInt
+      val hh = st.popLong()
+      val half = (90.0 / (1L << res), 180.0 / (1L << res))
+      val (la, lo) = hhCellCenter(hh, res)
+      st.push(Vector[Any](la - half._1, lo - half._2, la + half._1, lo + half._2))
+    }
+    words("HHCODE.NORTH", "HHCODE.SOUTH", "HHCODE.EAST", "HHCODE.WEST",
+      "HHCODE.NORTH.EAST", "HHCODE.NORTH.WEST", "HHCODE.SOUTH.EAST",
+      "HHCODE.SOUTH.WEST") { (w, st, en) =>
+      val res = st.popLong().toInt
+      val hh = st.popLong()
+      val dLat = (if (w.contains("NORTH")) 1 else 0) - (if (w.contains("SOUTH")) 1 else 0)
+      val dLon = (if (w.contains("EAST")) 1 else 0) - (if (w.contains("WEST")) 1 else 0)
+      val (la, lo) = hhCellCenter(hh, res)
+      val stepLat = 180.0 / (1L << res); val stepLon = 360.0 / (1L << res)
+      val nlat = math.min(90.0 - stepLat / 2, math.max(-90.0 + stepLat / 2, la + dLat * stepLat))
+      var nlon = lo + dLon * stepLon
+      if (nlon > 180.0) nlon -= 360.0
+      if (nlon < -180.0) nlon += 360.0
+      st.push(GeoFunctions.toHHCode(nlat, nlon))
+    }
+
+    // ---- geohash arrows (fn/TOGEOHASH.java): lat lon chars →
+    // base-32 text; GEOHASH-> decodes to the cell center
+    words("->GEOHASH") { (w, st, en) =>
+      val chars = st.popLong().toInt
+      require(chars >= 1 && chars <= 12, s"->GEOHASH chars out of range: $chars")
+      val lon = st.popNum(); val lat = st.popNum()
+      st.push(GeoHash.encodeScalar(lat, lon, chars))
+    }
+    words("GEOHASH->") { (w, st, en) =>
+      val (la, lo) = GeoHash.decodeScalar(st.popStr())
+      st.push(la); st.push(lo)
+    }
+
+    // ---- geocell-list arrows (fn/GEOSHAPETO.java, TOGEOSHAPE.java):
+    // shape ↔ list of res-encoded cell longs — this grid's analog of
+    // the reference's 4-bit-res + 60-bit-HHCode geocell (res in the
+    // top byte). String form = 16-hex of the encoded long.
+    words("GEOSHAPE->") { (w, st, en) =>
+      var top = st.pop()
+      val asString = top match {
+        case b: Boolean => top = st.pop(); b
+        case _ => false
+      }
+      val g = top match {
+        case g: WsGeo => g
+        case o => throw new IllegalArgumentException(s"expected GEOSHAPE, got $o")
+      }
+      val enc = g.cells.toVector.sorted.map(c => (g.res.toLong << 56) | c)
+      st.push(if (asString) enc.map(l => f"$l%016x") else enc)
+    }
+    words("->GEOSHAPE") { (w, st, en) =>
+      val list = st.pop().asInstanceOf[Vector[Any]]
+      val decoded = list.map {
+        case l: Long => ((l >>> 56).toInt, l & 0x00ffffffffffffffL)
+        case s: String =>
+          val l = java.lang.Long.parseUnsignedLong(s, 16)
+          ((l >>> 56).toInt, l & 0x00ffffffffffffffL)
+        case o => throw new IllegalArgumentException(s"->GEOSHAPE: bad cell $o")
+      }
+      require(decoded.nonEmpty, "->GEOSHAPE: empty cell list")
+      decoded.foreach { case (r, _) =>
+        require(r >= 1 && r <= 28, s"->GEOSHAPE: resolution out of range: $r") }
+      // mixed resolutions: expand coarser cells into the finest grid
+      // (4^dr children per cell; bounded like TOGEOSHAPE's validity check)
+      val maxRes = decoded.map(_._1).max
+      val cells = Set.newBuilder[Long]
+      var expanded = 0L
+      decoded.foreach { case (r, c) =>
+        val f = 1L << (maxRes - r)
+        expanded += f * f
+        require(expanded <= (1L << 22), "->GEOSHAPE: resolution spread too large")
+        val n = 1L << r; val la = c / n; val lo = c % n
+        var i = 0L
+        while (i < f) {
+          var j = 0L
+          while (j < f) {
+            cells += (la * f + i) * (1L << maxRes) + (lo * f + j); j += 1
+          }
+          i += 1
+        }
+      }
+      st.push(WsGeo(None, cells.result(), maxRes))
+    }
+
+    // ---- WKB (fn/TOWKB.java, GeoWKB.java — re-derived OGC
+    // well-known-binary codec, big-endian writer, both endians read,
+    // Polygon/MultiPolygon)
+    words("->WKB") { (w, st, en) =>
+      val shape = st.pop() match {
+        case g: WsGeo => g.shape.getOrElse(throw new IllegalArgumentException(
+          "->WKB needs a shape built from WKT/GeoJSON"))
+        case s: String => GeoShape.parseWkt(s)
+        case o => throw new IllegalArgumentException(s"->WKB on $o")
+      }
+      st.push(wkbEncode(shape))
+    }
+    words("GEO.WKB", "GEO.WKB.UNIFORM") { (w, st, en) =>
+      val res = st.popLong().toInt
+      require(res >= 1 && res <= 28, s"$w resolution out of range: $res")
+      val shape = wkbDecode(st.pop() match {
+        case b: Array[Byte] => b
+        case o => throw new IllegalArgumentException(s"$w expects BYTES, got $o")
+      })
+      st.push(WsGeo(Some(shape), GeoCells.cover(shape, res), res))
+    }
+
+    // ---- KML / GML (fn/TOKML.java, TOGML.java, GeoKML.java,
+    // GeoGML.java — minimal Polygon grammar, KML coordinates are
+    // "lon,lat[,alt]", GML posList is "lat lon")
+    words("->KML") { (w, st, en) =>
+      val shape = popShape(st, w)
+      st.push(kmlRender(shape))
+    }
+    words("->GML") { (w, st, en) =>
+      val shape = popShape(st, w)
+      st.push(gmlRender(shape))
+    }
+    words("GEO.KML", "GEO.KML.UNIFORM") { (w, st, en) =>
+      val res = st.popLong().toInt
+      require(res >= 1 && res <= 28, s"$w resolution out of range: $res")
+      val shape = kmlParse(st.popStr())
+      st.push(WsGeo(Some(shape), GeoCells.cover(shape, res), res))
+    }
+    words("GEO.GML", "GEO.GML.UNIFORM") { (w, st, en) =>
+      val res = st.popLong().toInt
+      require(res >= 1 && res <= 28, s"$w resolution out of range: $res")
+      val shape = gmlParse(st.popStr())
+      st.push(WsGeo(Some(shape), GeoCells.cover(shape, res), res))
+    }
+
+    // ---- GEOSHIFT (fn/GEOSHIFT.java): translate a shape's cover by
+    // (deltalat, deltalon). The popped resolution is validated as the
+    // reference does (even, 0-30); the shift itself re-snaps each
+    // cell center on this grid at the shape's own resolution.
+    words("GEOSHIFT") { (w, st, en) =>
+      val res = st.popLong().toInt
+      require(res >= 0 && res <= 30 && res % 2 == 0,
+        s"GEOSHIFT expects an even resolution in [0, 30]: $res")
+      val deltalon = st.popNum()
+      require(deltalon >= -360.0 && deltalon <= 360.0,
+        s"GEOSHIFT longitude delta out of range: $deltalon")
+      val deltalat = st.popNum()
+      require(deltalat >= -180.0 && deltalat <= 180.0,
+        s"GEOSHIFT latitude delta out of range: $deltalat")
+      val g = popGeo(st)
+      val n = 1L << g.res
+      val cells = g.cells.map { c =>
+        val la = c / n; val lo = c % n
+        val lat = math.max(-90.0, math.min(90.0,
+          (la + 0.5) / n * 180.0 - 90.0 + deltalat))
+        val lon0 = (lo + 0.5) / n * 360.0 - 180.0 + deltalon
+        val lon = lon0 - math.floor((lon0 + 180.0) / 360.0) * 360.0
+        val li = math.min(n - 1, math.max(0L, math.floor((lat + 90.0) / 180.0 * n).toLong))
+        val gi = math.min(n - 1, math.max(0L, math.floor((lon + 180.0) / 360.0 * n).toLong))
+        li * n + gi
+      }
+      st.push(WsGeo(None, cells, g.res))
+    }
+
+    // ---- GEO.REGEXP (fn/GEOREGEXP.java: shape → regexp matching
+    // the cell id text forms, for selector pushdown)
+    words("GEO.REGEXP") { (w, st, en) =>
+      val g = popGeo(st)
+      val alts = g.cells.toVector.sorted.map(c => f"${(g.res.toLong << 56) | c}%016x")
+      st.push(alts.mkString("^(?:", "|", ")"))
+    }
+
+    // ---- GTS-convention HHCode arrows (fn/TOHHCODE.java with
+    // useGtsConvention: NaN/NaN ↔ NO_LOCATION
+    // = GeoTimeSerie.java:78's 0x0145014501450145)
+    words("->GTSHHCODE", "->GTSHHCODELONG") { (w, st, en) =>
+      val lon = st.popNum(); val lat = st.popNum()
+      require(lat.isNaN == lon.isNaN,
+        s"$w expects latitude and longitude to both be NaN or both not")
+      val hh = if (lat.isNaN) NoLocation else GeoFunctions.toHHCode(lat, lon)
+      st.push(if (w == "->GTSHHCODE") f"$hh%016x" else hh)
+    }
+    words("GTSHHCODE->") { (w, st, en) =>
+      val hh = st.pop() match {
+        case s: String => java.lang.Long.parseUnsignedLong(s, 16)
+        case l: Long => l
+        case o => throw new IllegalArgumentException(s"GTSHHCODE-> on $o")
+      }
+      if (hh == NoLocation) { st.push(Double.NaN); st.push(Double.NaN) }
+      else {
+        val (la, lo) = GeoFunctions.fromHHCode(hh)
+        st.push(la); st.push(lo)
+      }
+    }
+
+    // ---- COPYGEO (fn/COPYGEO.java): copy the locations of a
+    // single-series source onto the target frame, matched by tick
+    words("COPYGEO") { (w, st, en) =>
+      val src = en.toFrame(st.pop())
+      val target = en.toFrame(st.pop())
+      val locs = src.df.select(col("ts").as("__ts"), col("lat").as("__lat"),
+        col("lon").as("__lon"), col("elev").as("__elev")).distinct()
+      val joined = target.df.drop("lat", "lon", "elev")
+        .join(locs, col("ts") === col("__ts"), "left")
+        .withColumn("lat", col("__lat")).withColumn("lon", col("__lon"))
+        .withColumn("elev", col("__elev"))
+        .drop("__ts", "__lat", "__lon", "__elev")
+      st.push(GtsFrame(joined.select(target.df.columns.map(col).toSeq: _*)))
+    }
+
+    // ---- MOTIONSPLIT (fn/MOTIONSPLIT.java time/distance-threshold
+    // core: a split when the tick gap OR the haversine distance
+    // between consecutive points exceeds its threshold; the
+    // proximity-zone dwell machinery is not reproduced). One lag
+    // window + running sum — fully distributed, the timesplit shape.
+    words("MOTIONSPLIT") { (w, st, en) =>
+      val label = st.popStr()
+      val distThreshold = st.popNum()
+      val timeThreshold = st.popLong()
+      val f = en.toFrame(st.pop())
+      val win = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("gtsid")).orderBy(col("ts"))
+      val prevTs = lag(col("ts"), 1).over(win)
+      val prevLat = lag(col("lat"), 1).over(win)
+      val prevLon = lag(col("lon"), 1).over(win)
+      val gap = prevTs.isNotNull && (
+        (col("ts") - prevTs > timeThreshold) ||
+        (prevLat.isNotNull && col("lat").isNotNull &&
+          GeoFunctions.haversine(prevLat, prevLon, col("lat"), col("lon")) > distThreshold))
+      val splitId = sum(when(gap, 1L).otherwise(0L))
+        .over(win.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0))
+      st.push(GtsFrame(f.df
+        .withColumn("labels", map_concat(col("labels"),
+          map(lit(label), splitId.cast("string"))))
+        .withColumn("gtsid", graft.model.Gts.gtsIdCol(col("class"), col("labels")))))
+    }
   }
 
   /** GeoTimeSerie.java:78 NO_LOCATION sentinel. */

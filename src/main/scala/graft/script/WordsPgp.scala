@@ -48,17 +48,19 @@ object WordsPgp {
       "pubkey" -> pub,
       "attributes" -> Vector.empty[Any])
 
-  def eval(w: String, st: State, en: WarpScriptEngine): Boolean = {
-    w match {
-      // ---- PGPRING: ring object → encoded bytes; blob → list of rings
-      case "PGPRING" => st.pop() match {
+  def register(words: WordTable): Unit = {
+    // ---- PGPRING: ring object → encoded bytes; blob → list of rings
+    words("PGPRING") { (w, st, en) =>
+      st.pop() match {
         case r: PubRing => st.push(r.encoded)
         case r: SecRing => st.push(r.encoded)
         case v => st.push(parseRingsAuto(v).map(identity[Any]))
       }
+    }
 
-      // ---- PGPPUBLIC: the reference's overload ladder
-      case "PGPPUBLIC" => st.pop() match {
+    // ---- PGPPUBLIC: the reference's overload ladder
+    words("PGPPUBLIC") { (w, st, en) =>
+      st.pop() match {
         case k: PubKey =>
           // armored serialization of the bare key packet
           st.push(OpenPgp.armor("PUBLIC KEY BLOCK", OpenPgp.packet(6, k.body)))
@@ -87,15 +89,19 @@ object WordsPgp {
           }.map(k => (k.keyIdHex: Any) -> (keyMap(k): Any))
           st.push(maps.toMap)
       }
+    }
 
-      // ---- PGPPRIVATE: secret ring → key ids
-      case "PGPPRIVATE" => st.pop() match {
+    // ---- PGPPRIVATE: secret ring → key ids
+    words("PGPPRIVATE") { (w, st, en) =>
+      st.pop() match {
         case r: SecRing => st.push(r.keys.map(_.pub.keyIdHex).map(identity[Any]))
         case o => throw new IllegalArgumentException(s"$w expected a PGP secret key ring, got $o")
       }
+    }
 
-      // ---- PGPINFO: ring → keyid → info map
-      case "PGPINFO" => st.pop() match {
+    // ---- PGPINFO: ring → keyid → info map
+    words("PGPINFO") { (w, st, en) =>
+      st.pop() match {
         case r: SecRing =>
           st.push(r.keys.map(k =>
             (k.pub.keyIdHex: Any) -> (infoMap(k.pub, k.pub.isMaster): Any)).toMap)
@@ -104,124 +110,125 @@ object WordsPgp {
             (k.keyIdHex: Any) -> (infoMap(k, k.isMaster): Any)).toMap)
         case o => throw new IllegalArgumentException(s"$w expected a PGP key ring, got $o")
       }
+    }
 
-      // ---- PGPSIGN: params map + data → signature (detached) or
-      // one-pass signed message
-      case "PGPSIGN" =>
-        val params = st.pop().asInstanceOf[Map[Any, Any]]
-        val detached = params.getOrElse("detached", true) == true
-        val armorOut = params.getOrElse("armor", true) == true
-        val passphrase = params.get("passphrase") match {
-          case Some(s: String) => s
-          case _ => throw new IllegalArgumentException(s"$w missing PGP secret key passphrase.")
-        }
-        val ring = params.get("keyring") match {
-          case Some(r: SecRing) => r
-          case _ => throw new IllegalArgumentException(s"$w expected a PGP secret key ring.")
-        }
-        val keyid = keyIdOf(params.getOrElse("keyid",
-          throw new IllegalArgumentException(s"$w missing PGP secret key id.")))
-        val sec = ring.byId(keyid).getOrElse(throw new IllegalArgumentException(
-          f"$w key with id 0x$keyid%x not found.")).unlock(passphrase)
-        val digest = String.valueOf(params.getOrElse("digest", "SHA512"))
-        // 'date' is STU µs in the reference; default to the engine NOW
-        val dateSec = params.get("date") match {
-          case Some(l: Long) => l / 1000000L
-          case _ => en.nowTick / 1000000L
-        }
-        val data = bytesOf(st.pop())
-        val sig = OpenPgp.signDetached(sec, data, digest, dateSec)
-        if (detached)
-          st.push(if (armorOut) OpenPgp.armor("SIGNATURE", sig) else sig)
-        else {
-          val msg = OpenPgp.onePassMessage(sec, data, digest, dateSec, sig)
-          st.push(if (armorOut) OpenPgp.armor("MESSAGE", msg) else msg)
-        }
-
-      // ---- PGPVERIFY: [detached?] key | (keyid ring) → boolean
-      // (+ extracted data first for one-pass messages)
-      case "PGPVERIFY" =>
-        var top = st.pop()
-        val detached = top match {
-          case b: Boolean => top = st.pop(); b
-          case _ => false
-        }
-        val key: PubKey = top match {
-          case k: PubKey => k
-          case idv @ (_: Long | _: String) =>
-            val id = keyIdOf(idv)
-            val k = st.pop() match {
-              case r: SecRing => r.pubById(id)
-              case r: PubRing => r.byId(id)
-              case o => throw new IllegalArgumentException(s"$w missing PGP key ring, got $o")
-            }
-            k.getOrElse(throw new IllegalArgumentException(
-              f"$w key with id 0x$id%x not found."))
-          case o => throw new IllegalArgumentException(
-            s"$w expected a PGP public key or key ring and key id, got $o")
-        }
-        if (detached) {
-          val sig = st.pop() match {
-            case s: String => OpenPgp.dearmor(s)
-            case b: Array[Byte] => b
-            case o => throw new IllegalArgumentException(s"$w expected signature data, got $o")
-          }
-          val data = bytesOf(st.pop())
-          st.push(OpenPgp.verifyDetached(key, data, sig))
-        } else {
-          val msg = st.pop() match {
-            case s: String => OpenPgp.dearmor(s)
-            case b: Array[Byte] => b
-            case o => throw new IllegalArgumentException(s"$w expected signed message, got $o")
-          }
-          val (data, ok) = OpenPgp.verifyOnePass(key, msg)
-          st.push(data)
-          st.push(ok)
-        }
-
-      // ---- PGPENCRYPT: params map + data → encrypted message
-      case "PGPENCRYPT" =>
-        val params = st.pop().asInstanceOf[Map[Any, Any]]
-        val armorOut = params.getOrElse("armor", true) == true
-        val throwKeyId = params.getOrElse("throw_keyid", true) == true
-        val pub: PubKey = params.get("recipient") match {
-          case Some(k: PubKey) => k
-          case Some(idv @ (_: Long | _: String)) =>
-            val id = keyIdOf(idv)
-            val k = params.get("keyring") match {
-              case Some(r: PubRing) => r.byId(id)
-              case Some(r: SecRing) => r.pubById(id)
-              case _ => throw new IllegalArgumentException(s"$w missing PGP key ring.")
-            }
-            k.getOrElse(throw new IllegalArgumentException(
-              f"$w key with id 0x$id%x not found."))
-          case _ => throw new IllegalArgumentException(
-            s"$w missing recipient PGP public key or key ring and key id.")
-        }
-        val data = bytesOf(st.pop())
-        val msg = OpenPgp.encrypt(pub, data, en.prng, throwKeyId,
-          dateSec = en.nowTick / 1000000L)
+    // ---- PGPSIGN: params map + data → signature (detached) or
+    // one-pass signed message
+    words("PGPSIGN") { (w, st, en) =>
+      val params = st.pop().asInstanceOf[Map[Any, Any]]
+      val detached = params.getOrElse("detached", true) == true
+      val armorOut = params.getOrElse("armor", true) == true
+      val passphrase = params.get("passphrase") match {
+        case Some(s: String) => s
+        case _ => throw new IllegalArgumentException(s"$w missing PGP secret key passphrase.")
+      }
+      val ring = params.get("keyring") match {
+        case Some(r: SecRing) => r
+        case _ => throw new IllegalArgumentException(s"$w expected a PGP secret key ring.")
+      }
+      val keyid = keyIdOf(params.getOrElse("keyid",
+        throw new IllegalArgumentException(s"$w missing PGP secret key id.")))
+      val sec = ring.byId(keyid).getOrElse(throw new IllegalArgumentException(
+        f"$w key with id 0x$keyid%x not found.")).unlock(passphrase)
+      val digest = String.valueOf(params.getOrElse("digest", "SHA512"))
+      // 'date' is STU µs in the reference; default to the engine NOW
+      val dateSec = params.get("date") match {
+        case Some(l: Long) => l / 1000000L
+        case _ => en.nowTick / 1000000L
+      }
+      val data = bytesOf(st.pop())
+      val sig = OpenPgp.signDetached(sec, data, digest, dateSec)
+      if (detached)
+        st.push(if (armorOut) OpenPgp.armor("SIGNATURE", sig) else sig)
+      else {
+        val msg = OpenPgp.onePassMessage(sec, data, digest, dateSec, sig)
         st.push(if (armorOut) OpenPgp.armor("MESSAGE", msg) else msg)
+      }
+    }
 
-      // ---- PGPDECRYPT: data ring keyid passphrase → bytes
-      case "PGPDECRYPT" =>
-        val passphrase = st.popStr()
-        val keyid = keyIdOf(st.pop())
-        val ring = st.pop() match {
-          case r: SecRing => r
-          case o => throw new IllegalArgumentException(s"$w missing PGP secret key ring, got $o")
-        }
-        val data = st.pop() match {
+    // ---- PGPVERIFY: [detached?] key | (keyid ring) → boolean
+    // (+ extracted data first for one-pass messages)
+    words("PGPVERIFY") { (w, st, en) =>
+      var top = st.pop()
+      val detached = top match {
+        case b: Boolean => top = st.pop(); b
+        case _ => false
+      }
+      val key: PubKey = top match {
+        case k: PubKey => k
+        case idv @ (_: Long | _: String) =>
+          val id = keyIdOf(idv)
+          val k = st.pop() match {
+            case r: SecRing => r.pubById(id)
+            case r: PubRing => r.byId(id)
+            case o => throw new IllegalArgumentException(s"$w missing PGP key ring, got $o")
+          }
+          k.getOrElse(throw new IllegalArgumentException(
+            f"$w key with id 0x$id%x not found."))
+        case o => throw new IllegalArgumentException(
+          s"$w expected a PGP public key or key ring and key id, got $o")
+      }
+      if (detached) {
+        val sig = st.pop() match {
           case s: String => OpenPgp.dearmor(s)
           case b: Array[Byte] => b
-          case o => throw new IllegalArgumentException(s"$w expected message data, got $o")
+          case o => throw new IllegalArgumentException(s"$w expected signature data, got $o")
         }
-        val sec = ring.byId(keyid).getOrElse(throw new IllegalArgumentException(
-          f"$w key with id 0x$keyid%x not found.")).unlock(passphrase)
-        st.push(OpenPgp.decrypt(sec, data))
-
-      case _ => return false
+        val data = bytesOf(st.pop())
+        st.push(OpenPgp.verifyDetached(key, data, sig))
+      } else {
+        val msg = st.pop() match {
+          case s: String => OpenPgp.dearmor(s)
+          case b: Array[Byte] => b
+          case o => throw new IllegalArgumentException(s"$w expected signed message, got $o")
+        }
+        val (data, ok) = OpenPgp.verifyOnePass(key, msg)
+        st.push(data)
+        st.push(ok)
+      }
     }
-    true
+
+    // ---- PGPENCRYPT: params map + data → encrypted message
+    words("PGPENCRYPT") { (w, st, en) =>
+      val params = st.pop().asInstanceOf[Map[Any, Any]]
+      val armorOut = params.getOrElse("armor", true) == true
+      val throwKeyId = params.getOrElse("throw_keyid", true) == true
+      val pub: PubKey = params.get("recipient") match {
+        case Some(k: PubKey) => k
+        case Some(idv @ (_: Long | _: String)) =>
+          val id = keyIdOf(idv)
+          val k = params.get("keyring") match {
+            case Some(r: PubRing) => r.byId(id)
+            case Some(r: SecRing) => r.pubById(id)
+            case _ => throw new IllegalArgumentException(s"$w missing PGP key ring.")
+          }
+          k.getOrElse(throw new IllegalArgumentException(
+            f"$w key with id 0x$id%x not found."))
+        case _ => throw new IllegalArgumentException(
+          s"$w missing recipient PGP public key or key ring and key id.")
+      }
+      val data = bytesOf(st.pop())
+      val msg = OpenPgp.encrypt(pub, data, en.prng, throwKeyId,
+        dateSec = en.nowTick / 1000000L)
+      st.push(if (armorOut) OpenPgp.armor("MESSAGE", msg) else msg)
+    }
+
+    // ---- PGPDECRYPT: data ring keyid passphrase → bytes
+    words("PGPDECRYPT") { (w, st, en) =>
+      val passphrase = st.popStr()
+      val keyid = keyIdOf(st.pop())
+      val ring = st.pop() match {
+        case r: SecRing => r
+        case o => throw new IllegalArgumentException(s"$w missing PGP secret key ring, got $o")
+      }
+      val data = st.pop() match {
+        case s: String => OpenPgp.dearmor(s)
+        case b: Array[Byte] => b
+        case o => throw new IllegalArgumentException(s"$w expected message data, got $o")
+      }
+      val sec = ring.byId(keyid).getOrElse(throw new IllegalArgumentException(
+        f"$w key with id 0x$keyid%x not found.")).unlock(passphrase)
+      st.push(OpenPgp.decrypt(sec, data))
+    }
   }
 }

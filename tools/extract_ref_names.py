@@ -17,7 +17,16 @@ register loop (`POPR + i`, :3390) is config-dependent and excluded,
 matching the engine's numbered-register dispatch.
 
 Usage: python3 tools/extract_ref_names.py [out]   (default /tmp/ref_names.txt)
-Then:  sbt -error 'runMain graft.WordCoverage /tmp/ref_names.txt'
+Then compare the set against FUNCTIONS, the engine's word-table keys:
+every reference name must be among them. From the repo root:
+
+    sbt -error console <<'EOF'
+    val fs = new graft.script.WarpScriptEngine((_, _, _, _) => ???)
+      .run("'inventory=1' CAPADD FUNCTIONS").head
+      .asInstanceOf[Vector[Any]].map(_.toString).toSet
+    println("MISSING: " + scala.io.Source.fromFile("/tmp/ref_names.txt")
+      .getLines().filter(_.nonEmpty).filterNot(fs).mkString(" "))
+    EOF
 """
 import re
 import sys
