@@ -21,9 +21,9 @@ Then compare the set against FUNCTIONS, the engine's word-table keys:
 every reference name must be among them. From the repo root:
 
     sbt -error console <<'EOF'
-    val fs = new graft.script.WarpScriptEngine((_, _, _, _) => ???)
+    val fs = { new graft.script.WarpScriptEngine((_, _, _, _) => ???)
       .run("'inventory=1' CAPADD FUNCTIONS").head
-      .asInstanceOf[Vector[Any]].map(_.toString).toSet
+      .asInstanceOf[Vector[Any]].map(_.toString).toSet }
     println("MISSING: " + scala.io.Source.fromFile("/tmp/ref_names.txt")
       .getLines().filter(_.nonEmpty).filterNot(fs).mkString(" "))
     EOF
