@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query and total
   * seconds. local[32]/32 shuffle partitions by default (the container's
@@ -242,41 +240,7 @@ object Bench {
   private def runInProcess(names: Seq[String],
                            forked: Boolean = sys.env.contains("SPARK_GRAFT_SHARD")): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing floor (r13, guide §2.2/§2.5): the default 1 MB
-      // minPartitionSize coalesces small-BYTE shuffles to one
-      // partition even when they are CPU-heavy — post-aggregation
-      // kernel stages (per-series ESD/SAX/window work) are series-
-      // count-sized at ANY corpus scale, and their heavy stage ran as
-      // ONE task on 32 cores (g94 profile: 4.6 s single-task stage;
-      // steady-state 4.7 → 1.6 s with the floor lowered). With
-      // parallelismFirst (default on) the target stays
-      // max(bytes/parallelism, this), so at real scale, byte-sized
-      // stages coalesce exactly as before — the floor only stops
-      // degenerate serialization of tiny-byte CPU-bound stages.
-      // Parameterised for cluster profiles; local default 1k.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "1k"))
-      // Spark 4.1 writes a sidecar checksum file per checkpoint file —
-      // one per STATE PARTITION per micro-batch — doubling the
-      // small-file create+rename ops of every stateful commit (r14
-      // thread sampling: ChecksumCheckpointFileManager.awaitResult +
-      // renameTempFile dominated the stateful stages; s03 4.1 → 2.6 s,
-      // s04 2.1 → 1.6 s with it off). The cost is per-file and exists
-      // at every scale — worse on object stores, whose integrity layer
-      // (HDFS block checksums, S3 ETags) already covers corruption.
-      // Parameterised for deployments that want the extra guard.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_CHECKSUM", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.maxResultSize", "2g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
     // JVM/codegen warmup on the smallest sf so measured times are steady
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }

@@ -1,16 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Plan audit: `runMain graft.Explain [query names...]` prints the
   * formatted physical plan of each named SparkEntry query (defaults to
   * a representative scale-sensitive set). */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions","8")
-      .config("spark.sql.adaptive.enabled","true")
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local("8")
     val dir = "/root/testdata/sf0.01"
     val names = if (args.nonEmpty) args.toSeq
       else Seq("g01_fetch_selector","r01_pricing_summary","r09_shipping_priority",

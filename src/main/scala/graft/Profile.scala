@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round profiler (driver-side tooling, not part of the
   * engine): run named SparkEntry queries K times in one JVM against
   * SPARK_GRAFT_SF_DIR, timing each run with the noop sink (guide §1.4
@@ -14,20 +12,7 @@ object Profile {
     val k = args.headOption.map(_.toInt).getOrElse(2)
     val names = args.drop(1).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.maxResultSize", "2g")
-    // extra session confs via SPARK_GRAFT_CONF="k=v;k=v" for A/B runs
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     // stage-level accounting: wall duration + summed executor run time
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double, Double, Int)]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {

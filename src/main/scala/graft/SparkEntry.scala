@@ -27,22 +27,26 @@ object SparkEntry {
     f.reduce(Sum, Seq("user"))
   }
 
+  /** Every query pack, merged. Registering a name twice, or an oracle
+    * or prewarm key with no query, fails the build. */
+  private lazy val registry = QueryPack.registry(Seq(
+    GtsQueries, GtsQueries2, GtsQueries3, GtsQueries4, GtsQueries5, GtsQueries6,
+    GtsQueries7, GtsQueries8, GtsQueries9, GtsQueries10, RelationalQueries,
+    TextQueries, TextQueries2, TextQueries3, TextQueries4, MiscQueries, AnnQueries,
+    PqQueries, GeoQueries, WsQueries, WsQueriesB, WsQueries2, WsQueries3,
+    WsQueries4, WsQueries5, WsQueries6, WsQueries7, StreamQueries))
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    GtsQueries.queries ++ GtsQueries2.queries ++ GtsQueries3.queries ++ GtsQueries4.queries ++ RelationalQueries.queries ++
-      TextQueries.queries ++ TextQueries2.queries ++ TextQueries3.queries ++ TextQueries4.queries ++ MiscQueries.queries ++ AnnQueries.queries ++ PqQueries.queries ++ GeoQueries.queries ++ GtsQueries5.queries ++ GtsQueries6.queries ++ WsQueries.queries ++ WsQueries2.queries ++ WsQueries3.queries ++ WsQueries4.queries ++ WsQueries5.queries ++ WsQueries6.queries ++ WsQueries7.queries ++ GtsQueries7.queries ++ GtsQueries8.queries ++ GtsQueries9.queries ++ GtsQueries10.queries ++ StreamQueries.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = registry.queries
 
   /** Untimed one-time setup the bench runs before timing a row:
     * steady-state rows whose at-rest artifacts (a precomputed index a
     * real pipeline reads from storage) should not be billed to the
     * per-query timing. The bench lists prewarmed rows in its artifact;
     * Verify ignores this (the queries build lazily on their own). */
-  def prewarm: Map[String, (SparkSession, String) => Unit] =
-    TextQueries2.prewarm ++ StreamQueries.prewarm
+  lazy val prewarm: Map[String, (SparkSession, String) => Unit] = registry.prewarm
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    GtsQueries.oracleSql ++ GtsQueries2.oracleSql ++ GtsQueries3.oracleSql ++ GtsQueries4.oracleSql ++ RelationalQueries.oracleSql ++
-      TextQueries.oracleSql ++ TextQueries2.oracleSql ++ TextQueries3.oracleSql ++ TextQueries4.oracleSql ++ MiscQueries.oracleSql ++ AnnQueries.oracleSql ++ PqQueries.oracleSql ++ GeoQueries.oracleSql ++ GtsQueries5.oracleSql ++ GtsQueries6.oracleSql ++ WsQueries.oracleSql ++ WsQueries2.oracleSql ++ WsQueries3.oracleSql ++ WsQueries4.oracleSql ++ WsQueries5.oracleSql ++ WsQueries6.oracleSql ++ WsQueries7.oracleSql ++ GtsQueries7.oracleSql ++ GtsQueries8.oracleSql ++ GtsQueries9.oracleSql ++ GtsQueries10.oracleSql ++ StreamQueries.oracleSql
+  lazy val oracleSql: Map[String, String] = registry.oracleSql
 }

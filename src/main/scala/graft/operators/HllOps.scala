@@ -2,14 +2,13 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** Deterministic HyperLogLog (Flajolet et al. 2007) whose estimate is
   * REPRODUCIBLE cross-engine — unlike `approx_count_distinct`
   * (engine-private hashing, h01 is rows-only checked), this sketch is
   * oracle-verifiable bit-for-bit modulo a final round(·,6):
   *
-  * - hash: the portable 60-bit md5 prefix used throughout the repo;
+  * - hash: the repo-wide 60-bit md5 prefix (native [[graft.plans.Md5Hash60]]);
   * - register index = h mod m, rank = leading-zero count of the
   *   remaining 60−p bits computed EXACTLY via the minimal binary-string
   *   length (`bin`), an integer in both engines;
@@ -24,10 +23,6 @@ import org.apache.spark.sql.types.LongType
   */
 object HllOps {
 
-  /** Portable 60-bit hash (first 15 md5 hex digits). */
-  def hash60(c: Column): Column =
-    conv(substring(md5(c.cast("string")), 1, 15), 16, 10).cast(LongType)
-
   /** HLL distinct estimate of `value` per `key`, precision `p`
     * (m = 2^p registers). Returns (key, est) with est rounded to 6
     * decimals. */
@@ -37,7 +32,7 @@ object HllOps {
     // rank = leading zeros of the top restBits bits + 1; bin() of a
     // positive long is its minimal binary repr, so its length is
     // floor(log2)+1 EXACTLY — rank = restBits - length(bin(rest)) + 1
-    val regs = df.select(key.as("k"), hash60(value).as("h"))
+    val regs = df.select(key.as("k"), graft.plans.Md5Hash60.md5Hash60(df.sparkSession, value).as("h"))
       .withColumn("bucket", expr(s"h % $m"))
       .withColumn("rest", expr(s"h div $m")) // integer division
       .withColumn("rho", when(col("rest") === 0, lit(restBits + 1))

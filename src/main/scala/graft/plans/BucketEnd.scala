@@ -1,9 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Native Catalyst expression for the end-anchored bucket tick
@@ -42,18 +41,7 @@ case class BucketEnd(first: Expression, second: Expression, third: Expression)
 
 object BucketEnd {
 
-  /** Register `bucket_end(ts, lastbucket, span)` in the session's
-    * function registry (inputs coerced to LONG). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bucket_end",
-      exprs => BucketEnd(Cast(exprs(0), LongType), Cast(exprs(1), LongType),
-        Cast(exprs(2), LongType)),
-      "built-in")
-
-  /** Column-API form (registers on first use in the session). */
-  def bucketEnd(spark: SparkSession, ts: Column, lastbucket: Column, span: Column): Column = {
-    register(spark)
-    call_function("bucket_end", ts, lastbucket, span)
-  }
+  /** Column-API form of `bucket_end(ts, lastbucket, span)`. */
+  def bucketEnd(spark: SparkSession, ts: Column, lastbucket: Column, span: Column): Column =
+    NativeFunctions.call(spark, "bucket_end", ts, lastbucket, span)
 }

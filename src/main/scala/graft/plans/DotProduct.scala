@@ -1,11 +1,10 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native codegen'd dot product of two `array<double>` columns —
   * value-identical to the repo's original HOF form
@@ -77,17 +76,7 @@ case class DotProduct(left: Expression, right: Expression)
 
 object DotProduct {
 
-  private val Arr = ArrayType(DoubleType)
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product",
-      exprs => DotProduct(Cast(exprs(0), Arr), Cast(exprs(1), Arr)),
-      "built-in")
-
-  /** Column form (registers on first use in the session). */
-  def dot(a: Column, b: Column): Column = {
-    register(SparkSession.active)
-    call_function("dot_product", a, b)
-  }
+  /** Column form of `dot_product(a, b)` (in the active session). */
+  def dot(a: Column, b: Column): Column =
+    NativeFunctions.call(SparkSession.active, "dot_product", a, b)
 }

@@ -7,16 +7,16 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{LongType, StringType}
 
 /** Session extension wiring (SURVEY §4.2 — custom Catalyst work only
-  * where built-ins fall short): registers the native expressions and
+  * where built-ins fall short): registers the [[NativeFunctions]] and
   * injects [[RewriteMd5Prefix]] so SQL/Column code written in the
   * PORTABLE spelling gets the native kernel automatically.
   *
-  * Activate with
-  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
-  * or programmatically via `withExtensions`.
+  * `graft.Session` installs it; elsewhere activate with `withExtensions`
+  * or `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    NativeFunctions.inject(ext)
     ext.injectOptimizerRule(_ => RewriteMd5Prefix)
   }
 }

@@ -4,12 +4,11 @@ import java.util.Arrays
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.MapData
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, LongType, MapType, StringType}
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -108,19 +107,7 @@ object GtsId {
     pos + s.numBytes
   }
 
-  private val labelsType = MapType(StringType, StringType)
-
-  /** Register `gts_id(class, labels)` in the session's function
-    * registry (inputs coerced to STRING and MAP<STRING,STRING>). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gts_id",
-      exprs => GtsId(Cast(exprs(0), StringType), Cast(exprs(1), labelsType)),
-      "built-in")
-
-  /** Column form (registers on first use in the active session). */
-  def gtsId(cls: Column, labels: Column): Column = {
-    register(SparkSession.active)
-    call_function("gts_id", cls, labels)
-  }
+  /** Column form of `gts_id(class, labels)` (in the active session). */
+  def gtsId(cls: Column, labels: Column): Column =
+    NativeFunctions.call(SparkSession.active, "gts_id", cls, labels)
 }

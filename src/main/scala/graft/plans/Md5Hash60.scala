@@ -3,10 +3,9 @@ package graft.plans
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen'd form of the repo-wide portable 60-bit content hash
@@ -60,16 +59,7 @@ object Md5Hash60 {
     acc >>> 4
   }
 
-  /** Register `md5_hash60(s)` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_hash60",
-      exprs => Md5Hash60(Cast(exprs.head, StringType)),
-      "built-in")
-
-  /** Column form (registers on first use in the session). */
-  def md5Hash60(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    call_function("md5_hash60", c)
-  }
+  /** Column form of `md5_hash60(c)`. */
+  def md5Hash60(spark: SparkSession, c: Column): Column =
+    NativeFunctions.call(spark, "md5_hash60", c)
 }

@@ -8,7 +8,7 @@ import graft.text.EmbeddingLSH.{Bits, Dims, weight}
 
 /** LSH-bucketed ANN queries — scale path of similarity search, fully
   * oracle-verified via portable deterministic hyperplanes. */
-object AnnQueries {
+object AnnQueries extends QueryPack {
 
   private def embs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")

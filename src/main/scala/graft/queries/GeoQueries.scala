@@ -18,7 +18,7 @@ import graft.operators.GtsFrame
   * SAME +,−,×,÷ arithmetic rendered to both engines (no trig), so
   * booleans are bit-reproducible; outputs carry only exact columns.
   */
-object GeoQueries {
+object GeoQueries extends QueryPack {
   import GtsQueries.EV
 
   /** Query-constant shapes, parsed from WKT like the reference parses

@@ -17,7 +17,7 @@ import graft.operators.GtsFrame._
   * representable and hash-compare with DuckDB regardless of aggregation
   * order. Raw (unaggregated) doubles pass through bit-identically.
   */
-object GtsQueries {
+object GtsQueries extends QueryPack {
 
   // 2024-01-01 .. 2024-01-31 UTC in µs ticks; events span Jan 2024.
   val T0: Long = 1704067200000000L // 2024-01-01T00:00:00Z

@@ -9,7 +9,7 @@ import graft.operators.SkewOps
 
 /** Tenth pack: skew-salted aggregation equivalence, string encodings
   * (TOB64/TOHEX/STRINGFORMAT), ISO8601 rendering. */
-object GtsQueries10 {
+object GtsQueries10 extends QueryPack {
   import GtsQueries.EV
 
   private val userid = col("labels").getItem("user").as("userid")

@@ -13,7 +13,7 @@ import graft.operators.GtsFrame._
   * entropy/argmax), FILL family completion, calendar & compare & geo
   * mapper families, accessors, sorts, op variants, counters, pivot.
   */
-object GtsQueries2 {
+object GtsQueries2 extends QueryPack {
   import GtsQueries.{EV, LB, DAY, HOUR}
 
   private def gts(s: SparkSession, dir: String) = GtsFrame(Gts.fromEvents(s, dir))

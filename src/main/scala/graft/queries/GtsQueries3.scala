@@ -11,7 +11,7 @@ import graft.operators.GtsFrame._
 
 /** Third GTS pack: calendar bucketize, kernel-weighted smoothing,
   * FETCH count semantics, boolean aggregators, approx distinct. */
-object GtsQueries3 {
+object GtsQueries3 extends QueryPack {
   import GtsQueries.{EV, LB}
 
   private def gts(s: SparkSession, dir: String) = GtsFrame(Gts.fromEvents(s, dir))

@@ -9,7 +9,7 @@ import graft.model.Gts
 
 /** Fourth pack: FETCH boundary semantics, string/regexp mappers over
   * the props payload, TPC-H Q3-shaped join + top-k. */
-object GtsQueries4 {
+object GtsQueries4 extends QueryPack {
   import GtsQueries.{T0, T7}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -10,7 +10,7 @@ import graft.operators.GtsFrame._
 
 /** Fifth pack: op comparison family (+negmask, +ignore-nulls), MAP with
   * ticks override + dedup, TIMEMODULO, filter.latencies. */
-object GtsQueries5 {
+object GtsQueries5 extends QueryPack {
   import GtsQueries.{EV, LB, T0, T7, HOUR, DAY}
 
   private def gts(s: SparkSession, dir: String) = GtsFrame(Gts.fromEvents(s, dir))

@@ -16,7 +16,7 @@ import graft.model.Gts
   * orders below the boundary); ToString only renders integers (double
   * formatting is engine-specific).
   */
-object GtsQueries6 {
+object GtsQueries6 extends QueryPack {
   import GtsQueries.EV
 
   private val userid = col("labels").getItem("user").as("userid")

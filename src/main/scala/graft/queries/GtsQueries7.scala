@@ -14,7 +14,7 @@ import graft.operators.GtsFrame._
   * exact integer sums; see StatOps scaladoc for the determinism
   * contract).
   */
-object GtsQueries7 {
+object GtsQueries7 extends QueryPack {
   import GtsQueries.{T0, LB, DAY, EV}
 
   private def cents(s: SparkSession, dir: String) = GtsFrame(Gts.fromEventsCents(s, dir))

@@ -22,7 +22,7 @@ import graft.operators.GtsFrame._
   * power-of-two weight denominator making every tricube weight an
   * exact dyadic (18 fractional bits).
   */
-object GtsQueries8 {
+object GtsQueries8 extends QueryPack {
   import GtsQueries.{LB, DAY, EV}
 
   private def cents(s: SparkSession, dir: String) = GtsFrame(Gts.fromEventsCents(s, dir))

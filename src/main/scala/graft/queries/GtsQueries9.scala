@@ -11,7 +11,7 @@ import graft.operators.GtsFrame._
 /** Ninth pack: regression/moment statistics (LR, SKEWNESS/KURTOSIS),
   * Haar FDWT, SAX discords, calendar element extraction with DST, and
   * the STL-residual ESD composition (STLESDTEST).  */
-object GtsQueries9 {
+object GtsQueries9 extends QueryPack {
   import GtsQueries.{EV, LB, HOUR, DAY}
 
   private def cents(s: SparkSession, dir: String) = GtsFrame(Gts.fromEventsCents(s, dir))

@@ -9,7 +9,7 @@ import graft.multimodal.MultimodalOps
 import graft.operators.MetaOps
 
 /** FIND / DELETE metadata surface + multimodal feature extraction. */
-object MiscQueries {
+object MiscQueries extends QueryPack {
   import GtsQueries.{EV, T0, T7}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * (the i01 IVF pattern), then the ADC distance-table scoring — and
   * the rankings hash-match bit-for-bit.
   */
-object PqQueries {
+object PqQueries extends QueryPack {
 
   private def embs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")

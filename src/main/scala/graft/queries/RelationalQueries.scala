@@ -12,7 +12,7 @@ import org.apache.spark.sql.expressions.Window
   * Money columns are aggregated as exact integer cents
   * (`round(x*100)` as BIGINT) so sums are engine-order independent.
   */
-object RelationalQueries {
+object RelationalQueries extends QueryPack {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")

@@ -34,7 +34,7 @@ import graft.streaming.{StreamingIngest, StreamingState}
   * with a watermark bounding state (see streaming/StreamingIngest.scala
   * header for the maxpast/maxfuture semantics).
   */
-object StreamQueries {
+object StreamQueries extends QueryPack {
   import GtsQueries.{DAY, EV, HOUR, LB}
 
   private val userid = col("labels").getItem("user").as("userid")
@@ -162,7 +162,7 @@ object StreamQueries {
     }
 
   /** Untimed input builds for the bench (listed under "prewarmed"). */
-  val prewarm: Map[String, (SparkSession, String) => Unit] = Map(
+  override val prewarm: Map[String, (SparkSession, String) => Unit] = Map(
     "s01_stream_ingest" -> ((s, dir) => { evLinesInput(s, dir); () }),
     "s02_stream_sessions" -> ((s, dir) => { evPtsInput(s, dir); () }),
     "s03_stream_latedrop" -> ((s, dir) => { lateDropInput(s, dir); () }),
@@ -171,9 +171,7 @@ object StreamQueries {
     "s06_stream_mobius" -> ((s, dir) => { evLinesInput(s, dir); () }),
   )
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = queriesBase ++ queries2
-
-  private def queriesBase: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "s01_stream_ingest" -> ((s, dir) => {
       val tmp = Files.createTempDirectory("graft-s01-").toString
       val outP = s"$tmp/out"; val ck = s"$tmp/ck"
@@ -387,9 +385,6 @@ object StreamQueries {
         server.stop()
       }
     }),
-  )
-
-  private def queries2: Map[String, (SparkSession, String) => DataFrame] = Map(
     // s07: live line-protocol ingest over the REAL streamupdate
     // WebSocket (StandaloneStreamUpdateHandler.java:142-465): the JDK
     // client pushes every events line in chunked measurement messages,

@@ -10,7 +10,7 @@ import org.apache.spark.sql.expressions.Window
   * These are first-class engine components (BASELINE.json north star),
   * not ports of reference operators.
   */
-object TextQueries {
+object TextQueries extends QueryPack {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet")

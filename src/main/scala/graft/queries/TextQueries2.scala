@@ -13,7 +13,7 @@ import graft.text.TextOps._
   * oracle baselines linear-ish at larger SF; the LSH path is the scale
   * path (no pairwise blowup).
   */
-object TextQueries2 {
+object TextQueries2 extends QueryPack {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet")
@@ -48,7 +48,7 @@ object TextQueries2 {
 
   /** Untimed one-time setup the bench runs before timing a row (the
     * steady-state rows' at-rest artifacts). */
-  val prewarm: Map[String, (SparkSession, String) => Unit] = Map(
+  override val prewarm: Map[String, (SparkSession, String) => Unit] = Map(
     "t44b_incremental_neardup_steady" ->
       ((s, dir) => { t44AtRestIndex(s, dir); () }))
 

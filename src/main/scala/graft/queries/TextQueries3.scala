@@ -10,7 +10,7 @@ import graft.text.{LangId, Winnowing}
   * fingerprints — both exact-integer pipelines, so the DuckDB oracle
   * replays them verbatim (no rounding anywhere).
   */
-object TextQueries3 {
+object TextQueries3 extends QueryPack {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet")

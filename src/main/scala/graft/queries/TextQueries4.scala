@@ -9,7 +9,7 @@ import graft.text.TextOps2
 /** Fourth text pack: retrieval scoring (TF-IDF, BM25) and corpus
   * preparation (PII redaction, sliding-window chunking) — operators a
   * training-data pipeline runs between dedup and packing. */
-object TextQueries4 {
+object TextQueries4 extends QueryPack {
 
   private def docs(s: SparkSession, dir: String) =
     s.read.parquet(s"$dir/documents.parquet")

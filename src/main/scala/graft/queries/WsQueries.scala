@@ -16,7 +16,7 @@ import graft.script.WarpScriptEngine
   * the program compiles to the same Catalyst plan family a native
   * caller gets (the front end adds zero execution-time cost).
   */
-object WsQueries {
+object WsQueries extends QueryPack {
   import GtsQueries.{T0, T7, LB, HOUR, DAY, EV}
 
   private val userid = col("labels").getItem("user").as("userid")
@@ -78,7 +78,7 @@ object WsQueries {
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     df.count()
   }
-  private val queriesA: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // FETCH word (fn/FETCH.java list form, token ignored) ≡ g01
     "w01_ws_fetch" -> ((s, dir) => {
       val program =
@@ -656,10 +656,8 @@ object WsQueries {
         .select(col("class"), userid, col("vdouble").as("mad_v"))
     }),
   )
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    queriesA ++ WsQueriesB.queries
 
-  private val oracleSqlA: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Map(
     // byte-for-byte the oracles of the equivalent native queries
     "w01_ws_fetch" -> GtsQueries.oracleSql("g01_fetch_selector"),
 
@@ -947,5 +945,4 @@ object WsQueries {
          |WHERE g.ts <= $LB
          |GROUP BY 1, 2""".stripMargin,
   )
-  val oracleSql: Map[String, String] = oracleSqlA ++ WsQueriesB.oracleSql
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * against an independent DuckDB derivation (or the literal expected
   * values for scalar words).
   */
-object WsQueries2 {
+object WsQueries2 extends QueryPack {
   import GtsQueries.{LB, DAY, EV}
   import WsQueries.engine
 

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * WsExt5Spec — SipHash-2-4 against the published Aumasson/Bernstein
   * vectors, Morton against hand-computed interleavings).
   */
-object WsQueries3 {
+object WsQueries3 extends QueryPack {
   import GtsQueries.{DAY, EV, LB}
   import WsQueries.engine
 

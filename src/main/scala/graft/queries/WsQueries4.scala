@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * entropy/geo values are rounded to 6 decimals on both sides (the g24
   * precedent) because ln/tan libm ulps differ across engines.
   */
-object WsQueries4 {
+object WsQueries4 extends QueryPack {
   import GtsQueries.{DAY, LB}
   import WsQueries.engine
 

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * Every row runs a real WarpScript program through the engine and is
   * hashed against an independent DuckDB derivation.
   */
-object WsQueries5 {
+object WsQueries5 extends QueryPack {
   import GtsQueries.{DAY, LB, EV}
   import WsQueries.engine
 

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * these rows pin the FACE wiring (parameter pop order, window vs
   * bucket vs cross-series application, null policy), not new math.
   */
-object WsQueries6 {
+object WsQueries6 extends QueryPack {
   import GtsQueries.{DAY, LB, EV}
   import WsQueries.engine
 

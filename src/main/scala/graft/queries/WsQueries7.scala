@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.LongType
   * rounds then follow g99's quantile_cont round replay, extended with
   * the reference's Bessel-sd fallback at MAD 0.
   */
-object WsQueries7 {
+object WsQueries7 extends QueryPack {
   import GtsQueries.{HOUR, LB, EV}
   import WsQueries.engine
 

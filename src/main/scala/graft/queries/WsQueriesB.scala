@@ -13,7 +13,7 @@ import graft.script.WarpScriptEngine
   * Same contract — every row reuses or derives an independent DuckDB
   * oracle; see the [[WsQueries]] Scaladoc.
   */
-object WsQueriesB {
+object WsQueriesB extends QueryPack {
   import GtsQueries.{T0, T7, LB, HOUR, DAY, EV}
   import WsQueries.engine
 

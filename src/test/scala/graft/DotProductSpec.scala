@@ -40,7 +40,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("a null ELEMENT nulls the product, like the HOF fold") {
-    DotProduct.register(spark)
     val r = spark.sql(
       """SELECT dot_product(array(1.0D, CAST(NULL AS DOUBLE)),
         |                   array(1.0D, 1.0D)) AS d""".stripMargin)

@@ -1,0 +1,36 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source scan of src/main and src/test: sessions come from one factory
+  * and native functions are registered from one table. The patterns are
+  * spelled in two halves so this file does not match itself. */
+class SourceGuardSpec extends AnyFunSuite {
+
+  private lazy val sources: Seq[(String, String)] =
+    Seq("src/main", "src/test").flatMap { root =>
+      assert(Files.isDirectory(Paths.get(root)), s"run from the project root: no $root")
+      val walk = Files.walk(Paths.get(root))
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => p.toString -> Files.readString(p)).toList
+      finally walk.close()
+    }
+
+  private def offenders(pattern: String, allowed: String): Seq[String] =
+    sources.collect { case (path, text) if text.contains(pattern) && !path.endsWith(allowed) => path }
+
+  test("a SparkSession is built only in graft/Session.scala") {
+    val hits = offenders("SparkSession" + ".builder", "graft/Session.scala")
+    assert(hits.isEmpty, hits.mkString(", "))
+  }
+
+  test("functions are registered only in plans/NativeFunctions.scala") {
+    val hits = Seq("createOrReplace" + "TempFunction", "register" + "Function")
+      .flatMap(offenders(_, "plans/NativeFunctions.scala"))
+    assert(hits.isEmpty, hits.mkString(", "))
+  }
+}

@@ -5,7 +5,6 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.model.{Gts, LongTable}
-import graft.plans.BucketEnd
 
 class StorageSpec extends SparkSpec {
 
@@ -34,7 +33,6 @@ class StorageSpec extends SparkSpec {
 
   test("bucket_end custom expression: exact, codegen'd, SQL-callable") {
     import spark.implicits._
-    BucketEnd.register(spark)
     // semantics: right-closed end-anchored (BucketizeSpec goldens)
     val df = Seq(100L, 91L, 90L, 81L, 105L).toDF("ts")
       .selectExpr("ts", "bucket_end(ts, 100, 10) AS be")
