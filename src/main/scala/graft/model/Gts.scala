@@ -110,8 +110,6 @@ object Gts {
   def canonicalRehash(df: DataFrame): DataFrame =
     canonical(df.drop("gtsid"))
 
-  private def nullTyped(df: DataFrame): DataFrame = df
-
   /** Read the raw `events` parquet with `ts` normalized to a microsecond
     * LONG tick, whatever encoding the file uses. Driver-generated
     * testdata has shipped `ts` both as TIMESTAMP(NANOS) (Spark reads it

@@ -402,8 +402,7 @@ final case class GtsFrame(df: DataFrame) {
   def mapWindowAtTicks(agg: ValueAgg, pre: Long, ticks: Seq[Long],
                        dedup: Boolean = false): DataFrame = {
     require(pre <= 0, "ticks override implemented for time windows (pre <= 0)")
-    val series = df.groupBy(col("gtsid"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+    val series = Gts.seriesMeta(df)
     val grid = series
       .withColumn("ts", explode(typedlit(ticks.toArray)))
       .withColumn("vdouble", lit(null).cast(DoubleType))
@@ -418,7 +417,9 @@ final case class GtsFrame(df: DataFrame) {
       .filter(col("__grid") === 1)
       .drop("__grid", "vdouble")
       .withColumnRenamed("__mapped", "vdouble")
-    if (dedup) mapped.dropDuplicates("gtsid", "ts") else mapped
+    // duplicate ticks share one range frame, hence one value
+    if (dedup) Gts.aggBySeries(mapped, col("ts"))(max(col("vdouble")).as("vdouble"))
+    else mapped
   }
 
   /** filter.latencies (script/filter/LatencyFilter.java): treat values
@@ -464,12 +465,13 @@ final case class GtsFrame(df: DataFrame) {
       "filter.latencies expects at least one downlink series")
     // packet hashes may be LONG- or DOUBLE-typed points
     val hash = coalesce(col("vdouble"), col("vlong").cast(DoubleType))
-    val u = df.select(col("class").as("__uc"), col("labels").as("__ul"),
+    val u = df.select(col("gtsid"), col("class"), col("labels"),
       col("ts").as("uts"), hash.as("uv"))
-    val d = downlinks.zipWithIndex.map { case (f, i) =>
-      f.df.select(lit(i).as("di"), col("class").as("__dc"),
-        col("labels").as("__dl"), col("ts").as("dts"), hash.as("dv"))
+    val dSeries = downlinks.zipWithIndex.map { case (f, i) =>
+      f.df.select(lit(i).as("di"), col("gtsid"), col("class"), col("labels"),
+        col("ts").as("dts"), hash.as("dv"))
     }.reduce(_ unionByName _)
+    val d = dSeries.select(col("di"), col("dts"), col("dv"))
     val lat = col("dts") - col("uts")
     val j = u.join(d, col("uv") === col("dv") &&
       lat >= lit(minLat) && lat <= lit(maxLat), "left")
@@ -485,11 +487,8 @@ final case class GtsFrame(df: DataFrame) {
         lit(null).cast(StringType).as("vstring"),
         lit(null).cast(BinaryType).as("vbinary"))
     // the uplink is ONE series (the reference returns null otherwise —
-    // enforced at the word branch), so class/labels are constants:
-    // group by the tick alone and carry them with first() — a MAP
-    // column must never be a grouping key
-    val perUp = j.groupBy(col("uts")).agg(
-      first(col("__uc")).as("__uc"), first(col("__ul")).as("__ul"),
+    // enforced at the word branch): one group per uplink tick
+    val perUp = Gts.aggBySeries(j, col("uts"))(
       min(lat).as("__lmin"), max(lat).as("__lmax"),
       count(col("dts")).as("__total"),
       countDistinct(col("di")).as("__withm"),
@@ -502,7 +501,7 @@ final case class GtsFrame(df: DataFrame) {
       "downlinks.withmatches" -> col("__withm"),
       "downlinks.bitset" -> col("__mask"))
     val upOuts = options.filter(upOpt.contains).map { o =>
-      canon(perUp, concat(col("__uc"), lit(":" + o)), col("__ul"),
+      canon(perUp, concat(col("class"), lit(":" + o)), col("labels"),
         col("uts"), upOpt(o))
     }
     val dOptNames = Seq("downlink.latency.min", "downlink.latency.max",
@@ -510,8 +509,7 @@ final case class GtsFrame(df: DataFrame) {
     val dOuts: Seq[DataFrame] =
       if (!options.exists(dOptNames.contains)) Seq.empty
       else {
-        val dmeta = d.groupBy(col("di")).agg(
-          first(col("__dc")).as("__dc"), first(col("__dl")).as("__dl"))
+        val dmeta = Gts.aggBySeries(dSeries, col("di"))()
         val dm = j.filter(col("di").isNotNull)
           .groupBy(col("di"), col("uts")).agg(
             min(lat).as("__dlmin"), max(lat).as("__dlmax"),
@@ -523,7 +521,7 @@ final case class GtsFrame(df: DataFrame) {
           "downlink.latency.max" -> coalesce(col("__dlmax"), lit(-1L)),
           "downlink.matches" -> coalesce(col("__dmatches"), lit(0L)))
         options.filter(dOpt.contains).map { o =>
-          canon(crossed, concat(col("__dc"), lit(":" + o)), col("__dl"),
+          canon(crossed, concat(col("class"), lit(":" + o)), col("labels"),
             col("uts"), dOpt(o))
         }
       }
@@ -552,22 +550,24 @@ final case class GtsFrame(df: DataFrame) {
              byAllLabels: Boolean = false): DataFrame = {
     // NULL bylabels in the reference (GTSHelper.partition: eqcls =
     // ALL the series' labels) — partition identity is the full label
-    // set, keyed here by its canonical sorted rendering
+    // set, keyed here by its key-sorted entries, which also rebuild the
+    // partition's labels
     val keyNames = if (byAllLabels) Seq("__lkey") else byLabels
     val keys =
-      if (byAllLabels) Seq(GtsFrame.labelsKeyCol.as("__lkey"))
+      if (byAllLabels) Seq(sort_array(map_entries(col("labels"))).as("__lkey"))
       else byLabels.map(l => col("labels").getItem(l).as(l))
     val nSeries = df.select(col("gtsid") +: keys: _*).distinct()
       .groupBy(keyNames.map(col): _*).agg(count(lit(1)).as("__nseries"))
-    val extra =
-      if (byAllLabels) Seq(first(col("labels")).as("labels")) else Seq.empty
-    val grouped = df
+    val grouped0 = df
       .select(col("gtsid") +: col("ts") +: col("vdouble") +: col("lat") +:
-        col("lon") +: col("elev") +: col("labels").as("labels") +: keys: _*)
+        col("lon") +: col("elev") +: keys: _*)
       .groupBy(keyNames.map(col) :+ col("ts"): _*)
       .agg(
         agg.column(col("vdouble"), col("ts")).as("vdouble"),
-        (count(col("gtsid")).as("__nmembers") +: extra): _*)
+        count(col("gtsid")).as("__nmembers"))
+    val grouped =
+      if (byAllLabels) grouped0.withColumn("labels", map_from_entries(col("__lkey")))
+      else grouped0
     // nSeries is one row per label partition — always broadcastable.
     // NULL/empty bylabels (one global partition, REDUCE.java:85) makes
     // it a single row: a cross join, not a keyed join.
@@ -730,12 +730,7 @@ final case class GtsFrame(df: DataFrame) {
       max_by(col("vdouble"), col("ts")).as("last_v"),
       min(col("vdouble")).as("min_v"),
       max(col("vdouble")).as("max_v"),
-      count(lit(1)).as("size_v"),
-      // identity columns for the metadata filters (filter.byclass,
-      // filter.bylabels — script/filter/FilterByClass.java family);
-      // constant per series, so first() is exact
-      first(col("class")).as("class_v"),
-      first(col("labels")).as("labels_v"))
+      count(lit(1)).as("size_v"))
     val aggs = anyPred match {
       case Some(p) => baseAggs :+
         max(when(p, lit(1L)).otherwise(lit(0L))).as("any_v")
@@ -746,7 +741,9 @@ final case class GtsFrame(df: DataFrame) {
                                else col("any_v") === 1L)
       case None => pred
     }
-    val keep = df.groupBy(col("gtsid")).agg(aggs.head, aggs.tail: _*)
+    // class and labels ride along for the metadata filters
+    // (filter.byclass, filter.bylabels — script/filter/FilterByClass.java)
+    val keep = Gts.aggBySeries(df)(aggs: _*)
       .filter(fullPred).select(col("gtsid"))
     GtsFrame(df.join(broadcast(keep), Seq("gtsid"), "left_semi"))
   }
@@ -1146,9 +1143,7 @@ final case class GtsFrame(df: DataFrame) {
       .withColumn("__ppt", lag(col("ts"), 1).over(wk))
       .withColumn("__nnv", lead(col("vdouble"), 1).over(wk))
       .withColumn("__nnt", lead(col("ts"), 1).over(wk))
-    val series = df.groupBy(col("gtsid"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
-    val grid = series.withColumn("ts",
+    val grid = Gts.seriesMeta(df).withColumn("ts",
       explode(sequence(lit(lastbucket - (count - 1) * span), lit(lastbucket), lit(span))))
       .join(knots, Seq("gtsid", "ts"), "left")
     val wPrev = Window.partitionBy(col("gtsid")).orderBy(col("ts"))
@@ -1203,9 +1198,7 @@ final case class GtsFrame(df: DataFrame) {
     * point schema (null loc/elev on filled rows) so fill outputs stay
     * composable with every other frame word. */
   private def bucketGrid(lastbucket: Long, span: Long, count: Long): DataFrame = {
-    val series = df.groupBy(col("gtsid"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
-    val grid = series.withColumn("ts",
+    val grid = Gts.seriesMeta(df).withColumn("ts",
       explode(sequence(lit(lastbucket - (count - 1) * span), lit(lastbucket), lit(span))))
     Gts.canonical(grid.join(df.select(col("gtsid"), col("ts"), col("vdouble")),
         Seq("gtsid", "ts"), "left")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DoubleType, IntegerType, LongType}
 
+import graft.model.Gts
+
 /** Whole-series statistics as DECLARATIVE aggregates over exact integer
   * sums — the 100 TB shapes for the reference's per-GTS statistical
   * words. Where the reference materializes each GTS in RAM and loops
@@ -84,9 +86,8 @@ object StatOps {
       .persist(lvl)
     val b = others.df.select(col("gtsid"), col("ts").as("tb"), av.as("vb"))
       .persist(lvl)
-    val bMeta = others.df.groupBy(col("gtsid").as("__g"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"),
-        max(col("ts")).as("lastB"))
+    val bMeta = Gts.aggBySeries(others.df)(max(col("ts")).as("lastB"))
+      .withColumnRenamed("gtsid", "__g")
       .persist(lvl)
 
     def standardized(df: DataFrame, t: String, v: String): DataFrame = {
@@ -364,12 +365,9 @@ object StatOps {
   def linReg(frame: GtsFrame, span: Long, lastbucket: Long): DataFrame = {
     import org.apache.spark.sql.types.LongType
     val x = floor((lit(lastbucket) - col("ts")) / lit(span)).cast(LongType)
-    val b = frame.df.filter(col("ts") <= lastbucket)
-      .groupBy(col("gtsid"), x.as("x"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"),
-        sum(col("vdouble")).as("y"))
-    val g = b.groupBy(col("gtsid")).agg(
-      first(col("class")).as("class"), first(col("labels")).as("labels"),
+    val b = Gts.aggBySeries(frame.df.filter(col("ts") <= lastbucket), x.as("x"))(
+      sum(col("vdouble")).as("y"))
+    val g = Gts.aggBySeries(b)(
       count(lit(1)).cast("double").as("n"),
       sum(col("x")).cast("double").as("sx"), sum(col("y")).as("sy"),
       sum(col("x") * col("y")).as("sxy"),
@@ -395,8 +393,7 @@ object StatOps {
   def momentStats(frame: GtsFrame): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val c = col("vdouble").cast(DecimalType(19, 0))
-    val g = frame.df.groupBy(col("gtsid")).agg(
-      first(col("class")).as("class"), first(col("labels")).as("labels"),
+    val g = Gts.aggBySeries(frame.df)(
       count(lit(1)).cast("double").as("n"),
       sum(col("vdouble")).as("sx"),
       sum(col("vdouble") * col("vdouble")).as("sxx"),
@@ -434,13 +431,9 @@ object StatOps {
     val n = floor((lit(lastbucket) - col("ts")) / lit(span)).cast(LongType)
     // bucket index 0 = OLDEST so the transform reads left-to-right in time
     val idx = lit(nb - 1) - n
-    val aggs = first(col("class")).as("class") +:
-      first(col("labels")).as("labels") +:
+    val g = Gts.aggBySeries(frame.df.filter(col("ts") <= lastbucket && n < nb))(
       (0 until nb).map(i => coalesce(
-        sum(when(idx === i, col("vdouble"))), lit(0.0)).as(s"x$i"))
-    val g = frame.df.filter(col("ts") <= lastbucket && n < nb)
-      .groupBy(col("gtsid"))
-      .agg(aggs.head, aggs.tail: _*)
+        sum(when(idx === i, col("vdouble"))), lit(0.0)).as(s"x$i")): _*)
     var approx: Seq[Column] = (0 until nb).map(i => col(s"x$i"))
     val details = scala.collection.mutable.ArrayBuffer.empty[(String, Column)]
     var lvl = 1
@@ -508,13 +501,10 @@ object StatOps {
                buckets: Int): DataFrame = {
     import org.apache.spark.sql.types.LongType
     val xn = floor((lit(lastbucket) - col("ts")) / lit(span)).cast(LongType)
-    val b = frame.df.filter(col("ts") <= lastbucket && xn < buckets)
-      .groupBy(col("gtsid"), xn.as("x"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"),
-        sum(col("vdouble")).as("y"))
+    val b = Gts.aggBySeries(frame.df.filter(col("ts") <= lastbucket && xn < buckets),
+      xn.as("x"))(sum(col("vdouble")).as("y"))
     val x = col("x").cast("double")
-    val g = b.groupBy(col("gtsid")).agg(
-      first(col("class")).as("class"), first(col("labels")).as("labels"),
+    val g = Gts.aggBySeries(b)(
       count(lit(1)).cast("double").as("n"),
       sum(x).as("sx"), sum(x * x).as("sxx"),
       sum(x * x * x).as("sxxx"), sum(x * x * (x * x)).as("sxxxx"),
@@ -571,12 +561,9 @@ object StatOps {
     val g = Seq(h(3), -h(2), h(1), -h(0)) // quadrature mirror
     val n = floor((lit(lastbucket) - col("ts")) / lit(span)).cast(LongType)
     val idx = lit(buckets - 1) - n // oldest-first
-    val aggs = first(col("class")).as("class") +:
-      first(col("labels")).as("labels") +:
+    val b = Gts.aggBySeries(frame.df.filter(col("ts") <= lastbucket && n < buckets))(
       (0 until buckets).map(i => coalesce(
-        sum(when(idx === i, col("vdouble"))), lit(0.0)).as(s"x$i"))
-    val b = frame.df.filter(col("ts") <= lastbucket && n < buckets)
-      .groupBy(col("gtsid")).agg(aggs.head, aggs.tail: _*)
+        sum(when(idx === i, col("vdouble"))), lit(0.0)).as(s"x$i")): _*)
     def band(w: Seq[Double], nm: String) = (0 until buckets / 2).map { i =>
       (0 until 4).map(k => lit(w(k)) * col(s"x${(2 * i + k) % buckets}"))
         .reduceLeft(_ + _).as(s"$nm$i")
@@ -596,22 +583,22 @@ object StatOps {
   /** DISCORDS (continuum/gts/DISCORDS.java — rarest SAX words mark the
     * most anomalous subsequences): the inverse of [[saxMotifs]]. Words
     * occurring in exactly one series, at most `maxOcc` times, are
-    * discord candidates; the owning series is recovered in the same
-    * aggregation (max == min == the only gtsid). Identical scale shape
-    * to motifs: GROUP BY on the word — no all-pairs distance scan (the
+    * discord candidates; the owning series is the word's only gtsid,
+    * joined back to its per-series row. Identical scale shape to
+    * motifs: GROUP BY on the word — no all-pairs distance scan (the
     * reference's HOTSAX-style search is per-GTS in RAM).
     * Returns (word, class, labels, n_occ).
     */
   def saxDiscords(frame: GtsFrame, win: Int = 4, alphabet: Int = 4,
                   maxOcc: Int = 2, standardize: Boolean = true): DataFrame = {
     val words = saxWindowWords(frame, win, alphabet, standardize)
-    words.groupBy(col("word"), col("gtsid"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"),
-        count(lit(1)).as("n_occ"))
-      .groupBy(col("word"))
-      .agg(count(lit(1)).as("n_series"), first(col("class")).as("class"),
-        first(col("labels")).as("labels"), sum(col("n_occ")).as("n_occ"))
-      .filter(col("n_series") === 1 && col("n_occ") <= maxOcc)
+    val perSeries = Gts.aggBySeries(words, col("word"))(count(lit(1)).as("n_occ"))
+    // at most alphabet^win words: always broadcastable
+    val rare = perSeries.groupBy(col("word"))
+      .agg(count(lit(1)).as("n_series"), min(col("gtsid")).as("gtsid"),
+        sum(col("n_occ")).as("__n"))
+      .filter(col("n_series") === 1 && col("__n") <= maxOcc)
+    perSeries.join(broadcast(rare.select(col("word"), col("gtsid"))), Seq("word", "gtsid"))
       .select(col("word"), col("class"), col("labels"), col("n_occ"))
   }
 
@@ -764,14 +751,11 @@ object StatOps {
     val (wc, ws) = dftWeights(bins)
     import org.apache.spark.sql.types.{IntegerType, LongType}
     val n = floor((lit(lastbucket) - col("ts")) / lit(span)).cast(LongType)
-    val x = frame.df.filter(col("ts") <= lastbucket && n < bins)
-      .groupBy(col("gtsid"), n.as("n"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"),
-        sum(col("vdouble")).as("x"))
+    val x = Gts.aggBySeries(frame.df.filter(col("ts") <= lastbucket && n < bins),
+      n.as("n"))(sum(col("vdouble")).as("x"))
     val m = (pmod(col("k") * col("n"), lit(bins.toLong)) + 1L).cast(IntegerType)
-    x.withColumn("k", explode(sequence(lit(0L), lit(bins - 1L))))
-      .groupBy(col("gtsid"), col("k"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"),
+    Gts.aggBySeries(x.withColumn("k", explode(sequence(lit(0L), lit(bins - 1L)))),
+        col("k"))(
         sum(col("x") * element_at(array(wc.map(lit): _*), m)).as("re"),
         sum(-col("x") * element_at(array(ws.map(lit): _*), m)).as("im"))
       .withColumn("mag", sqrt(col("re") * col("re") + col("im") * col("im")))
@@ -825,9 +809,8 @@ object StatOps {
         col("__jrn") <= col("rn") + halfWidth)
       .select(col("gtsid"), col("class"), col("labels"), col("ts"), col("rn"),
         d.as("d"), col("__y").as("y"), wt.as("w"))
-    val s = p.groupBy(col("gtsid"), col("rn"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"),
-        first(col("ts")).as("ts"),
+    // rn is the series' rank of ts, so ts is a key of the same group
+    val s = Gts.aggBySeries(p, col("rn"), col("ts"))(
         sum(col("w")).as("sw"), sum(col("w") * col("d")).as("swx"),
         sum(col("w") * col("y")).as("swy"),
         sum(col("w") * col("d") * col("d")).as("swxx"),
@@ -938,9 +921,9 @@ object StatOps {
       .partitionBy(col("gtsid")).orderBy(col("ts"), col("vdouble"))
     val ranked = frame.df
       .withColumn("__j", row_number().over(w) - 1) // 0-based rank
+    // class/labels ride in from the ranked side: its partitioning by
+    // gtsid then serves both per-series aggregates below
     val stats = frame.df.groupBy(col("gtsid").as("__g")).agg(
-      first(col("class")).as("class"),
-      first(col("labels")).as("labels"),
       count(lit(1)).as("n"),
       sum(col("vdouble")).as("sx"),
       sum(col("vdouble") * col("vdouble")).as("sxx"))
@@ -950,13 +933,12 @@ object StatOps {
       .withColumn("__to", greatest(
         floor((col("w") + 1) * col("n") / lit(wordLen)).cast("long"),
         col("__from") + 1))
-    // group keys exclude the MAP-typed labels (not groupable): gtsid
-    // is the series identity, labels re-attached via first()
-    val joined = segs.join(ranked.select(col("gtsid"), col("__j"), col("vdouble")),
+    val joined = Gts.aggBySeries(
+      segs.join(ranked.select(col("gtsid"), col("class"), col("labels"), col("__j"),
+          col("vdouble")),
         col("gtsid") === col("__g") &&
-          col("__j") >= col("__from") && col("__j") < col("__to"))
-      .groupBy(col("__g"), col("w"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"),
+          col("__j") >= col("__from") && col("__j") < col("__to")),
+      col("w"))(
         first(col("n")).as("n"), first(col("sx")).as("sx"),
         first(col("sxx")).as("sxx"),
         sum(col("n") * col("vdouble") - col("sx")).as("znum"),
@@ -973,12 +955,10 @@ object StatOps {
       lit(('a' + bps.length).toChar.toString)) {
       case (acc, (bp, i)) => when(paa <= bp, lit(('a' + i).toChar.toString)).otherwise(acc)
     }
-    joined.withColumn("__letter", letter)
-      .groupBy(col("__g"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"),
+    Gts.aggBySeries(joined.withColumn("__letter", letter))(
         array_join(transform(array_sort(collect_list(struct(col("w"), col("__letter")))),
           e => e.getField("__letter")), "").as("word"))
-      .drop("__g")
+      .drop("gtsid")
   }
 
   // ---------------------------------------------------------------------

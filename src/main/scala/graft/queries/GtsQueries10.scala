@@ -92,8 +92,7 @@ object GtsQueries10 extends QueryPack {
     "g105_rangecompact" -> ((s, dir) => {
       val f = Gts.fromEventsCents(s, dir)
       val kept = new graft.kernels.KernelOps(f).rangeCompact(5000.0)
-      val meta = f.groupBy(col("gtsid"))
-        .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+      val meta = Gts.seriesMeta(f)
       kept.join(meta, "gtsid")
         .select(col("class"), userid, col("ts"), col("vdouble").as("cents"))
     }),

@@ -145,8 +145,7 @@ object GtsQueries6 extends QueryPack {
     "g67_ses_general" -> ((s, dir) => {
       val f = Gts.fromEventsCents(s, dir)
       val sm = new graft.kernels.KernelOps(f).expSmooth(0.25)
-      val meta = f.groupBy(col("gtsid"))
-        .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+      val meta = Gts.seriesMeta(f)
       sm.join(meta, "gtsid")
         .select(col("class"), col("labels").getItem("user").as("userid"),
           col("ts"), round(col("vdouble"), 6).as("ses"))
@@ -158,8 +157,7 @@ object GtsQueries6 extends QueryPack {
     "g68_holt_general" -> ((s, dir) => {
       val f = Gts.fromEventsCents(s, dir)
       val sm = new graft.kernels.KernelOps(f).expSmooth(0.25, Some(0.5))
-      val meta = f.groupBy(col("gtsid"))
-        .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+      val meta = Gts.seriesMeta(f)
       sm.join(meta, "gtsid")
         .select(col("class"), col("labels").getItem("user").as("userid"),
           col("ts"), round(col("vdouble"), 6).as("holt"))

@@ -60,8 +60,7 @@ object GtsQueries7 extends QueryPack {
       val f = cents(s, dir).df
         .withColumn("ts", expr(s"(ts - $T0) div 1000000")) // exact: ts >= T0
       val sel = new graft.kernels.KernelOps(f).lttbExact(6)
-      val meta = f.groupBy(col("gtsid"))
-        .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+      val meta = Gts.seriesMeta(f)
       sel.join(meta, "gtsid")
         .select(col("class"), userid, col("ts"), col("vdouble").as("cents"))
     }),
@@ -89,8 +88,7 @@ object GtsQueries7 extends QueryPack {
     "g77_esd_outliers" -> ((s, dir) => {
       val f = cents(s, dir)
       val flagged = StatOps.esdFlag(f, k = 3, alpha = 0.05)
-      val meta = f.df.groupBy(col("gtsid"))
-        .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+      val meta = Gts.seriesMeta(f.df)
       flagged.join(meta, "gtsid")
         .select(col("class"), userid, col("ts"),
           col("vdouble").as("cents"), col("round").cast(IntegerType).as("round"))
@@ -102,9 +100,7 @@ object GtsQueries7 extends QueryPack {
     // is the count-argmax with smallest-value tiebreak
     "g80_prob_mode" -> ((s, dir) => {
       val f = cents(s, dir).df
-      val hist = f.groupBy(col("gtsid"), col("vdouble").as("v"))
-        .agg(first(col("class")).as("class"), first(col("labels")).as("labels"),
-          count(lit(1)).as("cnt"))
+      val hist = Gts.aggBySeries(f, col("vdouble").as("v"))(count(lit(1)).as("cnt"))
       val w = org.apache.spark.sql.expressions.Window.partitionBy(col("gtsid"))
       hist
         .withColumn("n", sum(col("cnt")).over(w))
@@ -121,8 +117,7 @@ object GtsQueries7 extends QueryPack {
     "g79_esd_mad" -> ((s, dir) => {
       val f = cents(s, dir)
       val flagged = StatOps.esdMadFlag(f, k = 3, alpha = 0.05)
-      val meta = f.df.groupBy(col("gtsid"))
-        .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+      val meta = Gts.seriesMeta(f.df)
       flagged.join(meta, "gtsid")
         .select(col("class"), userid, col("ts"),
           col("vdouble").as("cents"), col("round").cast(IntegerType).as("round"))
@@ -146,8 +141,7 @@ object GtsQueries7 extends QueryPack {
       val b = cents(s, dir).bucketize(Sum, LB, DAY).df
         .withColumn("ts", expr(s"(ts - $start) div $DAY")) // day idx 0..29
       val filled = new graft.kernels.KernelOps(b).fillSplineGrid(30)
-      val meta = b.groupBy(col("gtsid"))
-        .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+      val meta = Gts.seriesMeta(b)
       // NO round(): the fixed op order makes every double bit-identical
       // across engines, and round(·,6) itself tie-breaks differently on
       // exact .5 decimal boundaries (observed at sf0.01)
@@ -163,8 +157,7 @@ object GtsQueries7 extends QueryPack {
       val b = cents(s, dir).bucketize(Sum, LB, DAY).df
         .withColumn("ts", expr(s"(ts - $start) div $DAY"))
       val filled = new graft.kernels.KernelOps(b).fillAkimaGrid(30)
-      val meta = b.groupBy(col("gtsid"))
-        .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+      val meta = Gts.seriesMeta(b)
       filled.join(meta, "gtsid")
         .select(col("class"), userid, col("ts"), col("vdouble").as("filled"))
     }),

@@ -163,8 +163,7 @@ object GtsQueries8 extends QueryPack {
         cents(s, dir).bucketize(Sum, GtsQueries.LB, DAY, 8)
           .fillValue(GtsQueries.LB, DAY, 8, 0.0))
       val nf = new graft.kernels.KernelOps(dense.df).fillNewtonMidpoints()
-      val meta = dense.df.groupBy(col("gtsid"))
-        .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+      val meta = Gts.seriesMeta(dense.df)
       nf.join(meta, "gtsid")
         .select(col("class"), col("labels").getItem("user").as("userid"),
           col("ts"), round(col("vdouble"), 6).as("newton"))

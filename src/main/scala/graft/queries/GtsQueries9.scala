@@ -147,8 +147,7 @@ object GtsQueries9 extends QueryPack {
       .withColumn("v", lit(9) * col("detr") - col("ssum"))
     // identity from the RAW frame — rebuilding the dense grid just
     // for class/labels would double the decompose pipeline
-    val meta = raw.df.groupBy(col("gtsid").as("__g"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+    val meta = Gts.seriesMeta(raw.df).withColumnRenamed("gtsid", "__g")
     (dec, meta)
   }
 

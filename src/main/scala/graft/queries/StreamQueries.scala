@@ -287,8 +287,7 @@ object StreamQueries extends QueryPack {
       val ck = s"$tmp/ck"
       val in = evLinesInput(s, dir)
       val src = Gts.fromEvents(s, dir)
-      val directory = src.groupBy(col("gtsid"))
-        .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+      val directory = Gts.seriesMeta(src)
       val plasma = new graft.surface.PlasmaEndpoint(() => directory,
         maxRowsPerBatch = 2000000)
       val server = plasma.mount()

@@ -208,13 +208,10 @@ private[script] object WordsAnalytics {
       val (wc, ws) = StatOps.dftWeights(bins)
       val gid = graft.model.Gts.gtsIdCol(col("class"), col("labels"))
       val m = (pmod(col("k") * col("n"), lit(bins.toLong)) + 1L).cast(IntegerType)
-      val out = df.withColumn("gtsid", gid)
-        .withColumn("n", explode(sequence(lit(0L), lit(bins - 1L))))
-        .groupBy(col("gtsid"), col("n"))
-        .agg(first(col("class")).as("class"), first(col("labels")).as("labels"),
+      val out = graft.model.Gts.aggBySeries(df.withColumn("gtsid", gid)
+          .withColumn("n", explode(sequence(lit(0L), lit(bins - 1L)))), col("n"))(
           (sum(col("re") * element_at(array(wc.map(lit): _*), m) -
             col("im") * element_at(array(ws.map(lit): _*), m)) / bins).as("x"))
-        .drop("gtsid")
       st.push(GtsFrame(graft.model.Gts.canonicalRehash(out.select(col("class"), col("labels"),
         lit(0L).as("gtsid"), col("n").as("ts"),
         lit(null).cast("double").as("lat"), lit(null).cast("double").as("lon"),

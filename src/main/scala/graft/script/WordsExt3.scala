@@ -365,8 +365,7 @@ private[script] object WordsExt3 {
       val grouped = f.df
         .groupBy(col("gtsid"), tick.as("ts"))
         .agg(agg.column(col("vdouble"), col("ts")).cast("double").as("vdouble"))
-      val meta = f.df.groupBy(col("gtsid"))
-        .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+      val meta = graft.model.Gts.seriesMeta(f.df)
       st.push(graft.operators.GtsFrame(grouped.join(meta, "gtsid").select(
         col("class"), col("labels"), col("gtsid"), col("ts"),
         lit(null).cast("double").as("lat"), lit(null).cast("double").as("lon"),

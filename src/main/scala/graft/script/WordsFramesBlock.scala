@@ -479,9 +479,9 @@ private[script] object WordsFramesBlock {
         en.metaPub match {
           case Some(m) => m()
             .filter(GtsFrame.selectorPredicate(c, l))
-            .select(col("gtsid"), col("labels"))
+            .select(col("gtsid"), col("class"), col("labels"))
           case None => en.fetchPub(c, l, Long.MinValue, Long.MaxValue).df
-            .select(col("gtsid"), col("labels"))
+            .select(col("gtsid"), col("class"), col("labels"))
         }
       // activity gate: the series page and the delivered points are
       // restricted to series whose LAST ACTIVITY passes the
@@ -650,13 +650,10 @@ private[script] object WordsFramesBlock {
             .map { case (c, l) => dirMeta(c, l) }
             .reduceLeft(_ unionByName _)
           val matchedMeta = overlayByPair.flatten
-            .map(b => en.materialize(b).df.select(col("gtsid"), col("labels")))
+            .map(b => en.materialize(b).df.select(col("gtsid"), col("class"),
+              col("labels")))
             .foldLeft(storeMeta)(_ unionByName _)
-          // MAP columns cannot pass distinct(): groupBy(gtsid) instead
-          val matched = selectorBound(GtsFrame(matchedMeta))
-            .df.groupBy(col("gtsid"))
-            .agg(org.apache.spark.sql.functions.first(col("labels"))
-              .as("labels"))
+          val matched = graft.model.Gts.seriesMeta(selectorBound(GtsFrame(matchedMeta)).df)
           val companionIds = pExtra.map { cls =>
             matched.select(
               graft.model.Gts.gtsIdCol(lit(cls), col("labels")).as("gtsid"))
@@ -1092,10 +1089,8 @@ private[script] object WordsFramesBlock {
       st.pop() match {
         case b: GtsBuilder => st.push(b.labels.asInstanceOf[Map[Any, Any]])
         case o =>
-          val maps = en.toFrame(o).df
-            .select(col("gtsid"), col("labels")).groupBy(col("gtsid"))
-            .agg(first(col("labels")).as("labels"))
-            .collect().map(_.getMap[String, String](1).toMap).distinct
+          val maps = graft.model.Gts.seriesMeta(en.toFrame(o).df)
+            .collect().map(_.getMap[String, String](2).toMap).distinct
           maps match {
             case Array(one) => st.push(one.asInstanceOf[Map[Any, Any]])
             case _ => throw new IllegalArgumentException(
@@ -1148,8 +1143,7 @@ private[script] object WordsFramesBlock {
       val thr = st.popLong().toInt
       val f = en.toFrame(st.pop())
       val sel = new graft.kernels.KernelOps(f.df).lttbRef(thr, timebased = false)
-      val meta = f.df.groupBy(col("gtsid"))
-        .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+      val meta = graft.model.Gts.seriesMeta(f.df)
       st.push(GtsFrame(sel.join(meta, "gtsid")))
     }
     // FFT surface (continuum/gts/FFT.java): gts bins span lastbucket FFT
@@ -1933,8 +1927,8 @@ private[script] object WordsFramesBlock {
       // selector form: '~regex' (full match, like the reference's
       // Pattern.matches) or '=exact' / bare exact
       val pred =
-        if (sel.startsWith("~")) col("class_v").rlike("^(?:" + sel.substring(1) + ")$")
-        else col("class_v") === sel.stripPrefix("=")
+        if (sel.startsWith("~")) col("class").rlike("^(?:" + sel.substring(1) + ")$")
+        else col("class") === sel.stripPrefix("=")
       st.push(FilterVal(w, pred))
     }
     words("filter.bylabels") { (w, st, en) =>
@@ -1942,8 +1936,8 @@ private[script] object WordsFramesBlock {
       val pred = sel.map { case (k, v) =>
         val s = String.valueOf(v)
         if (s.startsWith("~"))
-          col("labels_v").getItem(k.toString).rlike("^(?:" + s.substring(1) + ")$")
-        else col("labels_v").getItem(k.toString) === s.stripPrefix("=")
+          col("labels").getItem(k.toString).rlike("^(?:" + s.substring(1) + ")$")
+        else col("labels").getItem(k.toString) === s.stripPrefix("=")
       }.reduceOption(_ && _).getOrElse(lit(true))
       st.push(FilterVal(w, pred))
     }
@@ -2013,20 +2007,20 @@ private[script] object WordsFramesBlock {
     words("filter.byselector") { (w, st, en) =>
       val s = graft.sources.Selector.parse(st.popStr())
       val classPred = (s.classExact, s.classRegex) match {
-        case (Some(c), _) => col("class_v") === c
+        case (Some(c), _) => col("class") === c
         case (_, Some(r)) if r == ".*" => lit(true)
-        case (_, Some(r)) => col("class_v").rlike("^(?:" + r + ")$")
+        case (_, Some(r)) => col("class").rlike("^(?:" + r + ")$")
         case _ => lit(true)
       }
       val pred =
         if (s.extended) {
           val la = s.labelAbsent.foldLeft(classPred)((acc, k) =>
-            acc && col("labels_v").getItem(k).isNull)
+            acc && col("labels").getItem(k).isNull)
           val le = s.labelExact.foldLeft(la) { case (acc, (k, v)) =>
-            acc && col("labels_v").getItem(k) === v
+            acc && col("labels").getItem(k) === v
           }
           val lr = s.labelRegex.foldLeft(le) { case (acc, (k, v)) =>
-            acc && col("labels_v").getItem(k).rlike("^(?:" + v + ")$")
+            acc && col("labels").getItem(k).rlike("^(?:" + v + ")$")
           }
           lr && attrStorePred(st,
             s.attrExact.map { case (k, v) => k -> ("=" + v) } ++
@@ -2037,14 +2031,14 @@ private[script] object WordsFramesBlock {
             s.labelExact.map { case (k, v) => k -> ("=" + v) } ++
               s.labelRegex.map { case (k, v) => k -> ("~" + v) }
           val base = s.labelAbsent.foldLeft(classPred)((acc, k) =>
-            acc && col("labels_v").getItem(k).isNull &&
+            acc && col("labels").getItem(k).isNull &&
               attrStorePred(st, Map(k -> "=")))
           comps.foldLeft(base) { case (acc, (k, v)) =>
             val lp =
               if (v.startsWith("~"))
-                col("labels_v").getItem(k).rlike("^(?:" + v.substring(1) + ")$")
-              else col("labels_v").getItem(k) === v.stripPrefix("=")
-            acc && when(col("labels_v").getItem(k).isNotNull, lp)
+                col("labels").getItem(k).rlike("^(?:" + v.substring(1) + ")$")
+              else col("labels").getItem(k) === v.stripPrefix("=")
+            acc && when(col("labels").getItem(k).isNotNull, lp)
               .otherwise(attrStorePred(st, Map(k -> v), matchOnly = true))
           }
         }
@@ -2064,16 +2058,16 @@ private[script] object WordsFramesBlock {
         if (!checkLabels) attrP
         else if (s.isEmpty || s == "=")
           // absence asserted on BOTH sides (FilterByLabels.java:118-125)
-          col("labels_v").getItem(k).isNull && attrP
+          col("labels").getItem(k).isNull && attrP
         else {
           // the label takes PRIORITY: when the key exists as a label its
           // value must match — the attribute is consulted only when the
           // label is absent (FilterByLabels.java:131-155)
           val lp =
             if (s.startsWith("~"))
-              col("labels_v").getItem(k).rlike("^(?:" + s.substring(1) + ")$")
-            else col("labels_v").getItem(k) === s.stripPrefix("=")
-          when(col("labels_v").getItem(k).isNotNull, lp)
+              col("labels").getItem(k).rlike("^(?:" + s.substring(1) + ")$")
+            else col("labels").getItem(k) === s.stripPrefix("=")
+          when(col("labels").getItem(k).isNotNull, lp)
             .otherwise(attrStorePred(st, Map(k -> s), matchOnly = true))
         }
       }.reduceOption(_ && _).getOrElse(lit(true))
@@ -2105,10 +2099,10 @@ private[script] object WordsFramesBlock {
       }
       // the SAME canonical rendering over the aggregate row's labels
       val lkey = concat_ws("\u0001", transform(
-        array_sort(map_entries(col("labels_v"))),
+        array_sort(map_entries(col("labels"))),
         e => concat_ws("\u0002", e.getField("key"), e.getField("value"))))
       val pred = metas.map { case (c, lk) =>
-        col("class_v") === c && lkey === lk
+        col("class") === c && lkey === lk
       }.reduceOption(_ || _).getOrElse(lit(false))
       st.push(FilterVal(w, pred))
     }

@@ -109,8 +109,7 @@ private[script] object WordsGts2 {
       val lonV = p(1) match { case null => None; case v => Some(en.asNum(v)).filterNot(_.isNaN) }
       val elevV = p(2) match { case null => None; case l: Long => Some(l); case _ => None }
       val grid = ticks.toDF("__t")
-      val meta = f.df.groupBy(col("gtsid"))
-        .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+      val meta = graft.model.Gts.seriesMeta(f.df)
       val missing = meta.crossJoin(broadcast(grid))
         .join(f.df.select(col("gtsid").as("__g"), col("ts").as("__ts")),
           col("gtsid") === col("__g") && col("__t") === col("__ts"), "left_anti")
@@ -222,8 +221,7 @@ private[script] object WordsGts2 {
           st.push(sel.matches(b.cls, b.labels, Map.empty))
         case o =>
           val f = en.toFrame(o)
-          val matches = f.df.groupBy(col("gtsid"))
-            .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+          val matches = graft.model.Gts.seriesMeta(f.df)
             .collect()
             .map(r => (r.getLong(0), r.getString(1),
               r.getMap[String, String](2).toMap))
@@ -383,9 +381,7 @@ private[script] object WordsGts2 {
         val filled = g(new graft.kernels.KernelOps(idxDf), b.count.toInt)
           .filter(col("vdouble").isNotNull)
           .withColumn("ts", col("ts") * b.span + first)
-        val meta = b.frame.df.groupBy(col("gtsid"))
-          .agg(org.apache.spark.sql.functions.first(col("class")).as("class"),
-            org.apache.spark.sql.functions.first(col("labels")).as("labels"))
+        val meta = graft.model.Gts.seriesMeta(b.frame.df)
         GtsFrame(graft.model.Gts.canonicalRehash(filled.join(meta, "gtsid")
           .select(col("class"), col("labels"), col("gtsid"), col("ts").cast("long"),
             lit(null).cast("double").as("lat"), lit(null).cast("double").as("lon"),
@@ -451,9 +447,7 @@ private[script] object WordsGts2 {
     val spark = df.sparkSession
     import spark.implicits._
     val first = b.lastbucket - (b.count - 1) * b.span
-    val meta = df.groupBy(col("gtsid"))
-      .agg(org.apache.spark.sql.functions.first(col("class")).as("class"),
-        org.apache.spark.sql.functions.first(col("labels")).as("labels"))
+    val meta = graft.model.Gts.seriesMeta(df)
     val gridDf = spark.range(b.count)
       .select((col("id") * b.span + first).as("__t"))
     val missing = meta.crossJoin(broadcast(gridDf))

@@ -223,8 +223,7 @@ private[script] object WordsStringsBlock {
         case v: Vector[Any @unchecked] => v.flatMap(ofAny)
         case other =>
           val df = en.toFrame(other).df
-          val meta = df.groupBy(col("gtsid")).agg(
-            first(col("class")).as("c"), first(col("labels")).as("l"))
+          val meta = graft.model.Gts.seriesMeta(df)
           WordsGts.collectGuard(meta, "TOSELECTOR")
           meta.collect().toVector
             .map(r => build(r.getString(1),

@@ -155,10 +155,8 @@ object GtsCodec {
 
   /** WRAP: one row per series with metadata + encoded point blob. */
   def wrap(points: DataFrame): DataFrame =
-    points.groupBy(col("gtsid"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"),
-        count(lit(1)).as("npoints"),
-        encodeUdf(sort_array(collect_list(pointStruct))).as("blob"))
+    Gts.aggBySeries(points)(count(lit(1)).as("npoints"),
+      encodeUdf(sort_array(collect_list(pointStruct))).as("blob"))
 
   /** MVSPLIT (reference fn/MVSPLIT.java — split multivalue points whose
     * value is an encoder-per-tick): BINARY-valued points carrying an

@@ -342,16 +342,28 @@ class ExplainSpec extends SparkSpec {
   test("BUCKETIZE, series metadata and metaTable plan as hash aggregates: " +
     "no SortAggregate, no Sort") {
     import graft.operators.GtsFrame.Sum
+    import graft.operators.StatOps
     val f = seriesPoints
+    // (name, plan, sort-free): windowed inputs keep their window Sorts
     val cases = Seq(
-      "bucketize" -> f.bucketize(Sum, 40L, 10L, 4L).df,
-      "bucketizeAuto" -> f.bucketizeAuto(Sum, 0L, 0L, 2L).df,
-      "seriesMeta" -> graft.model.Gts.seriesMeta(f.df),
-      "metaTable" -> graft.model.Gts.metaTable(f.df))
-    cases.foreach { case (name, df) =>
+      ("bucketize", f.bucketize(Sum, 40L, 10L, 4L).df, true),
+      ("bucketizeAuto", f.bucketizeAuto(Sum, 0L, 0L, 2L).df, true),
+      ("seriesMeta", graft.model.Gts.seriesMeta(f.df), true),
+      ("metaTable", graft.model.Gts.metaTable(f.df), true),
+      ("mapWindowAtTicks", f.mapWindowAtTicks(Sum, -10L, Seq(20L, 20L, 40L), dedup = true),
+        false),
+      ("filterSeries", f.filterSeries(col("class") === "m.a").df, true),
+      ("fillValue", f.fillValue(40L, 10L, 4L, 0.0), true),
+      ("fillTrend", f.fillTrend(40L, 10L, 4L), false),
+      ("linReg", StatOps.linReg(f, 10L, 40L), true),
+      ("momentStats", StatOps.momentStats(f), true),
+      ("haarDwt", StatOps.haarDwt(f, 2, 10L, 40L), true),
+      ("saxDiscords", StatOps.saxDiscords(f, 2, 4, 2), false))
+    cases.foreach { case (name, df, sortFree) =>
       val p = plan(df)
       assert(p.contains("HashAggregate"), s"$name\n$p")
-      assert(!p.contains("SortAggregate") && !hasSortNode(p), s"$name\n$p")
+      assert(!p.contains("SortAggregate"), s"$name\n$p")
+      assert(!sortFree || !hasSortNode(p), s"$name\n$p")
     }
     // metadata survives as maps, one row per series
     val meta = graft.model.Gts.metaTable(f.df).collect()

@@ -73,8 +73,7 @@ class PlasmaMobiusSpec extends SparkSpec {
 
   test("plasma: subscribe, TEXT continuation push, list, unsubscribe, clear") {
     val f = fixture
-    val dir = () => f.df.groupBy(col("gtsid"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+    val dir = () => Gts.seriesMeta(f.df)
     val plasma = new PlasmaEndpoint(dir)
     val server = plasma.mount()
     val port = server.start()
@@ -105,8 +104,7 @@ class PlasmaMobiusSpec extends SparkSpec {
 
   test("plasma: FULLTEXT, JSON and byte-compatible WRAPPER formats") {
     val f = fixture
-    val dir = () => f.df.groupBy(col("gtsid"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+    val dir = () => Gts.seriesMeta(f.df)
     val plasma = new PlasmaEndpoint(dir)
     val server = plasma.mount()
     val port = server.start()
@@ -134,8 +132,7 @@ class PlasmaMobiusSpec extends SparkSpec {
 
   test("plasma: SAMPLE thins the push with the session's seeded PRNG") {
     val f = fixture
-    val dir = () => f.df.groupBy(col("gtsid"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+    val dir = () => Gts.seriesMeta(f.df)
     val plasma = new PlasmaEndpoint(dir)
     val server = plasma.mount()
     val port = server.start()
@@ -176,8 +173,7 @@ class PlasmaMobiusSpec extends SparkSpec {
         elev = 120L))
     val df = Gts.canonicalRehash(
       spark.createDataFrame(rows, Gts.pointSchema))
-    val dir = () => df.groupBy(col("gtsid"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+    val dir = () => Gts.seriesMeta(df)
     val plasma = new PlasmaEndpoint(dir)
     val server = plasma.mount()
     val port = server.start()
@@ -246,8 +242,7 @@ class PlasmaMobiusSpec extends SparkSpec {
         GtsType.STRING, null, null, null, "plain", null))
     val df = Gts.canonicalRehash(
       spark.createDataFrame(rows, Gts.pointSchema))
-    val dir = () => df.groupBy(col("gtsid"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+    val dir = () => Gts.seriesMeta(df)
     val plasma = new PlasmaEndpoint(dir)
     val server = plasma.mount()
     val port = server.start()
@@ -283,8 +278,7 @@ class PlasmaMobiusSpec extends SparkSpec {
         .withColumn("vbool", lit(null).cast(BooleanType))
         .withColumn("vstring", lit(null).cast(StringType))
         .withColumn("vbinary", lit(null).cast(BinaryType))))
-    val dir = () => big.df.groupBy(col("gtsid"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+    val dir = () => Gts.seriesMeta(big.df)
     val plasma = new PlasmaEndpoint(dir, maxRowsPerBatch = 25)
     val server = plasma.mount()
     val port = server.start()
@@ -332,8 +326,7 @@ class PlasmaMobiusSpec extends SparkSpec {
 
   test("plasma: RAW pushes AES-wrapped metadata : encoder bytes; invalid verb closes") {
     val f = fixture
-    val dir = () => f.df.groupBy(col("gtsid"))
-      .agg(first(col("class")).as("class"), first(col("labels")).as("labels"))
+    val dir = () => Gts.seriesMeta(f.df)
     val key = (0 until 16).map(_.toByte).toArray
     val plasma = new PlasmaEndpoint(dir, metadataKey = Some(key))
     val server = plasma.mount()

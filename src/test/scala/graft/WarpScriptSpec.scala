@@ -147,6 +147,28 @@ class WarpScriptSpec extends SparkSpec {
       .head == "cpu%20u{dc~$,host=a}")
   }
 
+  test("labels inserted out of key order: WRAP, TOSELECTOR and LABELS output") {
+    val base = GtsFrame(Gts.canonicalRehash(gtsOf(("lo.c", "u", 10L, 1.0),
+      ("lo.c", "u", 20L, 2.0), ("lo.c", "u", 30L, 3.0)).withColumn("labels",
+      map(lit("z"), lit("1"), lit("a"), lit("2"), lit("m"), lit("3")))))
+    val fEng = new WarpScriptEngine(
+      fetch = (cls, labels, s, e) => base.select(cls, labels).timeclip(s, e),
+      nowTs = 0L, session = Some(spark))
+    val fetch = "[ '' 'lo.c' {} 30 100 ] FETCH"
+    val dense = s"[ $fetch bucketizer.sum 30 10 3 ] BUCKETIZE [ 0 0 0 0.0 ] FILLVALUE"
+    // the dense grid's wrapper also carries the bucket fields
+    val wraps = Map(
+      fetch -> "60V3Q5wiNlg2X.4W.I70QF3n.Mc0BF0c6_FJEz.........J43..........40G.1........0N5..",
+      dense -> ("60V3Q5wiNlg2X.4W.I70QF3n.Mc0BF.LE0NJ4VNs6_FJEz.........J43.........." +
+        "40G.1........0N5.."))
+    for (src <- Seq(fetch, dense)) {
+      assert(fEng.run(s"$src WRAP").head == wraps(src), src)
+      assert(fEng.run(s"$src TOSELECTOR").head == "lo.c{a=2,m=3,z=1}", src)
+      assert(fEng.run(s"$src LABELS").head == Map("z" -> "1", "a" -> "2", "m" -> "3"), src)
+      assert(fEng.run(s"$src LABELS ->JSON").head == """{"a":"2","m":"3","z":"1"}""", src)
+    }
+  }
+
   test("binary operator faces: BigDecimal, collections, GTS (r12)") {
     // BigDecimal-exact arithmetic on either operand (ADD.java:77-79)
     assert(top("'0.1' TOBD '0.2' TOBD +").toString == "0.3")
