@@ -407,14 +407,15 @@ object Bench {
       val compact = f"""{"phase":"${phase.getOrElse("final")}","metric":"total","value":$total%.3f${firstPassTotal.map(t => f""","total_single_pass":$t%.3f""").getOrElse("")},"unit":"sec","n":${results.size},"errors":$errs,"cpus":$cpus,"btime":$bootTime,"sf":"$sfDir"}"""
       println(compact)
     }
-    // Also drop a machine-readable copy: the round-5 artifact stored
-    // "parsed": null because sbt's [success] epilogue was the last line.
+    // Also drop a machine-readable copy in the working directory: the
+    // round-5 artifact stored "parsed": null because sbt's [success]
+    // epilogue was the last line.
     // Child shards skip the file write (forked children would clobber
     // the parent's single-pass copy mid-run); the parent and the
     // un-forked fallback own bench_last.json.
     if (!(forked && sys.env.contains("SPARK_GRAFT_SHARD")))
       try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("/root/repo/bench_last.json"), line + "\n")
+        java.nio.file.Paths.get("bench_last.json"), line + "\n")
       catch { case _: Throwable => }
   }
 }

@@ -4,6 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators.GtsFrame
 import graft.operators.GtsFrame._
@@ -74,8 +75,10 @@ final class WarpScriptEngine(
   private[script] def metaPub: Option[() => DataFrame] = meta
 
   /** Run a program over an initially empty stack; returns the final
-    * stack, top first. */
+    * stack, top first. Starts a new program scope: what the previous
+    * program left cached is released first. */
   def run(program: String): List[Any] = {
+    release()
     val st = new State
     try exec(WarpScriptTokenizer.tokenize(program), st)
     catch { case _: WsStopEx => } // fn/STOP.java: silent end of program
@@ -86,10 +89,35 @@ final class WarpScriptEngine(
     * fire, EgressMobiusHandler.java:415: `stack.exec(fmacro)` on a new
     * MemoryWarpScriptStack); returns the final stack, top first. */
   def runMacro(m: WsMacro): List[Any] = {
+    release()
     val st = new State
     try evalMacro(m, st)
     catch { case _: WsStopEx => }
     st.stack.toList
+  }
+
+  /** The program scope: Datasets the current program's words persisted.
+    * They stay cached while the host consumes the program's result and
+    * are unpersisted when the next program starts or on [[release]].
+    * A released frame stays valid; reading it again recomputes it. */
+  private val persisted = mutable.ArrayBuffer.empty[DataFrame]
+
+  /** Persist a word's intermediate for the rest of the program (a pair
+    * of results reading one kernel pass). */
+  private[script] def persistForProgram(df: DataFrame,
+      level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+    persisted += df.persist(level)
+    df
+  }
+
+  /** End the program scope: unpersist what the program's words cached
+    * and drop the frame memos. `run` and `runMacro` call it first; a
+    * host that drops the engine after rendering calls it itself. */
+  def release(): Unit = {
+    persisted.foreach(_.unpersist(blocking = false))
+    persisted.clear()
+    materializeCache.clear()
+    fillValueOrigin.clear()
   }
 
   /** Run a program whose result (top of stack) is a GTS frame (or a
@@ -461,7 +489,8 @@ final class WarpScriptEngine(
     * builder many times ($fix in N FILTER calls, the session-overlay
     * merge per selector) — materializing once per OBJECT keeps the
     * plan subtree shared instead of re-created. Identity-keyed:
-    * builders are immutable (every mutation is a copy()). */
+    * builders are immutable (every mutation is a copy()). Lives for
+    * one program, like [[fillValueOrigin]]: [[release]] clears both. */
   private val materializeCache = new java.util.IdentityHashMap[GtsBuilder, GtsFrame]()
 
   /** FILLVALUE provenance for kernel fusion (r14, guide §2.3): filled

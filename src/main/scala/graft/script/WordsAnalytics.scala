@@ -44,12 +44,13 @@ private[script] object WordsAnalytics {
       // result, pack the SPARSE pre-fill frame and synthesize the
       // dense grid inside the kernel decode — the grid rows never
       // cross the pack exchange (guide §2.3; w54 5.4M → 99k rows)
-      val packed = en.kernelOpsFor(b.frame)
+      // The persist lives for the program (released when the next one
+      // starts): dropping it makes each union branch rerun the kernel.
+      val packed = en.persistForProgram(en.kernelOpsFor(b.frame)
         .stlDecomposeTagged(
           (b.lastbucket, b.span, b.count), p.bpp, p.inner, p.outer,
           p.ns, p.ds, p.js, p.nl, p.dl, p.jl, p.nt, p.dt, p.jt,
-          p.np, p.dp, p.jp)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          p.np, p.dp, p.jp))
       packed.count() // materialize once — the pair's branches would
                      // otherwise race the cache and double the kernel
       def component(which: String): GtsFrame = {

@@ -703,7 +703,7 @@ private[script] object WordsFramesBlock {
           else if (st.accelCache)
             org.apache.spark.storage.StorageLevel.MEMORY_ONLY
           else org.apache.spark.storage.StorageLevel.DISK_ONLY
-        fetched.df.persist(level)
+        en.persistForProgram(fetched.df, level)
       }
       st.push(fetched)
     }
@@ -1242,10 +1242,10 @@ private[script] object WordsFramesBlock {
       require(beta > 0.0 && beta < 1.0,
         "The trend smoothing factor must be in 0 < beta < 1.")
       val f = en.toFrame(st.pop())
-      // persist: both faces of the [level, best-estimate] pair read one
-      // kernel pass
-      val tagged = new graft.kernels.KernelOps(f.df).holtSmooth(alpha, beta)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // persisted for the program: both faces of the [level,
+      // best-estimate] pair read one kernel pass
+      val tagged = en.persistForProgram(
+        new graft.kernels.KernelOps(f.df).holtSmooth(alpha, beta))
       val meta = graft.model.Gts.seriesMeta(f.df)
       st.push(Vector[Any](
         GtsFrame(tagged.filter(col("which") === "s").drop("which")

@@ -39,23 +39,26 @@ final class MobiusEndpoint(engine: () => WarpScriptEngine,
 
   override def onText(c: WsConnection, message: String): Unit = {
     val s = session(c)
-    val stack =
-      try engine().run(message)
-      catch { case e: Exception =>
-        c.sendText(StackJson.render(Vector(String.valueOf(e.getMessage)), maxRows))
-        return
+    val en = engine()
+    try {
+      val stack =
+        try en.run(message)
+        catch { case e: Exception =>
+          c.sendText(StackJson.render(Vector(String.valueOf(e.getMessage)), maxRows))
+          return
+        }
+      stack.headOption match {
+        case Some(m: WsMacro) =>
+          s.mac = Some(m)
+          c.sendText(StackJson.render(stack.tail.toVector, maxRows))
+        case _ =>
+          // a non-macro result does NOT clear a previously registered
+          // macro: the reference only replaces the scheduled macro when
+          // a new one is produced (EgressMobiusHandler keeps the prior
+          // registration otherwise)
+          c.sendText(StackJson.render(stack.toVector, maxRows))
       }
-    stack.headOption match {
-      case Some(m: WsMacro) =>
-        s.mac = Some(m)
-        c.sendText(StackJson.render(stack.tail.toVector, maxRows))
-      case _ =>
-        // a non-macro result does NOT clear a previously registered
-        // macro: the reference only replaces the scheduled macro when a
-        // new one is produced (EgressMobiusHandler keeps the prior
-        // registration otherwise)
-        c.sendText(StackJson.render(stack.toVector, maxRows))
-    }
+    } finally en.release()
   }
 
   private var server: Option[WsServer] = None
@@ -70,10 +73,12 @@ final class MobiusEndpoint(engine: () => WarpScriptEngine,
   def tick(): Unit =
     server.toSeq.flatMap(_.openConnections).foreach { c =>
       Option(c.attachment).map(_ => session(c)).flatMap(_.mac).foreach { m =>
+        val en = engine()
         val out =
-          try StackJson.render(engine().runMacro(m).toVector, maxRows)
+          try StackJson.render(en.runMacro(m).toVector, maxRows)
           catch { case e: Exception =>
             StackJson.render(Vector(String.valueOf(e.getMessage)), maxRows) }
+          finally en.release()
         c.sendText(out)
       }
     }

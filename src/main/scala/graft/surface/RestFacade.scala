@@ -291,8 +291,9 @@ final class RestFacade(
     })
     server.createContext("/api/v0/exec", (ex: HttpExchange) => safely(ex) {
       val program = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-      val stack = engine().run(program)
-      (200, stack.map(renderJson).mkString("[", ",", "]"))
+      val en = engine()
+      try (200, en.run(program).map(renderJson).mkString("[", ",", "]"))
+      finally en.release()
     })
     server.createContext("/api/v0/update", (ex: HttpExchange) => safely(ex) {
       val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)

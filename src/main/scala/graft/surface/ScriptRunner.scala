@@ -145,9 +145,12 @@ final class ScriptRunner(root: Path, engine: () => WarpScriptEngine,
     try {
       val program = prologue(path, period, nowMs) + substitute(
         new String(Files.readAllBytes(Path.of(path)), "UTF-8"))
-      val stack = engine().run(program)
-      synchronized { lastError.remove(path) }
-      onResult(path, stack)
+      val en = engine()
+      try {
+        val stack = en.run(program)
+        synchronized { lastError.remove(path) }
+        onResult(path, stack)
+      } finally en.release()
     } catch {
       // Throwable: a StackOverflowError from a pathological script
       // must surface in lasterror and not kill the worker

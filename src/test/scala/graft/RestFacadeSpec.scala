@@ -303,4 +303,36 @@ class RestFacadeSpec extends SparkSpec {
       assert(tsv.trim.isEmpty)
     } finally facade.stop()
   }
+
+  test("exec releases what the program persisted once the response is written") {
+    import spark.implicits._
+    val (lb, span, n) = (4800L, 100L, 48)
+    val f = GtsFrame(Gts.canonical((0 until n).map { j =>
+      val t = lb - (n - 1 - j) * span
+      ("m.x", Map("user" -> "1"), t, (if ((j % 12) < 6) 50.0 else -50.0) + 0.5 * j)
+    }.toDF("class", "labels", "ts", "vdouble")
+      .withColumn("lat", lit(null).cast(DoubleType))
+      .withColumn("lon", lit(null).cast(DoubleType))
+      .withColumn("elev", lit(null).cast(LongType))
+      .withColumn("vtype", lit(graft.model.GtsType.DOUBLE).cast(ByteType))
+      .withColumn("vlong", lit(null).cast(LongType))
+      .withColumn("vbool", lit(null).cast(BooleanType))
+      .withColumn("vstring", lit(null).cast(StringType))
+      .withColumn("vbinary", lit(null).cast(BinaryType))))
+    val facade = new RestFacade(f,
+      () => new WarpScriptEngine(
+        (cls, labels, a, b) => f.select(cls, labels).timeclip(a, b)))
+    val port = facade.start()
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    try {
+      val baseline = persisted
+      val (code, body) = post(s"http://127.0.0.1:$port/api/v0/exec",
+        s"""[ [ '' '~m\\..*' { } $lb ${lb + 1} ] FETCH
+           |  bucketizer.mean $lb $span $n ] BUCKETIZE
+           |{ 'PERIOD' 12 'BANDWIDTH_S' -1 'BANDWIDTH_L' 1 'BANDWIDTH_T' 1
+           |  'SPEED' 0 } STL""".stripMargin)
+      assert(code == 200 && body.contains("m.x_seasonal") && body.contains("m.x_trend"), body)
+      assert(persisted -- baseline == Set.empty)
+    } finally facade.stop()
+  }
 }

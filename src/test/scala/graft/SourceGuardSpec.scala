@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source scan of src/main and src/test: sessions come from one factory,
-  * native functions are registered from one table, and series metadata
-  * rides through aggregates by one helper. The patterns are spelled in
+  * native functions are registered from one table, series metadata
+  * rides through aggregates by one helper, and script words persist
+  * only through the engine's program scope. The patterns are spelled in
   * two halves so this file does not match itself. */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -43,6 +44,14 @@ class SourceGuardSpec extends AnyFunSuite {
       case (path, text) if firstOverMeta.findFirstIn(text).isDefined &&
         !path.endsWith("model/Gts.scala") => path
     }
+    assert(hits.isEmpty, hits.mkString(", "))
+  }
+
+  test("script words persist only through WarpScriptEngine's program scope") {
+    // a word's persist outlives its program unless the engine registers
+    // it: WarpScriptEngine.persistForProgram is the one way in
+    val hits = offenders("." + "persist(", "script/WarpScriptEngine.scala")
+      .filter(_.contains("src/main/scala/graft/script/"))
     assert(hits.isEmpty, hits.mkString(", "))
   }
 }
