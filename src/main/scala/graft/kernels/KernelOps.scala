@@ -7,11 +7,16 @@ import org.apache.spark.sql.types._
 import SeriesKernels._
 
 /** Spark wrappers for the per-series sequential kernels: parallel across
-  * series (`groupByKey(gtsid).flatMapGroups`), sequential within one —
-  * the reference's own parallelism shape (one thread per GTS, SURVEY §4.2).
+  * series, sequential within one — the reference's own parallelism
+  * shape (one thread per GTS, SURVEY §4.2).
   *
-  * Each method returns a compact result frame keyed by `gtsid`; callers
-  * join [[graft.model.Gts.metaTable]] back when class/labels are needed.
+  * Every method runs through ONE runner, [[perSeries]], which packs
+  * each series together with its metadata ([[graft.model.Gts.aggBySeries]]:
+  * class and the key-sorted label entries ride as grouping keys of the
+  * pack aggregate). So every output carries `class` and `labels`,
+  * appended after the kernel's own columns, as the reference's kernels
+  * return each result GTS with its class and labels attached — no
+  * caller joins metadata back, and the operand is consumed once.
   * At 100 TB the only state held is ONE series per task at a time, and
   * series are assumed to fit an executor (same contract as the
   * reference, which materializes each GTS in RAM).
@@ -21,9 +26,6 @@ final class KernelOps(df: DataFrame,
 
   private val spark = df.sparkSession
   import spark.implicits._
-
-  private def series: Dataset[(Long, Long, Double)] =
-    df.select(col("gtsid"), col("ts"), col("vdouble")).as[(Long, Long, Double)]
 
   /** The packed-points aggregate input: with a [[KernelOps.GridFill]],
     * the df is the SPARSE pre-FILLVALUE frame and null values pack as
@@ -35,48 +37,73 @@ final class KernelOps(df: DataFrame,
       if (gridFill.isEmpty) s else when(col("vdouble").isNotNull, s)))
   }
 
+  /** The per-series runner: each series is packed WITH its metadata,
+    * class/labels carried as grouping keys of the pack aggregate
+    * ([[graft.model.Gts.aggBySeries]]), so the kernel emits them from
+    * the group head. A post-kernel seriesMeta join would re-read (or
+    * re-execute, under cache eviction — the r11 driver run payed 163 s
+    * for that) the whole FETCH→BUCKETIZE→FILL prefix; this is one
+    * pass, zero joins, the prefix consumed exactly once. The Dataset
+    * encoder decodes one (class, labels-map, points) row per SERIES
+    * instead of per point — at w54's 5.4M-point prefix that is 7 500
+    * map decodes, not 5.4M. Points decode as two PRIMITIVE arrays, not
+    * Array[(Long, Double)] — the tuple encoder boxes every point (r13
+    * profile: the kernel stage burned 219 exec-seconds for 5.4M points,
+    * dominated by decode, not by the STL arithmetic). sort_array on
+    * struct(ts, vdouble) is the (ts, v) total order: duplicate ticks
+    * would otherwise make every sequential kernel engine-dependent
+    * (Spark and Scala both order NaN last among doubles). */
   private def perSeries[T: org.apache.spark.sql.Encoder](
-      f: (Long, IndexedSeq[Pt]) => IterableOnce[T]): Dataset[T] =
-    // pack each series with a codegen'd aggregate and decode TWO
-    // PRIMITIVE ARRAYS per series (r13, guide §4): the former
-    // groupByKey over Dataset[(Long, Long, Double)] decoded a boxed
-    // 3-tuple per POINT and boxed-sorted every group; sort_array on
-    // struct(ts, vdouble) is the same (ts, v) total order (duplicate
-    // ticks would otherwise make every sequential kernel — SES/Holt/
-    // LTTB/LOWESS... — engine-dependent; Spark and Scala both order
-    // NaN last among doubles)
-    {
-      val gf = gridFill // capture the value, never `this` (serialization)
-      df.groupBy(col("gtsid"))
-        .agg(packedPts.as("pts"))
-        .select(col("gtsid"), col("pts.ts").as("ticks"),
-          col("pts.vdouble").as("vals"))
-        .as[(Long, Array[Long], Array[Double])]
-        .flatMap { case (id, ticks0, vals0) =>
-          val (ticks, vals) = KernelOps.densify(ticks0, vals0, gf)
-          f(id, IndexedSeq.tabulate(ticks.length)(i => Pt(ticks(i), vals(i))))
-            .iterator
-        }
-    }
+      f: (Long, String, Map[String, String], Array[Long], Array[Double]) => IterableOnce[T])
+      : Dataset[T] = {
+    val gf = gridFill // capture the value, never `this` (serialization)
+    graft.model.Gts.aggBySeries(df)(packedPts.as("pts"))
+      .select(col("gtsid"), col("class"), col("labels"),
+        col("pts.ts").as("ticks"), col("pts.vdouble").as("vals"))
+      .as[(Long, String, Map[String, String], Array[Long], Array[Double])]
+      .flatMap { case (id, cls, lbl, ticks0, vals0) =>
+        val (ticks, vals) = KernelOps.densify(ticks0, vals0, gf)
+        if (ticks.isEmpty) Iterator.empty else f(id, cls, lbl, ticks, vals)
+      }
+  }
+
+  /** A [[SeriesKernels.Pt]] kernel on the runner: its points come back
+    * as (gtsid, ts, vdouble, class, labels). */
+  private def pointKernel(k: IndexedSeq[Pt] => IterableOnce[Pt]): DataFrame =
+    perSeries { (id, cls, lbl, ticks, vals) =>
+      k(KernelOps.points(ticks, vals)).iterator.map(p => (id, p.ts, p.v, cls, lbl))
+    }.toDF("gtsid", "ts", "vdouble", "class", "labels")
+
+  /** A grid filler on the runner: every index 0..gridCount-1 of each
+    * series, knots keeping their original values and every other index
+    * taking `interp(series)(index)` (None fills nothing). Ticks MUST
+    * already be integer grid indexes. Output (gtsid, ts, vdouble,
+    * class, labels), vdouble nullable. */
+  private def fillGrid(gridCount: Int)(
+      interp: IndexedSeq[Pt] => Long => Option[Double]): DataFrame =
+    perSeries { (id, cls, lbl, ticks, vals) =>
+      val pts = KernelOps.points(ticks, vals)
+      val at = interp(pts)
+      val knots = pts.iterator.map(p => p.ts -> p.v).toMap
+      Iterator.range(0, gridCount).map { i =>
+        val x = i.toLong
+        (id, x, knots.get(x).orElse(at(x)), cls, lbl)
+      }
+    }.toDF("gtsid", "ts", "vdouble", "class", "labels")
 
   /** LTTB downsampling to ≤ threshold points per series (fn/LTTB.java). */
   def lttb(threshold: Int): DataFrame =
-    perSeries((id, pts) => SeriesKernels.lttb(pts, threshold).map(p => (id, p.ts, p.v)))
-      .toDF("gtsid", "ts", "vdouble")
+    pointKernel(SeriesKernels.lttb(_, threshold))
 
   /** Oracle-replayable LTTB (exact Long area arithmetic) — see
     * [[SeriesKernels.lttbExact]] for the quantization contract. */
   def lttbExact(threshold: Int): DataFrame =
-    perSeries((id, pts) => SeriesKernels.lttbExact(pts, threshold).map(p => (id, p.ts, p.v)))
-      .toDF("gtsid", "ts", "vdouble")
+    pointKernel(SeriesKernels.lttbExact(_, threshold))
 
   /** The reference's own LTTB arithmetic (LTTB/TLTTB words) — see
     * [[SeriesKernels.lttbReference]]. */
   def lttbRef(threshold: Int, timebased: Boolean): DataFrame =
-    perSeries((id, pts) =>
-      SeriesKernels.lttbReference(pts, threshold, timebased)
-        .map(p => (id, p.ts, p.v)))
-      .toDF("gtsid", "ts", "vdouble")
+    pointKernel(SeriesKernels.lttbReference(_, threshold, timebased))
 
   /** filler.akima (reference filler semantics): Akima sub-spline
     * through each series' knots on grid indexes 0..gridCount-1. Akima
@@ -90,7 +117,7 @@ final class KernelOps(df: DataFrame,
     * engines); n==1 fills nothing; no extrapolation.
     */
   def fillAkimaGrid(gridCount: Int): DataFrame =
-    perSeries[(Long, Long, Option[Double])] { (id, pts) =>
+    fillGrid(gridCount) { pts =>
       val n = pts.length
       val t = pts.map(_.ts.toDouble)
       val v = pts.map(_.v)
@@ -115,25 +142,20 @@ final class KernelOps(df: DataFrame,
           i += 1
         }
       }
-      val knotIdx = pts.iterator.zipWithIndex.map { case (p, i) => p.ts -> i }.toMap
-      (0L until gridCount.toLong).map { x =>
-        knotIdx.get(x) match {
-          case Some(i) => (id, x, Some(v(i)))
-          case None if n >= 2 && x > pts.head.ts && x < pts.last.ts =>
-            var i2 = 1
-            while (pts(i2).ts < x) i2 += 1
-            val i1 = i2 - 1
-            val h = t(i2) - t(i1)
-            val d = x - t(i1)
-            val mi = (v(i2) - v(i1)) / h
-            // Hermite — same term order as the oracle SQL
-            val c = (3.0 * mi - 2.0 * s(i1) - s(i2)) / h
-            val e = (s(i1) + s(i2) - 2.0 * mi) / (h * h)
-            (id, x, Some(v(i1) + s(i1) * d + c * (d * d) + e * (d * d * d)))
-          case None => (id, x, None)
-        }
-      }
-    }.toDF("gtsid", "ts", "vdouble")
+      x =>
+        if (n >= 2 && x > pts.head.ts && x < pts.last.ts) {
+          var i2 = 1
+          while (pts(i2).ts < x) i2 += 1
+          val i1 = i2 - 1
+          val h = t(i2) - t(i1)
+          val d = x - t(i1)
+          val mi = (v(i2) - v(i1)) / h
+          // Hermite — same term order as the oracle SQL
+          val c = (3.0 * mi - 2.0 * s(i1) - s(i2)) / h
+          val e = (s(i1) + s(i2) - 2.0 * mi) / (h * h)
+          Some(v(i1) + s(i1) * d + c * (d * d) + e * (d * d * d))
+        } else None
+    }
 
   /** filler.lowess / filler.rlowess (script/filler/FillerLowess.java:
     * 50-85, FillerRlowess.java:95-115): LOESS-smooth the series' knots
@@ -152,7 +174,7 @@ final class KernelOps(df: DataFrame,
     * rounding. */
   def fillLowessGrid(gridCount: Int, bandwidth: Long, robustness: Int,
                      accuracy: Double): DataFrame =
-    perSeries[(Long, Long, Option[Double])] { (id, pts) =>
+    fillGrid(gridCount) { pts =>
       val n = pts.length
       val t = pts.map(_.ts.toDouble).toArray
       val v = pts.map(_.v).toArray
@@ -165,18 +187,8 @@ final class KernelOps(df: DataFrame,
           Some(new org.apache.commons.math3.analysis.interpolation.LinearInterpolator()
             .interpolate(t, v))
         } else None
-      val knotIdx = pts.iterator.zipWithIndex.map { case (p, i) => p.ts -> i }.toMap
-      (0L until gridCount.toLong).map { x =>
-        knotIdx.get(x) match {
-          case Some(i) => (id, x, Some(v(i)))
-          case None => fn match {
-            case Some(f) if f.isValidPoint(x.toDouble) =>
-              (id, x, Some(f.value(x.toDouble)))
-            case _ => (id, x, None)
-          }
-        }
-      }
-    }.toDF("gtsid", "ts", "vdouble")
+      x => fn.filter(_.isValidPoint(x.toDouble)).map(_.value(x.toDouble))
+    }
 
   /** filler.spline (reference filler semantics): natural cubic spline
     * through each series' knots, evaluated at every grid index
@@ -190,7 +202,7 @@ final class KernelOps(df: DataFrame,
     * linear (all second derivatives zero); n==1 fills nothing.
     */
   def fillSplineGrid(gridCount: Int): DataFrame =
-    perSeries[(Long, Long, Option[Double])] { (id, pts) =>
+    fillGrid(gridCount) { pts =>
       val n = pts.length
       val t = pts.map(_.ts.toDouble)
       val v = pts.map(_.v)
@@ -214,26 +226,20 @@ final class KernelOps(df: DataFrame,
         var j = n - 2
         while (j >= 1) { M(j) = dp(j) - cp(j) * M(j + 1); j -= 1 }
       }
-      val knotIdx = pts.iterator.zipWithIndex.map { case (p, i) => p.ts -> i }.toMap
-      (0L until gridCount.toLong).map { x =>
-        knotIdx.get(x) match {
-          case Some(i) => (id, x, Some(v(i)))
-          case None if n >= 2 && x > pts.head.ts && x < pts.last.ts =>
-            var i2 = 1
-            while (pts(i2).ts < x) i2 += 1
-            val i1 = i2 - 1
-            val hh = t(i2) - t(i1)
-            val u = t(i2) - x
-            val w2 = x - t(i1)
-            // evaluation polynomial — same term order as the oracle SQL
-            val s = (M(i1) * u * u * u + M(i2) * w2 * w2 * w2) / (6.0 * hh) +
-              (v(i1) / hh - M(i1) * hh / 6.0) * u +
-              (v(i2) / hh - M(i2) * hh / 6.0) * w2
-            (id, x, Some(s))
-          case None => (id, x, None)
-        }
-      }
-    }.toDF("gtsid", "ts", "vdouble")
+      x =>
+        if (n >= 2 && x > pts.head.ts && x < pts.last.ts) {
+          var i2 = 1
+          while (pts(i2).ts < x) i2 += 1
+          val i1 = i2 - 1
+          val hh = t(i2) - t(i1)
+          val u = t(i2) - x
+          val w2 = x - t(i1)
+          // evaluation polynomial — same term order as the oracle SQL
+          Some((M(i1) * u * u * u + M(i2) * w2 * w2 * w2) / (6.0 * hh) +
+            (v(i1) / hh - M(i1) * hh / 6.0) * u +
+            (v(i2) / hh - M(i2) * hh / 6.0) * w2)
+        } else None
+    }
 
   /** Deadband compression (ENGINE EXTENSION, g105 — the reference's
     * RANGECOMPACT word is parameterless GTSHelper.compact
@@ -244,35 +250,33 @@ final class KernelOps(df: DataFrame,
     * an integer delta every comparison is exact — the DuckDB oracle
     * replays the recursion verbatim (g105). */
   def rangeCompact(delta: Double): DataFrame =
-    perSeries { (id, pts) =>
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+    pointKernel { pts =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[Pt]
       var lastKept = Double.NaN
       pts.foreach { p =>
         if (lastKept.isNaN || math.abs(p.v - lastKept) > delta) {
-          out += ((id, p.ts, p.v)); lastKept = p.v
+          out += p; lastKept = p.v
         }
       }
       out
-    }.toDF("gtsid", "ts", "vdouble")
+    }
 
   def expSmooth(alpha: Double, beta: Option[Double] = None): DataFrame =
     beta match {
       case Some(b) =>
         holtSmooth(alpha, b).filter(col("which") === "s").drop("which")
-      case None =>
-        perSeries((id, pts) =>
-          singleExpSmoothing(pts, alpha).map(p => (id, p.ts, p.v)))
-          .toDF("gtsid", "ts", "vdouble")
+      case None => pointKernel(singleExpSmoothing(_, alpha))
     }
 
   /** The reference's full DOUBLEEXPONENTIALSMOOTHING result — the
     * (level 's', best-estimate 'b') pair, tagged, one kernel pass
     * (GTSHelper.doubleExponentialSmoothing:9162-9223). */
   def holtSmooth(alpha: Double, beta: Double): DataFrame =
-    perSeries { (id, pts) =>
-      val (s, b) = doubleExpSmoothing(pts, alpha, beta)
-      s.map(p => (id, p.ts, p.v, "s")) ++ b.map(p => (id, p.ts, p.v, "b"))
-    }.toDF("gtsid", "ts", "vdouble", "which")
+    perSeries { (id, cls, lbl, ticks, vals) =>
+      val (s, b) = doubleExpSmoothing(KernelOps.points(ticks, vals), alpha, beta)
+      s.iterator.map(p => (id, p.ts, p.v, "s", cls, lbl)) ++
+        b.iterator.map(p => (id, p.ts, p.v, "b", cls, lbl))
+    }.toDF("gtsid", "ts", "vdouble", "which", "class", "labels")
 
   /** filler.newton (script/filler/FillerNewton.java — the reference
     * precomputes a divided-difference Newton polynomial through ALL
@@ -289,32 +293,15 @@ final class KernelOps(df: DataFrame,
     * trees give identical doubles in any engine.
     */
   def fillNewtonMidpoints(): DataFrame =
-    perSeries[(Long, Long, Double)] { (id, pts) =>
+    pointKernel { pts =>
       val n = pts.length
-      if (n < 2) Iterator.empty
-      else {
-        val xs = pts.map(_.ts.toDouble).toArray
-        val a = pts.map(_.v).toArray
-        var l = 1
-        while (l < n) {
-          var i = n - 1
-          while (i >= l) {
-            a(i) = (a(i) - a(i - 1)) / (xs(i) - xs(i - l))
-            i -= 1
-          }
-          l += 1
-        }
-        (0 until n - 1).iterator.map { j =>
-          // integer midpoint tick (floor), matching the oracle's //2
-          val t = Math.floorDiv(pts(j).ts + pts(j + 1).ts, 2L)
-          val td = t.toDouble
-          var r = a(n - 1)
-          var i = n - 2
-          while (i >= 0) { r = r * (td - xs(i)) + a(i); i -= 1 }
-          (id, t, r)
-        }
+      val (xs, a) = KernelOps.newtonTriangle(pts)
+      (0 until n - 1).iterator.map { j =>
+        // integer midpoint tick (floor), matching the oracle's //2
+        val t = Math.floorDiv(pts(j).ts + pts(j + 1).ts, 2L)
+        Pt(t, KernelOps.horner(xs, a, t.toDouble))
       }
-    }.toDF("gtsid", "ts", "vdouble")
+    }
 
   /** filler.newton over a bucket grid (script/filler/FillerNewton.java
     * evaluated through the FILL word): the same divided-difference
@@ -323,63 +310,47 @@ final class KernelOps(df: DataFrame,
     * matching the spline/akima grid fillers). Knot ticks keep their
     * original values. */
   def fillNewtonGrid(gridCount: Int): DataFrame =
-    perSeries[(Long, Long, Option[Double])] { (id, pts) =>
+    fillGrid(gridCount) { pts =>
       val n = pts.length
-      val xs = pts.map(_.ts.toDouble).toArray
-      val a = pts.map(_.v).toArray
-      if (n >= 2) {
-        var l = 1
-        while (l < n) {
-          var i = n - 1
-          while (i >= l) {
-            a(i) = (a(i) - a(i - 1)) / (xs(i) - xs(i - l))
-            i -= 1
-          }
-          l += 1
-        }
-      }
-      val knotVal = pts.iterator.map(p => p.ts -> p.v).toMap
-      (0L until gridCount.toLong).map { x =>
-        knotVal.get(x) match {
-          case Some(v) => (id, x, Some(v))
-          case None if n >= 2 && x > pts.head.ts && x < pts.last.ts =>
-            val td = x.toDouble
-            var r = a(n - 1)
-            var i = n - 2
-            while (i >= 0) { r = r * (td - xs(i)) + a(i); i -= 1 }
-            (id, x, Some(r))
-          case None => (id, x, None)
-        }
-      }
-    }.toDF("gtsid", "ts", "vdouble")
+      val (xs, a) = KernelOps.newtonTriangle(pts)
+      x =>
+        if (n >= 2 && x > pts.head.ts && x < pts.last.ts)
+          Some(KernelOps.horner(xs, a, x.toDouble))
+        else None
+    }
 
   /** FFT magnitude spectrum per series (continuum/gts/FFT.java). */
   def fftMag(): DataFrame =
-    perSeries((id, pts) =>
-      fftMagnitude(pts.map(_.v).toArray).map { case (k, m) => (id, k, m) })
-      .toDF("gtsid", "freq", "magnitude")
-
-  /** LOWESS smoothing (fn/LOWESS.java). */
-  def lowessSmooth(bandwidth: Double): DataFrame =
-    perSeries((id, pts) => lowess(pts, bandwidth).map(p => (id, p.ts, p.v)))
-      .toDF("gtsid", "ts", "vdouble")
+    perSeries { (id, cls, lbl, _, vals) =>
+      fftMagnitude(vals).iterator.map { case (k, m) => (id, k, m, cls, lbl) }
+    }.toDF("gtsid", "freq", "magnitude", "class", "labels")
 
   /** STL-style decomposition (fn/STL.java): trend/seasonal/residual. */
   def decomposeSeasonal(period: Int): DataFrame =
-    perSeries((id, pts) => decompose(pts, period).map { case (p, t, s, r) =>
-      (id, p.ts, p.v, t, s, r)
-    }).toDF("gtsid", "ts", "vdouble", "trend", "seasonal", "resid")
+    perSeries { (id, cls, lbl, ticks, vals) =>
+      decompose(KernelOps.points(ticks, vals), period).iterator.map {
+        case (p, t, s, r) => (id, p.ts, p.v, t, s, r, cls, lbl)
+      }
+    }.toDF("gtsid", "ts", "vdouble", "trend", "seasonal", "resid", "class", "labels")
 
   /** ZSCORETEST / modified-z (MAD) outliers (GTSOutliersHelper:148-639). */
   def zscoreOutliers(threshold: Double, useMad: Boolean = false): DataFrame =
-    perSeries((id, pts) =>
-      SeriesKernels.zscoreOutliers(pts, threshold, useMad).map(p => (id, p.ts, p.v)))
-      .toDF("gtsid", "ts", "vdouble")
+    pointKernel(SeriesKernels.zscoreOutliers(_, threshold, useMad))
 
-  /** ESDTEST — up to k outliers per series. */
-  def esdOutliers(k: Int, alpha: Double = 0.05): DataFrame =
-    perSeries((id, pts) => esd(pts, k, alpha).map(p => (id, p.ts, p.v)))
-      .toDF("gtsid", "ts", "vdouble")
+  /** ESDTEST, mean/sd variant — the exact-sum rounds of
+    * [[SeriesKernels.esdRounds]] with the λ criticals `lams` (n → λ);
+    * flagged rows as (gtsid, ts, vdouble, round, class, labels). */
+  def esdFlag(k: Int, lams: Map[Int, Double]): DataFrame =
+    perSeries { (id, cls, lbl, ticks, vals) =>
+      esdRounds(ticks, vals, k, lams).map { case (t, v, r) => (id, t, v, r, cls, lbl) }
+    }.toDF("gtsid", "ts", "vdouble", "round", "class", "labels")
+
+  /** ESDTEST, median/MAD variant ([[SeriesKernels.esdMadRounds]]);
+    * same output as [[esdFlag]]. */
+  def esdMadFlag(k: Int, lams: Map[Int, Double]): DataFrame =
+    perSeries { (id, cls, lbl, ticks, vals) =>
+      esdMadRounds(ticks, vals, k, lams).map { case (t, v, r) => (id, t, v, r, cls, lbl) }
+    }.toDF("gtsid", "ts", "vdouble", "round", "class", "labels")
 
   /** STL — the reference's full Seasonal-Trend decomposition based on
     * LOWESS per series (StlKernel.stl — GTSHelper.stl:11357-11765),
@@ -388,57 +359,23 @@ final class KernelOps(df: DataFrame,
                    outer: Int, ns: Int, ds: Int, js: Int,
                    nl: Int, dl: Int, jl: Int, nt: Int, dt: Int, jt: Int,
                    np: Int, dp: Int, jp: Int): DataFrame =
-    perSeries { (id, pts) =>
-      if (pts.isEmpty) Iterator.empty
-      else {
-        val (s, t) = StlKernel.stl(
-          StlKernel.ofPoints(pts.map(_.ts).toArray, pts.map(_.v).toArray,
-            Some(bucket)),
-          bpp, inner, outer, ns, ds, js, nl, dl, jl, nt, dt, jt, np, dp, jp)
-        (0 until s.values).map(i => (id, "seasonal", s.ticks(i), s.vals(i))) ++
-          (0 until t.values).map(i => (id, "trend", t.ticks(i), t.vals(i)))
-      }
-    }.toDF("gtsid", "which", "ts", "vdouble")
+    perSeries { (id, cls, lbl, ticks, vals) =>
+      val (s, t) = StlKernel.stl(StlKernel.ofPoints(ticks, vals, Some(bucket)),
+        bpp, inner, outer, ns, ds, js, nl, dl, jl, nt, dt, jt, np, dp, jp)
+      Iterator.range(0, s.values).map(i => (id, "seasonal", s.ticks(i), s.vals(i), cls, lbl)) ++
+        Iterator.range(0, t.values).map(i => (id, "trend", t.ticks(i), t.vals(i), cls, lbl))
+    }.toDF("gtsid", "which", "ts", "vdouble", "class", "labels")
 
-  /** Series-tagged form of [[perSeries]]: each series is packed WITH
-    * its metadata, class/labels carried as grouping keys of the pack
-    * aggregate ([[graft.model.Gts.aggBySeries]]), so the kernel emits
-    * them from the group head. A post-kernel seriesMeta join would
-    * re-read (or re-execute, under cache eviction — the r11 driver run
-    * payed 163 s for that) the whole FETCH→BUCKETIZE→FILL prefix; this
-    * is one pass, zero joins, the prefix consumed exactly once. The Dataset
-    * encoder decodes one (class, labels-map, points) row per SERIES
-    * instead of per point — at w54's 5.4M-point prefix that is 7 500
-    * map decodes, not 5.4M. Points decode as two PRIMITIVE arrays, not
-    * Array[(Long, Double)] — the tuple encoder boxes every point (r13
-    * profile: the kernel stage burned 219 exec-seconds for 5.4M points,
-    * dominated by decode, not by the STL arithmetic). */
-  private def perSeriesTagged[T: org.apache.spark.sql.Encoder](
-      f: (Long, String, Map[String, String], Array[Long], Array[Double]) => IterableOnce[T])
-      : Dataset[T] = {
-    val gf = gridFill // capture the value, never `this` (serialization)
-    graft.model.Gts.aggBySeries(df)(packedPts.as("pts"))
-      .select(col("gtsid"), col("class"), col("labels"),
-        col("pts.ts").as("ticks"), col("pts.vdouble").as("vals"))
-      .as[(Long, String, Map[String, String], Array[Long], Array[Double])]
-      .flatMap { case (id, cls, lbl, ticks0, vals0) =>
-        val (ticks, vals) = KernelOps.densify(ticks0, vals0, gf)
-        if (ticks.isEmpty) Iterator.empty else f(id, cls, lbl, ticks, vals)
-      }
-  }
-
-  /** STL with class/labels carried THROUGH the kernel (r12): the word
-    * path's [seasonal, trend] pair needs the series metadata back.
-    * Output is PACKED — one (ticks[], vals[]) row per (series,
-    * component), 2 rows per series — so the word path materializes a
-    * few hundred array rows instead of count×2 points; callers
-    * posexplode.
+  /** STL, PACKED (r12): the word path's [seasonal, trend] pair. Output
+    * is one (ticks[], vals[]) row per (series, component), 2 rows per
+    * series — so the word path materializes a few hundred array rows
+    * instead of count×2 points; callers posexplode.
     */
   def stlDecomposeTagged(bucket: (Long, Long, Long), bpp: Int, inner: Int,
                          outer: Int, ns: Int, ds: Int, js: Int,
                          nl: Int, dl: Int, jl: Int, nt: Int, dt: Int, jt: Int,
                          np: Int, dp: Int, jp: Int): DataFrame =
-    perSeriesTagged { (id, cls, lbl, ticks, vals) =>
+    perSeries { (id, cls, lbl, ticks, vals) =>
       val (s, t) = StlKernel.stl(
         StlKernel.ofPoints(ticks, vals, Some(bucket)),
         bpp, inner, outer, ns, ds, js, nl, dl, jl, nt, dt, jt, np, dp, jp)
@@ -452,31 +389,26 @@ final class KernelOps(df: DataFrame,
     * regression per series (StlKernel.rlowess — GTSHelper.rlowess:
     * 10795-11218), with the d-skipping walk and bisquare robustness
     * iterations. `bucket` carries BUCKETIZE metadata; estimates then
-    * cover every bucket tick. Class/labels are carried through the
-    * kernel group, as [[stlDecomposeTagged]] does: the smoothed points
-    * come back as (gtsid, ts, vdouble, class, labels) with no metadata
-    * join over the operand. */
+    * cover every bucket tick. The smoothed points come back as
+    * (gtsid, ts, vdouble, class, labels). */
   def rlowessSmooth(q: Int, r: Int, d: Long, p: Int,
                     bucket: Option[(Long, Long, Long)]): DataFrame =
-    perSeriesTagged { (id, cls, lbl, ticks, vals) =>
+    perSeries { (id, cls, lbl, ticks, vals) =>
       val out = StlKernel.rlowess(StlKernel.ofPoints(ticks, vals, bucket), q, r, d, p)
       Iterator.tabulate(out.values)(i => (id, out.ticks(i), out.vals(i), cls, lbl))
     }.toDF("gtsid", "ts", "vdouble", "class", "labels")
 
   /** HYBRIDTEST/HYBRIDTEST2 — the reference's piecewise seasonal-hybrid
     * ESD per series (StlKernel.hybridTest); returns the anomalous
-    * (gtsid, ts) pairs. */
+    * (gtsid, ts, class, labels) rows. */
   def hybridFlags(bucket: (Long, Long, Long), bpp: Int, ppp: Int, k: Int,
                   alpha: Double, entropy: Boolean,
                   stl16: Option[(Int, Int, Int, Int, Int, Int, Int, Int,
                     Int, Int, Int, Int, Int, Int)]): DataFrame =
-    perSeries { (id, pts) =>
-      if (pts.isEmpty) Iterator.empty
-      else StlKernel.hybridTest(
-        StlKernel.ofPoints(pts.map(_.ts).toArray, pts.map(_.v).toArray,
-          Some(bucket)),
-        bpp, ppp, k, alpha, entropy, stl16).map(t => (id, t))
-    }.toDF("gtsid", "ts")
+    perSeries { (id, cls, lbl, ticks, vals) =>
+      StlKernel.hybridTest(StlKernel.ofPoints(ticks, vals, Some(bucket)),
+        bpp, ppp, k, alpha, entropy, stl16).map(t => (id, t, cls, lbl))
+    }.toDF("gtsid", "ts", "class", "labels")
 
   /** DISCORDS/ZDISCORDS — the reference's HOTSAX-style discord search
     * (continuum/gts/DISCORDS.java:158-516), parallel across series,
@@ -485,35 +417,53 @@ final class KernelOps(df: DataFrame,
   def discords(windowLen: Int, wordLen: Int, alphabetSize: Int, count: Int,
                mayOverlap: Boolean, distRatio: Double,
                standardizePAA: Boolean): DataFrame =
-    perSeries((id, pts) =>
-      SeriesKernels.discords(pts, windowLen, wordLen, alphabetSize, count,
-        mayOverlap, distRatio, standardizePAA).map(p => (id, p.ts, p.v)))
-      .toDF("gtsid", "ts", "vdouble")
+    pointKernel(SeriesKernels.discords(_, windowLen, wordLen, alphabetSize, count,
+      mayOverlap, distRatio, standardizePAA))
 
   /** SAX words per fixed-count window (script/SAXUtils.java; PATTERNS). */
   def saxWords(window: Int, wordLen: Int, alphabet: Int): DataFrame =
-    perSeries { (id, pts) =>
-      pts.grouped(window).filter(_.length == window).map { chunk =>
-        (id, chunk.head.ts, saxWord(chunk.map(_.v), wordLen, alphabet))
+    perSeries { (id, cls, lbl, ticks, vals) =>
+      KernelOps.points(ticks, vals).grouped(window).filter(_.length == window).map { chunk =>
+        (id, chunk.head.ts, saxWord(chunk.map(_.v), wordLen, alphabet), cls, lbl)
       }
-    }.toDF("gtsid", "window_start", "sax_word")
-
-  /** Spline/Akima interpolation of the empty buckets of a bucketized
-    * series (script/filler/FillerSpline|FillerAkima). */
-  def fillInterpolated(lastbucket: Long, span: Long, count: Long,
-                       akima: Boolean): DataFrame = {
-    val grid = (0L until count).map(k => lastbucket - k * span).sorted
-    perSeries { (id, pts) =>
-      val have = pts.map(_.ts).toSet
-      val missing = grid.filterNot(have.contains)
-      val interp = interpolateAt(pts, missing, akima).map(p => (id, p.ts, p.v, true))
-      pts.map(p => (id, p.ts, p.v, false)) ++ interp
-    }.toDF("gtsid", "ts", "vdouble", "interpolated")
-  }
+    }.toDF("gtsid", "window_start", "sax_word", "class", "labels")
 }
 
 object KernelOps {
   def apply(df: DataFrame): KernelOps = new KernelOps(df)
+
+  /** The [[SeriesKernels.Pt]] view of one packed series. */
+  private def points(ticks: Array[Long], vals: Array[Double]): IndexedSeq[Pt] =
+    IndexedSeq.tabulate(ticks.length)(i => Pt(ticks(i), vals(i)))
+
+  /** Newton's divided-difference triangle through every knot, in the
+    * fixed op order the g88 oracle replays: for level l = 1..n−1, for
+    * i = n−1 down to l, a(i) = (a(i) − a(i−1)) / (x(i) − x(i−l)).
+    * Returns (knot ticks, coefficients). */
+  private def newtonTriangle(pts: IndexedSeq[Pt]): (Array[Double], Array[Double]) = {
+    val n = pts.length
+    val xs = pts.map(_.ts.toDouble).toArray
+    val a = pts.map(_.v).toArray
+    var l = 1
+    while (l < n) {
+      var i = n - 1
+      while (i >= l) {
+        a(i) = (a(i) - a(i - 1)) / (xs(i) - xs(i - l))
+        i -= 1
+      }
+      l += 1
+    }
+    (xs, a)
+  }
+
+  /** Horner evaluation of a [[newtonTriangle]] polynomial at `t`:
+    * r = a(n−1); for i = n−2 down to 0, r = r·(t − x(i)) + a(i). */
+  private def horner(xs: Array[Double], a: Array[Double], t: Double): Double = {
+    var r = a(a.length - 1)
+    var i = a.length - 2
+    while (i >= 0) { r = r * (t - xs(i)) + a(i); i -= 1 }
+    r
+  }
 
   /** A FILLVALUE grid fused into the kernel pack (r14): the KernelOps
     * input is the SPARSE pre-fill frame; every kernel sees the dense
@@ -581,24 +531,5 @@ object KernelOps {
       dtw(x.map(_.getDouble(1)).toIndexedSeq, y.map(_.getDouble(1)).toIndexedSeq))
     side(a, "va").join(side(b, "vb"), byLabel)
       .select(col(byLabel), dtwUdf(col("va"), col("vb")).as("dtw_dist"))
-  }
-
-  /** CORRELATE two sides at integer lags (continuum/gts/CORRELATE.java). */
-  def correlatePairs(a: DataFrame, b: DataFrame, byLabel: String,
-                     lags: Seq[Int]): DataFrame = {
-    def side(d: DataFrame, out: String) =
-      d.select(col("labels").getItem(byLabel).as(byLabel),
-          col("ts"), col("vdouble"))
-        .groupBy(col(byLabel))
-        .agg(sort_array(collect_list(struct(col("ts"), col("vdouble"))))
-          .as(out))
-    val corrUdf = udf((x: Seq[org.apache.spark.sql.Row], y: Seq[org.apache.spark.sql.Row]) =>
-      correlateAtLags(x.map(_.getDouble(1)).toIndexedSeq,
-        y.map(_.getDouble(1)).toIndexedSeq, lags))
-    side(a, "va").join(side(b, "vb"), byLabel)
-      .select(col(byLabel),
-        explode(corrUdf(col("va"), col("vb"))).as("lag_corr"))
-      .select(col(byLabel), col("lag_corr._1").as("lag"),
-        col("lag_corr._2").as("corr"))
   }
 }

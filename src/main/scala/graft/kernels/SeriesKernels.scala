@@ -395,6 +395,100 @@ object SeriesKernels {
     cands.result().take(lastSignificant + 1)
   }
 
+  /** The exact-sum generalized ESD rounds behind StatOps.esdFlag
+    * (GTSOutliersHelper.ESDTest:329-415, mean/sd variant): each round
+    * removes the max-|N·x − Σx| point (ties: smallest ts, then value)
+    * and tests z = (a/n)/√((Σx²−(Σx)²/n)/(n−1)) against `lams(n)`;
+    * every removal up to the LAST significant round is flagged.
+    * Returns (ts, value, round). */
+  def esdRounds(ticks: Array[Long], vals: Array[Double], k: Int,
+                lams: Map[Int, Double]): Iterator[(Long, Double, Int)] = {
+    val remaining = scala.collection.mutable.ArrayBuffer.tabulate(ticks.length)(
+      i => (ticks(i), vals(i)))
+    var n = remaining.length.toDouble
+    var sx = 0.0; var sxx = 0.0
+    remaining.foreach { case (_, v) => sx += v; sxx += v * v }
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Int, Boolean)]
+    var r = 1
+    while (r <= k) {
+      if (n >= 3 && n * sxx - sx * sx > 0) {
+        var bi = -1; var ba = 0.0; var bts = 0L; var bv = 0.0
+        var i = 0
+        while (i < remaining.length) {
+          val (ts, v) = remaining(i)
+          val a = math.abs(n * v - sx)
+          if (bi < 0 || a > ba || (a == ba &&
+              (ts < bts || (ts == bts && v < bv)))) {
+            bi = i; ba = a; bts = ts; bv = v
+          }
+          i += 1
+        }
+        val z = (ba / n) / math.sqrt((sxx - sx * sx / n) / (n - 1.0))
+        out += ((bts, bv, r, z > lams.getOrElse(n.toInt, Double.MaxValue)))
+        remaining.remove(bi)
+        n -= 1.0; sx -= bv; sxx -= bv * bv
+      }
+      r += 1
+    }
+    flaggedPrefix(out)
+  }
+
+  /** The median/MAD ESD rounds behind StatOps.esdMadFlag
+    * (GTSOutliersHelper.ESDTest useMedian=true): per round med = the
+    * exact-interpolation median of the survivors, mad = median of
+    * |x − med|, selection key |x − med| (same tie order as
+    * [[esdRounds]]), z = |0.6745·(x − med)/mad|; mad == 0 stops the
+    * series. Returns (ts, value, round). */
+  def esdMadRounds(ticks: Array[Long], vals: Array[Double], k: Int,
+                   lams: Map[Int, Double]): Iterator[(Long, Double, Int)] = {
+    // exact-interpolation percentile p=0.5 over a SORTED array — the
+    // same lower + (higher−lower)·frac form Spark's Percentile uses;
+    // exact for integer/dyadic inputs, so bit-identical to the oracle
+    def median(sorted: scala.collection.Seq[Double]): Double = {
+      val pos = 0.5 * (sorted.length - 1)
+      val lo = pos.toInt
+      if (lo == pos) sorted(lo)
+      else sorted(lo) + (sorted(lo + 1) - sorted(lo)) * (pos - lo)
+    }
+    val remaining = scala.collection.mutable.ArrayBuffer.tabulate(ticks.length)(
+      i => (ticks(i), vals(i)))
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Int, Boolean)]
+    var r = 1
+    while (r <= k) {
+      val n = remaining.length.toDouble
+      if (n >= 3) {
+        val med = median(remaining.map(_._2).sorted)
+        val mad = median(remaining.map(p => math.abs(p._2 - med)).sorted)
+        if (mad > 0) {
+          var bi = -1; var ba = 0.0; var bts = 0L; var bv = 0.0
+          var i = 0
+          while (i < remaining.length) {
+            val (ts, v) = remaining(i)
+            val a = math.abs(v - med)
+            if (bi < 0 || a > ba || (a == ba &&
+                (ts < bts || (ts == bts && v < bv)))) {
+              bi = i; ba = a; bts = ts; bv = v
+            }
+            i += 1
+          }
+          val z = math.abs(0.6745 * (bv - med) / mad)
+          out += ((bts, bv, r, z > lams.getOrElse(n.toInt, Double.MaxValue)))
+          remaining.remove(bi)
+        }
+      }
+      r += 1
+    }
+    flaggedPrefix(out)
+  }
+
+  /** ESD's retroactive flagging: every round up to the last
+    * significant one. */
+  private def flaggedPrefix(out: collection.Seq[(Long, Double, Int, Boolean)])
+      : Iterator[(Long, Double, Int)] = {
+    val last = out.collect { case o if o._4 => o._3 }.maxOption.getOrElse(0)
+    out.iterator.filter(_._3 <= last).map(o => (o._1, o._2, o._3))
+  }
+
   /** Dynamic time warping distance (full DP, the public algorithm of
     * fn/DTW.java / script/fastdtw). */
   def dtw(a: IndexedSeq[Double], b: IndexedSeq[Double]): Double = {

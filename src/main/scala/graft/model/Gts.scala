@@ -90,9 +90,11 @@ object Gts {
     }: _*)
   }
 
-  /** One (gtsid, class, labels) row per series of `points` — the side
-    * table kernel words join back onto their compact per-series
-    * results. */
+  /** One (gtsid, class, labels) row per series of `points` — a series
+    * directory (FETCH's match set, the REST and Plasma directories, the
+    * series axis of the FILL grids). Per-series kernels need none: they
+    * carry class and labels through their own pack
+    * ([[graft.kernels.KernelOps]]). */
   def seriesMeta(points: DataFrame): DataFrame = aggBySeries(points)()
 
   /** Normalize an arbitrary projection into the canonical column order,

@@ -59,20 +59,6 @@ final case class GtsFrame(df: DataFrame) {
       .filter(col("__rn") <= count).drop("__rn"))
   }
 
-  /** FETCH gskip/gcount — series-level pagination (fn/FETCH.java:325-331
-    * and :1561-1584): skip the first `gskip` matching series, keep the
-    * next `gcount`, in series-id order (the reference sorts metadatas by
-    * their (classId, labelsId) SipHash pair, MetadataIdComparator; our
-    * stable `gtsid` plays that role). Rank runs on the DISTINCT series
-    * ids — metadata-scale, range-partitioned via [[RankOps.globalRank]],
-    * never a single-partition global sort — then a semi-join prunes the
-    * point table. */
-  def seriesPage(gskip: Long, gcount: Long): GtsFrame = {
-    if (gskip <= 0 && gcount == Long.MaxValue) return this
-    GtsFrame(df.join(GtsFrame.pageIds(df, gskip, gcount),
-      Seq("gtsid"), "left_semi"))
-  }
-
   /** FETCH per-point post-filters skip/timestep/step/sample/count, in
     * the reference's storage-scan order (StandaloneStoreClient.java:
     * 398-487 — the store iterates each series NEWEST-first):
@@ -1210,49 +1196,6 @@ final case class GtsFrame(df: DataFrame) {
       .withColumn("vbool", lit(null).cast(BooleanType))
       .withColumn("vstring", lit(null).cast(StringType))
       .withColumn("vbinary", lit(null).cast(BinaryType)))
-  }
-
-  // ---------------------------------------------------------------------
-  // Advanced per-bucket aggregations needing two passes
-  // ---------------------------------------------------------------------
-
-  /** bucketizer.mad — median absolute deviation per 1-series bucket
-    * (script/aggregator/MAD.java): median(|x - median(x)|). Two hash
-    * aggregations; both shuffles are on the same key so AQE coalesces.
-    */
-  def bucketizeMad(lastbucket: Long, span: Long): DataFrame = {
-    val b = withBucket(lastbucket, span)
-    val med = b.groupBy(col("gtsid"), col("__bucket"))
-      .agg(percentile(col("vdouble"), lit(0.5)).as("__med"))
-    b.join(med, Seq("gtsid", "__bucket"))
-      .groupBy(col("gtsid"), col("__bucket"))
-      .agg(percentile(abs(col("vdouble") - col("__med")), lit(0.5)).as("mad"))
-      .withColumnRenamed("__bucket", "ts")
-  }
-
-  /** reducer.shannonentropy.0 (script/aggregator/ShannonEntropy.java):
-    * entropy of the per-bucket value distribution, −Σ p·ln p. */
-  def bucketizeEntropy(lastbucket: Long, span: Long): DataFrame = {
-    val b = withBucket(lastbucket, span)
-    val counts = b.groupBy(col("gtsid"), col("__bucket"), col("vdouble"))
-      .agg(count(lit(1)).as("__c"))
-    val totals = Window.partitionBy(col("gtsid"), col("__bucket"))
-    counts.withColumn("__n", sum(col("__c")).over(totals))
-      .groupBy(col("gtsid"), col("__bucket"))
-      .agg((-sum((col("__c") / col("__n")) * log(col("__c") / col("__n"))))
-        .as("entropy"))
-      .withColumnRenamed("__bucket", "ts")
-  }
-
-  /** bucketizer.mean.circular (script/aggregator/CircularMean.java):
-    * atan2 of mean sin / mean cos of the value seen as an angle within
-    * `period` (the reference takes the period as a parameter). */
-  def bucketizeCircularMean(lastbucket: Long, span: Long, period: Double): DataFrame = {
-    val b = withBucket(lastbucket, span)
-    val ang = col("vdouble") * (2.0 * math.Pi / period)
-    b.groupBy(col("gtsid"), col("__bucket"))
-      .agg(atan2(avg(sin(ang)), avg(cos(ang))).as("circmean"))
-      .withColumnRenamed("__bucket", "ts")
   }
 
   /** COUNTERDELTA/RESETS compensation (fn/COUNTERDELTA.java,

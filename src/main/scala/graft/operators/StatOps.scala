@@ -224,8 +224,8 @@ object StatOps {
     * critical value λ_N = (N−1)·t/√((N−2+t²)·N),
     * t = TDist(N−2).invCDF(1 − α/(2N)).
     *
-    * Runs as a PER-SERIES KERNEL (one shuffle on gtsid, k rounds in
-    * memory per series — the reference's own shape, one GTS per
+    * Runs as a PER-SERIES KERNEL ([[graft.kernels.KernelOps.esdFlag]]:
+    * one series pack, k rounds in memory per series — the reference's own shape, one GTS per
     * thread): a declarative k-round unrolling is expressible but costs
     * ~6 shuffles × k rounds of scheduler latency for zero parallelism
     * gain, since every round is sequentially dependent. Determinism:
@@ -236,50 +236,11 @@ object StatOps {
     * expression tree ((a/n)/√((Σx²−(Σx)²/n)/(n−1))) so the final
     * IEEE-rounded doubles are bit-identical. The t-quantile λs are
     * driver-computed literals per N (shared with the oracle SQL).
-    * Returns flagged rows (gtsid, ts, vdouble, round).
+    * Returns flagged rows (gtsid, ts, vdouble, round, class, labels).
     */
   def esdFlag(frame: GtsFrame, k: Int = 3, alpha: Double = 0.05,
-              maxN: Int = 64): DataFrame = {
-    val spark = frame.df.sparkSession
-    import spark.implicits._
-    val lams = lambdas(alpha, maxN)
-    frame.df.select(col("gtsid"), col("ts"), col("vdouble"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (id: Long, it: Iterator[(Long, Long, Double)]) =>
-        val remaining = scala.collection.mutable.ArrayBuffer.from(
-          it.map(t => (t._2, t._3)))
-        var n = remaining.length.toDouble
-        var sx = 0.0; var sxx = 0.0
-        remaining.foreach { case (_, v) => sx += v; sxx += v * v }
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[(Long, Long, Double, Int, Boolean)]
-        var r = 1
-        while (r <= k) {
-          if (n >= 3 && n * sxx - sx * sx > 0) {
-            var bi = -1; var ba = 0.0; var bts = 0L; var bv = 0.0
-            var i = 0
-            while (i < remaining.length) {
-              val (ts, v) = remaining(i)
-              val a = math.abs(n * v - sx)
-              if (bi < 0 || a > ba || (a == ba &&
-                  (ts < bts || (ts == bts && v < bv)))) {
-                bi = i; ba = a; bts = ts; bv = v
-              }
-              i += 1
-            }
-            val z = (ba / n) / math.sqrt((sxx - sx * sx / n) / (n - 1.0))
-            out += ((id, bts, bv, r, z > lams.getOrElse(n.toInt, Double.MaxValue)))
-            remaining.remove(bi)
-            n -= 1.0; sx -= bv; sxx -= bv * bv
-          }
-          r += 1
-        }
-        val last = out.collect { case o if o._5 => o._4 }.maxOption.getOrElse(0)
-        out.iterator.filter(_._4 <= last).map(o => (o._1, o._2, o._3, o._4))
-      }
-      .toDF("gtsid", "ts", "vdouble", "round")
-  }
+              maxN: Int = 64): DataFrame =
+    new graft.kernels.KernelOps(frame.df).esdFlag(k, lambdas(alpha, maxN))
 
   /** ESD, median/MAD variant (GTSOutliersHelper.ESDTest useMedian=true):
     * per round, med = exact-interpolation median of the remaining cents
@@ -297,60 +258,10 @@ object StatOps {
     esdMadFlagAt(frame.df, k, lambdas(alpha, maxN))
 
   /** [[esdMadFlag]] with an explicit λ map (large fixed-n compositions
-    * like g99) over any (gtsid, ts, vdouble) frame. */
+    * like g99) over any (gtsid, ts, vdouble, class, labels) frame. */
   def esdMadFlagAt(df: DataFrame, k: Int,
-                   lams: Map[Int, Double]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    // exact-interpolation percentile p=0.5 over a SORTED array — the
-    // same lower + (higher−lower)·frac form Spark's Percentile uses;
-    // exact for integer/dyadic inputs, so bit-identical to the oracle
-    def median(sorted: scala.collection.Seq[Double]): Double = {
-      val pos = 0.5 * (sorted.length - 1)
-      val lo = pos.toInt
-      if (lo == pos) sorted(lo)
-      else sorted(lo) + (sorted(lo + 1) - sorted(lo)) * (pos - lo)
-    }
-    df.select(col("gtsid"), col("ts"), col("vdouble"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (id: Long, it: Iterator[(Long, Long, Double)]) =>
-        val remaining = scala.collection.mutable.ArrayBuffer.from(
-          it.map(t => (t._2, t._3)))
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[(Long, Long, Double, Int, Boolean)]
-        var r = 1
-        while (r <= k) {
-          val n = remaining.length.toDouble
-          if (n >= 3) {
-            val med = median(remaining.map(_._2).sorted)
-            val mad = median(remaining.map(p => math.abs(p._2 - med)).sorted)
-            if (mad > 0) {
-              var bi = -1; var ba = 0.0; var bts = 0L; var bv = 0.0
-              var i = 0
-              while (i < remaining.length) {
-                val (ts, v) = remaining(i)
-                val a = math.abs(v - med)
-                if (bi < 0 || a > ba || (a == ba &&
-                    (ts < bts || (ts == bts && v < bv)))) {
-                  bi = i; ba = a; bts = ts; bv = v
-                }
-                i += 1
-              }
-              val z = math.abs(0.6745 * (bv - med) / mad)
-              out += ((id, bts, bv, r,
-                z > lams.getOrElse(n.toInt, Double.MaxValue)))
-              remaining.remove(bi)
-            }
-          }
-          r += 1
-        }
-        val last = out.collect { case o if o._5 => o._4 }.maxOption.getOrElse(0)
-        out.iterator.filter(_._4 <= last).map(o => (o._1, o._2, o._3, o._4))
-      }
-      .toDF("gtsid", "ts", "vdouble", "round")
-  }
-
+                   lams: Map[Int, Double]): DataFrame =
+    new graft.kernels.KernelOps(df).esdMadFlag(k, lams)
 
   /** LR (fn/LR.java semantics — least-squares line through a series):
     * regress the per-bucket integer sums y over the bucket index x.

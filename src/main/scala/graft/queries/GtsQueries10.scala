@@ -91,9 +91,7 @@ object GtsQueries10 extends QueryPack {
     // kernel vs a recursive-CTE replay (the g67 idiom), exact cents
     "g105_rangecompact" -> ((s, dir) => {
       val f = Gts.fromEventsCents(s, dir)
-      val kept = new graft.kernels.KernelOps(f).rangeCompact(5000.0)
-      val meta = Gts.seriesMeta(f)
-      kept.join(meta, "gtsid")
+      new graft.kernels.KernelOps(f).rangeCompact(5000.0)
         .select(col("class"), userid, col("ts"), col("vdouble").as("cents"))
     }),
 

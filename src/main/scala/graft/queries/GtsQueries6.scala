@@ -144,9 +144,7 @@ object GtsQueries6 extends QueryPack {
     // max points per series). round 6 absorbs FMA-contraction ulps.
     "g67_ses_general" -> ((s, dir) => {
       val f = Gts.fromEventsCents(s, dir)
-      val sm = new graft.kernels.KernelOps(f).expSmooth(0.25)
-      val meta = Gts.seriesMeta(f)
-      sm.join(meta, "gtsid")
+      new graft.kernels.KernelOps(f).expSmooth(0.25)
         .select(col("class"), col("labels").getItem("user").as("userid"),
           col("ts"), round(col("vdouble"), 6).as("ses"))
     }),
@@ -156,9 +154,7 @@ object GtsQueries6 extends QueryPack {
     // recursive-CTE-replay pairing (two state columns in the CTE)
     "g68_holt_general" -> ((s, dir) => {
       val f = Gts.fromEventsCents(s, dir)
-      val sm = new graft.kernels.KernelOps(f).expSmooth(0.25, Some(0.5))
-      val meta = Gts.seriesMeta(f)
-      sm.join(meta, "gtsid")
+      new graft.kernels.KernelOps(f).expSmooth(0.25, Some(0.5))
         .select(col("class"), col("labels").getItem("user").as("userid"),
           col("ts"), round(col("vdouble"), 6).as("holt"))
     }),

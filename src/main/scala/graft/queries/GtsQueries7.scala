@@ -59,9 +59,7 @@ object GtsQueries7 extends QueryPack {
     "g71_lttb" -> ((s, dir) => {
       val f = cents(s, dir).df
         .withColumn("ts", expr(s"(ts - $T0) div 1000000")) // exact: ts >= T0
-      val sel = new graft.kernels.KernelOps(f).lttbExact(6)
-      val meta = Gts.seriesMeta(f)
-      sel.join(meta, "gtsid")
+      new graft.kernels.KernelOps(f).lttbExact(6)
         .select(col("class"), userid, col("ts"), col("vdouble").as("cents"))
     }),
 
@@ -86,10 +84,7 @@ object GtsQueries7 extends QueryPack {
     // driver literals, retroactive prefix flagging — the oracle unrolls
     // the identical rounds as CTEs
     "g77_esd_outliers" -> ((s, dir) => {
-      val f = cents(s, dir)
-      val flagged = StatOps.esdFlag(f, k = 3, alpha = 0.05)
-      val meta = Gts.seriesMeta(f.df)
-      flagged.join(meta, "gtsid")
+      StatOps.esdFlag(cents(s, dir), k = 3, alpha = 0.05)
         .select(col("class"), userid, col("ts"),
           col("vdouble").as("cents"), col("round").cast(IntegerType).as("round"))
     }),
@@ -115,10 +110,7 @@ object GtsQueries7 extends QueryPack {
     // ESD median/MAD variant (useMedian=true branch): medians of cents
     // are dyadic rationals so every round's med/mad/selection is exact
     "g79_esd_mad" -> ((s, dir) => {
-      val f = cents(s, dir)
-      val flagged = StatOps.esdMadFlag(f, k = 3, alpha = 0.05)
-      val meta = Gts.seriesMeta(f.df)
-      flagged.join(meta, "gtsid")
+      StatOps.esdMadFlag(cents(s, dir), k = 3, alpha = 0.05)
         .select(col("class"), userid, col("ts"),
           col("vdouble").as("cents"), col("round").cast(IntegerType).as("round"))
     }),
@@ -140,12 +132,10 @@ object GtsQueries7 extends QueryPack {
       val start = LB - 29 * DAY
       val b = cents(s, dir).bucketize(Sum, LB, DAY).df
         .withColumn("ts", expr(s"(ts - $start) div $DAY")) // day idx 0..29
-      val filled = new graft.kernels.KernelOps(b).fillSplineGrid(30)
-      val meta = Gts.seriesMeta(b)
       // NO round(): the fixed op order makes every double bit-identical
       // across engines, and round(·,6) itself tie-breaks differently on
       // exact .5 decimal boundaries (observed at sf0.01)
-      filled.join(meta, "gtsid")
+      new graft.kernels.KernelOps(b).fillSplineGrid(30)
         .select(col("class"), userid, col("ts"), col("vdouble").as("filled"))
     }),
 
@@ -156,9 +146,7 @@ object GtsQueries7 extends QueryPack {
       val start = LB - 29 * DAY
       val b = cents(s, dir).bucketize(Sum, LB, DAY).df
         .withColumn("ts", expr(s"(ts - $start) div $DAY"))
-      val filled = new graft.kernels.KernelOps(b).fillAkimaGrid(30)
-      val meta = Gts.seriesMeta(b)
-      filled.join(meta, "gtsid")
+      new graft.kernels.KernelOps(b).fillAkimaGrid(30)
         .select(col("class"), userid, col("ts"), col("vdouble").as("filled"))
     }),
 

@@ -162,9 +162,7 @@ object GtsQueries8 extends QueryPack {
       val dense = GtsFrame(
         cents(s, dir).bucketize(Sum, GtsQueries.LB, DAY, 8)
           .fillValue(GtsQueries.LB, DAY, 8, 0.0))
-      val nf = new graft.kernels.KernelOps(dense.df).fillNewtonMidpoints()
-      val meta = Gts.seriesMeta(dense.df)
-      nf.join(meta, "gtsid")
+      new graft.kernels.KernelOps(dense.df).fillNewtonMidpoints()
         .select(col("class"), col("labels").getItem("user").as("userid"),
           col("ts"), round(col("vdouble"), 6).as("newton"))
     })

@@ -122,11 +122,10 @@ object GtsQueries9 extends QueryPack {
     // doubles); oracle = the g94 decomposition prefix + the g79
     // quantile_cont round replay with the large-n λ criticals
     "g99_stl_esd_mad" -> ((s, dir) => {
-      val (dec, meta) = stlScaledResid(s, dir)
+      val (dec, _) = stlScaledResid(s, dir)
       val lams = StatOps.lambdasAt(0.05, Seq(214, 215, 216))
-      val flagged = StatOps.esdMadFlagAt(
-        dec.select(col("gtsid"), col("ts"), col("v").as("vdouble")), 3, lams)
-      flagged.join(broadcast(meta), col("gtsid") === col("__g"))
+      StatOps.esdMadFlagAt(dec.select(col("gtsid"), col("ts"),
+          col("v").as("vdouble"), col("class"), col("labels")), 3, lams)
         .select(col("class"), col("labels").getItem("user").as("userid"),
           col("ts"), col("vdouble").as("v"),
           col("round").cast(IntegerType).as("round"))
@@ -135,7 +134,8 @@ object GtsQueries9 extends QueryPack {
 
   /** Shared STL-residual pipeline for g94/g99: classical decomposition
     * on the 240-bucket hourly grid, residuals scaled to exact integers
-    * (scnt uniformly 9), plus the identity frame for the join-back. */
+    * (scnt uniformly 9), plus the identity frame for g94's join-back
+    * (its Long ESD kernel carries no class/labels). */
   private def stlScaledResid(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     val raw = cents(s, dir)

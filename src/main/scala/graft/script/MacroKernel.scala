@@ -3,7 +3,7 @@ package graft.script
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.model.{Gts, GtsType}
+import graft.model.GtsType
 
 /** Distributed execution of MACRO* adapter words (fn/MACROMAPPER.java,
   * MACROREDUCER, MACROBUCKETIZER, MACROFILTER): the macro's token
@@ -19,8 +19,10 @@ private[script] object MacroKernel {
       labels: Map[String, String], ts: Long, lat: Option[Double],
       lon: Option[Double], elev: Option[Long], v: Double)
 
-  final case class OPt(gtsid: Long, ts: Long, lat: Option[Double],
-      lon: Option[Double], elev: Option[Long], v: Double)
+  /** Kernel output point; class and labels ride from the input point. */
+  final case class OPt(gtsid: Long, cls: String, labels: Map[String, String],
+      ts: Long, lat: Option[Double], lon: Option[Double], elev: Option[Long],
+      v: Double)
 
   private def pts(df: DataFrame): Dataset[MPt] = {
     val spark = df.sparkSession
@@ -56,7 +58,7 @@ private[script] object MacroKernel {
     }
     stack.headOption match {
       case Some(l: Vector[Any @unchecked]) if l.length == 5 =>
-        numOpt(l(4)).map(v => OPt(at.gtsid, l(0).asInstanceOf[Long],
+        numOpt(l(4)).map(v => OPt(at.gtsid, at.cls, at.labels, l(0).asInstanceOf[Long],
           numOpt(l(1)).filterNot(_.isNaN), numOpt(l(2)).filterNot(_.isNaN),
           l(3) match {
             case null => None
@@ -66,10 +68,11 @@ private[script] object MacroKernel {
             case o => throw new IllegalArgumentException(s"bad elev $o")
           }, v))
       case Some(l: Vector[Any @unchecked]) if l.length == 2 =>
-        numOpt(l(1)).map(v => OPt(at.gtsid, l(0).asInstanceOf[Long],
-          None, None, None, v))
+        numOpt(l(1)).map(v => OPt(at.gtsid, at.cls, at.labels,
+          l(0).asInstanceOf[Long], None, None, None, v))
       case Some(v) =>
-        numOpt(v).map(x => OPt(at.gtsid, tick, at.lat, at.lon, at.elev, x))
+        numOpt(v).map(x => OPt(at.gtsid, at.cls, at.labels, tick, at.lat, at.lon,
+          at.elev, x))
       case None => None
     }
   }
@@ -99,7 +102,7 @@ private[script] object MacroKernel {
       }
       (if (occurrences > 0) res.take(occurrences.toInt) else res).toSeq
     }
-    finish(out.toDF(), df)
+    finish(out.toDF())
   }
 
   /** BUCKETIZE with a macro bucketizer: one evaluation per non-empty
@@ -119,7 +122,7 @@ private[script] object MacroKernel {
           params(bucketEnd, win.head.cls, win.head.labels, win)),
           bucketEnd, win.head).map(_.copy(ts = bucketEnd)).toSeq
       }
-    finish(out.toDF(), df)
+    finish(out.toDF())
   }
 
   /** REDUCE with a macro reducer: tick-aligned groups over the label
@@ -172,9 +175,9 @@ private[script] object MacroKernel {
   }
 
   /** Rebuild the canonical 13-column frame from kernel output. */
-  private def finish(out: DataFrame, src: DataFrame): DataFrame =
-    out.join(Gts.seriesMeta(src), "gtsid").select(
-      col("class"), col("labels"), col("gtsid"), col("ts"),
+  private def finish(out: DataFrame): DataFrame =
+    out.select(
+      col("cls").as("class"), col("labels"), col("gtsid"), col("ts"),
       col("lat"), col("lon"), col("elev"),
       lit(GtsType.DOUBLE).as("vtype"),
       lit(null).cast("long").as("vlong"), col("v").as("vdouble"),

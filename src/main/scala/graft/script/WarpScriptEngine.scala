@@ -262,8 +262,7 @@ final class WarpScriptEngine(
     val f = toFrame(st.pop())
     GtsFrame(new graft.kernels.KernelOps(f.df)
       .discords(windowLen, wordLen, alphabet, count, overlap, distRatio,
-        standardizePAA)
-      .join(graft.model.Gts.seriesMeta(f.df), "gtsid"))
+        standardizePAA))
   }
 
   private def exec(tokens: Vector[WsToken], st: State): Unit = {

@@ -124,9 +124,7 @@ private[script] object WordsAnalytics {
       val counts = remFrame.df.groupBy(col("gtsid")).count()
         .select(col("count")).distinct().collect().map(_.getLong(0).toInt)
       val ns = counts.flatMap(c => math.max(c - k + 1, 3) to c).distinct.toSeq
-      st.push(GtsFrame(
-        StatOps.esdMadFlagAt(remFrame.df, k, StatOps.lambdasAt(alpha, ns))
-          .join(graft.model.Gts.seriesMeta(remFrame.df), "gtsid")))
+      st.push(GtsFrame(StatOps.esdMadFlagAt(remFrame.df, k, StatOps.lambdasAt(alpha, ns))))
     }
 
     // HYBRIDTEST / HYBRIDTEST2 (fn/HYBRIDTEST.java, HYBRIDTEST2.java →
@@ -173,7 +171,8 @@ private[script] object WordsAnalytics {
       val flags = en.kernelOpsFor(b.frame).hybridFlags(
         (b.lastbucket, b.span, b.count), bpp, ppp, k, alpha,
         entropy = w == "HYBRIDTEST2", stl16)
-      st.push(GtsFrame(b.frame.df.join(flags, Seq("gtsid", "ts"))))
+      st.push(GtsFrame(b.frame.df.join(flags.select(col("gtsid"), col("ts")),
+        Seq("gtsid", "ts"))))
     }
 
     // ---- DTW variants (fn/DTW.java registry flags, faithful r11):

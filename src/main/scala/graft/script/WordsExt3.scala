@@ -362,11 +362,9 @@ private[script] object WordsExt3 {
       val f = en.framesOf(args.take(n - 4))
       val local = from_utc_timestamp(timestamp_micros(col("ts")), tz)
       val tick = unix_micros(to_utc_timestamp(date_trunc(unit, local), tz))
-      val grouped = f.df
-        .groupBy(col("gtsid"), tick.as("ts"))
-        .agg(agg.column(col("vdouble"), col("ts")).cast("double").as("vdouble"))
-      val meta = graft.model.Gts.seriesMeta(f.df)
-      st.push(graft.operators.GtsFrame(grouped.join(meta, "gtsid").select(
+      val grouped = graft.model.Gts.aggBySeries(f.df, tick.as("ts"))(
+        agg.column(col("vdouble"), col("ts")).cast("double").as("vdouble"))
+      st.push(graft.operators.GtsFrame(grouped.select(
         col("class"), col("labels"), col("gtsid"), col("ts"),
         lit(null).cast("double").as("lat"), lit(null).cast("double").as("lon"),
         lit(null).cast("long").as("elev"),

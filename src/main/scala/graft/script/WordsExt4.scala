@@ -96,37 +96,37 @@ private[script] object WordsExt4 {
       val f = en.toFrame(st.pop())
       val spark = f.df.sparkSession
       import spark.implicits._
-      val pts = f.df.select(col("gtsid"), col("ts"), col("lat"),
-          col("lon"), col("elev"), col("vdouble"))
-        .as[(Long, Long, Option[Double], Option[Double], Option[Long], Option[Double])]
-      val kept = pts.groupByKey(_._1).flatMapGroups { (_, it) =>
-        val rows = it.toIndexedSeq.sortBy(r => (r._2, r._6.getOrElse(Double.NaN)))
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val out = scala.collection.mutable.ArrayBuffer(rows.head)
-          var last: Option[(Double, Double)] =
-            rows.head._3.zip(rows.head._4)
-          var i = 1
-          while (i < rows.length - 1) {
-            val r = rows(i)
-            r._3.zip(r._4) match {
-              case Some((la, lo)) =>
-                last match {
-                  case None => last = Some((la, lo)); out += r
-                  case Some((pla, plo)) =>
-                    if (loxodromic(pla, plo, la, lo) >= dist) {
-                      last = Some((la, lo)); out += r
-                    }
-                }
-              case None => // unlocated interior points are dropped
-            }
-            i += 1
+      // one (class, labels, points) row per series: the labels map
+      // decodes once per series, not per point
+      val packed = Gts.aggBySeries(f.df)(collect_list(struct(col("ts").as("_1"),
+        col("lat").as("_2"), col("lon").as("_3"), col("elev").as("_4"),
+        col("vdouble").as("_5"))).as("pts"))
+        .as[(Long, String, Map[String, String],
+          Seq[(Long, Option[Double], Option[Double], Option[Long], Option[Double])])]
+      val kept = packed.flatMap { case (id, cls, lbl, pts) =>
+        val rows = pts.sortBy(r => (r._1, r._5.getOrElse(Double.NaN)))
+        val out = scala.collection.mutable.ArrayBuffer(rows.head)
+        var last: Option[(Double, Double)] = rows.head._2.zip(rows.head._3)
+        var i = 1
+        while (i < rows.length - 1) {
+          val r = rows(i)
+          r._2.zip(r._3) match {
+            case Some((la, lo)) =>
+              last match {
+                case None => last = Some((la, lo)); out += r
+                case Some((pla, plo)) =>
+                  if (loxodromic(pla, plo, la, lo) >= dist) {
+                    last = Some((la, lo)); out += r
+                  }
+              }
+            case None => // unlocated interior points are dropped
           }
-          if (rows.length > 1) out += rows.last
-          out.iterator
+          i += 1
         }
-      }.toDF("gtsid", "ts", "lat", "lon", "elev", "vdouble")
-      st.push(GtsFrame(kept.join(Gts.seriesMeta(f.df), "gtsid")))
+        if (rows.length > 1) out += rows.last
+        out.iterator.map(r => (id, r._1, r._2, r._3, r._4, r._5, cls, lbl))
+      }.toDF("gtsid", "ts", "lat", "lon", "elev", "vdouble", "class", "labels")
+      st.push(GtsFrame(kept))
     }
 
     // ---- PIVOTSTRICT (fn/PIVOT.java synchronous=true): label data

@@ -1142,9 +1142,7 @@ private[script] object WordsFramesBlock {
     words("LTTB") { (w, st, en) =>
       val thr = st.popLong().toInt
       val f = en.toFrame(st.pop())
-      val sel = new graft.kernels.KernelOps(f.df).lttbRef(thr, timebased = false)
-      val meta = graft.model.Gts.seriesMeta(f.df)
-      st.push(GtsFrame(sel.join(meta, "gtsid")))
+      st.push(GtsFrame(new graft.kernels.KernelOps(f.df).lttbRef(thr, timebased = false)))
     }
     // FFT surface (continuum/gts/FFT.java): gts bins span lastbucket FFT
     // → per-series spectrum rows (k, re, im, mag); see StatOps.dft
@@ -1228,8 +1226,7 @@ private[script] object WordsFramesBlock {
       require(alpha > 0.0 && alpha < 1.0,
         "The smoothing factor must be in 0 < alpha < 1.")
       val f = en.toFrame(st.pop())
-      st.push(GtsFrame(new graft.kernels.KernelOps(f.df).expSmooth(alpha)
-        .join(graft.model.Gts.seriesMeta(f.df), "gtsid")))
+      st.push(GtsFrame(new graft.kernels.KernelOps(f.df).expSmooth(alpha)))
     }
     // DOUBLEEXPONENTIALSMOOTHING (fn/DOUBLEEXPONENTIALSMOOTHING.java →
     // GTSHelper.doubleExponentialSmoothing:9162-9223, faithful r11):
@@ -1246,12 +1243,9 @@ private[script] object WordsFramesBlock {
       // best-estimate] pair read one kernel pass
       val tagged = en.persistForProgram(
         new graft.kernels.KernelOps(f.df).holtSmooth(alpha, beta))
-      val meta = graft.model.Gts.seriesMeta(f.df)
       st.push(Vector[Any](
-        GtsFrame(tagged.filter(col("which") === "s").drop("which")
-          .join(meta, "gtsid")),
-        GtsFrame(tagged.filter(col("which") === "b").drop("which")
-          .join(meta, "gtsid"))))
+        GtsFrame(tagged.filter(col("which") === "s").drop("which")),
+        GtsFrame(tagged.filter(col("which") === "b").drop("which"))))
     }
     // ZSCORETEST (fn/ZSCORETEST.java): gts useMedian threshold → flagged
     // points; useMedian selects median/MAD (modified z), else mean with
@@ -1269,7 +1263,7 @@ private[script] object WordsFramesBlock {
       val flagged =
         if (useMedian) graft.operators.StatOps.esdMadFlag(f, k, alpha)
         else graft.operators.StatOps.esdFlag(f, k, alpha)
-      st.push(GtsFrame(flagged.join(graft.model.Gts.seriesMeta(f.df), "gtsid")))
+      st.push(GtsFrame(flagged))
     }
     // RESETS (fn/RESETS.java): gts decreasing:BOOLEAN RESETS — the flag
     // selects the counter direction (true = decreasing counter, a

@@ -515,7 +515,7 @@ private[script] object WordsGts {
       val flagged =
         if (useMad) graft.operators.StatOps.esdMadFlag(f, 1, 0.05)
         else graft.operators.StatOps.esdFlag(f, 1, 0.05)
-      st.push(GtsFrame(flagged.join(graft.model.Gts.seriesMeta(f.df), "gtsid")))
+      st.push(GtsFrame(flagged))
     }
 
     // MONOTONIC (fn/MONOTONIC.java): clamp values so the series is
@@ -539,8 +539,7 @@ private[script] object WordsGts {
     words("TLTTB") { (w, st, en) =>
       val thr = st.popLong().toInt
       val f = en.toFrame(st.pop())
-      val sel = new graft.kernels.KernelOps(f.df).lttbRef(thr, timebased = true)
-      st.push(GtsFrame(sel.join(graft.model.Gts.seriesMeta(f.df), "gtsid")))
+      st.push(GtsFrame(new graft.kernels.KernelOps(f.df).lttbRef(thr, timebased = true)))
     }
 
     // ---- series grouping (fn/PARTITION.java: [gts] [labels] →

@@ -381,8 +381,7 @@ private[script] object WordsGts2 {
         val filled = g(new graft.kernels.KernelOps(idxDf), b.count.toInt)
           .filter(col("vdouble").isNotNull)
           .withColumn("ts", col("ts") * b.span + first)
-        val meta = graft.model.Gts.seriesMeta(b.frame.df)
-        GtsFrame(graft.model.Gts.canonicalRehash(filled.join(meta, "gtsid")
+        GtsFrame(graft.model.Gts.canonicalRehash(filled
           .select(col("class"), col("labels"), col("gtsid"), col("ts").cast("long"),
             lit(null).cast("double").as("lat"), lit(null).cast("double").as("lon"),
             lit(null).cast("long").as("elev"),

@@ -411,4 +411,33 @@ class ExplainSpec extends SparkSpec {
       ("m.b", Map("user" -> "u1")), ("m.b", Map("user" -> "u3"))))
     assert(out.count() == 4 * 4)
   }
+
+  test("per-series kernel words carry series metadata through the kernel: " +
+    "one scan, no join") {
+    import graft.script.WarpScriptEngine
+    val dir = java.nio.file.Files.createTempDirectory("kernel-meta").resolve("pts").toString
+    seriesPoints.df.write.parquet(dir)
+    val base = graft.operators.GtsFrame(spark.read.parquet(dir))
+    val eng = new WarpScriptEngine(
+      fetch = (cls, labels, s, e) => base.select(cls, labels).timeclip(s, e),
+      nowTs = 0L, session = Some(spark))
+    val fetch = "[ '' '~m.*' {} 40 100 ] FETCH"
+    val programs = Seq(
+      "LTTB" -> s"$fetch 3 LTTB",
+      "SINGLEEXPONENTIALSMOOTHING" -> s"$fetch 0.5 SINGLEEXPONENTIALSMOOTHING",
+      "ESDTEST" -> s"$fetch 1 false 0.05 ESDTEST",
+      "DISCORDS" -> s"$fetch 2 2 4 1 true 0.0 DISCORDS",
+      "FILL filler.spline" ->
+        s"[ $fetch bucketizer.sum 40 10 4 ] BUCKETIZE filler.spline FILL",
+      "BUCKETIZE.CALENDAR" -> s"[ $fetch bucketizer.sum 0 '1d' 0 ] BUCKETIZE.CALENDAR",
+      "MACROMAPPER MAP" ->
+        s"[ $fetch <% 7 GET 0.0 SWAP <% + %> FOREACH %> MACROMAPPER -10 0 0 ] MAP")
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try programs.foreach { case (name, program) =>
+      val p = fullPlan(eng.runToFrame(program))
+      assert(p.split("FileScan").length - 1 == 1, s"$name\n$p")
+      assert(!p.contains("Join"), s"$name\n$p")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
 }
