@@ -10,7 +10,8 @@ import SeriesKernels._
   * series, sequential within one — the reference's own parallelism
   * shape (one thread per GTS, SURVEY §4.2).
   *
-  * Every method runs through ONE runner, [[perSeries]], which packs
+  * Every method runs through ONE runner, [[perSeries]] (the bucket grid
+  * itself, [[grid]], reads the same pack), which packs
   * each series together with its metadata ([[graft.model.Gts.aggBySeries]]:
   * class and the key-sorted label entries ride as grouping keys of the
   * pack aggregate). So every output carries `class` and `labels`,
@@ -28,19 +29,19 @@ final class KernelOps(df: DataFrame,
   import spark.implicits._
 
   /** The packed-points aggregate input: with a [[KernelOps.GridFill]],
-    * the df is the SPARSE pre-FILLVALUE frame and null values pack as
-    * nothing (collect_list skips null elements) — fillValue's grid
-    * left-join + coalesce treats a null sparse value as absent too. */
+    * the df is the SPARSE frame the grid fills and null values pack as
+    * nothing (collect_list skips null elements): the grid counts a null
+    * value as absent. */
   private def packedPts: org.apache.spark.sql.Column = {
     val s = struct(col("ts"), col("vdouble"))
     sort_array(collect_list(
       if (gridFill.isEmpty) s else when(col("vdouble").isNotNull, s)))
   }
 
-  /** The per-series runner: each series is packed WITH its metadata,
-    * class/labels carried as grouping keys of the pack aggregate
-    * ([[graft.model.Gts.aggBySeries]]), so the kernel emits them from
-    * the group head. A post-kernel seriesMeta join would re-read (or
+  /** One row per series: (gtsid, class, labels, ticks, vals), packed WITH
+    * its metadata — class/labels carried as grouping keys of the pack
+    * aggregate ([[graft.model.Gts.aggBySeries]]), so a kernel emits them
+    * from the group head. A post-kernel seriesMeta join would re-read (or
     * re-execute, under cache eviction — the r11 driver run payed 163 s
     * for that) the whole FETCH→BUCKETIZE→FILL prefix; this is one
     * pass, zero joins, the prefix consumed exactly once. The Dataset
@@ -53,18 +54,41 @@ final class KernelOps(df: DataFrame,
     * struct(ts, vdouble) is the (ts, v) total order: duplicate ticks
     * would otherwise make every sequential kernel engine-dependent
     * (Spark and Scala both order NaN last among doubles). */
-  private def perSeries[T: org.apache.spark.sql.Encoder](
-      f: (Long, String, Map[String, String], Array[Long], Array[Double]) => IterableOnce[T])
-      : Dataset[T] = {
-    val gf = gridFill // capture the value, never `this` (serialization)
+  private def packs =
     graft.model.Gts.aggBySeries(df)(packedPts.as("pts"))
       .select(col("gtsid"), col("class"), col("labels"),
         col("pts.ts").as("ticks"), col("pts.vdouble").as("vals"))
       .as[(Long, String, Map[String, String], Array[Long], Array[Double])]
-      .flatMap { case (id, cls, lbl, ticks0, vals0) =>
-        val (ticks, vals) = KernelOps.densify(ticks0, vals0, gf)
-        if (ticks.isEmpty) Iterator.empty else f(id, cls, lbl, ticks, vals)
+
+  /** The per-series runner: every kernel sees one packed series — the
+    * filled points of the [[KernelOps.GridFill]] grid when there is one
+    * ([[KernelOps.densify]]). */
+  private def perSeries[T: org.apache.spark.sql.Encoder](
+      f: (Long, String, Map[String, String], Array[Long], Array[Double]) => IterableOnce[T])
+      : Dataset[T] = {
+    val gf = gridFill // capture the value, never `this` (serialization)
+    packs.flatMap { case (id, cls, lbl, ticks0, vals0) =>
+      val (ticks, vals) = KernelOps.densify(ticks0, vals0, gf)
+      if (ticks.isEmpty) Iterator.empty else f(id, cls, lbl, ticks, vals)
+    }
+  }
+
+  /** The [[KernelOps.GridFill]] grid itself: each grid tick of each
+    * series as its filled points, or one row with a null value where the
+    * rule leaves the tick empty; (gtsid, ts, vdouble, class, labels). */
+  private[graft] def grid(): DataFrame = {
+    val gf = gridFill
+    val g = gf.getOrElse(throw new IllegalStateException("grid() needs a GridFill"))
+    packs.flatMap { case (id, cls, lbl, ticks0, vals0) =>
+      val (ticks, vals) = KernelOps.densify(ticks0, vals0, gf)
+      var j = 0
+      (0 until g.count).flatMap { i =>
+        val (t, from) = (g.tick(i), j)
+        while (j < ticks.length && ticks(j) == t) j += 1
+        if (j == from) Seq((id, t, None, cls, lbl))
+        else (from until j).map(k => (id, t, Option(vals(k)), cls, lbl))
       }
+    }.toDF("gtsid", "ts", "vdouble", "class", "labels")
   }
 
   /** A [[SeriesKernels.Pt]] kernel on the runner: its points come back
@@ -432,6 +456,14 @@ final class KernelOps(df: DataFrame,
 object KernelOps {
   def apply(df: DataFrame): KernelOps = new KernelOps(df)
 
+  /** The kernels over a frame: a FILLVALUE grid packs its sparse origin
+    * and densifies per series ([[GridFill]]), any other frame packs its
+    * own rows. Both read the same points. */
+  def apply(f: graft.operators.GtsFrame): KernelOps = f.origin match {
+    case Some((sparse, g)) => new KernelOps(sparse, Some(g))
+    case None => new KernelOps(f.df)
+  }
+
   /** The [[SeriesKernels.Pt]] view of one packed series. */
   private def points(ticks: Array[Long], vals: Array[Double]): IndexedSeq[Pt] =
     IndexedSeq.tabulate(ticks.length)(i => Pt(ticks(i), vals(i)))
@@ -465,54 +497,71 @@ object KernelOps {
     r
   }
 
-  /** A FILLVALUE grid fused into the kernel pack (r14): the KernelOps
-    * input is the SPARSE pre-fill frame; every kernel sees the dense
-    * (lastbucket, span, count) grid with `value` at absent buckets,
-    * synthesized per series after the pack shuffle — the grid rows are
-    * never materialized pre-shuffle (guide §2.3). */
-  final case class GridFill(lastbucket: Long, span: Long, count: Int,
-                            value: Double)
+  /** How a bucket grid fills a tick that holds no point of its series:
+    * FILLVALUE's constant, FILLPREVIOUS's previous knot, FILLNEXT's next
+    * knot, filler.interpolate's line between the two (GTSHelper.java:
+    * 5106, 4893, 4996, fill:5229). The carry rules leave a tick empty
+    * where they have no knot to carry. */
+  sealed trait FillRule
+  final case class Value(v: Double) extends FillRule
+  case object Previous extends FillRule
+  case object Next extends FillRule
+  case object Linear extends FillRule
 
-  /** Synthesize the dense FILLVALUE grid from packed sparse points
-    * (r14, guide §2.3 — shrink data before the exchange): one linear
-    * merge per series AFTER the pack shuffle, so the count×series grid
-    * rows never exist pre-shuffle (w54 at sf0.1: 99k sparse cells
-    * shuffled instead of 5.4M grid rows, and the grid-explode + grid
-    * left-join exchanges disappear entirely). Off-grid sparse ticks
-    * are skipped — exactly what fillValue's grid-sided left join does.
-    * Static so kernel closures capture only the GridFill value.
-    *
-    * Invariant: the sparse frame holds at most one point per (gtsid,
-    * ts) — a BUCKETIZE result has one row per (series, bucket), which
-    * is what its grouping keys guarantee. The merge takes one value per
-    * grid tick, so a repeated tick would silently drop points; it is
-    * asserted here (`ticks` arrive sorted, so adjacent ticks suffice). */
+  /** A bucket grid — `count` ticks of step `span` ending at
+    * `lastbucket` — filled by `rule`. A KernelOps built with one packs
+    * the SPARSE frame and [[densify]]s each series after the pack
+    * shuffle, so the count×series grid rows never exist before it
+    * (guide §2.3; w54 at sf0.1: 99k sparse cells shuffled instead of
+    * 5.4M grid rows). [[graft.operators.GtsFrame.fill]] builds its grid
+    * the same way; a [[Value]] grid carries its sparse origin, which a
+    * following kernel packs instead ([[KernelOps.apply]]). */
+  final case class GridFill(lastbucket: Long, span: Long, count: Int,
+                            rule: FillRule) {
+    def tick(i: Int): Long = lastbucket - (count - 1 - i).toLong * span
+  }
+
+  /** One series' filled grid from its packed points (sorted by (ts, v),
+    * no null values): the points of a grid-sided left join of the
+    * series plus the fill rule, in tick order.
+    *  - Off-grid points are dropped and are never knots.
+    *  - A present tick keeps its own value, NaN included; a repeated
+    *    tick keeps one point per value, in (ts, v) order.
+    *  - An absent tick takes the rule's value. It holds no point where
+    *    the rule has no knot to carry (the grid's null row, [[grid]]).
+    *  - Under [[Value]], a series with no on-grid knot is `count` fills.
+    * Linear evaluates `pv + (nv - pv) * (t - pt) / (nt - pt)` in that op
+    * order, tick differences as longs (the g28 oracle replays it).
+    * Static so kernel closures capture only the GridFill value. */
   private[kernels] def densify(ticks: Array[Long], vals: Array[Double],
       gf: Option[GridFill]): (Array[Long], Array[Double]) = gf match {
     case None => (ticks, vals)
     case Some(g) =>
-      var k = 1
-      while (k < ticks.length) {
-        assert(ticks(k) != ticks(k - 1),
-          s"FILLVALUE grid: tick ${ticks(k)} repeats within one series")
-        k += 1
+      var gi = 0 // the on-grid knots: one merge against the ascending grid
+      val on = ticks.indices.filter { k =>
+        while (gi < g.count && g.tick(gi) < ticks(k)) gi += 1
+        gi < g.count && g.tick(gi) == ticks(k)
       }
-      val n = g.count
-      val first = g.lastbucket - (n - 1).toLong * g.span
-      val dt = new Array[Long](n)
-      val dv = new Array[Double](n)
-      var i = 0
-      var j = 0
-      while (i < n) {
-        val t = first + i.toLong * g.span
-        dt(i) = t
-        while (j < ticks.length && ticks(j) < t) j += 1
-        dv(i) =
-          if (j < ticks.length && ticks(j) == t) { val v = vals(j); j += 1; v }
-          else g.value
-        i += 1
+      val (kt, kv) = (on.map(ticks(_)).toArray, on.map(vals(_)).toArray)
+      val dt = Array.newBuilder[Long]
+      val dv = Array.newBuilder[Double]
+      def emit(t: Long, v: Double): Unit = { dt += t; dv += v }
+      var j = 0 // the first knot at or after tick i; knot j - 1 precedes it
+      for (i <- 0 until g.count) {
+        val t = g.tick(i)
+        if (j < kt.length && kt(j) == t)
+          while (j < kt.length && kt(j) == t) { emit(t, kv(j)); j += 1 }
+        else g.rule match {
+          case Value(c) => emit(t, c)
+          case Previous if j > 0 => emit(t, kv(j - 1))
+          case Next if j < kt.length => emit(t, kv(j))
+          case Linear if j > 0 && j < kt.length =>
+            val (pt, pv, nt, nv) = (kt(j - 1), kv(j - 1), kt(j), kv(j))
+            emit(t, pv + (nv - pv) * (t - pt) / (nt - pt))
+          case _ => // no knot to carry: the tick stays empty
+        }
       }
-      (dt, dv)
+      (dt.result(), dv.result())
   }
 
   /** DTW distance between the two sides' series matched on `byLabel`

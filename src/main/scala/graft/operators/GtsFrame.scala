@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.kernels.KernelOps
 import graft.model.Gts
 
 /** The GTS frame-operator algebra over the canonical long table —
@@ -16,8 +17,14 @@ import graft.model.Gts
   * to push filters/prune columns/pick join strategies; nothing here
   * collects to the driver. Operators that need per-series sequential
   * logic live in [[graft.kernels]] as flatMapGroups kernels instead.
+  *
+  * `origin` is set on a FILLVALUE grid only ([[fill]]): the sparse frame
+  * it fills and the grid, so a following kernel packs the sparse points
+  * and fills per series (`KernelOps(frame)`). Every `GtsFrame(newDf)`
+  * drops it: a rebuilt frame is just its rows.
   */
-final case class GtsFrame(df: DataFrame) {
+final case class GtsFrame(df: DataFrame,
+    origin: Option[(DataFrame, KernelOps.GridFill)] = None) {
   import GtsFrame._
 
   def toDF: DataFrame = df
@@ -1057,56 +1064,34 @@ final case class GtsFrame(df: DataFrame) {
     GtsFrame(df.withColumn("vdouble", lit(initial) + cum))
   }
 
-  /** FILLPREVIOUS over a bucket grid: generate the full bucket tick grid
-    * per series (sequence + explode — distributed, no driver loop), left
-    * join the data, then carry the last non-null value forward
-    * (GTSHelper.java:4893 FILLPREVIOUS / 4996 FILLNEXT).
-    */
-  def fillPrevious(lastbucket: Long, span: Long, count: Long): DataFrame = {
-    val grid = bucketGrid(lastbucket, span, count)
-    val w = Window.partitionBy(col("gtsid")).orderBy(col("ts"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    grid.withColumn("vdouble",
-      last(col("vdouble"), ignoreNulls = true).over(w))
+  /** The bucket grid filled by `rule`: FILLPREVIOUS, FILLNEXT,
+    * FILLVALUE and filler.interpolate (GTSHelper.java:4893, :4996,
+    * :5106, fill:5229). Each series is packed once and its `count`
+    * bucket-end ticks exploded from the pack ([[KernelOps.grid]]): one
+    * read of the operand, no join. The grid has the full canonical point
+    * schema (null loc/elev, DOUBLE values, null where the rule leaves a
+    * tick empty) so it composes with every other frame word. A
+    * [[KernelOps.Value]] grid also carries its sparse origin, which a
+    * following kernel packs instead of the grid rows. */
+  def fill(lastbucket: Long, span: Long, count: Long,
+           rule: KernelOps.FillRule): GtsFrame = {
+    require(count > 0 && count <= Int.MaxValue,
+      s"a filled bucket grid needs 0 < count <= ${Int.MaxValue}, got $count")
+    val g = KernelOps.GridFill(lastbucket, span, count.toInt, rule)
+    val rows = new KernelOps(df, Some(g)).grid()
+    val grid = rows.select(Gts.pointSchema.map { f =>
+      if (rows.columns.contains(f.name)) col(f.name)
+      else if (f.name == "vtype") lit(graft.model.GtsType.DOUBLE).cast(ByteType).as("vtype")
+      else lit(null).cast(f.dataType).as(f.name)
+    }: _*)
+    rule match {
+      case _: KernelOps.Value => GtsFrame(grid, Some((df, g)))
+      case _ => GtsFrame(grid)
+    }
   }
 
   /** MERGE — union of frames; identical-class concat (fn/MERGE.java). */
   def merge(other: GtsFrame): GtsFrame = GtsFrame(df.unionByName(other.df))
-
-  /** FILLNEXT — like fillPrevious but carries the next value backward
-    * (GTSHelper.java:4996). */
-  def fillNext(lastbucket: Long, span: Long, count: Long): DataFrame = {
-    val grid = bucketGrid(lastbucket, span, count)
-    val w = Window.partitionBy(col("gtsid")).orderBy(col("ts"))
-      .rowsBetween(0, Window.unboundedFollowing)
-    grid.withColumn("vdouble", first(col("vdouble"), ignoreNulls = true).over(w))
-  }
-
-  /** FILLVALUE — fill empty buckets with a constant (GTSHelper.java:5106). */
-  def fillValue(lastbucket: Long, span: Long, count: Long, value: Double): DataFrame =
-    bucketGrid(lastbucket, span, count)
-      .withColumn("vdouble", coalesce(col("vdouble"), lit(value)))
-
-  /** FILL w/ filler.interpolate — linear interpolation between the
-    * previous and next present buckets (script/filler/FillerInterpolate,
-    * GTSHelper.fill:5229). Boundary buckets (no prev or no next) stay
-    * empty, like the reference filler.
-    */
-  def fillLinear(lastbucket: Long, span: Long, count: Long): DataFrame = {
-    val grid = bucketGrid(lastbucket, span, count)
-    val wPrev = Window.partitionBy(col("gtsid")).orderBy(col("ts"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wNext = Window.partitionBy(col("gtsid")).orderBy(col("ts"))
-      .rowsBetween(0, Window.unboundedFollowing)
-    val pv = last(when(col("vdouble").isNotNull, col("vdouble")), ignoreNulls = true).over(wPrev)
-    val pt = last(when(col("vdouble").isNotNull, col("ts")), ignoreNulls = true).over(wPrev)
-    val nv = first(when(col("vdouble").isNotNull, col("vdouble")), ignoreNulls = true).over(wNext)
-    val nt = first(when(col("vdouble").isNotNull, col("ts")), ignoreNulls = true).over(wNext)
-    grid.withColumn("vdouble",
-      when(col("vdouble").isNotNull, col("vdouble"))
-        .when(pv.isNotNull && nv.isNotNull,
-          pv + (nv - pv) * (col("ts") - pt) / (nt - pt)))
-  }
 
   /** filler.trend (script/filler/FillerTrend.java:36-119): each gap
     * value averages TWO linear projections — the previous knot extended
@@ -1176,26 +1161,6 @@ final case class GtsFrame(df: DataFrame) {
           .when(col("pv").isNotNull, col("pv") + preRate * (col("ts") - col("pt")))
           .when(col("nv").isNotNull, col("nv") - postRate * (col("nt") - col("ts"))))
       .select(col("gtsid"), col("class"), col("labels"), col("ts"), col("vdouble"))
-  }
-
-  /** Shared bucket-grid generation: all `count` bucket-end ticks per
-    * series left-joined with present values — distributed via
-    * sequence+explode, never a driver loop. Emits the full canonical
-    * point schema (null loc/elev on filled rows) so fill outputs stay
-    * composable with every other frame word. */
-  private def bucketGrid(lastbucket: Long, span: Long, count: Long): DataFrame = {
-    val grid = Gts.seriesMeta(df).withColumn("ts",
-      explode(sequence(lit(lastbucket - (count - 1) * span), lit(lastbucket), lit(span))))
-    Gts.canonical(grid.join(df.select(col("gtsid"), col("ts"), col("vdouble")),
-        Seq("gtsid", "ts"), "left")
-      .withColumn("lat", lit(null).cast(DoubleType))
-      .withColumn("lon", lit(null).cast(DoubleType))
-      .withColumn("elev", lit(null).cast(LongType))
-      .withColumn("vtype", lit(graft.model.GtsType.DOUBLE).cast(ByteType))
-      .withColumn("vlong", lit(null).cast(LongType))
-      .withColumn("vbool", lit(null).cast(BooleanType))
-      .withColumn("vstring", lit(null).cast(StringType))
-      .withColumn("vbinary", lit(null).cast(BinaryType)))
   }
 
   /** COUNTERDELTA/RESETS compensation (fn/COUNTERDELTA.java,

@@ -240,7 +240,7 @@ object StatOps {
     */
   def esdFlag(frame: GtsFrame, k: Int = 3, alpha: Double = 0.05,
               maxN: Int = 64): DataFrame =
-    new graft.kernels.KernelOps(frame.df).esdFlag(k, lambdas(alpha, maxN))
+    graft.kernels.KernelOps(frame).esdFlag(k, lambdas(alpha, maxN))
 
   /** ESD, median/MAD variant (GTSOutliersHelper.ESDTest useMedian=true):
     * per round, med = exact-interpolation median of the remaining cents
@@ -255,7 +255,7 @@ object StatOps {
     */
   def esdMadFlag(frame: GtsFrame, k: Int = 3, alpha: Double = 0.05,
                  maxN: Int = 64): DataFrame =
-    esdMadFlagAt(frame.df, k, lambdas(alpha, maxN))
+    graft.kernels.KernelOps(frame).esdMadFlag(k, lambdas(alpha, maxN))
 
   /** [[esdMadFlag]] with an explicit λ map (large fixed-n compositions
     * like g99) over any (gtsid, ts, vdouble, class, labels) frame. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.kernels.KernelOps
 import graft.model.Gts
 import graft.operators.GtsFrame
 import graft.operators.GtsFrame._
@@ -150,7 +151,7 @@ object GtsQueries extends QueryPack {
     // FILLPREVIOUS over the full 1d bucket grid (GTSHelper.java:4893)
     "g17_fillprevious" -> ((s, dir) => {
       val b = cents(s, dir).bucketize(Sum, LB, DAY)
-      b.fillPrevious(LB, DAY, 30)
+      b.fill(LB, DAY, 30, KernelOps.Previous).df
         .select(col("class"), col("labels").getItem("user").as("userid"),
           col("ts"), col("vdouble").as("filled"))
     }),

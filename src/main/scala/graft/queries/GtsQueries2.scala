@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 
+import graft.kernels.KernelOps
 import graft.model.Gts
 import graft.operators.GtsFrame
 import graft.operators.GtsFrame._
@@ -73,18 +74,18 @@ object GtsQueries2 extends QueryPack {
 
     // FILLNEXT + FILLVALUE over the 1d bucket grid (GTSHelper.java:4996/5106)
     "g26_fillnext" -> ((s, dir) =>
-      cents(s, dir).bucketize(Sum, LB, DAY).fillNext(LB, DAY, 30)
+      cents(s, dir).bucketize(Sum, LB, DAY).fill(LB, DAY, 30, KernelOps.Next).df
         .select(col("class"), col("labels").getItem("user").as("userid"),
           col("ts"), col("vdouble").as("filled"))),
 
     "g27_fillvalue" -> ((s, dir) =>
-      cents(s, dir).bucketize(Sum, LB, DAY).fillValue(LB, DAY, 30, 0.0)
+      cents(s, dir).bucketize(Sum, LB, DAY).fill(LB, DAY, 30, KernelOps.Value(0.0)).df
         .select(col("class"), col("labels").getItem("user").as("userid"),
           col("ts"), col("vdouble").as("filled"))),
 
     // FILL w/ filler.interpolate — linear between surrounding buckets
     "g28_filllinear" -> ((s, dir) =>
-      cents(s, dir).bucketize(Sum, LB, DAY).fillLinear(LB, DAY, 30)
+      cents(s, dir).bucketize(Sum, LB, DAY).fill(LB, DAY, 30, KernelOps.Linear).df
         .select(col("class"), col("labels").getItem("user").as("userid"),
           col("ts"), round(col("vdouble"), 9).as("filled"))),
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.kernels.KernelOps
 import graft.model.Gts
 import graft.operators.GtsFrame
 import graft.operators.GtsFrame._
@@ -88,7 +89,7 @@ object GtsQueries5 extends QueryPack {
     // integers, residual — bit-reproducible with no tolerance rounding
     "g57_stl_classical" -> ((s, dir) => {
       val dense = cents(s, dir).bucketize(Sum, LB, HOUR, 720)
-        .fillValue(LB, HOUR, 720, 0.0)
+        .fill(LB, HOUR, 720, KernelOps.Value(0.0)).df
       graft.operators.SeasonalOps.classicalDecompose(dense, HOUR, 24, 12)
         .select(col("class"), col("labels").getItem("user").as("userid"),
           col("ts"), col("vdouble").as("v"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.kernels.KernelOps
 import graft.model.Gts
 import graft.operators.{GtsFrame, StatOps}
 import graft.operators.GtsFrame._
@@ -159,10 +160,9 @@ object GtsQueries8 extends QueryPack {
     // replays the exact triangle/Horner op order with literal knot
     // ticks, so the degree-7 evaluation is bit-identical
     "g88_fillnewton" -> ((s, dir) => {
-      val dense = GtsFrame(
-        cents(s, dir).bucketize(Sum, GtsQueries.LB, DAY, 8)
-          .fillValue(GtsQueries.LB, DAY, 8, 0.0))
-      new graft.kernels.KernelOps(dense.df).fillNewtonMidpoints()
+      val dense = cents(s, dir).bucketize(Sum, GtsQueries.LB, DAY, 8)
+        .fill(GtsQueries.LB, DAY, 8, KernelOps.Value(0.0))
+      KernelOps(dense).fillNewtonMidpoints()
         .select(col("class"), col("labels").getItem("user").as("userid"),
           col("ts"), round(col("vdouble"), 6).as("newton"))
     })

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.kernels.KernelOps
 import graft.model.Gts
 import graft.operators.{GtsFrame, SeasonalOps, StatOps}
 import graft.operators.GtsFrame._
@@ -140,7 +141,7 @@ object GtsQueries9 extends QueryPack {
       : (DataFrame, DataFrame) = {
     val raw = cents(s, dir)
     val dense = raw.bucketize(Sum, LB, HOUR, 240)
-      .fillValue(LB, HOUR, 240, 0.0)
+      .fill(LB, HOUR, 240, KernelOps.Value(0.0)).df
     val dec = SeasonalOps.classicalDecompose(dense, HOUR, 24, 12,
         keepExact = true)
       .filter(col("scnt") === 9)

@@ -111,13 +111,12 @@ final class WarpScriptEngine(
   }
 
   /** End the program scope: unpersist what the program's words cached
-    * and drop the frame memos. `run` and `runMacro` call it first; a
+    * and drop the builder memo. `run` and `runMacro` call it first; a
     * host that drops the engine after rendering calls it itself. */
   def release(): Unit = {
     persisted.foreach(_.unpersist(blocking = false))
     persisted.clear()
     materializeCache.clear()
-    fillValueOrigin.clear()
   }
 
   /** Run a program whose result (top of stack) is a GTS frame (or a
@@ -149,12 +148,12 @@ final class WarpScriptEngine(
   private[script] def runRlowess(obj: Any, q: Int, r: Int, d: Long,
                                  p: Int): Any = obj match {
     case b: BucketedFrame =>
-      // FILLVALUE fusion (r14): pack the sparse twin, synthesize the
-      // grid in the kernel; class/labels ride through the kernel group
-      b.copy(frame = GtsFrame(kernelOpsFor(b.frame)
+      // a FILLVALUE grid packs its sparse origin (KernelOps.GridFill);
+      // class/labels ride through the kernel group
+      b.copy(frame = GtsFrame(graft.kernels.KernelOps(b.frame)
         .rlowessSmooth(q, r, d, p, Some((b.lastbucket, b.span, b.count)))))
     case o =>
-      GtsFrame(new graft.kernels.KernelOps(toFrame(o).df).rlowessSmooth(q, r, d, p, None))
+      GtsFrame(graft.kernels.KernelOps(toFrame(o)).rlowessSmooth(q, r, d, p, None))
   }
 
   /** DTW/ZDTW/RAWDTW (fn/DTW.java:59-228, faithful r11): gts2 gts1
@@ -260,7 +259,7 @@ final class WarpScriptEngine(
     require(windowLen % wordLen == 0,
       "DISCORDS expects pattern length to divide detection window length")
     val f = toFrame(st.pop())
-    GtsFrame(new graft.kernels.KernelOps(f.df)
+    GtsFrame(graft.kernels.KernelOps(f)
       .discords(windowLen, wordLen, alphabet, count, overlap, distRatio,
         standardizePAA))
   }
@@ -489,37 +488,8 @@ final class WarpScriptEngine(
     * merge per selector) — materializing once per OBJECT keeps the
     * plan subtree shared instead of re-created. Identity-keyed:
     * builders are immutable (every mutation is a copy()). Lives for
-    * one program, like [[fillValueOrigin]]: [[release]] clears both. */
+    * one program: [[release]] clears it. */
   private val materializeCache = new java.util.IdentityHashMap[GtsBuilder, GtsFrame]()
-
-  /** FILLVALUE provenance for kernel fusion (r14, guide §2.3): filled
-    * frame instance → (sparse pre-fill frame, grid spec, fill value).
-    * Kernel words consuming a FILLVALUE result hand the kernel the
-    * SPARSE frame + grid spec so the dense grid is synthesized per
-    * series AFTER the pack shuffle — count×series grid rows never
-    * exist pre-shuffle (w54: 99k sparse cells packed instead of 5.4M
-    * grid rows through a grid-explode + left-join + pack cascade).
-    * Identity-keyed like [[materializeCache]]: frames are immutable,
-    * and any word that rebuilds the frame (rename, filter, …) misses
-    * the map and falls back to the materialized dense plan — results
-    * are identical either way. */
-  private val fillValueOrigin =
-    new java.util.IdentityHashMap[GtsFrame, (GtsFrame, Long, Long, Long, Double)]()
-
-  private[script] def recordFillValue(filled: GtsFrame, sparse: GtsFrame,
-      lastbucket: Long, span: Long, count: Long, value: Double): Unit =
-    fillValueOrigin.put(filled, (sparse, lastbucket, span, count, value))
-
-  /** KernelOps over a bucketized frame, honoring FILLVALUE provenance:
-    * when fused, the kernel packs the sparse twin and synthesizes the
-    * grid itself. */
-  private[script] def kernelOpsFor(f: GtsFrame): graft.kernels.KernelOps = {
-    val o = fillValueOrigin.get(f)
-    if (o != null && o._4 > 0 && o._4 <= Int.MaxValue.toLong)
-      new graft.kernels.KernelOps(o._1.df, Some(
-        graft.kernels.KernelOps.GridFill(o._2, o._3, o._4.toInt, o._5)))
-    else new graft.kernels.KernelOps(f.df)
-  }
 
   private[script] def materialize(b: GtsBuilder): GtsFrame = {
     val cached = materializeCache.get(b)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
+import graft.kernels.KernelOps
 import graft.operators.{GtsFrame, StatOps}
 
 /** Analytics word tail: the faithful STL family (fn/STL.java →
@@ -46,7 +47,7 @@ private[script] object WordsAnalytics {
       // cross the pack exchange (guide §2.3; w54 5.4M → 99k rows)
       // The persist lives for the program (released when the next one
       // starts): dropping it makes each union branch rerun the kernel.
-      val packed = en.persistForProgram(en.kernelOpsFor(b.frame)
+      val packed = en.persistForProgram(KernelOps(b.frame)
         .stlDecomposeTagged(
           (b.lastbucket, b.span, b.count), p.bpp, p.inner, p.outer,
           p.ns, p.ds, p.js, p.nl, p.dl, p.jl, p.nt, p.dt, p.jt,
@@ -108,7 +109,7 @@ private[script] object WordsAnalytics {
       // still reads the materialized filled frame (it needs the
       // original dense values), but the kernel input no longer
       // re-executes that dense plan a second time
-      val tagged = en.kernelOpsFor(b.frame).stlDecompose(
+      val tagged = KernelOps(b.frame).stlDecompose(
         (b.lastbucket, b.span, b.count), pr.bpp, pr.inner, pr.outer,
         pr.ns, pr.ds, pr.js, pr.nl, pr.dl, pr.jl, pr.nt, pr.dt, pr.jt,
         pr.np, pr.dp, pr.jp)
@@ -168,7 +169,7 @@ private[script] object WordsAnalytics {
         }
       // kernel-side FILLVALUE fusion only (flag join keeps the
       // filled frame — output rows carry the dense values)
-      val flags = en.kernelOpsFor(b.frame).hybridFlags(
+      val flags = KernelOps(b.frame).hybridFlags(
         (b.lastbucket, b.span, b.count), bpp, ppp, k, alpha,
         entropy = w == "HYBRIDTEST2", stl16)
       st.push(GtsFrame(b.frame.df.join(flags.select(col("gtsid"), col("ts")),

@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.kernels.KernelOps
 import graft.operators.GtsFrame
 import graft.operators.GtsFrame._
 
@@ -931,11 +932,11 @@ private[script] object WordsFramesBlock {
     // lastbucket/span/count on the filled GTS (GTSHelper.fill)
     words("FILLPREVIOUS") { (w, st, en) =>
       val b = en.toBucketed(st.pop())
-      st.push(b.copy(frame = GtsFrame(b.frame.fillPrevious(b.lastbucket, b.span, b.count))))
+      st.push(b.copy(frame = b.frame.fill(b.lastbucket, b.span, b.count, KernelOps.Previous)))
     }
     words("FILLNEXT") { (w, st, en) =>
       val b = en.toBucketed(st.pop())
-      st.push(b.copy(frame = GtsFrame(b.frame.fillNext(b.lastbucket, b.span, b.count))))
+      st.push(b.copy(frame = b.frame.fill(b.lastbucket, b.span, b.count, KernelOps.Next)))
     }
     words("FILLVALUE") { (w, st, en) => // [ lat lon elev value ] list form; value used
       val v = st.pop() match {
@@ -943,14 +944,11 @@ private[script] object WordsFramesBlock {
         case n => en.asNum(n)
       }
       val b = en.toBucketed(st.pop())
-      val filled = GtsFrame(b.frame.fillValue(b.lastbucket, b.span, b.count, v))
-      // kernel words can fuse the constant grid into their pack (r14)
-      en.recordFillValue(filled, b.frame, b.lastbucket, b.span, b.count, v)
-      st.push(b.copy(frame = filled))
+      st.push(b.copy(frame = b.frame.fill(b.lastbucket, b.span, b.count, KernelOps.Value(v))))
     }
     words("INTERPOLATE") { (w, st, en) =>
       val b = en.toBucketed(st.pop())
-      st.push(b.copy(frame = GtsFrame(b.frame.fillLinear(b.lastbucket, b.span, b.count))))
+      st.push(b.copy(frame = b.frame.fill(b.lastbucket, b.span, b.count, KernelOps.Linear)))
     }
     // DEDUP (fn/DEDUP.java → GTSHelper.dedup:7193-7216): keep ONE point
     // per tick — the reference keeps "the last value found for a given
@@ -1142,7 +1140,7 @@ private[script] object WordsFramesBlock {
     words("LTTB") { (w, st, en) =>
       val thr = st.popLong().toInt
       val f = en.toFrame(st.pop())
-      st.push(GtsFrame(new graft.kernels.KernelOps(f.df).lttbRef(thr, timebased = false)))
+      st.push(GtsFrame(KernelOps(f).lttbRef(thr, timebased = false)))
     }
     // FFT surface (continuum/gts/FFT.java): gts bins span lastbucket FFT
     // → per-series spectrum rows (k, re, im, mag); see StatOps.dft
@@ -1226,7 +1224,7 @@ private[script] object WordsFramesBlock {
       require(alpha > 0.0 && alpha < 1.0,
         "The smoothing factor must be in 0 < alpha < 1.")
       val f = en.toFrame(st.pop())
-      st.push(GtsFrame(new graft.kernels.KernelOps(f.df).expSmooth(alpha)))
+      st.push(GtsFrame(KernelOps(f).expSmooth(alpha)))
     }
     // DOUBLEEXPONENTIALSMOOTHING (fn/DOUBLEEXPONENTIALSMOOTHING.java →
     // GTSHelper.doubleExponentialSmoothing:9162-9223, faithful r11):
@@ -1242,7 +1240,7 @@ private[script] object WordsFramesBlock {
       // persisted for the program: both faces of the [level,
       // best-estimate] pair read one kernel pass
       val tagged = en.persistForProgram(
-        new graft.kernels.KernelOps(f.df).holtSmooth(alpha, beta))
+        KernelOps(f).holtSmooth(alpha, beta))
       st.push(Vector[Any](
         GtsFrame(tagged.filter(col("which") === "s").drop("which")),
         GtsFrame(tagged.filter(col("which") === "b").drop("which"))))

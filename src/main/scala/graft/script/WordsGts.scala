@@ -539,7 +539,7 @@ private[script] object WordsGts {
     words("TLTTB") { (w, st, en) =>
       val thr = st.popLong().toInt
       val f = en.toFrame(st.pop())
-      st.push(GtsFrame(new graft.kernels.KernelOps(f.df).lttbRef(thr, timebased = true)))
+      st.push(GtsFrame(graft.kernels.KernelOps(f).lttbRef(thr, timebased = true)))
     }
 
     // ---- series grouping (fn/PARTITION.java: [gts] [labels] →

@@ -2,6 +2,7 @@ package graft.script
 
 import org.apache.spark.sql.functions._
 
+import graft.kernels.KernelOps
 import graft.operators.GtsFrame
 
 /** GTS metadata / MV / wrapper word tail (fn/ATBUCKET.java,
@@ -375,10 +376,10 @@ private[script] object WordsGts2 {
       val filler = st.pop()
       val b = en.toBucketed(st.pop())
       val first = b.lastbucket - (b.count - 1) * b.span
-      def grid(g: (graft.kernels.KernelOps, Int) => org.apache.spark.sql.DataFrame) = {
+      def grid(g: (KernelOps, Int) => org.apache.spark.sql.DataFrame) = {
         val idxDf = b.frame.df.withColumn("ts",
           expr(s"(ts - $first) div ${b.span}"))
-        val filled = g(new graft.kernels.KernelOps(idxDf), b.count.toInt)
+        val filled = g(new KernelOps(idxDf), b.count.toInt)
           .filter(col("vdouble").isNotNull)
           .withColumn("ts", col("ts") * b.span + first)
         GtsFrame(graft.model.Gts.canonicalRehash(filled
@@ -391,15 +392,13 @@ private[script] object WordsGts2 {
             lit(null).cast("string").as("vstring"),
             lit(null).cast("binary").as("vbinary"))))
       }
+      def filled(r: KernelOps.FillRule) =
+        b.copy(frame = b.frame.fill(b.lastbucket, b.span, b.count, r))
       val out: Any = filler match {
-        case FillerVal("filler.previous", _) =>
-          b.copy(frame = GtsFrame(b.frame.fillPrevious(b.lastbucket, b.span, b.count)))
-        case FillerVal("filler.next", _) =>
-          b.copy(frame = GtsFrame(b.frame.fillNext(b.lastbucket, b.span, b.count)))
-        case FillerVal("filler.interpolate" | "filler.linear", _) =>
-          b.copy(frame = GtsFrame(b.frame.fillLinear(b.lastbucket, b.span, b.count)))
-        case FillerVal("filler.value", v) =>
-          b.copy(frame = GtsFrame(b.frame.fillValue(b.lastbucket, b.span, b.count, v)))
+        case FillerVal("filler.previous", _) => filled(KernelOps.Previous)
+        case FillerVal("filler.next", _) => filled(KernelOps.Next)
+        case FillerVal("filler.interpolate" | "filler.linear", _) => filled(KernelOps.Linear)
+        case FillerVal("filler.value", v) => filled(KernelOps.Value(v))
         case FillerVal("filler.trend", _) =>
           b.copy(frame = GtsFrame(b.frame.fillTrend(b.lastbucket, b.span, b.count)))
         case FillerVal("filler.spline", _) => b.copy(frame = grid(_.fillSplineGrid(_)))

@@ -353,7 +353,7 @@ class ExplainSpec extends SparkSpec {
       ("mapWindowAtTicks", f.mapWindowAtTicks(Sum, -10L, Seq(20L, 20L, 40L), dedup = true),
         false),
       ("filterSeries", f.filterSeries(col("class") === "m.a").df, true),
-      ("fillValue", f.fillValue(40L, 10L, 4L, 0.0), true),
+      ("fillValue", f.fill(40L, 10L, 4L, graft.kernels.KernelOps.Value(0.0)).df, true),
       ("fillTrend", f.fillTrend(40L, 10L, 4L), false),
       ("linReg", StatOps.linReg(f, 10L, 40L), true),
       ("momentStats", StatOps.momentStats(f), true),
@@ -438,6 +438,44 @@ class ExplainSpec extends SparkSpec {
       val p = fullPlan(eng.runToFrame(program))
       assert(p.split("FileScan").length - 1 == 1, s"$name\n$p")
       assert(!p.contains("Join"), s"$name\n$p")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
+  /** Shuffle Exchanges of an executed plan (BroadcastExchange and
+    * ReusedExchange excluded). */
+  private def shuffles(p: String): Int =
+    """\bExchange """.r.findAllIn(p).length
+
+  test("the fill words read their operand once: one scan, no join; a " +
+    "filled kernel shuffles no more than the kernel over its operand") {
+    import graft.script.WarpScriptEngine
+    import graft.operators.GtsFrame.Sum
+    val dir = java.nio.file.Files.createTempDirectory("fill-scan").resolve("pts").toString
+    seriesPoints.df.write.parquet(dir)
+    val base = graft.operators.GtsFrame(spark.read.parquet(dir))
+    val eng = new WarpScriptEngine(
+      fetch = (cls, labels, s, e) => base.select(cls, labels).timeclip(s, e),
+      nowTs = 0L, session = Some(spark))
+    val bucketized = "[ [ '' '~m.*' {} 40 100 ] FETCH bucketizer.sum 40 10 4 ] BUCKETIZE"
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      Seq("FILLPREVIOUS", "FILLNEXT", "[ 0 0 0 0.0 ] FILLVALUE", "INTERPOLATE")
+        .foreach { word =>
+          val p = fullPlan(eng.runToFrame(s"$bucketized $word"))
+          assert(p.split("FileScan").length - 1 == 1, s"$word\n$p")
+          assert(!p.contains("Join"), s"$word\n$p")
+        }
+      val discords = "2 2 4 1 true 0.0 DISCORDS"
+      val filledD = fullPlan(eng.runToFrame(s"$bucketized [ 0 0 0 0.0 ] FILLVALUE $discords"))
+      val plainD = fullPlan(eng.runToFrame(s"$bucketized $discords"))
+      assert(shuffles(plainD) > 0, plainD)
+      assert(shuffles(filledD) <= shuffles(plainD), s"$filledD\n$plainD")
+      val b = base.bucketize(Sum, 40L, 10L, 4L)
+      val filledN = fullPlan(graft.kernels.KernelOps(
+        b.fill(40L, 10L, 4L, graft.kernels.KernelOps.Value(0.0))).fillNewtonMidpoints())
+      val plainN = fullPlan(graft.kernels.KernelOps(b).fillNewtonMidpoints())
+      assert(shuffles(filledN) <= shuffles(plainN), s"$filledN\n$plainN")
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 }

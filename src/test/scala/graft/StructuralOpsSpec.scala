@@ -70,7 +70,7 @@ class StructuralOpsSpec extends SparkSpec {
 
   test("fillPrevious carries last value over empty buckets (GTSHelper.java:4893)") {
     val g = GtsFrame(gtsOf(("m", "u", 10L, 1.0), ("m", "u", 30L, 3.0)))
-    val out = g.fillPrevious(40L, 10L, 4)
+    val out = g.fill(40L, 10L, 4, graft.kernels.KernelOps.Previous).df
       .select(col("ts"), col("vdouble")).collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1))))
       .sortBy(_._1).toSeq

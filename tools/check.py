@@ -10,6 +10,9 @@ from pathlib import Path
 
 import duckdb
 
+# the checkout this script sits in: Verify runs on that tree's sources
+ROOT = Path(__file__).resolve().parents[1]
+
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 ARGS = sys.argv[3:]
@@ -22,7 +25,7 @@ def run_verify():
     r = subprocess.run(
         ["sbt", "-batch",
          f'runMain graft.Verify {SF} {OUT} {" ".join(ONLY)}'.strip()],
-        capture_output=True, text=True, cwd="/root/repo")
+        capture_output=True, text=True, cwd=ROOT)
     for line in (r.stdout + "\n" + r.stderr).splitlines():
         if "[verify]" in line:
             print(line)
