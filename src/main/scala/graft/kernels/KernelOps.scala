@@ -390,11 +390,11 @@ final class KernelOps(df: DataFrame,
         Iterator.range(0, t.values).map(i => (id, "trend", t.ticks(i), t.vals(i), cls, lbl))
     }.toDF("gtsid", "which", "ts", "vdouble", "class", "labels")
 
-  /** STL, PACKED (r12): the word path's [seasonal, trend] pair. Output
-    * is one (ticks[], vals[]) row per (series, component), 2 rows per
-    * series — so the word path materializes a few hundred array rows
-    * instead of count×2 points; callers posexplode.
-    */
+  /** STL, PACKED: the word path's [seasonal, trend] pair. Output is one
+    * (ticks[], vals[]) row per (series, component), 2 rows per series,
+    * so the word path derives each component's class and id once per
+    * series and a filter on `which` drops a component before its
+    * points are exploded. */
   def stlDecomposeTagged(bucket: (Long, Long, Long), bpp: Int, inner: Int,
                          outer: Int, ns: Int, ds: Int, js: Int,
                          nl: Int, dl: Int, jl: Int, nt: Int, dt: Int, jt: Int,
@@ -460,8 +460,8 @@ object KernelOps {
     * and densifies per series ([[GridFill]]), any other frame packs its
     * own rows. Both read the same points. */
   def apply(f: graft.operators.GtsFrame): KernelOps = f.origin match {
-    case Some((sparse, g)) => new KernelOps(sparse, Some(g))
-    case None => new KernelOps(f.df)
+    case Some(graft.operators.GtsFrame.Fill(sparse, g)) => new KernelOps(sparse, Some(g))
+    case _ => new KernelOps(f.df)
   }
 
   /** The [[SeriesKernels.Pt]] view of one packed series. */

@@ -18,13 +18,18 @@ import graft.model.Gts
   * collects to the driver. Operators that need per-series sequential
   * logic live in [[graft.kernels]] as flatMapGroups kernels instead.
   *
-  * `origin` is set on a FILLVALUE grid only ([[fill]]): the sparse frame
-  * it fills and the grid, so a following kernel packs the sparse points
-  * and fills per series (`KernelOps(frame)`). Every `GtsFrame(newDf)`
-  * drops it: a rebuilt frame is just its rows.
+  * `origin` names the plan a frame's rows are a view of, where a
+  * consumer can read that plan instead:
+  *  - [[GtsFrame.Fill]] on a FILLVALUE grid ([[fill]]): the sparse frame
+  *    it fills and the grid, so a following kernel packs the sparse
+  *    points and fills per series (`KernelOps(frame)`);
+  *  - [[GtsFrame.Part]] on one part of a pair word's result
+  *    ([[GtsFrame.parts]]): merging disjoint parts of one whole reads
+  *    the whole once ([[merge]]).
+  * Every `GtsFrame(newDf)` drops it: a rebuilt frame is just its rows.
   */
 final case class GtsFrame(df: DataFrame,
-    origin: Option[(DataFrame, KernelOps.GridFill)] = None) {
+    origin: Option[GtsFrame.Origin] = None) {
   import GtsFrame._
 
   def toDF: DataFrame = df
@@ -1085,13 +1090,22 @@ final case class GtsFrame(df: DataFrame,
       else lit(null).cast(f.dataType).as(f.name)
     }: _*)
     rule match {
-      case _: KernelOps.Value => GtsFrame(grid, Some((df, g)))
+      case _: KernelOps.Value => GtsFrame(grid, Some(Fill(df, g)))
       case _ => GtsFrame(grid)
     }
   }
 
-  /** MERGE — union of frames; identical-class concat (fn/MERGE.java). */
-  def merge(other: GtsFrame): GtsFrame = GtsFrame(df.unionByName(other.df))
+  /** MERGE — union of frames; identical-class concat (fn/MERGE.java).
+    * Disjoint parts of one whole ([[GtsFrame.parts]]) merge back into
+    * that whole, filtered to their values: the rows of the union, read
+    * in one plan branch. Any other pair, a part with itself included,
+    * is a union. */
+  def merge(other: GtsFrame): GtsFrame = (origin, other.origin) match {
+    case (Some(Part(w, k, a, all)), Some(Part(w2, k2, b, _)))
+        if (w eq w2) && k == k2 && a.intersect(b).isEmpty =>
+      part(w, k, a ++ b, all)
+    case _ => GtsFrame(df.unionByName(other.df))
+  }
 
   /** filler.trend (script/filler/FillerTrend.java:36-119): each gap
     * value averages TWO linear projections — the previous knot extended
@@ -1203,6 +1217,34 @@ final case class GtsFrame(df: DataFrame,
 }
 
 object GtsFrame {
+
+  /** What a frame's rows are a view of ([[GtsFrame.origin]]). */
+  sealed trait Origin
+
+  /** A FILLVALUE grid: `sparse` filled by `grid`. */
+  final case class Fill(sparse: DataFrame, grid: KernelOps.GridFill) extends Origin
+
+  /** The rows of `whole` whose `key` column is in `values`, without
+    * `key`; `all` is every value `key` takes. */
+  final case class Part(whole: DataFrame, key: String, values: Set[String],
+                        all: Set[String]) extends Origin
+
+  /** A pair word's result as parts of one frame: for each of `values`
+    * (every value the `key` column takes), the rows of `whole` holding
+    * it, without `key`. The filter reaches below `whole`'s explode, onto
+    * its packed rows. Merging the parts gives `whole` back
+    * ([[GtsFrame.merge]]), so a consumer of both runs one plan branch:
+    * one kernel pass and no cache (STL.java and
+    * DOUBLEEXPONENTIALSMOOTHING.java compute both series in one pass). */
+  def parts(whole: DataFrame, key: String, values: Seq[String]): Vector[GtsFrame] =
+    values.toVector.map(v => part(whole, key, Set(v), values.toSet))
+
+  private def part(whole: DataFrame, key: String, values: Set[String],
+                   all: Set[String]): GtsFrame = {
+    val rows = if (values == all) whole
+      else whole.filter(col(key).isin(values.toSeq.sorted: _*))
+    GtsFrame(rows.drop(key), Some(Part(whole, key, values, all)))
+  }
 
   /** Selector-pair predicate over (class, labels) columns — '~' prefix
     * = regex, '=' prefix = explicit exact (the reference's selector

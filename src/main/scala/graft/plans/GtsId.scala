@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.MapData
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, MapData}
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
@@ -100,6 +100,13 @@ object GtsId {
       i += 1
     }
     XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, len, h)
+  }
+
+  /** [[hash]] of a series given as JVM values, for rows built outside
+    * a plan. */
+  def idOf(cls: String, labels: Map[String, String]): Long = {
+    val utf8: Any => Any = s => UTF8String.fromString(s.asInstanceOf[String])
+    hash(UTF8String.fromString(cls), ArrayBasedMapData(labels, utf8, utf8))
   }
 
   private def put(s: UTF8String, buf: Array[Byte], pos: Int): Int = {

@@ -102,8 +102,10 @@ final class WarpScriptEngine(
     * A released frame stays valid; reading it again recomputes it. */
   private val persisted = mutable.ArrayBuffer.empty[DataFrame]
 
-  /** Persist a word's intermediate for the rest of the program (a pair
-    * of results reading one kernel pass). */
+  /** Persist a frame for the rest of the program: the ACCEL.CACHE /
+    * ACCEL.PERSIST FETCH (fn/ACCELCACHE.java), whose storage level the
+    * program chose. Pair words need no cache: their two results are
+    * parts of one frame that a merge reads once (GtsFrame.parts). */
   private[script] def persistForProgram(df: DataFrame,
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
     persisted += df.persist(level)

@@ -31,50 +31,40 @@ private[script] object WordsAnalytics {
         .map { case (k, v) => k.toString -> v }
       val b = en.toBucketed(st.pop())
       val p = StlParams.resolve(raw)
-      // One kernel pass carrying class/labels through the group
-      // (zero meta joins — the r11 join topology re-executed the
-      // whole FETCH→BUCKETIZE→FILL prefix per component under cache
-      // eviction: 13.6 s isolated, 163 s in the r11 driver run) and
-      // emitting PACKED (ticks[], vals[]) rows — 2 per series — so
-      // the single materialization (disk-backed persist + count)
-      // stores a few hundred array rows, not count×2 points. The
-      // [seasonal, trend] branches then posexplode the tiny cached
-      // frame; an eviction costs one linear-chain recompute, never
-      // the r11 join-cascade re-execution.
-      // FILLVALUE fusion (r14): when the input is a FILLVALUE
-      // result, pack the SPARSE pre-fill frame and synthesize the
-      // dense grid inside the kernel decode — the grid rows never
-      // cross the pack exchange (guide §2.3; w54 5.4M → 99k rows)
-      // The persist lives for the program (released when the next one
-      // starts): dropping it makes each union branch rerun the kernel.
-      val packed = en.persistForProgram(KernelOps(b.frame)
-        .stlDecomposeTagged(
-          (b.lastbucket, b.span, b.count), p.bpp, p.inner, p.outer,
-          p.ns, p.ds, p.js, p.nl, p.dl, p.jl, p.nt, p.dt, p.jt,
-          p.np, p.dp, p.jp))
-      packed.count() // materialize once — the pair's branches would
-                     // otherwise race the cache and double the kernel
-      def component(which: String): GtsFrame = {
-        val renamed = packed.filter(col("which") === which).drop("which")
-          .withColumn("class",
-            when(length(col("class")) === 0, lit(which))
-              .otherwise(concat(col("class"), lit("_" + which))))
-          .select(col("class"), col("labels"),
-            explode(arrays_zip(col("ticks"), col("vals"))).as("p"))
-        GtsFrame(graft.model.Gts.canonicalRehash(
-          renamed.select(col("class"), col("labels"),
-            lit(0L).as("gtsid"), col("p.ticks").as("ts"),
-            lit(null).cast("double").as("lat"),
-            lit(null).cast("double").as("lon"),
-            lit(null).cast("long").as("elev"),
-            lit(graft.model.GtsType.DOUBLE).as("vtype"),
-            lit(null).cast("long").as("vlong"),
-            col("p.vals").as("vdouble"),
-            lit(null).cast("boolean").as("vbool"),
-            lit(null).cast("string").as("vstring"),
-            lit(null).cast("binary").as("vbinary"))))
-      }
-      st.push(Vector[Any](component("seasonal"), component("trend")))
+      // One kernel pass per series computes both components and emits
+      // them PACKED: one (ticks[], vals[]) row per (series, component),
+      // class/labels carried through the group (no meta join). A
+      // FILLVALUE input packs its SPARSE pre-fill frame and the kernel
+      // decode synthesizes the dense grid (`KernelOps(frame)`), so the
+      // grid rows never cross the pack exchange (w54 5.4M → 99k rows).
+      // The suffixed class and its gtsid are computed once per packed
+      // row, before the explode. The pair is two parts of that one frame
+      // (GtsFrame.parts): a consumer that merges them (w54, batch-ws
+      // fill_stl) reads the kernel once, with no cache and no eager job;
+      // one that reads each part in its own branch runs it per branch.
+      val packed = KernelOps(b.frame).stlDecomposeTagged(
+        (b.lastbucket, b.span, b.count), p.bpp, p.inner, p.outer,
+        p.ns, p.ds, p.js, p.nl, p.dl, p.jl, p.nt, p.dt, p.jt,
+        p.np, p.dp, p.jp)
+      val cls = when(length(col("class")) === 0, col("which"))
+        .otherwise(concat(col("class"), lit("_"), col("which")))
+      val whole = packed.select(cls.as("class"), col("labels"),
+          graft.model.Gts.gtsIdCol(cls, col("labels")).as("gtsid"),
+          col("which"), arrays_zip(col("ticks"), col("vals")).as("pts"))
+        .withColumn("p", explode(col("pts")))
+        .select(col("class"), col("labels"), col("gtsid"),
+          col("p.ticks").as("ts"),
+          lit(null).cast("double").as("lat"),
+          lit(null).cast("double").as("lon"),
+          lit(null).cast("long").as("elev"),
+          lit(graft.model.GtsType.DOUBLE).as("vtype"),
+          lit(null).cast("long").as("vlong"),
+          col("p.vals").as("vdouble"),
+          lit(null).cast("boolean").as("vbool"),
+          lit(null).cast("string").as("vstring"),
+          lit(null).cast("binary").as("vbinary"),
+          col("which"))
+      st.push(GtsFrame.parts(whole, "which", Seq("seasonal", "trend")))
     }
 
     // STLESDTEST (fn/STLESDTEST.java → GTSOutliersHelper.STLESDTest:

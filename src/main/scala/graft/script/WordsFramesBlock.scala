@@ -1229,7 +1229,9 @@ private[script] object WordsFramesBlock {
     // DOUBLEEXPONENTIALSMOOTHING (fn/DOUBLEEXPONENTIALSMOOTHING.java →
     // GTSHelper.doubleExponentialSmoothing:9162-9223, faithful r11):
     // gts alpha beta → [ level-GTS best-estimate-GTS ] — the reference
-    // returns the PAIR, both starting at tick[1]
+    // returns the PAIR, both starting at tick[1], from one pass per
+    // series: here two parts of the one kernel frame (GtsFrame.parts),
+    // so a consumer that merges them runs the kernel once, uncached
     words("DOUBLEEXPONENTIALSMOOTHING") { (w, st, en) =>
       val beta = st.popNum(); val alpha = st.popNum()
       require(alpha > 0.0 && alpha < 1.0,
@@ -1237,13 +1239,7 @@ private[script] object WordsFramesBlock {
       require(beta > 0.0 && beta < 1.0,
         "The trend smoothing factor must be in 0 < beta < 1.")
       val f = en.toFrame(st.pop())
-      // persisted for the program: both faces of the [level,
-      // best-estimate] pair read one kernel pass
-      val tagged = en.persistForProgram(
-        KernelOps(f).holtSmooth(alpha, beta))
-      st.push(Vector[Any](
-        GtsFrame(tagged.filter(col("which") === "s").drop("which")),
-        GtsFrame(tagged.filter(col("which") === "b").drop("which"))))
+      st.push(GtsFrame.parts(KernelOps(f).holtSmooth(alpha, beta), "which", Seq("s", "b")))
     }
     // ZSCORETEST (fn/ZSCORETEST.java): gts useMedian threshold → flagged
     // points; useMedian selects median/MAD (modified z), else mean with

@@ -65,6 +65,9 @@ final class RestFacade(
 
   // ---- session overlay (UPDATE/DELETE/META between requests) ----
   private val updates = mutable.ArrayBuffer.empty[Row]
+  /** The session updates as one local frame, replaced by each /update
+    * (ids hashed as the lines are parsed), so a fetch only reads it. */
+  private var overlay: Option[DataFrame] = None
   private val deletes = mutable.ArrayBuffer.empty[(Selector, Long, Long)]
   private val attrOverlay =
     mutable.Map.empty[(String, Map[String, String]), Map[String, String]]
@@ -73,11 +76,7 @@ final class RestFacade(
     * what fetch/find/delete resolve against. */
   private def combined(): DataFrame = synchronized {
     val base = frame.df
-    val withUpdates =
-      if (updates.isEmpty) base
-      else base.unionByName(Gts.canonicalRehash(
-        base.sparkSession.createDataFrame(
-          new java.util.ArrayList(updates.asJava), Gts.pointSchema)))
+    val withUpdates = overlay.fold(base)(base.unionByName(_))
     deletes.foldLeft(withUpdates) { case (df, (sel, lo, hi)) =>
       // coalesce: a NULL selector verdict (label absent on the row) is
       // NOT a match — without it `!(NULL)` filters the row out and
@@ -301,6 +300,7 @@ final class RestFacade(
       // (the reference update handler 500s with the offending line;
       // silent drops would be invisible data loss)
       var prev: Option[(String, Map[String, String])] = None
+      val ids = mutable.HashMap.empty[(String, Map[String, String]), Long]
       val parsed = Vector.newBuilder[Row]
       body.linesIterator.map(_.trim)
         .filter(l => l.nonEmpty && !l.startsWith("#")).foreach { line =>
@@ -311,13 +311,20 @@ final class RestFacade(
                 s"bad line protocol '$line': " +
                   Option(e.getMessage).getOrElse(e.toString)) }
           prev = Some(id)
-          parsed += Row(p.cls, p.labels, 0L, p.ts,
+          val gtsid = ids.getOrElseUpdate((p.cls, p.labels),
+            graft.plans.GtsId.idOf(p.cls, p.labels))
+          parsed += Row(p.cls, p.labels, gtsid, p.ts,
             p.lat.orNull, p.lon.orNull, p.elev.orNull, p.vtype,
             p.vlong.orNull, p.vdouble.orNull, p.vbool.orNull,
             p.vstring.orNull, p.vbinary.orNull)
         }
       val rows = parsed.result()
-      synchronized { updates ++= rows }
+      val spark = frame.df.sparkSession
+      synchronized {
+        updates ++= rows
+        overlay = Some(spark.createDataFrame(
+          new java.util.ArrayList(updates.asJava), Gts.pointSchema))
+      }
       (200, "")
     })
     server.createContext("/api/v0/delete", (ex: HttpExchange) => safely(ex) {

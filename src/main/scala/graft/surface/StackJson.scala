@@ -1,13 +1,16 @@
 package graft.surface
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators.GtsFrame
 import graft.sources.Formats
 
 /** Stack-value → JSON rendering shared by the HTTP exec facade and the
   * Mobius push path (reference StackUtils.toJSON: frames as row-object
-  * arrays, scalars as literals). */
+  * arrays, scalars as literals). A list holding all the parts of one
+  * frame (STL's or DOUBLEEXPONENTIALSMOOTHING's pair) caches that frame
+  * while it renders, so its kernel runs once. */
 object StackJson {
 
   def render(v: Any, maxRows: Int): String = v match {
@@ -17,7 +20,16 @@ object StackJson {
     case df: DataFrame @unchecked =>
       df.limit(maxRows).toJSON.collect().mkString("[", ",", "]")
     case s: String => "\"" + escape(s) + "\""
-    case l: Vector[Any] @unchecked => l.map(render(_, maxRows)).mkString("[", ",", "]")
+    case l: Vector[Any] @unchecked =>
+      def items = l.map(render(_, maxRows)).mkString("[", ",", "]")
+      wholeOf(l) match {
+        // each part is its own query: without the cache every item would
+        // rerun the pair's kernel
+        case Some(whole) =>
+          whole.persist(StorageLevel.MEMORY_AND_DISK)
+          try items finally whole.unpersist(blocking = false)
+        case None => items
+      }
     case m: Map[Any, Any] @unchecked =>
       // sorted keys: scala's immutable Map iterates in hash order for
       // >4 entries, which would make the JSON nondeterministic across
@@ -30,6 +42,17 @@ object StackJson {
       "null" // RFC 8259 has no NaN/Infinity literal
     case null => "null"
     case o => o.toString // Long/Double/Boolean JSON literals
+  }
+
+  /** The frame `l` splits into when its items are all the parts of
+    * one frame, each once (a pair word's result, [[GtsFrame.parts]]). */
+  private def wholeOf(l: Vector[Any]): Option[DataFrame] = {
+    val parts = l.collect { case GtsFrame(_, Some(p: GtsFrame.Part)) => p }
+    parts.headOption.filter { h =>
+      parts.size == l.size &&
+        parts.forall(p => (p.whole eq h.whole) && p.key == h.key) &&
+        parts.flatMap(_.values).sorted == h.all.toSeq.sorted
+    }.map(_.whole)
   }
 
   /** RFC 8259 string escaping: backslash, quote, and all control chars

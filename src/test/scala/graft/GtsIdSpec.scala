@@ -72,6 +72,13 @@ class GtsIdSpec extends SparkSpec {
     })
   }
 
+  test("idOf over JVM values equals the native id") {
+    check(Prop.forAll(Gen.listOfN(50, genSeries)) { series =>
+      ids(series).zip(series).forall { case ((nat, _, _), (cls, labels)) =>
+        GtsId.idOf(cls, labels) == nat }
+    })
+  }
+
   test("the generators reach the edge cases the property is about") {
     val sample = Gen.listOfN(2000, genSeries).sample.get
     assert(sample.exists(_._2.isEmpty))

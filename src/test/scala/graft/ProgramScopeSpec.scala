@@ -14,7 +14,8 @@ import graft.script.WarpScriptEngine
 
 /** The engine's program scope: what a program's words persist stays
   * cached while its result is consumed and is released by `release()`
-  * or by the next `run`, so a reused engine keeps no cache of its own. */
+  * or by the next `run`, so a reused engine keeps no cache of its own.
+  * Pair words persist nothing at all. */
 class ProgramScopeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val span = 100L
@@ -48,14 +49,7 @@ class ProgramScopeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("word persists live for one program: released by release() and by the next run") {
     val fetch = s"[ '' '~m\\..*' { } $lb ${lb + 1} ] FETCH"
-    val cases = Seq(
-      ("STL pair",
-        s"""[ $fetch bucketizer.mean $lb $span $n ] BUCKETIZE
-           |{ 'PERIOD' 12 'BANDWIDTH_S' -1 'BANDWIDTH_L' 1 'BANDWIDTH_T' 1
-           |  'SPEED' 0 } STL""".stripMargin, 4L * n),
-      ("DOUBLEEXPONENTIALSMOOTHING pair",
-        s"$fetch 0.5 0.3 DOUBLEEXPONENTIALSMOOTHING", 4L * (n - 1)),
-      ("ACCEL.CACHE FETCH", s"ACCEL.CACHE $fetch", 2L * n))
+    val cases = Seq(("ACCEL.CACHE FETCH", s"ACCEL.CACHE $fetch", 2L * n))
     val e = new WarpScriptEngine(
       fetch = (cls, ls, a, b) => source.select(cls, ls).timeclip(a, b),
       nowTs = 0L, session = Some(spark))
@@ -65,12 +59,6 @@ class ProgramScopeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         val df = e.runToFrame(program)
         assert(df.collect().length == rows)
         assert((persistedIds -- baseline).nonEmpty, "the word persisted nothing")
-        if (name.startsWith("STL")) {
-          // the pair's union reads the one cached kernel pass
-          val plan = df.queryExecution.executedPlan
-          assert(collect(plan) { case s: InMemoryTableScanExec => s }.nonEmpty, plan)
-          assert(collect(plan) { case s: FileSourceScanExec => s }.isEmpty, plan)
-        }
         e.release()
         assert(persistedIds -- baseline == Set.empty, "after release()")
 
@@ -78,6 +66,31 @@ class ProgramScopeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         assert((persistedIds -- baseline).nonEmpty)
         assert(e.run("1") == List(1L))
         assert(persistedIds -- baseline == Set.empty, "after the next run")
+      }
+    }
+  }
+
+  test("pair words persist nothing: their merged pair scans the source once") {
+    val fetch = s"[ '' '~m\\..*' { } $lb ${lb + 1} ] FETCH"
+    val cases = Seq(
+      ("STL pair",
+        s"""[ $fetch bucketizer.mean $lb $span $n ] BUCKETIZE
+           |{ 'PERIOD' 12 'BANDWIDTH_S' -1 'BANDWIDTH_L' 1 'BANDWIDTH_T' 1
+           |  'SPEED' 0 } STL""".stripMargin, 4L * n),
+      ("DOUBLEEXPONENTIALSMOOTHING pair",
+        s"$fetch 0.5 0.3 DOUBLEEXPONENTIALSMOOTHING", 4L * (n - 1)))
+    val e = new WarpScriptEngine(
+      fetch = (cls, ls, a, b) => source.select(cls, ls).timeclip(a, b),
+      nowTs = 0L, session = Some(spark))
+    val baseline = persistedIds
+    cases.foreach { case (name, program, rows) =>
+      withClue(s"$name: ") {
+        val df = e.runToFrame(program)
+        assert(df.collect().length == rows)
+        assert(persistedIds -- baseline == Set.empty, "the word persisted")
+        val plan = df.queryExecution.executedPlan
+        assert(collect(plan) { case s: InMemoryTableScanExec => s }.isEmpty, plan)
+        assert(collect(plan) { case s: FileSourceScanExec => s }.size == 1, plan)
       }
     }
   }

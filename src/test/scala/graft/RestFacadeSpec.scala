@@ -335,4 +335,43 @@ class RestFacadeSpec extends SparkSpec {
       assert(persisted -- baseline == Set.empty)
     } finally facade.stop()
   }
+  test("exec renders the STL pair as before and leaves nothing persisted") {
+    import spark.implicits._
+    val (lb, span, n) = (4800L, 100L, 48)
+    val f = GtsFrame(Gts.canonical((for (u <- Seq("2", "1"); j <- 0 until n) yield {
+      val t = lb - (n - 1 - j) * span
+      ("m.x", Map("user" -> u, "dc" -> "e"), t,
+        (if ((j % 12) < 6) 50.0 else -50.0) + (if (u == "1") 0.5 else -0.25) * j)
+    }).toDF("class", "labels", "ts", "vdouble")
+      .withColumn("lat", lit(null).cast(DoubleType))
+      .withColumn("lon", lit(null).cast(DoubleType))
+      .withColumn("elev", lit(null).cast(LongType))
+      .withColumn("vtype", lit(graft.model.GtsType.DOUBLE).cast(ByteType))
+      .withColumn("vlong", lit(null).cast(LongType))
+      .withColumn("vbool", lit(null).cast(BooleanType))
+      .withColumn("vstring", lit(null).cast(StringType))
+      .withColumn("vbinary", lit(null).cast(BinaryType))))
+    val facade = new RestFacade(f,
+      () => new WarpScriptEngine(
+        (cls, labels, a, b) => f.select(cls, labels).timeclip(a, b)))
+    val port = facade.start()
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def sha256(s: String) = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes(UTF_8)).map(b => f"$b%02x").mkString
+    val fetch = s"[ '' '~m\\..*' { } $lb ${lb + 1} ] FETCH"
+    try {
+      val baseline = persisted
+      val (code, body) = post(s"http://127.0.0.1:$port/api/v0/exec",
+        s"""[ $fetch bucketizer.mean $lb $span $n ] BUCKETIZE
+           |{ 'PERIOD' 12 'BANDWIDTH_S' -1 'BANDWIDTH_L' 1 'BANDWIDTH_T' 1
+           |  'SPEED' 0 } STL""".stripMargin)
+      assert(code == 200, body)
+      // the digest of the answer of the design that cached the kernel
+      // output for the program: the parts render the same bytes, in the
+      // same row order
+      assert(sha256(body) ==
+        "c940fbcb364b26a7771772c9643b55105f56a6f69970c934a14fd9b1ff17ec05", body)
+      assert(persisted -- baseline == Set.empty)
+    } finally facade.stop()
+  }
 }
