@@ -98,23 +98,6 @@ final class KernelOps(df: DataFrame,
       k(KernelOps.points(ticks, vals)).iterator.map(p => (id, p.ts, p.v, cls, lbl))
     }.toDF("gtsid", "ts", "vdouble", "class", "labels")
 
-  /** A grid filler on the runner: every index 0..gridCount-1 of each
-    * series, knots keeping their original values and every other index
-    * taking `interp(series)(index)` (None fills nothing). Ticks MUST
-    * already be integer grid indexes. Output (gtsid, ts, vdouble,
-    * class, labels), vdouble nullable. */
-  private def fillGrid(gridCount: Int)(
-      interp: IndexedSeq[Pt] => Long => Option[Double]): DataFrame =
-    perSeries { (id, cls, lbl, ticks, vals) =>
-      val pts = KernelOps.points(ticks, vals)
-      val at = interp(pts)
-      val knots = pts.iterator.map(p => p.ts -> p.v).toMap
-      Iterator.range(0, gridCount).map { i =>
-        val x = i.toLong
-        (id, x, knots.get(x).orElse(at(x)), cls, lbl)
-      }
-    }.toDF("gtsid", "ts", "vdouble", "class", "labels")
-
   /** LTTB downsampling to ≤ threshold points per series (fn/LTTB.java). */
   def lttb(threshold: Int): DataFrame =
     pointKernel(SeriesKernels.lttb(_, threshold))
@@ -128,142 +111,6 @@ final class KernelOps(df: DataFrame,
     * [[SeriesKernels.lttbReference]]. */
   def lttbRef(threshold: Int, timebased: Boolean): DataFrame =
     pointKernel(SeriesKernels.lttbReference(_, threshold, timebased))
-
-  /** filler.akima (reference filler semantics): Akima sub-spline
-    * through each series' knots on grid indexes 0..gridCount-1. Akima
-    * derivatives are LOCAL (four surrounding slopes, boundary slopes
-    * extended virtually per Akima 1970), so unlike [[fillSplineGrid]]
-    * the oracle needs NO recursion — lag/lead windows only. All
-    * arithmetic uses a fixed op order mirrored by the g78 oracle
-    * (virtual-slope expressions expand NESTED, exactly as written
-    * there). n==2 falls back to s=m₀ at both knots (numerically ~=
-    * linear through the general Hermite formula, identically in both
-    * engines); n==1 fills nothing; no extrapolation.
-    */
-  def fillAkimaGrid(gridCount: Int): DataFrame =
-    fillGrid(gridCount) { pts =>
-      val n = pts.length
-      val t = pts.map(_.ts.toDouble)
-      val v = pts.map(_.v)
-      val m = Array.tabulate(math.max(n - 1, 0))(j => (v(j + 1) - v(j)) / (t(j + 1) - t(j)))
-      val s = new Array[Double](n)
-      if (n == 2) { s(0) = m(0); s(1) = m(0) }
-      else if (n >= 3) {
-        val vm1 = 2.0 * m(0) - m(1)
-        val vm2 = 2.0 * vm1 - m(0)
-        val vnm1 = 2.0 * m(n - 2) - m(n - 3)
-        val vn = 2.0 * vnm1 - m(n - 2)
-        var i = 0
-        while (i < n) {
-          val mim2 = if (i >= 2) m(i - 2) else if (i == 1) vm1 else vm2
-          val mim1 = if (i >= 1) m(i - 1) else vm1
-          val mii = if (i <= n - 2) m(i) else vnm1
-          val mip1 = if (i <= n - 3) m(i + 1) else if (i == n - 2) vnm1 else vn
-          val w1 = math.abs(mip1 - mii)
-          val w2 = math.abs(mim1 - mim2)
-          s(i) = if (w1 + w2 == 0.0) (mim1 + mii) / 2.0
-                 else (w1 * mim1 + w2 * mii) / (w1 + w2)
-          i += 1
-        }
-      }
-      x =>
-        if (n >= 2 && x > pts.head.ts && x < pts.last.ts) {
-          var i2 = 1
-          while (pts(i2).ts < x) i2 += 1
-          val i1 = i2 - 1
-          val h = t(i2) - t(i1)
-          val d = x - t(i1)
-          val mi = (v(i2) - v(i1)) / h
-          // Hermite — same term order as the oracle SQL
-          val c = (3.0 * mi - 2.0 * s(i1) - s(i2)) / h
-          val e = (s(i1) + s(i2) - 2.0 * mi) / (h * h)
-          Some(v(i1) + s(i1) * d + c * (d * d) + e * (d * d * d))
-        } else None
-    }
-
-  /** filler.lowess / filler.rlowess (script/filler/FillerLowess.java:
-    * 50-85, FillerRlowess.java:95-115): LOESS-smooth the series' knots
-    * — commons-math3 LoessInterpolator, the reference's own library,
-    * with bandwidthRatio = min(1, bandwidth/size + 1e-12) and
-    * `robustness` reweighting iterations (0 for filler.lowess) — then
-    * interpolate missing grid indexes on the natural cubic spline
-    * through the smoothed knots (LoessInterpolator.interpolate
-    * delegates to SplineInterpolator). Knots keep their ORIGINAL
-    * values; indexes outside the knot range fill nothing
-    * (PolynomialSplineFunction.isValidPoint); size 2 degrades to
-    * linear, size <2 fills nothing — all per the reference. Evaluation
-    * happens on grid indexes rather than raw ticks: LOESS fits and
-    * spline interpolation are invariant under the affine tick→index
-    * map, so the values agree with the tick-domain evaluation to fp
-    * rounding. */
-  def fillLowessGrid(gridCount: Int, bandwidth: Long, robustness: Int,
-                     accuracy: Double): DataFrame =
-    fillGrid(gridCount) { pts =>
-      val n = pts.length
-      val t = pts.map(_.ts.toDouble).toArray
-      val v = pts.map(_.v).toArray
-      val fn: Option[org.apache.commons.math3.analysis.polynomials.PolynomialSplineFunction] =
-        if (n > 2) {
-          val br = math.min(1.0, bandwidth.toDouble / n + 1e-12)
-          Some(new org.apache.commons.math3.analysis.interpolation.LoessInterpolator(
-            br, robustness, accuracy).interpolate(t, v))
-        } else if (n == 2) {
-          Some(new org.apache.commons.math3.analysis.interpolation.LinearInterpolator()
-            .interpolate(t, v))
-        } else None
-      x => fn.filter(_.isValidPoint(x.toDouble)).map(_.value(x.toDouble))
-    }
-
-  /** filler.spline (reference filler semantics): natural cubic spline
-    * through each series' knots, evaluated at every grid index
-    * 0..gridCount-1. Ticks MUST already be integer grid indexes. The
-    * Thomas-algorithm sweep and the evaluation polynomial use a FIXED
-    * operation order (documented inline) so a SQL engine replaying the
-    * identical expressions reproduces every double bit-for-bit — the
-    * g75 oracle does exactly that with two recursive CTEs. No
-    * extrapolation: indexes outside [t₀, tₙ₋₁] yield null (matches
-    * filler.interpolate's boundary behavior, g28). n==2 degrades to
-    * linear (all second derivatives zero); n==1 fills nothing.
-    */
-  def fillSplineGrid(gridCount: Int): DataFrame =
-    fillGrid(gridCount) { pts =>
-      val n = pts.length
-      val t = pts.map(_.ts.toDouble)
-      val v = pts.map(_.v)
-      val M = new Array[Double](math.max(n, 1))
-      if (n >= 3) {
-        val h = Array.tabulate(n - 1)(i => t(i + 1) - t(i))
-        val slope = Array.tabulate(n - 1)(i => (v(i + 1) - v(i)) / h(i))
-        val cp = new Array[Double](n - 1)
-        val dp = new Array[Double](n - 1)
-        var i = 1
-        while (i <= n - 2) {
-          // EXACT op order mirrored by the oracle's forward CTE:
-          //   dd = 6.0 * (slope_i - slope_{i-1})
-          //   w  = 2.0 * (h_{i-1} + h_i) - h_{i-1} * cp_{i-1}
-          val dd = 6.0 * (slope(i) - slope(i - 1))
-          val w = 2.0 * (h(i - 1) + h(i)) - h(i - 1) * cp(i - 1)
-          cp(i) = h(i) / w
-          dp(i) = (dd - h(i - 1) * dp(i - 1)) / w
-          i += 1
-        }
-        var j = n - 2
-        while (j >= 1) { M(j) = dp(j) - cp(j) * M(j + 1); j -= 1 }
-      }
-      x =>
-        if (n >= 2 && x > pts.head.ts && x < pts.last.ts) {
-          var i2 = 1
-          while (pts(i2).ts < x) i2 += 1
-          val i1 = i2 - 1
-          val hh = t(i2) - t(i1)
-          val u = t(i2) - x
-          val w2 = x - t(i1)
-          // evaluation polynomial — same term order as the oracle SQL
-          Some((M(i1) * u * u * u + M(i2) * w2 * w2 * w2) / (6.0 * hh) +
-            (v(i1) / hh - M(i1) * hh / 6.0) * u +
-            (v(i2) / hh - M(i2) * hh / 6.0) * w2)
-        } else None
-    }
 
   /** Deadband compression (ENGINE EXTENSION, g105 — the reference's
     * RANGECOMPACT word is parameterless GTSHelper.compact
@@ -327,22 +174,6 @@ final class KernelOps(df: DataFrame,
       }
     }
 
-  /** filler.newton over a bucket grid (script/filler/FillerNewton.java
-    * evaluated through the FILL word): the same divided-difference
-    * triangle as [[fillNewtonMidpoints]], Horner-evaluated at every
-    * missing grid index strictly inside [t₀, tₙ₋₁] (no extrapolation,
-    * matching the spline/akima grid fillers). Knot ticks keep their
-    * original values. */
-  def fillNewtonGrid(gridCount: Int): DataFrame =
-    fillGrid(gridCount) { pts =>
-      val n = pts.length
-      val (xs, a) = KernelOps.newtonTriangle(pts)
-      x =>
-        if (n >= 2 && x > pts.head.ts && x < pts.last.ts)
-          Some(KernelOps.horner(xs, a, x.toDouble))
-        else None
-    }
-
   /** FFT magnitude spectrum per series (continuum/gts/FFT.java). */
   def fftMag(): DataFrame =
     perSeries { (id, cls, lbl, _, vals) =>
@@ -376,20 +207,6 @@ final class KernelOps(df: DataFrame,
       esdMadRounds(ticks, vals, k, lams).map { case (t, v, r) => (id, t, v, r, cls, lbl) }
     }.toDF("gtsid", "ts", "vdouble", "round", "class", "labels")
 
-  /** STL — the reference's full Seasonal-Trend decomposition based on
-    * LOWESS per series (StlKernel.stl — GTSHelper.stl:11357-11765),
-    * tagged rows ('seasonal' | 'trend'), one kernel pass. */
-  def stlDecompose(bucket: (Long, Long, Long), bpp: Int, inner: Int,
-                   outer: Int, ns: Int, ds: Int, js: Int,
-                   nl: Int, dl: Int, jl: Int, nt: Int, dt: Int, jt: Int,
-                   np: Int, dp: Int, jp: Int): DataFrame =
-    perSeries { (id, cls, lbl, ticks, vals) =>
-      val (s, t) = StlKernel.stl(StlKernel.ofPoints(ticks, vals, Some(bucket)),
-        bpp, inner, outer, ns, ds, js, nl, dl, jl, nt, dt, jt, np, dp, jp)
-      Iterator.range(0, s.values).map(i => (id, "seasonal", s.ticks(i), s.vals(i), cls, lbl)) ++
-        Iterator.range(0, t.values).map(i => (id, "trend", t.ticks(i), t.vals(i), cls, lbl))
-    }.toDF("gtsid", "which", "ts", "vdouble", "class", "labels")
-
   /** STL, PACKED: the word path's [seasonal, trend] pair. Output is one
     * (ticks[], vals[]) row per (series, component), 2 rows per series,
     * so the word path derives each component's class and id once per
@@ -414,13 +231,20 @@ final class KernelOps(df: DataFrame,
     * 10795-11218), with the d-skipping walk and bisquare robustness
     * iterations. `bucket` carries BUCKETIZE metadata; estimates then
     * cover every bucket tick. The smoothed points come back as
-    * (gtsid, ts, vdouble, class, labels). */
+    * (gtsid, ts, vdouble, class, labels). Like [[stlDecomposeTagged]],
+    * the kernel emits one packed (ticks[], vals[]) row per series, so
+    * class and labels are encoded once per series, not once per point,
+    * and the points are exploded after. */
   def rlowessSmooth(q: Int, r: Int, d: Long, p: Int,
                     bucket: Option[(Long, Long, Long)]): DataFrame =
     perSeries { (id, cls, lbl, ticks, vals) =>
       val out = StlKernel.rlowess(StlKernel.ofPoints(ticks, vals, bucket), q, r, d, p)
-      Iterator.tabulate(out.values)(i => (id, out.ticks(i), out.vals(i), cls, lbl))
-    }.toDF("gtsid", "ts", "vdouble", "class", "labels")
+      Iterator((id, cls, lbl, out.ticks.take(out.values), out.vals.take(out.values)))
+    }.toDF("gtsid", "class", "labels", "ticks", "vals")
+      .select(col("gtsid"), explode(arrays_zip(col("ticks"), col("vals"))).as("p"),
+        col("class"), col("labels"))
+      .select(col("gtsid"), col("p.ticks").as("ts"), col("p.vals").as("vdouble"),
+        col("class"), col("labels"))
 
   /** HYBRIDTEST/HYBRIDTEST2 — the reference's piecewise seasonal-hybrid
     * ESD per series (StlKernel.hybridTest); returns the anomalous
@@ -498,15 +322,195 @@ object KernelOps {
   }
 
   /** How a bucket grid fills a tick that holds no point of its series:
-    * FILLVALUE's constant, FILLPREVIOUS's previous knot, FILLNEXT's next
-    * knot, filler.interpolate's line between the two (GTSHelper.java:
-    * 5106, 4893, 4996, fill:5229). The carry rules leave a tick empty
-    * where they have no knot to carry. */
+    * the fillers of GTSHelper.fill:5229 (FILLVALUE, FILLPREVIOUS,
+    * FILLNEXT: GTSHelper.java:5106, 4893, 4996; the rest are
+    * script/filler/Filler*.java). Each rule reads its own knot set:
+    *  - [[Value]], [[Previous]], [[Next]] and [[Linear]]
+    *    (filler.interpolate) read the on-grid points only: off-grid
+    *    points are never knots.
+    *  - [[Trend]] takes the previous and next knots on the grid, and
+    *    their outer neighbours from every packed point.
+    *  - An [[Interpolator]] fits every packed point, on the grid or not,
+    *    a point before the window included.
+    * The carry rules and Trend leave a tick empty where they have no
+    * knot to carry; an interpolator leaves it empty outside the range
+    * of its knots. */
   sealed trait FillRule
   final case class Value(v: Double) extends FillRule
   case object Previous extends FillRule
   case object Next extends FillRule
   case object Linear extends FillRule
+
+  /** filler.trend (script/filler/FillerTrend.java:36-119): each gap
+    * value averages TWO linear projections — the previous knot extended
+    * by the "pre" trend and the next knot pulled back by the "post"
+    * trend, mixed by the gap's relative position α = Δ/span (α on the
+    * previous projection, 1−α on the next, as the reference writes it).
+    * Trend rates come from the knot's own neighbor (prevprev/nextnext),
+    * each falling back to the crossing rate then the far side's rate;
+    * one defined rate backfills the other; no rate → no fill.
+    * One-sided gaps extrapolate with the available rate. Evaluated in
+    * tick space ([[trend]]). */
+  case object Trend extends FillRule
+
+  /** A filler that fits every packed point of a series and evaluates
+    * the fit in grid-index space: a point at tick t is the knot at index
+    * (t - first) / span (long division, truncating), and index i fills
+    * the tick first + i·span. A knot keeps its own value; `at(knots)`
+    * gives the value at any other index, None leaving it empty. */
+  sealed trait Interpolator extends FillRule {
+    def at(pts: IndexedSeq[Pt]): Long => Option[Double]
+  }
+
+  /** filler.spline (reference filler semantics): natural cubic spline
+    * through each series' knots. The Thomas-algorithm sweep and the
+    * evaluation polynomial use a FIXED operation order (documented
+    * inline) so a SQL engine replaying the identical expressions
+    * reproduces every double bit-for-bit — the g75 oracle does exactly
+    * that with two recursive CTEs. No extrapolation: indexes outside
+    * [t₀, tₙ₋₁] stay empty (matches filler.interpolate's boundary
+    * behavior, g28). n==2 degrades to linear (all second derivatives
+    * zero); n==1 fills nothing. */
+  case object Spline extends Interpolator {
+    def at(pts: IndexedSeq[Pt]): Long => Option[Double] = {
+      val n = pts.length
+      val t = pts.map(_.ts.toDouble)
+      val v = pts.map(_.v)
+      val M = new Array[Double](math.max(n, 1))
+      if (n >= 3) {
+        val h = Array.tabulate(n - 1)(i => t(i + 1) - t(i))
+        val slope = Array.tabulate(n - 1)(i => (v(i + 1) - v(i)) / h(i))
+        val cp = new Array[Double](n - 1)
+        val dp = new Array[Double](n - 1)
+        var i = 1
+        while (i <= n - 2) {
+          // EXACT op order mirrored by the oracle's forward CTE:
+          //   dd = 6.0 * (slope_i - slope_{i-1})
+          //   w  = 2.0 * (h_{i-1} + h_i) - h_{i-1} * cp_{i-1}
+          val dd = 6.0 * (slope(i) - slope(i - 1))
+          val w = 2.0 * (h(i - 1) + h(i)) - h(i - 1) * cp(i - 1)
+          cp(i) = h(i) / w
+          dp(i) = (dd - h(i - 1) * dp(i - 1)) / w
+          i += 1
+        }
+        var j = n - 2
+        while (j >= 1) { M(j) = dp(j) - cp(j) * M(j + 1); j -= 1 }
+      }
+      x =>
+        if (n >= 2 && x > pts.head.ts && x < pts.last.ts) {
+          var i2 = 1
+          while (pts(i2).ts < x) i2 += 1
+          val i1 = i2 - 1
+          val hh = t(i2) - t(i1)
+          val u = t(i2) - x
+          val w2 = x - t(i1)
+          // evaluation polynomial — same term order as the oracle SQL
+          Some((M(i1) * u * u * u + M(i2) * w2 * w2 * w2) / (6.0 * hh) +
+            (v(i1) / hh - M(i1) * hh / 6.0) * u +
+            (v(i2) / hh - M(i2) * hh / 6.0) * w2)
+        } else None
+    }
+  }
+
+  /** filler.akima (reference filler semantics): Akima sub-spline
+    * through each series' knots. Akima derivatives are LOCAL (four
+    * surrounding slopes, boundary slopes extended virtually per Akima
+    * 1970), so unlike [[Spline]] the oracle needs NO recursion —
+    * lag/lead windows only. All arithmetic uses a fixed op order
+    * mirrored by the g78 oracle (virtual-slope expressions expand
+    * NESTED, exactly as written there). n==2 falls back to s=m₀ at both
+    * knots (numerically ~= linear through the general Hermite formula,
+    * identically in both engines); n==1 fills nothing; no
+    * extrapolation. */
+  case object Akima extends Interpolator {
+    def at(pts: IndexedSeq[Pt]): Long => Option[Double] = {
+      val n = pts.length
+      val t = pts.map(_.ts.toDouble)
+      val v = pts.map(_.v)
+      val m = Array.tabulate(math.max(n - 1, 0))(j => (v(j + 1) - v(j)) / (t(j + 1) - t(j)))
+      val s = new Array[Double](n)
+      if (n == 2) { s(0) = m(0); s(1) = m(0) }
+      else if (n >= 3) {
+        val vm1 = 2.0 * m(0) - m(1)
+        val vm2 = 2.0 * vm1 - m(0)
+        val vnm1 = 2.0 * m(n - 2) - m(n - 3)
+        val vn = 2.0 * vnm1 - m(n - 2)
+        var i = 0
+        while (i < n) {
+          val mim2 = if (i >= 2) m(i - 2) else if (i == 1) vm1 else vm2
+          val mim1 = if (i >= 1) m(i - 1) else vm1
+          val mii = if (i <= n - 2) m(i) else vnm1
+          val mip1 = if (i <= n - 3) m(i + 1) else if (i == n - 2) vnm1 else vn
+          val w1 = math.abs(mip1 - mii)
+          val w2 = math.abs(mim1 - mim2)
+          s(i) = if (w1 + w2 == 0.0) (mim1 + mii) / 2.0
+                 else (w1 * mim1 + w2 * mii) / (w1 + w2)
+          i += 1
+        }
+      }
+      x =>
+        if (n >= 2 && x > pts.head.ts && x < pts.last.ts) {
+          var i2 = 1
+          while (pts(i2).ts < x) i2 += 1
+          val i1 = i2 - 1
+          val h = t(i2) - t(i1)
+          val d = x - t(i1)
+          val mi = (v(i2) - v(i1)) / h
+          // Hermite — same term order as the oracle SQL
+          val c = (3.0 * mi - 2.0 * s(i1) - s(i2)) / h
+          val e = (s(i1) + s(i2) - 2.0 * mi) / (h * h)
+          Some(v(i1) + s(i1) * d + c * (d * d) + e * (d * d * d))
+        } else None
+    }
+  }
+
+  /** filler.newton (script/filler/FillerNewton.java — the reference
+    * precomputes a divided-difference Newton polynomial through ALL
+    * knots via commons-math and evaluates it at missing ticks): the
+    * [[newtonTriangle]] of [[KernelOps.fillNewtonMidpoints]],
+    * Horner-evaluated at every index strictly inside [t₀, tₙ₋₁] (no
+    * extrapolation, like [[Spline]] and [[Akima]]). */
+  case object Newton extends Interpolator {
+    def at(pts: IndexedSeq[Pt]): Long => Option[Double] = {
+      val n = pts.length
+      val (xs, a) = newtonTriangle(pts)
+      x =>
+        if (n >= 2 && x > pts.head.ts && x < pts.last.ts) Some(horner(xs, a, x.toDouble))
+        else None
+    }
+  }
+
+  /** filler.lowess / filler.rlowess (script/filler/FillerLowess.java:
+    * 50-85, FillerRlowess.java:95-115): LOESS-smooth the series' knots
+    * — commons-math3 LoessInterpolator, the reference's own library,
+    * with bandwidthRatio = min(1, bandwidth/size + 1e-12) and
+    * `robustness` reweighting iterations (0 for filler.lowess) — then
+    * interpolate on the natural cubic spline through the smoothed knots
+    * (LoessInterpolator.interpolate delegates to SplineInterpolator).
+    * Indexes outside the knot range fill nothing
+    * (PolynomialSplineFunction.isValidPoint); size 2 degrades to
+    * linear, size <2 fills nothing — all per the reference. LOESS fits
+    * and spline interpolation are invariant under the affine tick→index
+    * map, so the values agree with the tick-domain evaluation to fp
+    * rounding. */
+  final case class Lowess(bandwidth: Long, robustness: Int, accuracy: Double)
+      extends Interpolator {
+    def at(pts: IndexedSeq[Pt]): Long => Option[Double] = {
+      val n = pts.length
+      val t = pts.map(_.ts.toDouble).toArray
+      val v = pts.map(_.v).toArray
+      val fn: Option[org.apache.commons.math3.analysis.polynomials.PolynomialSplineFunction] =
+        if (n > 2) {
+          val br = math.min(1.0, bandwidth.toDouble / n + 1e-12)
+          Some(new org.apache.commons.math3.analysis.interpolation.LoessInterpolator(
+            br, robustness, accuracy).interpolate(t, v))
+        } else if (n == 2) {
+          Some(new org.apache.commons.math3.analysis.interpolation.LinearInterpolator()
+            .interpolate(t, v))
+        } else None
+      x => fn.filter(_.isValidPoint(x.toDouble)).map(_.value(x.toDouble))
+    }
+  }
 
   /** A bucket grid — `count` ticks of step `span` ending at
     * `lastbucket` — filled by `rule`. A KernelOps built with one packs
@@ -522,14 +526,16 @@ object KernelOps {
   }
 
   /** One series' filled grid from its packed points (sorted by (ts, v),
-    * no null values): the points of a grid-sided left join of the
-    * series plus the fill rule, in tick order.
-    *  - Off-grid points are dropped and are never knots.
-    *  - A present tick keeps its own value, NaN included; a repeated
-    *    tick keeps one point per value, in (ts, v) order.
-    *  - An absent tick takes the rule's value. It holds no point where
-    *    the rule has no knot to carry (the grid's null row, [[grid]]).
-    *  - Under [[Value]], a series with no on-grid knot is `count` fills.
+    * no null values), in tick order: the grid ticks that hold a value,
+    * each with its knot's value or the rule's fill.
+    *  - Carry rules and [[Trend]]: a present tick keeps its own value,
+    *    NaN included; a repeated tick keeps one point per value, in
+    *    (ts, v) order. Under [[Value]], a series with no on-grid knot is
+    *    `count` fills.
+    *  - An [[Interpolator]] reads its knots in (index, v) order; an index
+    *    that holds several keeps the last.
+    *  - A tick without a value holds no point (the grid's null row,
+    *    [[grid]]).
     * Linear evaluates `pv + (nv - pv) * (t - pt) / (nt - pt)` in that op
     * order, tick differences as longs (the g28 oracle replays it).
     * Static so kernel closures capture only the GridFill value. */
@@ -537,31 +543,78 @@ object KernelOps {
       gf: Option[GridFill]): (Array[Long], Array[Double]) = gf match {
     case None => (ticks, vals)
     case Some(g) =>
-      var gi = 0 // the on-grid knots: one merge against the ascending grid
-      val on = ticks.indices.filter { k =>
-        while (gi < g.count && g.tick(gi) < ticks(k)) gi += 1
-        gi < g.count && g.tick(gi) == ticks(k)
-      }
-      val (kt, kv) = (on.map(ticks(_)).toArray, on.map(vals(_)).toArray)
       val dt = Array.newBuilder[Long]
       val dv = Array.newBuilder[Double]
       def emit(t: Long, v: Double): Unit = { dt += t; dv += v }
-      var j = 0 // the first knot at or after tick i; knot j - 1 precedes it
-      for (i <- 0 until g.count) {
-        val t = g.tick(i)
-        if (j < kt.length && kt(j) == t)
-          while (j < kt.length && kt(j) == t) { emit(t, kv(j)); j += 1 }
-        else g.rule match {
-          case Value(c) => emit(t, c)
-          case Previous if j > 0 => emit(t, kv(j - 1))
-          case Next if j < kt.length => emit(t, kv(j))
-          case Linear if j > 0 && j < kt.length =>
-            val (pt, pv, nt, nv) = (kt(j - 1), kv(j - 1), kt(j), kv(j))
-            emit(t, pv + (nv - pv) * (t - pt) / (nt - pt))
-          case _ => // no knot to carry: the tick stays empty
-        }
+      g.rule match {
+        case r: Interpolator =>
+          val first = g.tick(0)
+          val pts = ticks.indices.map(k => Pt((ticks(k) - first) / g.span, vals(k)))
+            .sortBy(p => (p.ts, p.v))(Ordering.Tuple2(Ordering.Long, Ordering.Double.TotalOrdering))
+          val knots = pts.iterator.map(p => p.ts -> p.v).toMap
+          val at = r.at(pts)
+          for (i <- 0 until g.count)
+            knots.get(i.toLong).orElse(at(i.toLong)).foreach(emit(g.tick(i), _))
+        case rule =>
+          var gi = 0 // the on-grid knots: one merge against the ascending grid
+          val on = ticks.indices.filter { k =>
+            while (gi < g.count && g.tick(gi) < ticks(k)) gi += 1
+            gi < g.count && g.tick(gi) == ticks(k)
+          }
+          val (kt, kv) = (on.map(ticks(_)).toArray, on.map(vals(_)).toArray)
+          var j = 0 // the first knot at or after tick i; knot j - 1 precedes it
+          for (i <- 0 until g.count) {
+            val t = g.tick(i)
+            if (j < kt.length && kt(j) == t)
+              while (j < kt.length && kt(j) == t) { emit(t, kv(j)); j += 1 }
+            else rule match {
+              case Value(c) => emit(t, c)
+              case Previous if j > 0 => emit(t, kv(j - 1))
+              case Next if j < kt.length => emit(t, kv(j))
+              case Linear if j > 0 && j < kt.length =>
+                val (pt, pv, nt, nv) = (kt(j - 1), kv(j - 1), kt(j), kv(j))
+                emit(t, pv + (nv - pv) * (t - pt) / (nt - pt))
+              case Trend =>
+                trend(ticks, vals, if (j > 0) on(j - 1) else -1,
+                  if (j < kt.length) on(j) else -1, t).foreach(emit(t, _))
+              case _ => // no knot to carry: the tick stays empty
+            }
+          }
       }
       (dt.result(), dv.result())
+  }
+
+  /** [[Trend]] at the empty tick `t`, from the packed points: `p` and `n`
+    * index its previous and next on-grid knots (-1 where there is none),
+    * and their outer neighbours p - 1 and n + 1 may lie off the grid.
+    * Every expression keeps the op order of the SQL the g87 oracle
+    * replays, a tick difference converted to double after the long
+    * subtraction. */
+  private def trend(ticks: Array[Long], vals: Array[Double], p: Int, n: Int,
+                    t: Long): Option[Double] = {
+    def rate(a: Int, b: Int) = (vals(b) - vals(a)) / (ticks(b) - ticks(a)).toDouble
+    val (hasP, hasN) = (p >= 0, n >= 0)
+    val (hasPP, hasNN) = (p > 0, hasN && n + 1 < ticks.length)
+    val pre0 =
+      if (hasPP) Some(rate(p - 1, p))
+      else if (hasP && hasN) Some(rate(p, n))
+      else if (hasNN) Some(rate(n, n + 1))
+      else None
+    val post0 =
+      if (hasNN) Some(rate(n, n + 1))
+      else if (hasP && hasN) Some(rate(p, n))
+      else if (hasPP) Some(rate(p - 1, p))
+      else None
+    for (preRate <- pre0.orElse(post0); postRate <- post0.orElse(pre0)) yield
+      if (hasP && hasN) {
+        val span = (ticks(n) - ticks(p)).toDouble
+        val delta = (t - ticks(p)).toDouble
+        val alpha = delta / span
+        val projPrev = vals(p) + delta * preRate
+        val projNext = vals(n) - (span - delta) * postRate
+        alpha * projPrev + (1.0 - alpha) * projNext
+      } else if (hasP) vals(p) + preRate * (t - ticks(p)).toDouble
+      else vals(n) - postRate * (ticks(n) - t).toDouble
   }
 
   /** DTW distance between the two sides' series matched on `byLabel`

@@ -97,13 +97,21 @@ object Gts {
     * ([[graft.kernels.KernelOps]]). */
   def seriesMeta(points: DataFrame): DataFrame = aggBySeries(points)()
 
-  /** Normalize an arbitrary projection into the canonical column order,
-    * filling the gtsid from (class, labels). */
-  def canonical(df: DataFrame): DataFrame = {
+  /** Normalize an arbitrary projection into the canonical column order:
+    * the gtsid filled from (class, labels) when absent, any other absent
+    * point column a typed null, an absent vtype DOUBLE (a kernel's
+    * output holds only the columns it computes). The `keep` columns
+    * follow the point columns. */
+  def canonical(df: DataFrame, keep: String*): DataFrame = {
     val withId =
       if (df.columns.contains("gtsid")) df
       else df.withColumn("gtsid", gtsIdCol(col("class"), col("labels")))
-    withId.select(columns.map(col): _*)
+    val present = withId.columns.toSet
+    withId.select(pointSchema.map { f =>
+      if (present(f.name)) col(f.name)
+      else if (f.name == "vtype") lit(GtsType.DOUBLE).as("vtype")
+      else lit(null).cast(f.dataType).as(f.name)
+    } ++ keep.map(col): _*)
   }
 
   /** canonical() with the gtsid unconditionally recomputed from

@@ -1069,26 +1069,22 @@ final case class GtsFrame(df: DataFrame,
     GtsFrame(df.withColumn("vdouble", lit(initial) + cum))
   }
 
-  /** The bucket grid filled by `rule`: FILLPREVIOUS, FILLNEXT,
-    * FILLVALUE and filler.interpolate (GTSHelper.java:4893, :4996,
-    * :5106, fill:5229). Each series is packed once and its `count`
-    * bucket-end ticks exploded from the pack ([[KernelOps.grid]]): one
-    * read of the operand, no join. The grid has the full canonical point
-    * schema (null loc/elev, DOUBLE values, null where the rule leaves a
-    * tick empty) so it composes with every other frame word. A
-    * [[KernelOps.Value]] grid also carries its sparse origin, which a
-    * following kernel packs instead of the grid rows. */
+  /** The bucket grid filled by `rule`: every filler of the FILL word
+    * but MACROFILLER, and FILLPREVIOUS, FILLNEXT, FILLVALUE and
+    * INTERPOLATE (GTSHelper.fill:5229; [[KernelOps.FillRule]]). Each
+    * series is packed once and its `count` bucket-end ticks exploded
+    * from the pack ([[KernelOps.grid]]): one read of the operand, no
+    * join. The grid is a canonical frame ([[Gts.canonical]]: null
+    * loc/elev, DOUBLE values, null where the rule leaves a tick empty)
+    * so it composes with every other frame word. A [[KernelOps.Value]]
+    * grid also carries its sparse origin, which a following kernel packs
+    * instead of the grid rows. */
   def fill(lastbucket: Long, span: Long, count: Long,
            rule: KernelOps.FillRule): GtsFrame = {
     require(count > 0 && count <= Int.MaxValue,
       s"a filled bucket grid needs 0 < count <= ${Int.MaxValue}, got $count")
     val g = KernelOps.GridFill(lastbucket, span, count.toInt, rule)
-    val rows = new KernelOps(df, Some(g)).grid()
-    val grid = rows.select(Gts.pointSchema.map { f =>
-      if (rows.columns.contains(f.name)) col(f.name)
-      else if (f.name == "vtype") lit(graft.model.GtsType.DOUBLE).cast(ByteType).as("vtype")
-      else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
+    val grid = Gts.canonical(new KernelOps(df, Some(g)).grid())
     rule match {
       case _: KernelOps.Value => GtsFrame(grid, Some(Fill(df, g)))
       case _ => GtsFrame(grid)
@@ -1105,76 +1101,6 @@ final case class GtsFrame(df: DataFrame,
         if (w eq w2) && k == k2 && a.intersect(b).isEmpty =>
       part(w, k, a ++ b, all)
     case _ => GtsFrame(df.unionByName(other.df))
-  }
-
-  /** filler.trend (script/filler/FillerTrend.java:36-119): each gap
-    * value averages TWO linear projections — the previous knot extended
-    * by the "pre" trend and the next knot pulled back by the "post"
-    * trend, mixed by the gap's relative position α = Δ/span (α on the
-    * previous projection, 1−α on the next, as the reference writes it).
-    * Trend rates come from the knot's own neighbor (prevprev/nextnext),
-    * each falling back to the crossing rate then the far side's rate;
-    * one defined rate backfills the other; no rate → no fill.
-    * One-sided gaps extrapolate with the available rate.
-    *
-    * All knot values are exact integers (cents) and ticks are exact
-    * longs, so every rate/projection is a fixed IEEE expression tree —
-    * bit-identical in any engine writing the same tree.
-    */
-  def fillTrend(lastbucket: Long, span: Long, count: Long): DataFrame = {
-    val wk = Window.partitionBy(col("gtsid")).orderBy(col("ts"))
-    val knots = df.select(col("gtsid"), col("ts"), col("vdouble"))
-      .withColumn("__ppv", lag(col("vdouble"), 1).over(wk))
-      .withColumn("__ppt", lag(col("ts"), 1).over(wk))
-      .withColumn("__nnv", lead(col("vdouble"), 1).over(wk))
-      .withColumn("__nnt", lead(col("ts"), 1).over(wk))
-    val grid = Gts.seriesMeta(df).withColumn("ts",
-      explode(sequence(lit(lastbucket - (count - 1) * span), lit(lastbucket), lit(span))))
-      .join(knots, Seq("gtsid", "ts"), "left")
-    val wPrev = Window.partitionBy(col("gtsid")).orderBy(col("ts"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wNext = Window.partitionBy(col("gtsid")).orderBy(col("ts"))
-      .rowsBetween(0, Window.unboundedFollowing)
-    def lastNN(c: Column) = last(c, ignoreNulls = true).over(wPrev)
-    def firstNN(c: Column) = first(c, ignoreNulls = true).over(wNext)
-    val x = grid
-      .withColumn("pv", lastNN(when(col("vdouble").isNotNull, col("vdouble"))))
-      .withColumn("pt", lastNN(when(col("vdouble").isNotNull, col("ts"))))
-      .withColumn("ppv", lastNN(when(col("vdouble").isNotNull, col("__ppv"))))
-      .withColumn("ppt", lastNN(when(col("vdouble").isNotNull, col("__ppt"))))
-      .withColumn("nv", firstNN(when(col("vdouble").isNotNull, col("vdouble"))))
-      .withColumn("nt", firstNN(when(col("vdouble").isNotNull, col("ts"))))
-      .withColumn("nnv", firstNN(when(col("vdouble").isNotNull, col("__nnv"))))
-      .withColumn("nnt", firstNN(when(col("vdouble").isNotNull, col("__nnt"))))
-    val preRate0 =
-      when(col("ppv").isNotNull && col("pv").isNotNull,
-        (col("pv") - col("ppv")) / (col("pt") - col("ppt")))
-      .when(col("pv").isNotNull && col("nv").isNotNull,
-        (col("nv") - col("pv")) / (col("nt") - col("pt")))
-      .when(col("nv").isNotNull && col("nnv").isNotNull,
-        (col("nnv") - col("nv")) / (col("nnt") - col("nt")))
-    val postRate0 =
-      when(col("nnv").isNotNull && col("nv").isNotNull,
-        (col("nnv") - col("nv")) / (col("nnt") - col("nt")))
-      .when(col("pv").isNotNull && col("nv").isNotNull,
-        (col("nv") - col("pv")) / (col("nt") - col("pt")))
-      .when(col("ppv").isNotNull && col("pv").isNotNull,
-        (col("pv") - col("ppv")) / (col("pt") - col("ppt")))
-    val preRate = coalesce(preRate0, postRate0)
-    val postRate = coalesce(postRate0, preRate0)
-    val span_ = (col("nt") - col("pt")).cast("double")
-    val delta = (col("ts") - col("pt")).cast("double")
-    val alpha = delta / span_
-    val projPrev = col("pv") + delta * preRate
-    val projNext = col("nv") - (span_ - delta) * postRate
-    x.withColumn("vdouble",
-        when(col("vdouble").isNotNull, col("vdouble"))
-          .when(preRate.isNull && postRate.isNull, lit(null))
-          .when(col("pv").isNotNull && col("nv").isNotNull,
-            alpha * projPrev + (lit(1.0) - alpha) * projNext)
-          .when(col("pv").isNotNull, col("pv") + preRate * (col("ts") - col("pt")))
-          .when(col("nv").isNotNull, col("nv") - postRate * (col("nt") - col("ts"))))
-      .select(col("gtsid"), col("class"), col("labels"), col("ts"), col("vdouble"))
   }
 
   /** COUNTERDELTA/RESETS compensation (fn/COUNTERDELTA.java,

@@ -125,18 +125,18 @@ object GtsQueries7 extends QueryPack {
     // filler.spline (natural cubic spline through daily-bucket knots,
     // evaluated on the 30-day grid): the Thomas tridiagonal sweep and
     // the cubic evaluation run with a FIXED op order in the kernel
-    // (KernelOps.fillSplineGrid) and are REPLAYED by two recursive CTEs
+    // (KernelOps.Spline) and are REPLAYED by two recursive CTEs
     // in the oracle — forward (cp,dp) elimination, backward M
     // substitution — so every filled double hash-matches
     "g75_fillspline" -> ((s, dir) => {
       val start = LB - 29 * DAY
-      val b = cents(s, dir).bucketize(Sum, LB, DAY).df
-        .withColumn("ts", expr(s"(ts - $start) div $DAY")) // day idx 0..29
       // NO round(): the fixed op order makes every double bit-identical
       // across engines, and round(·,6) itself tie-breaks differently on
       // exact .5 decimal boundaries (observed at sf0.01)
-      new graft.kernels.KernelOps(b).fillSplineGrid(30)
-        .select(col("class"), userid, col("ts"), col("vdouble").as("filled"))
+      cents(s, dir).bucketize(Sum, LB, DAY)
+        .fill(LB, DAY, 30, graft.kernels.KernelOps.Spline).df
+        .select(col("class"), userid, expr(s"(ts - $start) div $DAY").as("ts"), // day idx 0..29
+          col("vdouble").as("filled"))
     }),
 
     // filler.akima (Akima 1970 sub-spline): same grid as g75 but the
@@ -144,10 +144,10 @@ object GtsQueries7 extends QueryPack {
     // (virtual boundary slopes expanded nested, same op order)
     "g78_fillakima" -> ((s, dir) => {
       val start = LB - 29 * DAY
-      val b = cents(s, dir).bucketize(Sum, LB, DAY).df
-        .withColumn("ts", expr(s"(ts - $start) div $DAY"))
-      new graft.kernels.KernelOps(b).fillAkimaGrid(30)
-        .select(col("class"), userid, col("ts"), col("vdouble").as("filled"))
+      cents(s, dir).bucketize(Sum, LB, DAY)
+        .fill(LB, DAY, 30, graft.kernels.KernelOps.Akima).df
+        .select(col("class"), userid, expr(s"(ts - $start) div $DAY").as("ts"),
+          col("vdouble").as("filled"))
     }),
 
     // Deterministic HyperLogLog (closes h01's rows-only gap): distinct
@@ -421,7 +421,7 @@ object GtsQueries7 extends QueryPack {
 
     // akima derivative per knot from the four surrounding slopes
     // (boundary slopes extended virtually, nested expressions matching
-    // KernelOps.fillAkimaGrid's evaluation order), then Hermite eval
+    // KernelOps.Akima's evaluation order), then Hermite eval
     // over the g28-style bracketing grid — windows only, no recursion
     "g78_fillakima" -> {
       val start = LB - 29 * DAY

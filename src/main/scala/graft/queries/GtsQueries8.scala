@@ -150,7 +150,7 @@ object GtsQueries8 extends QueryPack {
     // daily buckets over 30 days, same grid as g28
     "g87_filltrend" -> ((s, dir) =>
       cents(s, dir).bucketize(Sum, GtsQueries.LB, DAY)
-        .fillTrend(GtsQueries.LB, DAY, 30)
+        .fill(GtsQueries.LB, DAY, 30, KernelOps.Trend).df
         .select(col("class"), col("labels").getItem("user").as("userid"),
           col("ts"), round(col("vdouble"), 9).as("filled"))),
 

@@ -261,9 +261,9 @@ final class WarpScriptEngine(
     require(windowLen % wordLen == 0,
       "DISCORDS expects pattern length to divide detection window length")
     val f = toFrame(st.pop())
-    GtsFrame(graft.kernels.KernelOps(f)
+    GtsFrame(graft.model.Gts.canonical(graft.kernels.KernelOps(f)
       .discords(windowLen, wordLen, alphabet, count, overlap, distRatio,
-        standardizePAA))
+        standardizePAA)))
   }
 
   private def exec(tokens: Vector[WsToken], st: State): Unit = {

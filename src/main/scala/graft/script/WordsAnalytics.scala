@@ -99,13 +99,15 @@ private[script] object WordsAnalytics {
       // still reads the materialized filled frame (it needs the
       // original dense values), but the kernel input no longer
       // re-executes that dense plan a second time
-      val tagged = KernelOps(b.frame).stlDecompose(
+      val tagged = KernelOps(b.frame).stlDecomposeTagged(
         (b.lastbucket, b.span, b.count), pr.bpp, pr.inner, pr.outer,
         pr.ns, pr.ds, pr.js, pr.nl, pr.dl, pr.jl, pr.nt, pr.dt, pr.jt,
         pr.np, pr.dp, pr.jp)
-      val st2 = tagged.groupBy(col("gtsid"), col("ts")).agg(
-        sum(when(col("which") === "seasonal", col("vdouble"))).as("__s"),
-        sum(when(col("which") === "trend", col("vdouble"))).as("__t"))
+        .select(col("gtsid"), col("which"),
+          explode(arrays_zip(col("ticks"), col("vals"))).as("p"))
+      val st2 = tagged.groupBy(col("gtsid"), col("p.ticks").as("ts")).agg(
+        sum(when(col("which") === "seasonal", col("p.vals"))).as("__s"),
+        sum(when(col("which") === "trend", col("p.vals"))).as("__t"))
       val remFrame = GtsFrame(b.frame.df
         .join(st2, Seq("gtsid", "ts"))
         .withColumn("vdouble", col("vdouble") - (col("__s") + col("__t")))
@@ -204,14 +206,7 @@ private[script] object WordsAnalytics {
           (sum(col("re") * element_at(array(wc.map(lit): _*), m) -
             col("im") * element_at(array(ws.map(lit): _*), m)) / bins).as("x"))
       st.push(GtsFrame(graft.model.Gts.canonicalRehash(out.select(col("class"), col("labels"),
-        lit(0L).as("gtsid"), col("n").as("ts"),
-        lit(null).cast("double").as("lat"), lit(null).cast("double").as("lon"),
-        lit(null).cast("long").as("elev"),
-        lit(graft.model.GtsType.DOUBLE).as("vtype"),
-        lit(null).cast("long").as("vlong"), col("x").as("vdouble"),
-        lit(null).cast("boolean").as("vbool"),
-        lit(null).cast("string").as("vstring"),
-        lit(null).cast("binary").as("vbinary")))))
+        col("n").as("ts"), col("x").as("vdouble")))))
     }
 
     // ---- DWTSPLIT (fn/DWTSPLIT.java): unpivot the wide FDWT result
@@ -235,16 +230,7 @@ private[script] object WordsAnalytics {
           map_concat(col("labels"), map(lit(levelLabel), lit(lvl))).as("labels"),
           lit(idx).as("ts"), col(c).cast("double").as("vdouble"))
       }.reduce(_ unionByName _)
-      st.push(GtsFrame(graft.model.Gts.canonicalRehash(
-        points.select(col("class"), col("labels"), lit(0L).as("gtsid"),
-          col("ts"),
-          lit(null).cast("double").as("lat"), lit(null).cast("double").as("lon"),
-          lit(null).cast("long").as("elev"),
-          lit(graft.model.GtsType.DOUBLE).as("vtype"),
-          lit(null).cast("long").as("vlong"), col("vdouble"),
-          lit(null).cast("boolean").as("vbool"),
-          lit(null).cast("string").as("vstring"),
-          lit(null).cast("binary").as("vbinary")))))
+      st.push(GtsFrame(graft.model.Gts.canonical(points)))
     }
 
     // ---- histogram bounds (fn/LBOUNDS.java: n-1 interior linear

@@ -364,15 +364,7 @@ private[script] object WordsExt3 {
       val tick = unix_micros(to_utc_timestamp(date_trunc(unit, local), tz))
       val grouped = graft.model.Gts.aggBySeries(f.df, tick.as("ts"))(
         agg.column(col("vdouble"), col("ts")).cast("double").as("vdouble"))
-      st.push(graft.operators.GtsFrame(grouped.select(
-        col("class"), col("labels"), col("gtsid"), col("ts"),
-        lit(null).cast("double").as("lat"), lit(null).cast("double").as("lon"),
-        lit(null).cast("long").as("elev"),
-        lit(graft.model.GtsType.DOUBLE).as("vtype"),
-        lit(null).cast("long").as("vlong"), col("vdouble"),
-        lit(null).cast("boolean").as("vbool"),
-        lit(null).cast("string").as("vstring"),
-        lit(null).cast("binary").as("vbinary"))))
+      st.push(graft.operators.GtsFrame(graft.model.Gts.canonical(grouped)))
     }
 
     // ---- parallel-apply aliases (fn/PAPPLY.java family: identical

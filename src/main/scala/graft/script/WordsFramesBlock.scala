@@ -1140,7 +1140,7 @@ private[script] object WordsFramesBlock {
     words("LTTB") { (w, st, en) =>
       val thr = st.popLong().toInt
       val f = en.toFrame(st.pop())
-      st.push(GtsFrame(KernelOps(f).lttbRef(thr, timebased = false)))
+      st.push(GtsFrame(graft.model.Gts.canonical(KernelOps(f).lttbRef(thr, timebased = false))))
     }
     // FFT surface (continuum/gts/FFT.java): gts bins span lastbucket FFT
     // → per-series spectrum rows (k, re, im, mag); see StatOps.dft
@@ -1224,7 +1224,7 @@ private[script] object WordsFramesBlock {
       require(alpha > 0.0 && alpha < 1.0,
         "The smoothing factor must be in 0 < alpha < 1.")
       val f = en.toFrame(st.pop())
-      st.push(GtsFrame(KernelOps(f).expSmooth(alpha)))
+      st.push(GtsFrame(graft.model.Gts.canonical(KernelOps(f).expSmooth(alpha))))
     }
     // DOUBLEEXPONENTIALSMOOTHING (fn/DOUBLEEXPONENTIALSMOOTHING.java →
     // GTSHelper.doubleExponentialSmoothing:9162-9223, faithful r11):
@@ -1239,7 +1239,8 @@ private[script] object WordsFramesBlock {
       require(beta > 0.0 && beta < 1.0,
         "The trend smoothing factor must be in 0 < beta < 1.")
       val f = en.toFrame(st.pop())
-      st.push(GtsFrame.parts(KernelOps(f).holtSmooth(alpha, beta), "which", Seq("s", "b")))
+      val whole = graft.model.Gts.canonical(KernelOps(f).holtSmooth(alpha, beta), "which")
+      st.push(GtsFrame.parts(whole, "which", Seq("s", "b")))
     }
     // ZSCORETEST (fn/ZSCORETEST.java): gts useMedian threshold → flagged
     // points; useMedian selects median/MAD (modified z), else mean with

@@ -539,7 +539,8 @@ private[script] object WordsGts {
     words("TLTTB") { (w, st, en) =>
       val thr = st.popLong().toInt
       val f = en.toFrame(st.pop())
-      st.push(GtsFrame(graft.kernels.KernelOps(f).lttbRef(thr, timebased = true)))
+      st.push(GtsFrame(graft.model.Gts.canonical(
+        graft.kernels.KernelOps(f).lttbRef(thr, timebased = true))))
     }
 
     // ---- series grouping (fn/PARTITION.java: [gts] [labels] →

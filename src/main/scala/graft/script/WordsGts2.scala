@@ -375,37 +375,22 @@ private[script] object WordsGts2 {
     words("FILL") { (w, st, en) =>
       val filler = st.pop()
       val b = en.toBucketed(st.pop())
-      val first = b.lastbucket - (b.count - 1) * b.span
-      def grid(g: (KernelOps, Int) => org.apache.spark.sql.DataFrame) = {
-        val idxDf = b.frame.df.withColumn("ts",
-          expr(s"(ts - $first) div ${b.span}"))
-        val filled = g(new KernelOps(idxDf), b.count.toInt)
-          .filter(col("vdouble").isNotNull)
-          .withColumn("ts", col("ts") * b.span + first)
-        GtsFrame(graft.model.Gts.canonicalRehash(filled
-          .select(col("class"), col("labels"), col("gtsid"), col("ts").cast("long"),
-            lit(null).cast("double").as("lat"), lit(null).cast("double").as("lon"),
-            lit(null).cast("long").as("elev"),
-            lit(graft.model.GtsType.DOUBLE).as("vtype"),
-            lit(null).cast("long").as("vlong"), col("vdouble"),
-            lit(null).cast("boolean").as("vbool"),
-            lit(null).cast("string").as("vstring"),
-            lit(null).cast("binary").as("vbinary"))))
-      }
+      // every filler but MACROFILLER is a fill rule on the one grid;
+      // the interpolators' result holds only the ticks they fill
       def filled(r: KernelOps.FillRule) =
         b.copy(frame = b.frame.fill(b.lastbucket, b.span, b.count, r))
+      def interpolated(r: KernelOps.Interpolator) =
+        b.copy(frame = GtsFrame(filled(r).frame.df.filter(col("vdouble").isNotNull)))
       val out: Any = filler match {
         case FillerVal("filler.previous", _) => filled(KernelOps.Previous)
         case FillerVal("filler.next", _) => filled(KernelOps.Next)
         case FillerVal("filler.interpolate" | "filler.linear", _) => filled(KernelOps.Linear)
         case FillerVal("filler.value", v) => filled(KernelOps.Value(v))
-        case FillerVal("filler.trend", _) =>
-          b.copy(frame = GtsFrame(b.frame.fillTrend(b.lastbucket, b.span, b.count)))
-        case FillerVal("filler.spline", _) => b.copy(frame = grid(_.fillSplineGrid(_)))
-        case FillerVal("filler.akima", _) => b.copy(frame = grid(_.fillAkimaGrid(_)))
-        case FillerVal("filler.newton", _) => b.copy(frame = grid(_.fillNewtonGrid(_)))
-        case LowessFillerVal(_, bw, rob, acc) =>
-          b.copy(frame = grid(_.fillLowessGrid(_, bw, rob, acc)))
+        case FillerVal("filler.trend", _) => filled(KernelOps.Trend)
+        case FillerVal("filler.spline", _) => interpolated(KernelOps.Spline)
+        case FillerVal("filler.akima", _) => interpolated(KernelOps.Akima)
+        case FillerVal("filler.newton", _) => interpolated(KernelOps.Newton)
+        case LowessFillerVal(_, bw, rob, acc) => interpolated(KernelOps.Lowess(bw, rob, acc))
         // MACROFILLER (FILL.java:40-44: the macro gets the missing
         // tick, leaves the fill value) — executor-side ScalarEval
         case MacroAgg(_, tokens) =>
@@ -463,15 +448,7 @@ private[script] object WordsGts2 {
           case o :: _ => throw new IllegalArgumentException(s"MACROFILLER returned $o")
         }
       }.toDF("gtsid", "class", "labels", "ts", "vdouble")
-      .select(col("class"), col("labels"), col("gtsid"), col("ts"),
-        lit(null).cast("double").as("lat"), lit(null).cast("double").as("lon"),
-        lit(null).cast("long").as("elev"),
-        lit(graft.model.GtsType.DOUBLE).as("vtype"),
-        lit(null).cast("long").as("vlong"), col("vdouble"),
-        lit(null).cast("boolean").as("vbool"),
-        lit(null).cast("string").as("vstring"),
-        lit(null).cast("binary").as("vbinary"))
-    df.unionByName(filled)
+    df.unionByName(graft.model.Gts.canonical(filled))
   }
 
   private def unwrapOf(v: Any, en: WarpScriptEngine) = v match {

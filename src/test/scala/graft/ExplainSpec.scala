@@ -354,7 +354,7 @@ class ExplainSpec extends SparkSpec {
         false),
       ("filterSeries", f.filterSeries(col("class") === "m.a").df, true),
       ("fillValue", f.fill(40L, 10L, 4L, graft.kernels.KernelOps.Value(0.0)).df, true),
-      ("fillTrend", f.fillTrend(40L, 10L, 4L), false),
+      ("fillTrend", f.fill(40L, 10L, 4L, graft.kernels.KernelOps.Trend).df, true),
       ("linReg", StatOps.linReg(f, 10L, 40L), true),
       ("momentStats", StatOps.momentStats(f), true),
       ("haarDwt", StatOps.haarDwt(f, 2, 10L, 40L), true),
@@ -460,7 +460,8 @@ class ExplainSpec extends SparkSpec {
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      Seq("FILLPREVIOUS", "FILLNEXT", "[ 0 0 0 0.0 ] FILLVALUE", "INTERPOLATE")
+      Seq("FILLPREVIOUS", "FILLNEXT", "[ 0 0 0 0.0 ] FILLVALUE", "INTERPOLATE",
+        "filler.trend FILL")
         .foreach { word =>
           val p = fullPlan(eng.runToFrame(s"$bucketized $word"))
           assert(p.split("FileScan").length - 1 == 1, s"$word\n$p")

@@ -62,7 +62,7 @@ class FillFusionSpec extends SparkSpec {
         standardizePAA = true)),
       "ESDTEST" -> (_.esdFlag(3, lams)),
       "SINGLEEXPONENTIALSMOOTHING" -> (_.expSmooth(0.5)),
-      "STL" -> (_.stlDecompose((95L, 1L, 96L), p.bpp, p.inner, p.outer,
+      "STL" -> (_.stlDecomposeTagged((95L, 1L, 96L), p.bpp, p.inner, p.outer,
         p.ns, p.ds, p.js, p.nl, p.dl, p.jl, p.nt, p.dt, p.jt, p.np, p.dp, p.jp)))
     kernels.foreach { case (name, k) =>
       val a = rows(k(fused))

@@ -48,6 +48,7 @@ class KernelMetaSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(ids.size == 2)
     val ops = KernelOps(in)
+    def filled(rule: KernelOps.FillRule) = GtsFrame(in).fill(95L, 1L, 96L, rule).df
     val lams = StatOps.lambdas(0.05, 128)
     val p = StlParams.resolve(Map("PERIOD" -> 12L))
     val h = StlParams.resolve(Map("PERIOD" -> 12L, "BANDWIDTH_S" -> -1L, "ROBUST" -> false))
@@ -56,10 +57,11 @@ class KernelMetaSpec extends SparkSpec {
       "lttb" -> ops.lttb(10),
       "lttbExact" -> ops.lttbExact(10),
       "lttbRef" -> ops.lttbRef(10, timebased = false),
-      "fillAkimaGrid" -> ops.fillAkimaGrid(96),
-      "fillLowessGrid" -> ops.fillLowessGrid(96, 40, 0, 1e-12),
-      "fillSplineGrid" -> ops.fillSplineGrid(96),
-      "fillNewtonGrid" -> ops.fillNewtonGrid(96),
+      "fillAkimaGrid" -> filled(KernelOps.Akima),
+      "fillLowessGrid" -> filled(KernelOps.Lowess(40, 0, 1e-12)),
+      "fillSplineGrid" -> filled(KernelOps.Spline),
+      "fillNewtonGrid" -> filled(KernelOps.Newton),
+      "fillTrend" -> filled(KernelOps.Trend),
       "fillNewtonMidpoints" -> ops.fillNewtonMidpoints(),
       "rangeCompact" -> ops.rangeCompact(5.0),
       "expSmooth" -> ops.expSmooth(0.5),
@@ -70,8 +72,6 @@ class KernelMetaSpec extends SparkSpec {
       "zscoreOutliers" -> ops.zscoreOutliers(2.0),
       "esdFlag" -> ops.esdFlag(3, lams),
       "esdMadFlag" -> ops.esdMadFlag(3, lams),
-      "stlDecompose" -> ops.stlDecompose(bucket, p.bpp, p.inner, p.outer,
-        p.ns, p.ds, p.js, p.nl, p.dl, p.jl, p.nt, p.dt, p.jt, p.np, p.dp, p.jp),
       "stlDecomposeTagged" -> ops.stlDecomposeTagged(bucket, p.bpp, p.inner,
         p.outer, p.ns, p.ds, p.js, p.nl, p.dl, p.jl, p.nt, p.dt, p.jt,
         p.np, p.dp, p.jp),

@@ -21,9 +21,9 @@ class RegistryTailSpec extends SparkSpec {
   test("fillLowessGrid matches LoessInterpolator.interpolate exactly " +
     "(FillerLowess.java:50-85)") {
     for (rob <- Seq(0, 2)) {
-      val filled = new KernelOps(lowessFixture)
-        .fillLowessGrid(15, bandwidth = 40, robustness = rob, accuracy = 1e-12)
-        .filter(col("vdouble").isNotNull)
+      val filled = GtsFrame(lowessFixture)
+        .fill(14L, 1L, 15L, KernelOps.Lowess(bandwidth = 40, robustness = rob, accuracy = 1e-12))
+        .df.filter(col("vdouble").isNotNull)
       val got = filled.select(col("ts"), col("vdouble")).collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
       val t = Array(0.0, 2, 3, 5, 8, 9, 11, 14)
@@ -50,9 +50,9 @@ class RegistryTailSpec extends SparkSpec {
     // StatOps.lowessFit scaladoc).
     val gappy = gtsOf((0L to 14L).filter(t => t % 3 != 1)
       .map(t => ("m", "u", t, 3.0 + 2.0 * t)): _*)
-    val filled = new KernelOps(gappy)
-      .fillLowessGrid(15, bandwidth = 40, robustness = 0, accuracy = 1e-12)
-      .filter(col("vdouble").isNotNull)
+    val filled = GtsFrame(gappy)
+      .fill(14L, 1L, 15L, KernelOps.Lowess(bandwidth = 40, robustness = 0, accuracy = 1e-12))
+      .df.filter(col("vdouble").isNotNull)
     filled.collect().foreach { r =>
       val t = r.getAs[Long]("ts"); val v = r.getAs[Double]("vdouble")
       assert(math.abs(v - (3.0 + 2.0 * t)) < 1e-9, s"filler at $t")

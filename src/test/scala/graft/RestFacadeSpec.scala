@@ -374,4 +374,35 @@ class RestFacadeSpec extends SparkSpec {
       assert(persisted -- baseline == Set.empty)
     } finally facade.stop()
   }
+
+  test("exec answers a kernel word's result as a canonical frame: " +
+    "DOUBLEEXPONENTIALSMOOTHING renders, and its part merges with its operand") {
+    import spark.implicits._
+    val f = GtsFrame(Gts.canonical((1 to 6).map(j => ("m.x", Map("host" -> "a"), j * 100L, j * 1.5))
+      .toDF("class", "labels", "ts", "vdouble")
+      .withColumn("lat", lit(null).cast(DoubleType))
+      .withColumn("lon", lit(null).cast(DoubleType))
+      .withColumn("elev", lit(null).cast(LongType))
+      .withColumn("vtype", lit(graft.model.GtsType.DOUBLE).cast(ByteType))
+      .withColumn("vlong", lit(null).cast(LongType))
+      .withColumn("vbool", lit(null).cast(BooleanType))
+      .withColumn("vstring", lit(null).cast(StringType))
+      .withColumn("vbinary", lit(null).cast(BinaryType))))
+    val facade = new RestFacade(f,
+      () => new WarpScriptEngine(
+        (cls, labels, a, b) => f.select(cls, labels).timeclip(a, b)))
+    val port = facade.start()
+    val fetch = "[ 'm.x' { } 1000 1001 ] FETCH"
+    try {
+      val (c1, des) = post(s"http://127.0.0.1:$port/api/v0/exec",
+        s"$fetch 0.5 0.3 DOUBLEEXPONENTIALSMOOTHING")
+      assert(c1 == 200, des)
+      assert(des.contains("\"c\":\"m.x\""), des)
+      val (c2, merged) = post(s"http://127.0.0.1:$port/api/v0/exec",
+        s"$fetch 'f' STORE $$f 0.5 0.3 DOUBLEEXPONENTIALSMOOTHING 0 GET 'd' STORE " +
+          "[ $d $f ] MERGE")
+      assert(c2 == 200, merged)
+      assert(merged.contains("\"c\":\"m.x\""), merged)
+    } finally facade.stop()
+  }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.kernels.KernelOps.{Akima, Spline}
 import graft.kernels.SeriesKernels
 import graft.kernels.SeriesKernels.Pt
 import graft.model.Gts
@@ -27,6 +28,10 @@ class StatOpsSpec extends SparkSpec {
       .withColumn("vstring", lit(null).cast(StringType))
       .withColumn("vbinary", lit(null).cast(BinaryType))))
   }
+
+  /** A filled grid's (gtsid, ts, vdouble) rows. */
+  private def grid(f: GtsFrame) =
+    f.df.select(col("gtsid"), col("ts"), col("vdouble")).collect()
 
   test("correlate: perfect positive and negative correlation; degenerate NULL") {
     val a = frame(Seq(("x", "1", 1L, 1.0), ("x", "1", 2L, 2.0), ("x", "1", 3L, 3.0),
@@ -77,14 +82,14 @@ class StatOpsSpec extends SparkSpec {
     // knots at 0,2,4,6 of a straight line → every interior fill is on
     // the line (natural spline of collinear knots has all M = 0)
     val f = frame(Seq(0L, 2L, 4L, 6L).map(i => ("x", "1", i, 10.0 + 3.0 * i)))
-    val got = new graft.kernels.KernelOps(f.df).fillSplineGrid(8).collect()
+    val got = grid(f.fill(7L, 1L, 8L, Spline))
       .map(r => r.getLong(1) -> (if (r.isNullAt(2)) None else Some(r.getDouble(2))))
       .toMap
     (0 to 6).foreach(i => assert(got(i.toLong).contains(10.0 + 3.0 * i), s"i=$i"))
     assert(got(7L).isEmpty) // beyond last knot: no extrapolation
     // single-knot series fills nothing but its own tick
     val one = frame(Seq(("y", "1", 3L, 5.0)))
-    val g1 = new graft.kernels.KernelOps(one.df).fillSplineGrid(5).collect()
+    val g1 = grid(one.fill(4L, 1L, 5L, Spline))
       .map(r => r.getLong(1) -> (if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
     assert(g1(3L).contains(5.0) && g1(0L).isEmpty && g1(4L).isEmpty)
   }
@@ -93,7 +98,7 @@ class StatOpsSpec extends SparkSpec {
     // knots 0..6 with a spike at 3 — spline overshoots bounded, exact at knots
     val vals = Seq(0.0, 0.0, 0.0, 100.0, 0.0, 0.0, 0.0)
     val f = frame(vals.zipWithIndex.map { case (v, i) => ("x", "1", i.toLong * 2, v) })
-    val got = new graft.kernels.KernelOps(f.df).fillSplineGrid(13).collect()
+    val got = grid(f.fill(12L, 1L, 13L, Spline))
       .map(r => r.getLong(1) -> r.getDouble(2)).toMap
     assert(got(6L) == 100.0)
     assert(got(5L) > 40.0 && got(5L) < 100.0) // rises toward the spike
@@ -102,7 +107,7 @@ class StatOpsSpec extends SparkSpec {
 
   test("fillAkimaGrid: exact at knots, linear through linear data, local response") {
     val f = frame(Seq(0L, 2L, 4L, 6L, 8L).map(i => ("x", "1", i, 10.0 + 3.0 * i)))
-    val got = new graft.kernels.KernelOps(f.df).fillAkimaGrid(9).collect()
+    val got = grid(f.fill(8L, 1L, 9L, Akima))
       .map(r => r.getLong(1) -> (if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
     // collinear knots → akima reproduces the line at every interior tick
     (0 to 8).filter(_ % 2 == 1).foreach(i =>
@@ -111,7 +116,7 @@ class StatOpsSpec extends SparkSpec {
     val spiky = frame(Seq((0L, 0.0), (2L, 0.0), (4L, 0.0), (6L, 0.0),
       (8L, 0.0), (10L, 100.0), (12L, 0.0))
       .map { case (t, v) => ("y", "1", t, v) })
-    val g2 = new graft.kernels.KernelOps(spiky.df).fillAkimaGrid(13).collect()
+    val g2 = grid(spiky.fill(12L, 1L, 13L, Akima))
       .map(r => r.getLong(1) -> (if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
     assert(math.abs(g2(3L).get) < 1e-9) // flat region unaffected (locality)
   }

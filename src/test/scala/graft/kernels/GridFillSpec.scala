@@ -43,6 +43,7 @@ class GridFillSpec extends AnyFunSuite {
         case Linear =>
           for ((pt, pv) <- prev(k); (nt, nv) <- next(k))
             yield pv + (nv - pv) * (t - pt) / (nt - pt)
+        case other => fail(s"no reference window for $other")
       }).map(t -> _)
     }
     (out.map(_._1).toArray, out.map(_._2).toArray)

@@ -9,8 +9,10 @@ seed..seed+pairs-1 (the base first on even pairs, the change first on odd
 ones, so a drift of the box hits both sides alike), each run with its
 own checkout's sources and build. Prints, per gated end-to-end metric of
 BENCHMARK.json, the median of each side, their ratio (change / base),
-the base's interquartile range and the number of pairs in which the
-change is better, then the failed-operation share of each side.
+the base's interquartile range, the number of pairs in which the
+change is better, the metric's bound and the verdict of the gate a
+change that claims no gain must pass (see `verdict`), then the
+failed-operation share of each side.
 --extra adds a printed metric, such as rest-mixed's fetch_p50_ms; --out
 writes every run's metrics as JSON.
 """
@@ -28,6 +30,24 @@ ROOT = Path(__file__).resolve().parents[1]
 def gated(spec):
     """(name, better) of each gated end-to-end metric of a BENCHMARK.json."""
     return [(m["name"], m["better"]) for m in spec["end_to_end"]]
+
+
+def bounds(spec):
+    """name -> bound of each gated end-to-end metric of a BENCHMARK.json."""
+    return {m["name"]: m["bound"] for m in spec["end_to_end"]}
+
+
+def verdict(bm, cm, iqr, better, bound):
+    """The no-gain gate of one metric, its bound a fraction of the base
+    median: 'worse' when the change's median is worse than the base's by
+    more than the bound, 'unresolved' when the base's IQR is wider than
+    the bound, 'ok' otherwise."""
+    worse = cm > bm * (1 + bound) if better == "lower" else cm < bm * (1 - bound)
+    if worse:
+        return "worse"
+    if iqr > bound * abs(bm):
+        return "unresolved"
+    return "ok"
 
 
 def run_once(checkout, workload, seed, seconds):
@@ -85,10 +105,17 @@ def failed_share(runs):
     return sum(r["failed"] for r in runs) / attempted if attempted else 0.0
 
 
-def report(rows, base, change):
-    out = [f"{'metric':18} {'base':>11} {'change':>11} {'ratio':>7} {'base IQR':>10} {'better':>7}"]
+def report(rows, base, change, metrics, limits):
+    """The summary table; `limits` maps a gated metric to its bound, and
+    a metric without one (an --extra) gets no verdict."""
+    better = dict(metrics)
+    out = [f"{'metric':18} {'base':>11} {'change':>11} {'ratio':>7} {'base IQR':>10} {'better':>7}"
+           f" {'bound':>6} verdict"]
     for name, bm, cm, ratio, iqr, wins, n in rows:
-        out.append(f"{name:18} {bm:11.5g} {cm:11.5g} {ratio:7.4f} {iqr:10.4g} {wins:>3}/{n:<3}")
+        bound = limits.get(name)
+        gate = (f"{bound:6.3g} {verdict(bm, cm, iqr, better[name], bound)}"
+                if bound is not None else f"{'-':>6} -")
+        out.append(f"{name:18} {bm:11.5g} {cm:11.5g} {ratio:7.4f} {iqr:10.4g} {wins:>3}/{n:<3} {gate}")
     out.append(f"{'failed share':18} {failed_share(base):11.4g} {failed_share(change):11.4g}")
     return "\n".join(out)
 
@@ -105,7 +132,8 @@ def main():
                     help="also summarize a printed metric (lower is better by default)")
     ap.add_argument("--out", help="write every run's metrics here as JSON")
     args = ap.parse_args()
-    metrics = gated(json.loads((Path(args.change) / "BENCHMARK.json").read_text()))
+    spec = json.loads((Path(args.change) / "BENCHMARK.json").read_text())
+    metrics = gated(spec)
     metrics += [(e.split(":")[0], e.split(":")[1] if ":" in e else "lower") for e in args.extra]
     sides = {"base": args.base, "change": args.change}
     runs = {"base": [], "change": []}
@@ -118,7 +146,8 @@ def main():
         if args.out:
             Path(args.out).write_text(json.dumps(runs, indent=1))
     print(f"{args.workload}: {args.pairs} pairs, seeds {args.seed}..{args.seed + args.pairs - 1}")
-    print(report(summarize(runs["base"], runs["change"], metrics), runs["base"], runs["change"]))
+    print(report(summarize(runs["base"], runs["change"], metrics), runs["base"], runs["change"],
+                 metrics, bounds(spec)))
 
 
 if __name__ == "__main__":

@@ -54,12 +54,44 @@ class Summary(unittest.TestCase):
         self.assertIsNone(ab.metric_line("# probe fill_stl: exchanges=2"))
         self.assertIsNone(ab.metric_line("pair 1 done now"))
 
+    def test_verdicts(self):
+        # lower is better: 1.3 is 30% worse than 1.0, beyond a 0.25 bound
+        self.assertEqual(ab.verdict(1.0, 1.3, 0.1, "lower", 0.25), "worse")
+        self.assertEqual(ab.verdict(1.0, 1.2, 0.1, "lower", 0.25), "ok")
+        # higher is better: 0.7 is 30% below 1.0
+        self.assertEqual(ab.verdict(1.0, 0.7, 0.1, "higher", 0.25), "worse")
+        self.assertEqual(ab.verdict(1.0, 1.5, 0.1, "higher", 0.25), "ok")
+        # a base IQR of 30% of its median is wider than a 0.25 bound
+        self.assertEqual(ab.verdict(1.0, 1.0, 0.3, "lower", 0.25), "unresolved")
+        self.assertEqual(ab.verdict(1.0, 1.0, 0.25, "lower", 0.25), "ok")
+        # a median beyond the bound is worse however wide the spread
+        self.assertEqual(ab.verdict(1.0, 2.0, 0.5, "lower", 0.25), "worse")
+
+    def test_report_prints_bound_and_verdict(self):
+        base = [run(cold_s=c) for c in (1.0, 1.0, 1.0, 1.0)]
+        change = [run(cold_s=c) for c in (2.0, 2.0, 2.0, 2.0)]
+        rows = ab.summarize(base, change, [("cold_s", "lower"), ("fetch_p50_ms", "lower")])
+        text = ab.report(rows, base, change, [("cold_s", "lower")], {"cold_s": 0.25})
+        line = next(l for l in text.splitlines() if l.startswith("cold_s"))
+        self.assertEqual(line.split()[-2:], ["0.25", "worse"])
+        self.assertIn("verdict", text.splitlines()[0])
+
+    def test_extra_metrics_get_no_verdict(self):
+        base = [run(fetch_p50_ms=10.0), run(fetch_p50_ms=11.0)]
+        change = [run(fetch_p50_ms=30.0), run(fetch_p50_ms=31.0)]
+        metrics = [("fetch_p50_ms", "lower")]
+        text = ab.report(ab.summarize(base, change, metrics), base, change, metrics, {})
+        line = next(l for l in text.splitlines() if l.startswith("fetch_p50_ms"))
+        self.assertEqual(line.split()[-2:], ["-", "-"])
+
     def test_gated_reads_benchmark_json(self):
         import json
         spec = json.loads((ab.ROOT / "BENCHMARK.json").read_text())
         names = [n for n, _ in ab.gated(spec)]
         self.assertIn("throughput_per_s", names)
         self.assertEqual(dict(ab.gated(spec))["throughput_per_s"], "higher")
+        self.assertEqual(set(ab.bounds(spec)), set(names))
+        self.assertEqual(ab.bounds(spec)["retained_heap_mb"], 0.15)
 
 
 if __name__ == "__main__":
