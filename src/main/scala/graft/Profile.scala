@@ -26,26 +26,6 @@ object Profile {
       }
     })
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }
-    // A/B: JIT-warm the sequential kernels on synthetic data (shared
-    // JVM in local mode, so C2-compiled kernel code benefits executors)
-    if (sys.env.get("SPARK_GRAFT_WARM_KERNELS").contains("1")) {
-      val t0 = System.nanoTime()
-      val rnd = new java.util.Random(1)
-      var i = 0
-      while (i < 400) {
-        val n = 240
-        val ticks = Array.tabulate(n)(j => 1000000L * j)
-        val vals = Array.fill(n)(rnd.nextInt(1000).toDouble)
-        val g = kernels.StlKernel.ofPoints(ticks, vals, Some((1000000L * (n - 1), 1000000L, n.toLong)))
-        kernels.StlKernel.stl(g, 24, 2, 0, -1, 1, 0, 1, 1, 0, 1, 1, 0, 0, 2, 0)
-        val pts = IndexedSeq.tabulate(n)(j =>
-          kernels.SeriesKernels.Pt(ticks(j), vals(j)))
-        kernels.SeriesKernels.discords(pts, 8, 4, 4, 2, false, 1.0, true)
-        kernels.SeriesKernels.lttb(pts, 50)
-        i += 1
-      }
-      println(f"[profile] kernel warmup: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
     val dumpStages = sys.env.get("SPARK_GRAFT_PROFILE_STAGES").contains("1")
     for (name <- names; i <- 1 to k) {
       SparkEntry.prewarm.get(name).foreach(p =>

@@ -98,10 +98,6 @@ final class KernelOps(df: DataFrame,
       k(KernelOps.points(ticks, vals)).iterator.map(p => (id, p.ts, p.v, cls, lbl))
     }.toDF("gtsid", "ts", "vdouble", "class", "labels")
 
-  /** LTTB downsampling to ≤ threshold points per series (fn/LTTB.java). */
-  def lttb(threshold: Int): DataFrame =
-    pointKernel(SeriesKernels.lttb(_, threshold))
-
   /** Oracle-replayable LTTB (exact Long area arithmetic) — see
     * [[SeriesKernels.lttbExact]] for the quantization contract. */
   def lttbExact(threshold: Int): DataFrame =
@@ -173,24 +169,6 @@ final class KernelOps(df: DataFrame,
         Pt(t, KernelOps.horner(xs, a, t.toDouble))
       }
     }
-
-  /** FFT magnitude spectrum per series (continuum/gts/FFT.java). */
-  def fftMag(): DataFrame =
-    perSeries { (id, cls, lbl, _, vals) =>
-      fftMagnitude(vals).iterator.map { case (k, m) => (id, k, m, cls, lbl) }
-    }.toDF("gtsid", "freq", "magnitude", "class", "labels")
-
-  /** STL-style decomposition (fn/STL.java): trend/seasonal/residual. */
-  def decomposeSeasonal(period: Int): DataFrame =
-    perSeries { (id, cls, lbl, ticks, vals) =>
-      decompose(KernelOps.points(ticks, vals), period).iterator.map {
-        case (p, t, s, r) => (id, p.ts, p.v, t, s, r, cls, lbl)
-      }
-    }.toDF("gtsid", "ts", "vdouble", "trend", "seasonal", "resid", "class", "labels")
-
-  /** ZSCORETEST / modified-z (MAD) outliers (GTSOutliersHelper:148-639). */
-  def zscoreOutliers(threshold: Double, useMad: Boolean = false): DataFrame =
-    pointKernel(SeriesKernels.zscoreOutliers(_, threshold, useMad))
 
   /** ESDTEST, mean/sd variant — the exact-sum rounds of
     * [[SeriesKernels.esdRounds]] with the λ criticals `lams` (n → λ);
@@ -267,14 +245,6 @@ final class KernelOps(df: DataFrame,
                standardizePAA: Boolean): DataFrame =
     pointKernel(SeriesKernels.discords(_, windowLen, wordLen, alphabetSize, count,
       mayOverlap, distRatio, standardizePAA))
-
-  /** SAX words per fixed-count window (script/SAXUtils.java; PATTERNS). */
-  def saxWords(window: Int, wordLen: Int, alphabet: Int): DataFrame =
-    perSeries { (id, cls, lbl, ticks, vals) =>
-      KernelOps.points(ticks, vals).grouped(window).filter(_.length == window).map { chunk =>
-        (id, chunk.head.ts, saxWord(chunk.map(_.v), wordLen, alphabet), cls, lbl)
-      }
-    }.toDF("gtsid", "window_start", "sax_word", "class", "labels")
 }
 
 object KernelOps {

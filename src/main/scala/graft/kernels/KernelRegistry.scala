@@ -1,7 +1,6 @@
 package graft.kernels
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Per-name smoothing-kernel registry (reference:
@@ -66,13 +65,6 @@ object KernelRegistry {
         when(x.isNotNull, lit(wk)).otherwise(0.0))
     }
     terms.map(_._1).reduce(_ + _) / terms.map(_._2).reduce(_ + _)
-  }
-
-  /** Per-series smoothing over the canonical long table. */
-  def smooth(df: DataFrame, name: String, halfWidth: Int): DataFrame = {
-    // vdouble tiebreaker keeps lag/lead deterministic on duplicate ticks
-    val w = Window.partitionBy(col("gtsid")).orderBy(col("ts"), col("vdouble"))
-    df.withColumn("vdouble", smoothCol(name, halfWidth, col("vdouble"), w))
   }
 
   /** Oracle twin: the same renormalized dot product as DuckDB window

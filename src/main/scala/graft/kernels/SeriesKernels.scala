@@ -1,22 +1,21 @@
 package graft.kernels
 
-import org.apache.commons.math3.analysis.interpolation.{AkimaSplineInterpolator, LoessInterpolator, SplineInterpolator}
-import org.apache.commons.math3.distribution.TDistribution
-import org.apache.commons.math3.complex.Complex
-import org.apache.commons.math3.transform.{DftNormalization, FastFourierTransformer, TransformType}
-
 /** Pure sequential per-series algorithms (reference: the analytics
-  * kernels of SURVEY.md §2.9 — LTTB fn/LTTB.java, DTW fn/DTW.java,
-  * LOWESS fn/LOWESS.java, STL fn/STL.java, outlier tests
-  * continuum/gts/GTSOutliersHelper.java:148-639, smoothing
-  * fn/SINGLE/DOUBLEEXPONENTIALSMOOTHING.java, SAX script/SAXUtils.java,
-  * FFT continuum/gts/FFT.java).
+  * kernels of SURVEY.md §2.9): LTTB and TLTTB (fn/LTTB.java, plus the
+  * oracle-replayable [[lttbExact]]), single and double exponential
+  * smoothing (fn/SINGLE/DOUBLEEXPONENTIALSMOOTHING.java), the ESD rounds
+  * behind GRUBBSTEST/ESDTEST (continuum/gts/GTSOutliersHelper.java),
+  * DTW (fn/DTW.java), DoubleUtils' muvar/musigma and DISCORDS
+  * (continuum/gts/DISCORDS.java). LOWESS and STL live in [[StlKernel]],
+  * the SAX quantization in [[SaxCodec]], FFT in
+  * [[graft.operators.StatOps.dft]]; each algorithm has one
+  * implementation.
   *
   * These run SEQUENTIALLY WITHIN one series and are parallelized ACROSS
   * series by [[KernelOps]] via flatMapGroups — the same parallelism
   * shape as the reference, which is single-threaded per GTS. All
-  * implementations re-derive the public algorithms (commons-math3 for
-  * the numerics); no reference code is copied.
+  * implementations re-derive the public algorithms; no reference code
+  * is copied.
   */
 object SeriesKernels {
 
@@ -29,9 +28,10 @@ object SeriesKernels {
     * (positive) span, which preserves the argmax but keeps every
     * quantity an exact integer. This makes the selected point set
     * REPLAYABLE bit-for-bit by any engine (the g71 oracle re-runs it as
-    * a DuckDB recursive CTE); ties pick the earliest point, like the
-    * strict `>` of [[lttb]]. Bucket boundaries follow [[lttb]]
-    * (`threshold-2` must be a power of two for `every` to stay exact).
+    * a DuckDB recursive CTE); ties pick the earliest point (strict `>`).
+    * Bucket boundaries are Steinarsson's canonical (n−2)/(threshold−2)
+    * split (`threshold-2` must be a power of two for `every` to stay
+    * exact).
     * Callers must pre-quantize ts/v so products stay < 2^63.
     */
   def lttbExact(pts: IndexedSeq[Pt], threshold: Int): IndexedSeq[Pt] = {
@@ -167,46 +167,6 @@ object SeriesKernels {
     out.result()
   }
 
-  /** Largest-Triangle-Three-Buckets downsampling to `threshold` points
-    * (Steinarsson 2013, the public algorithm behind fn/LTTB.java). */
-  def lttb(pts: IndexedSeq[Pt], threshold: Int): IndexedSeq[Pt] = {
-    val n = pts.length
-    if (threshold >= n || threshold < 3) return pts
-    val out = IndexedSeq.newBuilder[Pt]
-    out += pts.head
-    val every = (n - 2).toDouble / (threshold - 2)
-    var a = 0
-    var i = 0
-    while (i < threshold - 2) {
-      val r0 = (i * every).toInt + 1
-      val r1 = math.min(((i + 1) * every).toInt + 1, n)
-      // average of next bucket (the "third point")
-      val n0 = math.min(((i + 1) * every).toInt + 1, n)
-      val n1 = math.min(((i + 2) * every).toInt + 1, n)
-      var avgTs = 0.0; var avgV = 0.0
-      val span = math.max(n1 - n0, 1)
-      var j = n0
-      while (j < n1) { avgTs += pts(j).ts; avgV += pts(j).v; j += 1 }
-      if (n1 > n0) { avgTs /= span; avgV /= span }
-      else { avgTs = pts(n - 1).ts; avgV = pts(n - 1).v }
-      // pick point in [r0, r1) maximizing triangle area with a and avg
-      var best = -1.0; var bestIdx = r0
-      var k = r0
-      while (k < r1) {
-        val area = math.abs(
-          (pts(a).ts - avgTs) * (pts(k).v - pts(a).v) -
-            (pts(a).ts - pts(k).ts) * (avgV - pts(a).v)) * 0.5
-        if (area > best) { best = area; bestIdx = k }
-        k += 1
-      }
-      out += pts(bestIdx)
-      a = bestIdx
-      i += 1
-    }
-    out += pts(n - 1)
-    out.result()
-  }
-
   /** Single exponential smoothing: s(0)=v(0); s(i)=α·v(i)+(1−α)·s(i−1). */
   def singleExpSmoothing(pts: IndexedSeq[Pt], alpha: Double): IndexedSeq[Pt] = {
     if (pts.isEmpty) return pts
@@ -245,154 +205,6 @@ object SeriesKernels {
       i += 1
     }
     (s.result(), b.result())
-  }
-
-  /** FFT magnitude spectrum (radix-2, zero-padded) — commons-math3
-    * FastFourierTransformer; returns (frequency index, magnitude). */
-  def fftMagnitude(values: Array[Double]): Array[(Int, Double)] = {
-    if (values.isEmpty) return Array.empty
-    var n = 1
-    while (n < values.length) n <<= 1
-    val padded = java.util.Arrays.copyOf(values, n)
-    val fft = new FastFourierTransformer(DftNormalization.STANDARD)
-    val spec: Array[Complex] = fft.transform(padded, TransformType.FORWARD)
-    spec.take(n / 2 + 1).zipWithIndex.map { case (c, i) => (i, c.abs()) }
-  }
-
-  /** LOWESS smoothing — commons-math3 LoessInterpolator (the same
-    * public Cleveland 1979 algorithm behind fn/LOWESS.java). */
-  def lowess(pts: IndexedSeq[Pt], bandwidth: Double, iters: Int = 2): IndexedSeq[Pt] = {
-    if (pts.length < 3) return pts
-    val xs = pts.map(_.ts.toDouble).toArray
-    val ys = pts.map(_.v).toArray
-    val lo = new LoessInterpolator(math.max(bandwidth, 3.0 / pts.length), iters)
-    val sm = lo.smooth(xs, ys)
-    pts.indices.map(i => Pt(pts(i).ts, sm(i)))
-  }
-
-  /** Classical seasonal decomposition (the moving-average core of STL,
-    * fn/STL.java): trend = centered MA over one period, seasonal =
-    * per-phase mean of detrended values (normalized to sum 0),
-    * residual = v − trend − seasonal. Returns (trend, seasonal, resid)
-    * per input point; points without a full MA window get NaN trend.
-    */
-  def decompose(pts: IndexedSeq[Pt], period: Int): IndexedSeq[(Pt, Double, Double, Double)] = {
-    val n = pts.length
-    if (n < 2 * period) return pts.map(p => (p, Double.NaN, Double.NaN, Double.NaN))
-    val v = pts.map(_.v)
-    val half = period / 2
-    val trend = Array.fill(n)(Double.NaN)
-    var i = half
-    while (i < n - half) {
-      var s = 0.0
-      if (period % 2 == 0) {
-        // centered MA: half-weight endpoints
-        s = v(i - half) * 0.5 + v(i + half) * 0.5
-        var j = i - half + 1
-        while (j < i + half) { s += v(j); j += 1 }
-        trend(i) = s / period
-      } else {
-        var j = i - half
-        while (j <= i + half) { s += v(j); j += 1 }
-        trend(i) = s / period
-      }
-      i += 1
-    }
-    val phaseSum = Array.fill(period)(0.0)
-    val phaseCnt = Array.fill(period)(0)
-    i = 0
-    while (i < n) {
-      if (!trend(i).isNaN) {
-        val ph = i % period
-        phaseSum(ph) += v(i) - trend(i)
-        phaseCnt(ph) += 1
-      }
-      i += 1
-    }
-    val rawSeason = Array.tabulate(period)(p =>
-      if (phaseCnt(p) > 0) phaseSum(p) / phaseCnt(p) else 0.0)
-    val mean = rawSeason.sum / period
-    val season = rawSeason.map(_ - mean)
-    pts.indices.map { i =>
-      val se = season(i % period)
-      val tr = trend(i)
-      (pts(i), tr, se, pts(i).v - tr - se)
-    }
-  }
-
-  /** Z-score test (GTSOutliersHelper zscoretest): flag |z| > threshold;
-    * optionally MAD-based (robust) like the reference's modified z-score. */
-  def zscoreOutliers(pts: IndexedSeq[Pt], threshold: Double, useMad: Boolean): IndexedSeq[Pt] = {
-    if (pts.isEmpty) return IndexedSeq.empty
-    val v = pts.map(_.v)
-    val n = v.length
-    // Bessel-corrected sd via the reference's naive-then-correct form
-    // (GTSHelper.musigma bessel=true — madsigma's non-median branch and
-    // the median branch's MAD=0 fallback, GTSOutliersHelper:115-134)
-    def besselSd: Double = {
-      val sum = v.sum; val sumsq = v.map(x => x * x).sum
-      val naive = sumsq / n - (sum * sum) / (n.toDouble * n)
-      math.sqrt(if (n > 1) naive * n / (n - 1.0) else naive)
-    }
-    val (m, std) =
-      if (useMad) {
-        val med = median(v)
-        val mad = median(v.map(x => math.abs(x - med)))
-        (med, if (mad != 0.0) mad / 0.6745 else besselSd)
-      } else (v.sum / n, besselSd)
-    if (std == 0.0) return IndexedSeq.empty
-    // flag |z| >= d (GTSOutliersHelper.zScoreTest:227-246)
-    pts.filter(p => math.abs((p.v - m) / std) >= threshold)
-  }
-
-  /** Grubbs' test (GTSOutliersHelper grubbstest): is the most extreme
-    * point an outlier at significance `alpha`? Returns it if so. */
-  def grubbs(pts: IndexedSeq[Pt], alpha: Double = 0.05): Option[Pt] = {
-    val n = pts.length
-    if (n < 3) return None
-    val v = pts.map(_.v)
-    val mu = v.sum / n
-    val sd = math.sqrt(v.map(x => (x - mu) * (x - mu)).sum / (n - 1))
-    if (sd == 0.0) return None
-    val cand = pts.maxBy(p => math.abs(p.v - mu))
-    val g = math.abs(cand.v - mu) / sd
-    val t = new TDistribution(n - 2)
-    val tcrit = t.inverseCumulativeProbability(1 - alpha / (2.0 * n))
-    val gcrit = ((n - 1).toDouble / math.sqrt(n)) *
-      math.sqrt(tcrit * tcrit / (n - 2 + tcrit * tcrit))
-    if (g > gcrit) Some(cand) else None
-  }
-
-  /** Generalized ESD (GTSOutliersHelper esdtest): up to k outliers. */
-  def esd(pts: IndexedSeq[Pt], k: Int, alpha: Double = 0.05): IndexedSeq[Pt] = {
-    var rest = pts
-    val removed = IndexedSeq.newBuilder[Pt]
-    val found = Array.fill(k)(false)
-    val cands = IndexedSeq.newBuilder[Pt]
-    var lastSignificant = -1
-    var i = 0
-    val n0 = pts.length
-    while (i < k && rest.length > 2) {
-      val n = rest.length
-      val v = rest.map(_.v)
-      val mu = v.sum / n
-      val sd = math.sqrt(v.map(x => (x - mu) * (x - mu)).sum / (n - 1))
-      if (sd == 0.0) { i = k }
-      else {
-        val cand = rest.maxBy(p => math.abs(p.v - mu))
-        val r = math.abs(cand.v - mu) / sd
-        val t = new TDistribution(n - 2)
-        val p = 1 - alpha / (2.0 * n)
-        val tcrit = t.inverseCumulativeProbability(p)
-        val lambda = ((n - 1).toDouble * tcrit) /
-          (math.sqrt(n) * math.sqrt(n - 2 + tcrit * tcrit))
-        cands += cand
-        if (r > lambda) lastSignificant = i
-        rest = rest.filterNot(_ == cand)
-        i += 1
-      }
-    }
-    cands.result().take(lastSignificant + 1)
   }
 
   /** The exact-sum generalized ESD rounds behind StatOps.esdFlag
@@ -538,77 +350,6 @@ object SeriesKernels {
       i += 1
     }
     prev(m)
-  }
-
-  /** SAX letter word (engine-extension twin of StatOps.saxWords —
-    * STANDARDIZE's Bessel z per GTSHelper.standardize:8902 + the
-    * reference's Acklam bounds via SaxCodec.getBounds): z-normalize,
-    * PAA to `wordLen` segments, quantize into an `alphabet`-letter
-    * word. */
-  def saxWord(values: IndexedSeq[Double], wordLen: Int, alphabet: Int): String = {
-    require(alphabet >= 2 && alphabet <= 64)
-    if (values.isEmpty) return ""
-    val n = values.length
-    val mu = values.sum / n
-    val varPop = values.map(x => (x - mu) * (x - mu)).sum / n
-    val sd = math.sqrt(if (n > 1) varPop * n / (n - 1.0) else varPop)
-    val z = if (sd == 0) values.map(_ => 0.0) else values.map(x => (x - mu) / sd)
-    val paa = Array.tabulate(wordLen) { w =>
-      val from = w * n / wordLen
-      val to = math.max((w + 1) * n / wordLen, from + 1)
-      z.slice(from, to).sum / (to - from)
-    }
-    val bps = SaxCodec.getBounds(alphabet)
-    paa.map { x =>
-      var idx = 0
-      while (idx < bps.length && x > bps(idx)) idx += 1
-      ('a' + idx).toChar
-    }.mkString
-  }
-
-  /** Pearson cross-correlation at integer lags (continuum/gts/CORRELATE.java
-    * semantics: correlate two aligned value arrays at the given offsets). */
-  def correlateAtLags(a: IndexedSeq[Double], b: IndexedSeq[Double],
-                      lags: Seq[Int]): Seq[(Int, Double)] = {
-    def pearson(x: IndexedSeq[Double], y: IndexedSeq[Double]): Double = {
-      val n = math.min(x.length, y.length)
-      if (n < 2) return Double.NaN
-      val xs = x.take(n); val ys = y.take(n)
-      val mx = xs.sum / n; val my = ys.sum / n
-      var sxy = 0.0; var sxx = 0.0; var syy = 0.0
-      var i = 0
-      while (i < n) {
-        val dx = xs(i) - mx; val dy = ys(i) - my
-        sxy += dx * dy; sxx += dx * dx; syy += dy * dy
-        i += 1
-      }
-      if (sxx == 0 || syy == 0) Double.NaN else sxy / math.sqrt(sxx * syy)
-    }
-    lags.map { lag =>
-      val (x, y) = if (lag >= 0) (a.drop(lag), b) else (a, b.drop(-lag))
-      (lag, pearson(x, y))
-    }
-  }
-
-  /** Natural cubic spline / Akima interpolation of empty buckets
-    * (script/filler/FillerSpline, FillerAkima — commons-math3 backs both
-    * with the same public splines). */
-  def interpolateAt(known: IndexedSeq[Pt], at: Seq[Long], akima: Boolean): Seq[Pt] = {
-    val minPts = if (akima) 5 else 3
-    if (known.length < minPts) return Seq.empty
-    val xs = known.map(_.ts.toDouble).toArray
-    val ys = known.map(_.v).toArray
-    val f =
-      if (akima) new AkimaSplineInterpolator().interpolate(xs, ys)
-      else new SplineInterpolator().interpolate(xs, ys)
-    val lo = xs.head; val hi = xs.last
-    at.filter(t => t >= lo && t <= hi).map(t => Pt(t, f.value(t.toDouble)))
-  }
-
-  private def median(v: IndexedSeq[Double]): Double = {
-    val s = v.sorted
-    val n = s.length
-    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
   }
 
   /** DoubleUtils.muvar:23-59, replayed verbatim INCLUDING its quirks:

@@ -35,10 +35,6 @@ object StlKernel {
     var sortedPrefix: Int = 0
 
     def bucketized: Boolean = bucketspan > 0 && bucketcount > 0
-
-    def copyShape(sizehint: Int): Sgts =
-      new Sgts(new Array[Long](sizehint), new Array[Double](sizehint), 0,
-        lastbucket, bucketspan, bucketcount)
   }
 
   /** An Sgts over point arrays, optionally with BUCKETIZE metadata —

@@ -1127,10 +1127,6 @@ final case class GtsFrame(df: DataFrame,
   def geoWithin(shape: graft.functions.GeoShape): GtsFrame =
     GtsFrame(df.filter(shape.containsCol(col("lat"), col("lon"))))
 
-  /** mapper.geo.outside (MapperGeoOutside). */
-  def geoOutside(shape: graft.functions.GeoShape): GtsFrame =
-    GtsFrame(df.filter(!shape.containsCol(col("lat"), col("lon"))))
-
   /** Annotate each point with its end-anchored bucket tick (`__bucket`)
     * without aggregating — building block for bucket-then-custom-agg
     * pipelines. */

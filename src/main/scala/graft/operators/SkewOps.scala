@@ -27,12 +27,4 @@ object SkewOps {
     partial.groupBy(keys.map(col): _*)
       .agg(sum(col("__psum")).as("sum_v"), sum(col("__pcnt")).as("count_v"))
   }
-
-  /** mean via salted partials — numerically identical to avg() when
-    * partial sums are exact (see the cents discipline in
-    * [[graft.queries]]). */
-  def saltedMean(df: DataFrame, keys: Seq[String], valueCol: String,
-                 salts: Int = 16): DataFrame =
-    saltedSumCount(df, keys, valueCol, salts)
-      .withColumn("mean_v", col("sum_v") / col("count_v"))
 }

@@ -66,12 +66,14 @@ object StatOps {
     * Scale shape: per offset — one broadcast of the tiny per-series
     * alignment row, two windowed standardizations, one rank join; the
     * offsets are a word-argument literal list so the union is bounded.
+    * `persist` caches the operand-sized frames every branch reads; the
+    * CORRELATE word passes its program scope, so they are released with
+    * the program.
     */
-  def crossCorrelate(base: GtsFrame, others: GtsFrame,
-                     offsets: Seq[Long]): DataFrame = {
+  def crossCorrelate(base: GtsFrame, others: GtsFrame, offsets: Seq[Long],
+                     persist: DataFrame => DataFrame): DataFrame = {
     val spark = base.df.sparkSession
     import spark.implicits._
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val av = coalesce(col("vdouble"), col("vlong").cast(DoubleType))
     // a/b/bMeta are referenced by EVERY per-offset branch (align,
     // clipA, clipB) plus the final grid join — without a lineage cut
@@ -80,15 +82,12 @@ object StatOps {
     // 104 Exchanges, 2,142 plan lines; the one-time planning/codegen
     // cost dominated fresh-JVM runs). All three are word-operand-
     // sized (bucketized series), so lazy persists are cheap at any SF.
-    val a = base.df.select(col("ts").as("ta"), av.as("va"))
+    val a = persist(base.df.select(col("ts").as("ta"), av.as("va"))
       .withColumn("lastA",
-        max(col("ta")).over(org.apache.spark.sql.expressions.Window.partitionBy()))
-      .persist(lvl)
-    val b = others.df.select(col("gtsid"), col("ts").as("tb"), av.as("vb"))
-      .persist(lvl)
-    val bMeta = Gts.aggBySeries(others.df)(max(col("ts")).as("lastB"))
-      .withColumnRenamed("gtsid", "__g")
-      .persist(lvl)
+        max(col("ta")).over(org.apache.spark.sql.expressions.Window.partitionBy())))
+    val b = persist(others.df.select(col("gtsid"), col("ts").as("tb"), av.as("vb")))
+    val bMeta = persist(Gts.aggBySeries(others.df)(max(col("ts")).as("lastB"))
+      .withColumnRenamed("gtsid", "__g"))
 
     def standardized(df: DataFrame, t: String, v: String): DataFrame = {
       val w = org.apache.spark.sql.expressions.Window.partitionBy(col("gtsid"))
@@ -106,14 +105,14 @@ object StatOps {
     }
 
     val perOffset = offsets.map { o =>
-      // first aligned pair + clip end, one tiny row per series
-      val align = b.join(a, col("tb") === col("ta") + o)
+      // first aligned pair + clip end, one tiny row per series,
+      // referenced by both clips
+      val align = persist(b.join(a, col("tb") === col("ta") + o)
         .groupBy(col("gtsid").as("__ag"))
         .agg(min(col("ta")).as("startA"), first(col("lastA")).as("lastA"))
         .join(bMeta.select(col("__g"), col("lastB")), col("__ag") === col("__g"))
         .withColumn("end", least(col("lastA"), col("lastB") - o))
-        .select(col("__ag"), col("startA"), col("end"))
-        .persist(lvl) // one tiny row per series, referenced by both clips
+        .select(col("__ag"), col("startA"), col("end")))
       val clipA = a.join(broadcast(align),
           col("ta") >= col("startA") && col("ta") <= col("end"))
         .select(col("__ag").as("gtsid"), col("ta"), col("va"))
@@ -819,12 +818,12 @@ object StatOps {
     * reference's STANDARDIZE + SAXUtils quantization — GTSHelper.
     * standardize:8902 z with Bessel sd, SAXUtils.getBounds bounds):
     * z-normalize each series, PAA to `wordLen` segments, quantize into
-    * letters, concatenate. Declarative twin of SeriesKernels.saxWord
-    * with closed-form sd: segment w covers 0-based ranks
-    * [w·n/wordLen, max((w+1)·n/wordLen, from+1)) in (ts, value) order;
+    * letters, concatenate. The sd is closed-form: segment w covers
+    * 0-based ranks [w·n/wordLen, max((w+1)·n/wordLen, from+1)) in
+    * (ts, value) order;
     * PAA_w = Σ_seg(n·x−Σx) / (len·√((n·Σx²−(Σx)²)·n/(n−1))),
     * exact-integer numerator. Returns (class, labels-id columns..,
-    * word). Degenerate sd ⇒ all-zero z (kernel branch) ⇒ middle letter.
+    * word). Degenerate sd ⇒ all-zero z ⇒ middle letter.
     */
   def saxWords(frame: GtsFrame, wordLen: Int, alphabet: Int): DataFrame = {
     val bps = saxBreakpoints(alphabet)

@@ -104,7 +104,8 @@ final class WarpScriptEngine(
 
   /** Persist a frame for the rest of the program: the ACCEL.CACHE /
     * ACCEL.PERSIST FETCH (fn/ACCELCACHE.java), whose storage level the
-    * program chose. Pair words need no cache: their two results are
+    * program chose, and the frames CORRELATE's offset branches share
+    * (StatOps.crossCorrelate). Pair words need no cache: their two results are
     * parts of one frame that a merge reads once (GtsFrame.parts). */
   private[script] def persistForProgram(df: DataFrame,
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
@@ -348,25 +349,6 @@ final class WarpScriptEngine(
   }
 
   // ---------------------------------------------------------------- helpers
-
-  private[script] def binNum(st: State, fl: (Long, Long) => Long, fd: (Double, Double) => Double,
-                     fs: Option[(String, String) => String] = None): Unit = {
-    val b = st.pop(); val a = st.pop()
-    (a, b) match {
-      case (x: Long, y: Long) => st.push(fl(x, y))
-      case (x: Long, y: Double) => st.push(fd(x.toDouble, y))
-      case (x: Double, y: Long) => st.push(fd(x, y.toDouble))
-      case (x: Double, y: Double) => st.push(fd(x, y))
-      case (x: String, y: String) if fs.isDefined => st.push(fs.get(x, y))
-      case _ => throw new IllegalArgumentException(s"type error: $a ? $b")
-    }
-  }
-
-  private[script] def numEq(a: Any, b: Any): Boolean = (a, b) match {
-    case (x: Long, y: Double) => x.toDouble == y
-    case (x: Double, y: Long) => x == y.toDouble
-    case _ => a == b
-  }
 
   private[script] def cmp(st: State, ok: Int => Boolean): Unit = {
     val b = st.pop(); val a = st.pop()

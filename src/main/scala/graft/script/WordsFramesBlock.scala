@@ -1132,7 +1132,8 @@ private[script] object WordsFramesBlock {
         case _ => ()
       }
       st.push(GtsFrame(graft.operators.StatOps.crossCorrelate(
-        en.toFrame(baseObj), en.toFrame(othersObj), offsets)))
+        en.toFrame(baseObj), en.toFrame(othersObj), offsets,
+        en.persistForProgram(_))))
     }
     // LTTB (fn/LTTB.java, GTSHelper.lttb:12319-12485): gts threshold
     // LTTB — the reference's own bucket/average/anchor arithmetic

@@ -57,7 +57,7 @@ class FaithfulWordsSpec extends SparkSpec {
     // base m.a = 1..4 at ticks 10,20,30,40; other m.b identical
     val base = mkFrame(Seq(10L -> 1.0, 20L -> 2.0, 30L -> 3.0, 40L -> 4.0), "m.a")
     val other = mkFrame(Seq(10L -> 1.0, 20L -> 2.0, 30L -> 3.0, 40L -> 4.0), "m.b")
-    val out = graft.operators.StatOps.crossCorrelate(base, other, Seq(0L, 10L, 1000L))
+    val out = graft.operators.StatOps.crossCorrelate(base, other, Seq(0L, 10L, 1000L), identity)
       .select(col("ts"), col("vdouble")).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toMap
     // lag 0: z-vectors identical, Σz² = n−1 under Bessel ⇒ exactly 1.0

@@ -54,7 +54,6 @@ class KernelMetaSpec extends SparkSpec {
     val h = StlParams.resolve(Map("PERIOD" -> 12L, "BANDWIDTH_S" -> -1L, "ROBUST" -> false))
     val bucket = (95L, 1L, 96L)
     val cases = Seq(
-      "lttb" -> ops.lttb(10),
       "lttbExact" -> ops.lttbExact(10),
       "lttbRef" -> ops.lttbRef(10, timebased = false),
       "fillAkimaGrid" -> filled(KernelOps.Akima),
@@ -67,9 +66,6 @@ class KernelMetaSpec extends SparkSpec {
       "expSmooth" -> ops.expSmooth(0.5),
       "expSmooth holt" -> ops.expSmooth(0.5, Some(0.5)),
       "holtSmooth" -> ops.holtSmooth(0.5, 0.5),
-      "fftMag" -> ops.fftMag(),
-      "decomposeSeasonal" -> ops.decomposeSeasonal(12),
-      "zscoreOutliers" -> ops.zscoreOutliers(2.0),
       "esdFlag" -> ops.esdFlag(3, lams),
       "esdMadFlag" -> ops.esdMadFlag(3, lams),
       "stlDecomposeTagged" -> ops.stlDecomposeTagged(bucket, p.bpp, p.inner,
@@ -81,7 +77,6 @@ class KernelMetaSpec extends SparkSpec {
           h.np, h.dp, h.jp, h.inner, h.outer))),
       "discords" -> ops.discords(8, 4, 4, 1, mayOverlap = true, 0.0,
         standardizePAA = true),
-      "saxWords" -> ops.saxWords(12, 4, 4),
       "StatOps.esdFlag" -> StatOps.esdFlag(GtsFrame(in), 3, 0.05, 128),
       "StatOps.esdMadFlag" -> StatOps.esdMadFlag(GtsFrame(in), 3, 0.05, 128))
     cases.foreach { case (name, out) =>

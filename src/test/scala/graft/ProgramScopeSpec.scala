@@ -49,7 +49,10 @@ class ProgramScopeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("word persists live for one program: released by release() and by the next run") {
     val fetch = s"[ '' '~m\\..*' { } $lb ${lb + 1} ] FETCH"
-    val cases = Seq(("ACCEL.CACHE FETCH", s"ACCEL.CACHE $fetch", 2L * n))
+    val one = s"[ '' 'm.x' { 'user' '1' } $lb ${lb + 1} ] FETCH"
+    val cases = Seq(("ACCEL.CACHE FETCH", s"ACCEL.CACHE $fetch", 2L * n),
+      // one row per (series, offset)
+      ("CORRELATE", s"$one $fetch [ 0 $span ] CORRELATE", 2L * 2))
     val e = new WarpScriptEngine(
       fetch = (cls, ls, a, b) => source.select(cls, ls).timeclip(a, b),
       nowTs = 0L, session = Some(spark))

@@ -1,23 +1,25 @@
 package graft
 
+import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.kernels.SeriesKernels
 import graft.kernels.SeriesKernels.Pt
+import graft.operators.{GtsFrame, StatOps}
 import graft.sources.GtsCodec
 import graft.sources.GtsCodec.Point
 import graft.model.GtsType
 
 /** Algebraic-law properties (FIXTURES.md §5c): codec round-trips,
   * bucket-arithmetic invariants, dedup idempotence, kernel bounds —
-  * pure-function level so they run fast under ScalaCheck. */
-class PropertySpec extends AnyFunSuite {
+  * pure-function level so they run fast under ScalaCheck. The SAX
+  * property alone runs its operator on the shared session. */
+class PropertySpec extends SparkSpec {
 
   /** raw ScalaCheck runner (no scalatestplus bridge in the dep set) */
-  private def check(p: Prop): Unit = {
+  private def check(p: Prop, tests: Int = 100): Unit = {
     val res = org.scalacheck.Test.check(
-      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(100), p)
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(tests), p)
     assert(res.passed, res.status.toString)
   }
 
@@ -74,13 +76,25 @@ class PropertySpec extends AnyFunSuite {
       th <- Gen.chooseNum(3, 50)
       vs <- Gen.listOfN(n, Gen.chooseNum(-1e6, 1e6))
     } yield (vs.zipWithIndex.map { case (v, i) => Pt(i.toLong, v) }.toIndexedSeq, th)
-    check(Prop.forAll(gen) { case (pts, th) =>
-      val out = SeriesKernels.lttb(pts, th)
-      out.length <= math.max(th, pts.length.min(th)) + (if (th >= pts.length) pts.length else 0) &&
-        out.head == pts.head && out.last == pts.last &&
-        out.map(_.ts) == out.map(_.ts).sorted &&
-        out.forall(pts.contains)
-    })
+    // LTTB keeps at most `th` points; TLTTB resets the count to its
+    // non-empty time buckets plus the two endpoints, at most th + 1
+    for (timebased <- Seq(false, true)) withClue(s"timebased=$timebased: ") {
+      check(Prop.forAll(gen) { case (pts, th) =>
+        val span = pts.last.ts - pts.head.ts
+        if (timebased && pts.length > th - 2 && span <= 2)
+          // the time bucket ⌈(span − 2)/(th − 2)⌉ is 0: GTSHelper.lttb
+          // divides by it
+          scala.util.Try(SeriesKernels.lttbReference(pts, th, timebased))
+            .failed.toOption.exists(_.isInstanceOf[ArithmeticException])
+        else {
+          val out = SeriesKernels.lttbReference(pts, th, timebased)
+          out.length <= (if (timebased) th + 1 else th) &&
+            out.head == pts.head && out.last == pts.last &&
+            out.map(_.ts) == out.map(_.ts).sorted &&
+            out.forall(pts.contains)
+        }
+      })
+    }
   }
 
   test("dtw: identity is zero, symmetric, non-negative") {
@@ -109,11 +123,23 @@ class PropertySpec extends AnyFunSuite {
       vs <- Gen.listOfN(32, Gen.chooseNum(-100.0, 100.0))
       shift <- Gen.chooseNum(-1000.0, 1000.0)
     } yield (vs.toIndexedSeq, shift)
-    check(Prop.forAll(gen) { case (vs, shift) =>
-      val w = SeriesKernels.saxWord(vs, 8, 4)
-      val ws = SeriesKernels.saxWord(vs.map(_ + shift), 8, 4)
-      w.length == 8 && w.forall(c => c >= 'a' && c <= 'd') && w == ws
-    })
+    // StatOps.saxWords is a frame operator: each case carries 25
+    // (series, shifted twin) pairs, told apart by the user label,
+    // through one job
+    check(Prop.forAll(Gen.listOfN(25, gen)) { cases =>
+      val pts = cases.zipWithIndex.flatMap { case ((vs, shift), i) =>
+        vs.zipWithIndex.flatMap { case (v, j) =>
+          Seq(("a", s"$i", j.toLong, v), ("b", s"$i", j.toLong, v + shift))
+        }
+      }
+      val words = StatOps.saxWords(GtsFrame(gtsOf(pts: _*)), 8, 4)
+        .select(col("labels")("user"), col("class"), col("word")).collect()
+        .groupBy(_.getString(0)).values.map(_.sortBy(_.getString(1)).map(_.getString(2)))
+      words.size == cases.size && words.forall {
+        case Array(w, ws) => w.length == 8 && w.forall(c => c >= 'a' && c <= 'd') && w == ws
+        case _ => false
+      }
+    }, tests = 4)
   }
 
   test("exp smoothing: output bounded by input range") {

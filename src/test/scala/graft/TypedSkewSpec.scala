@@ -2,21 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.model.{Gts, GtsPoint}
+import graft.model.Gts
 import graft.operators.SkewOps
 
 class TypedSkewSpec extends SparkSpec {
-
-  test("typed Dataset facade round-trips the canonical schema") {
-    val pts = Gts.fromEvents(spark, "/root/testdata/sf0.001")
-    val ds = GtsPoint.typed(pts)
-    val p = ds.head()
-    assert(p.cls.startsWith("events."))
-    assert(p.vtype === graft.model.GtsType.DOUBLE)
-    assert(p.vdouble.isDefined && p.lat.isEmpty)
-    assert(ds.filter(_.vdouble.exists(_ > 50.0)).count() ===
-      pts.filter(col("vdouble") > 50.0).count())
-  }
 
   test("salted aggregation equals direct aggregation") {
     val pts = Gts.fromEventsCents(spark, "/root/testdata/sf0.001")

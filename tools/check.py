@@ -73,6 +73,10 @@ def main():
     ok = fail = 0
     names = ONLY or sorted(oracle)
     for name in names:
+        if name not in oracle:
+            print(f"FAIL {name}: not in oracle")
+            fail += 1
+            continue
         sql = oracle[name]
         if name in spark_errors:
             print(f"FAIL {name}: spark error: {spark_errors[name]}")
@@ -110,9 +114,6 @@ def main():
         else:
             print(f"PASS {name} ({len(srws)} rows)")
             ok += 1
-    missing = [n for n in (ONLY or []) if n not in oracle]
-    if missing:
-        print("not in oracle:", missing)
     print(f"== {ok} pass / {fail} fail ==")
     sys.exit(1 if fail else 0)
 
